@@ -57,37 +57,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // naive parquet timestamps are UTC instants (oracle parity):
-      // read them as TIMESTAMP, not TIMESTAMP_NTZ
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE coalescing's BYTE floor (default 1m) decides post-shuffle
-      // parallelism, but this engine's expensive stages are CPU-dense
-      // and byte-light (set verify, pair scoring, demux) — at sf0.1 a
-      // 1-2 MB exchange coalesced to ONE task serialized a 54 s verify
-      // stage while 31 cores idled (StageProfile r21, guide §2.2/2.6).
-      // A 16k floor lets parallelism-first coalescing actually reach
-      // defaultParallelism on small exchanges; at production shuffle
-      // sizes the size-based target dominates and this is a no-op.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MINPART", "16k"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warmup (untimed): touch each source once so JVM/codegen/parquet
-    // reader initialization isn't billed to whichever query runs first.
-    Tables.names.foreach { t =>
-      try {
-        (if (t == "events") Tables.events(spark, sfDir)
-         else Tables.table(spark, sfDir, t)).limit(1)
-          .write.mode("overwrite").format("noop").save()
-      } catch { case _: Throwable => () }
-    }
+    val cpus = GraftSession.cpus
+    val spark = GraftSession(cpus)
+    Tables.warmup(spark, sfDir)
     val repeatBase = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEAT", "2")
       .toInt.max(1)
     // Host load average: r11's artifact comparison was polluted by
@@ -200,25 +172,11 @@ object Bench {
       // a cold core build is attributable in bench_full.json
       // (core_builds), so its time is read as cold, not variance.
       val built = graft.operators.SharedStage.totalBuilds(spark) - b0
-      // Iterative queries localCheckpoint intermediates; their blocks
-      // are only reclaimed when the dead RDD is GC'd, so across 100+
-      // queries they silently eat the unified memory pool and make
-      // UNRELATED later queries spill. Drop them eagerly — by this
-      // point the query's DataFrames are dead, so nothing can still
-      // need the blocks. BLOCKING: r8's tail showed RDD-reclaim
-      // warnings bleeding into later queries — wait for the blocks
-      // to actually go before the next timer starts. EXCEPT the
-      // SharedStage cores (r15 VERDICT item 6): those are the
-      // declared long-lived-session materializations — sweeping
-      // them forced every repeat of every SharedStage pipeline to
-      // rebuild its cores cold (media_retention's 5.5→24 s repeat
-      // swings), so they now live for the whole bench pass and the
-      // artifact measures the marginal plan, with the one cold
-      // build visible via core_builds on the repeat that paid it.
-      val keep = graft.operators.SharedStage.liveRddIds(spark)
-      spark.sparkContext.getPersistentRDDs.values
-        .filterNot(r => keep.contains(r.id))
-        .foreach(_.unpersist(blocking = true))
+      // Drop the query's dead blocks; SharedStage cores live for the
+      // whole bench pass, so the artifact measures the marginal plan,
+      // with the one cold build visible via core_builds on the repeat
+      // that paid it.
+      graft.operators.SharedStage.sweep(spark, keepCores = true)
       (dt, ok, built)
     }
     // Untimed per-JVM warm-up for the recurring flag-prone class (r19
@@ -239,8 +197,7 @@ object Bench {
       warmNames.foreach { n =>
         SparkEntry.queries.get(n).foreach { fn => oneRun(n, fn) }
       }
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      graft.operators.SharedStage.sweep(spark, keepCores = false)
     }
     var execIdx = -1
     val swept = SparkEntry.queries.toSeq.sortBy(_._1).map {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Usage demo / smoke driver for the non-query modules (streaming, sinks,
@@ -13,16 +12,7 @@ object Demo {
   def main(args: Array[String]): Unit = {
     val sfDir  = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val outDir = if (args.length > 1) args(1) else "/tmp/graft-demo"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // naive parquet timestamps are UTC instants (oracle parity):
-      // read them as TIMESTAMP, not TIMESTAMP_NTZ
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     // Streaming: rate source → event shape → windowed agg → memory sink.
     val rate = spark.readStream.format("rate")

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf scale-up generator (r19 VERDICT item 1 — "take the sf1.0
@@ -27,15 +27,7 @@ import org.apache.spark.sql.functions._
 object ScaleData {
   def main(args: Array[String]): Unit = {
     val (src, dst, k) = (args(0), args(1), args(2).toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     def reps(df: DataFrame): DataFrame =
       df.withColumn("__r",

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -48,15 +48,7 @@ object ScaleProbe {
     else Seq.empty
     def selected(name: String): Boolean =
       only.isEmpty || only.exists(name.contains)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     val base = Tables.documents(spark, sfDir).select("doc_id", "text")
     def replicate(k: Int): DataFrame =
@@ -88,8 +80,7 @@ object ScaleProbe {
       (1 to reps).map { _ =>
         val t0 = System.nanoTime()
         mk().write.mode("overwrite").format("noop").save()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
+        graft.operators.SharedStage.sweep(spark, keepCores = false)
         (System.nanoTime() - t0) / 1e9
       }.min
 
@@ -225,8 +216,7 @@ object ScaleProbe {
         val nOut = graft.queries.TextOps.ppjoinGlobalPairs(docs).count()
         println(s"[scale] ppjoin_g counts k=$k candidates=$nCand " +
           s"set_pairs=$nSet doc_pairs=$nOut")
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
+        graft.operators.SharedStage.sweep(spark, keepCores = false)
       }
       k -> Seq[(String, () => Double)](
         "incremental CC merge (FIXED ingest)" ->

@@ -12,10 +12,10 @@ object SparkEntry {
     Entities.queries("members_doc")(spark, "/root/testdata/sf0.001")
 
   /** Queries exempt from the session's 16k AQE
-    * `coalescePartitions.minPartitionSize` floor (Bench/Verify session
-    * builders). The floor lets parallelism-first coalescing reach
-    * defaultParallelism on byte-light CPU-dense exchanges — a verified
-    * win for set-verify/pair-scoring stages (r21) — but iterative and
+    * `coalescePartitions.minPartitionSize` floor (GraftSession). The
+    * floor lets parallelism-first coalescing reach defaultParallelism
+    * on byte-light CPU-dense exchanges — a verified win for
+    * set-verify/pair-scoring stages (r21) — but iterative and
     * many-small-exchange plans pay 32 sub-millisecond tasks per round
     * and run FASTER with the 1m default (r22 quiet-host ABBench, 3
     * reps × both orders, min shown):
@@ -38,8 +38,13 @@ object SparkEntry {
     "graph_pagerank", "sql_recursive_cte", "emb_ivf_pq_recall",
     "txt_ngram_novelty", "mm_scene_keyframes", "mm_image_dedup")
 
-  private val MinPartKey =
+  private[graft] val MinPartKey =
     "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+
+  /** The non-exempt floor: the session default and every non-exempt
+    * query's pin. */
+  private[graft] def aqeFloor: String =
+    sys.env.getOrElse("SPARK_GRAFT_AQE_MINPART", "16k")
 
   private def withFloor(name: String,
       fn: (SparkSession, String) => DataFrame)
@@ -47,7 +52,7 @@ object SparkEntry {
     val v =
       if (aqeFloorExempt(name))
         sys.env.getOrElse("SPARK_GRAFT_AQE_MINPART_EXEMPT", "1m")
-      else sys.env.getOrElse("SPARK_GRAFT_AQE_MINPART", "16k")
+      else aqeFloor
     s.conf.set(MinPartKey, v)
     fn(s, d)
   }

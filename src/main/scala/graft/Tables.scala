@@ -100,6 +100,16 @@ object Tables {
     spreadCpuDense(spark, table(spark, sfDir, name),
       s"$sfDir/$name.parquet")
 
+  /** Untimed warm-up: touch each table once so JVM, codegen and parquet
+    * reader initialization is not billed to whichever query runs first. */
+  def warmup(spark: SparkSession, sfDir: String): Unit =
+    names.foreach { t =>
+      try {
+        (if (t == "events") events(spark, sfDir) else table(spark, sfDir, t))
+          .limit(1).write.mode("overwrite").format("noop").save()
+      } catch { case _: Throwable => () }
+    }
+
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame  = table(s, d, "customer")
@@ -112,14 +122,11 @@ object Tables {
 
   /** events.parquet carries parquet TIMESTAMP(NANOS), which Spark's parquet
     * reader rejects outright ([PARQUET_TYPE_ILLEGAL]). Sessions must set
-    * `spark.sql.legacy.parquet.nanosAsLong=true`; this reader then restores
-    * a micros-precision TimestampType `ts` (integer `DIV 1000` == the
-    * truncation DuckDB applies when casting TIMESTAMP_NS → TIMESTAMP, so the
-    * oracle sees identical instants). */
+    * `spark.sql.legacy.parquet.nanosAsLong=true` (GraftSession does); this
+    * reader then restores a micros-precision TimestampType `ts` (integer
+    * `DIV 1000` == the truncation DuckDB applies when casting TIMESTAMP_NS →
+    * TIMESTAMP, so the oracle sees identical instants). */
   def events(s: SparkSession, d: String): DataFrame = {
-    // Runtime-settable SQLConf; set defensively so any session (Verify,
-    // Bench, tests) can read events without pre-arranged builder config.
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(s, d, "events")
     raw.schema("ts").dataType match {
       case LongType => raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
@@ -194,15 +201,4 @@ object Tables {
     * on only for tables that actually evolved. */
   def parquetMerged(s: SparkSession, path: String): DataFrame =
     s.read.option("mergeSchema", "true").parquet(path)
-
-  /** Session config every graft session needs (local test harness). */
-  def sessionConfigs: Map[String, String] = Map(
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    "spark.sql.session.timeZone"           -> "UTC",
-    // The synthetic tables' naive parquet timestamps are UTC instants;
-    // the DuckDB oracle reads them the same way. Without this, Spark 4
-    // infers TIMESTAMP_NTZ (isAdjustedToUTC=false footers) and every
-    // unix_micros/epoch expression fails to resolve.
-    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
-    "spark.sql.adaptive.enabled"           -> "true")
 }

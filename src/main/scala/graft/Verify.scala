@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,22 +9,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // naive parquet timestamps are UTC instants (oracle parity):
-      // read them as TIMESTAMP, not TIMESTAMP_NTZ
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // Same AQE coalescing floor as Bench: the hash gate must execute
-      // under the exact config the bench times (a layout-sensitive
-      // query would otherwise pass here and diverge there).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MINPART", "16k"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -35,11 +19,9 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Reclaim localCheckpoint blocks from iterative queries (see
-      // Bench) — dead after the write completes. Blocking, so a big
-      // query's blocks can't bleed memory pressure into the next one.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      // Drop everything, cores included: correctness runs want each
+      // query to derive its own stages.
+      graft.operators.SharedStage.sweep(spark, keepCores = false)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -24,7 +24,7 @@ import org.apache.spark.storage.StorageLevel
   * REBUILT rather than returned. Verify sweeps EVERYTHING between
   * queries (correctness runs want maximal independence), so each
   * Verify query still derives its stages itself; Bench excludes the
-  * alive stages from its sweep via `liveRddIds` (r15 VERDICT item 6),
+  * alive stages from its sweep (`sweep(keepCores = true)`, r15 item 6),
   * so a shared core is built once per bench pass — the long-lived-
   * session semantics — and the repeat that paid the build is recorded
   * (core_builds). In a long-lived session (notebook, service, test
@@ -83,14 +83,8 @@ object SharedStage {
     builds.collect { case (k, v) if k.startsWith(p) => v }.sum
   }
 
-  /** RDD ids of the currently-ALIVE memoized stages for `session`.
-    * Sweeping harnesses (Bench) unpersist every persistent RDD between
-    * queries EXCEPT these, so a shared core is paid once per bench
-    * pass — the long-lived-session semantics this layer exists for —
-    * instead of being rebuilt cold on every repeat (r15 VERDICT item
-    * 6: pipeline_media_retention's repeats swung 5.5→24 s on core
-    * churn). Verify keeps the sweep-everything discipline: correctness
-    * runs want maximal independence, not warm caches. */
+  /** RDD ids of the currently-ALIVE memoized stages for `session`:
+    * the RDDs `sweep(keepCores = true)` keeps. */
   def liveRddIds(session: org.apache.spark.sql.SparkSession): Set[Int] = {
     val p = s"${System.identityHashCode(session)}:"
     cache.collect {
@@ -99,5 +93,26 @@ object SharedStage {
           case lr: LogicalRDD => lr.rdd.id
         }
     }.toSet
+  }
+
+  /** Unpersist every persisted RDD of `session`'s context, except the
+    * live cores when `keepCores`. Iterative queries localCheckpoint
+    * intermediates whose blocks are only reclaimed when the dead RDD is
+    * GC'd, so across 100+ queries they silently eat the unified memory
+    * pool and make UNRELATED later queries spill; a harness sweeps
+    * after each query, when its DataFrames are dead. BLOCKING: r8's
+    * tail showed RDD-reclaim warnings bleeding into later queries —
+    * the blocks must be gone before the next timer starts. Keeping
+    * the cores (r15 VERDICT item 6) is the long-lived-session meaning
+    * of "warm": sweeping them forced every repeat of every SharedStage
+    * pipeline to rebuild its cores cold (media_retention's 5.5→24 s
+    * repeat swings). Dropping them too makes each query pay — and be
+    * billed for — its own materializations. */
+  def sweep(session: org.apache.spark.sql.SparkSession,
+      keepCores: Boolean): Unit = {
+    val keep = if (keepCores) liveRddIds(session) else Set.empty[Int]
+    session.sparkContext.getPersistentRDDs.values
+      .filterNot(r => keep.contains(r.id))
+      .foreach(_.unpersist(blocking = true))
   }
 }

@@ -29,8 +29,7 @@ class DegenerateInputSpec extends SparkSpec {
             Some(s"$name: ${e.getClass.getSimpleName}: " +
               String.valueOf(e.getMessage).take(200))
           }
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
+        graft.operators.SharedStage.sweep(spark, keepCores = false)
         r
     }
     assert(failures.isEmpty,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 /** Direct contract spec for ExchangeCount — the node-walk counter two
   * standing gates depend on (RegistryPlanSpec's pinned counts and
-  * ShuffleAudit's `exchanges` column). The registry pins exercise it
+  * `Probe shuffle`'s `exchanges` column). The registry pins exercise it
   * end-to-end; these cases pin the SEMANTICS on minimal plans so a
   * future Spark bump that changes plan nesting (AQE wrappers, stage
   * reuse) fails here with an interpretable message rather than as

@@ -98,8 +98,7 @@ class SkewedInputSpec extends SparkSpec {
             Some(s"$name: ${e.getClass.getSimpleName}: " +
               String.valueOf(e.getMessage).take(200))
           }
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
+        graft.operators.SharedStage.sweep(spark, keepCores = false)
         r
     }
     assert(failures.isEmpty,

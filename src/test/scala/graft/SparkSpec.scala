@@ -6,21 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (one JVM-wide session keeps
   * `sbt test` fast; forked JVM per build.sbt). */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      // naive parquet timestamps are UTC instants (oracle parity):
-      // read them as TIMESTAMP, not TIMESTAMP_NTZ
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession(cpus = 2)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

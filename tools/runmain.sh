@@ -14,6 +14,5 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 exec java $OPENS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"
