@@ -1,466 +1,199 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Benchmark main (driver contract): times every registered query at
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
+import java.nio.file.{Files, Paths}
+
+/** Benchmark main: times every registered query on
+  * the tables in SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
-  * Each query is materialized through the `noop` write format — full
-  * column evaluation on every row, no driver collect, no count-only
-  * pruning (a count() lets Catalyst drop projection work and flatters
-  * the numbers; VERDICT r1 watch item).
+  * Every query runs exactly SPARK_GRAFT_BENCH_REPEAT times (default 3)
+  * through [[Probe.noopRun]], in name order, in one session whose
+  * SharedStage cores live for the whole pass. Its recorded time is the
+  * MIN OVER SUCCESSFUL repeats: a repeat that throws never sets the min
+  * (a 0.1 s failure would shadow a 10 s success), and a query whose
+  * every repeat failed reads 9999.0, so the failure is loud in `total`.
+  * Every query gets the same estimator; nothing is re-measured because
+  * it looked slow.
   *
-  * Each query runs SPARK_GRAFT_BENCH_REPEAT times (default 2; 3 for the
-  * historically noisy graph_ and emb_ families — r9's two unexplained
-  * outliers, graph_triangles 16.7s-official vs 1.16s-builder and
-  * emb_cluster_purity 3.3s vs 1.05s, were both in those families) and
-  * records the MIN OVER SUCCESSFUL repeats — a repeat whose query throws
-  * must not contribute its (fast-failing) elapsed time, or a 0.1s
-  * failure would shadow a 10s success and silently corrupt the
-  * regression signal (round-9 ADVICE). Set REPEAT=1 for quick local
-  * iteration.
+  * bench_full.json records, per query: all repeat `times`, its
+  * execution `order`, `failures`, the host's `load1_pre` and
+  * `mem_avail_gib` sampled just before its first repeat, `vs_ref` (min
+  * over its bench_ref.json pin) and `core_builds` (SharedStage cores
+  * each repeat built, so a slow cold repeat is attributable). The
+  * run-level readouts are:
+  *   - `core_build_cost_s`: the one-time core builds, summed per query
+  *     as its cheapest cold repeat minus its cheapest warm one; `total`
+  *     sums the mins, so total + core_build_cost_s is the end-to-end
+  *     cost;
+  *   - `inflated_vs_ref`: queries with a pin above 50 ms whose min is
+  *     over 1.5x the pin AND over it by more than [[slackFor]];
+  *   - `suspect_contention`: ten or more such queries at once — the
+  *     lockstep signature of a loaded host, not of one code change;
+  *   - `drift_p50`/`drift_max`: min/pin over the other pins above
+  *     50 ms, so creep below the flag threshold stays visible;
+  *   - `micro_drift_p50`/`micro_drift_max` and `micro_outliers`: the
+  *     same for pins of 50 ms or less (outlier: over 3x and 50 ms over
+  *     the pin), kept out of the contention flag;
+  *   - `cpus`, `load1_start`/`load1_max`/`load1_end`: the host.
   *
-  * Self-diagnosis (r9 VERDICT item 1, extended r14 after the official
-  * r13 artifact ran 2.2x inflated under co-tenant load): the compact
-  * stdout line stays min-per-query for the driver parser, but
-  * bench_full.json records, per query, ALL repeat times, the query's
-  * global execution index, the failure count, and — new r14 — the
-  * 1-min host load and MemAvailable sampled immediately BEFORE the
-  * query ran, so a mid-run contention spike is visible per query, not
-  * just at the endpoints (r13's load markers 2.34/1.76 hid the spike
-  * that quadrupled w5_first_value). Three defenses:
-  *
-  *   1. per-query load1/mem samples (above);
-  *   2. repeat escalation — when a query's successful repeats spread
-  *      more than 2x (max/min), up to 2 extra repeats run so the min
-  *      settles on steady state instead of a contended first pass;
-  *   3. reference comparison — bench_ref.json (a committed,
-  *      deliberately-chosen known-good controlled run; NOT simply the
-  *      previous artifact, which may itself be degraded) is diffed
-  *      per-query; when >= 10 shared queries inflate > 1.5x in
-  *      lockstep the artifact self-flags `suspect_contention` with the
-  *      offending (query, ratio) pairs, and the stdout line carries
-  *      the count so the judge sees the flag without opening the full
-  *      artifact;
-  *   4. end-of-run re-adjudication (r16) — after the sweep, the
-  *      still-inflated set is re-run once the host load drops below
-  *      SPARK_GRAFT_QUIET_LOAD (bounded by SPARK_GRAFT_QUIET_WAIT_S),
-  *      each touched entry annotated `readjudicated`, so the official
-  *      artifact self-repairs from a transient co-tenant spike
-  *      without manual ABBench.
-  *
-  * The artifact also aggregates `core_build_cost_s` (the one-time
-  * SharedStage core builds, separated from the warm-plan mins that
-  * `total` sums) and `drift_p50`/`drift_max` (sub-slack drift over the
-  * unflagged pinned queries, so slow creep spread across many small
-  * pins is visible in one number).
-  */
+  * A flag says a min moved against its pin, not why. Whether that is
+  * contention or a regression is answered with `graft.Probe ab`, which
+  * interleaves the queries in both orders with load recorded. The run
+  * also regenerates QUERIES.md. Set REPEAT=1 for a quick local loop. */
 object Bench {
+  /** One query's repeats, in run order, and the host state sampled just
+    * before the first of them. */
+  final case class QStat(runs: Seq[Probe.Run], order: Int, loadPre: Double,
+      memPre: Double) {
+    def times: Seq[Double] = runs.map(_.seconds)
+    def okTimes: Seq[Double] = runs.filter(_.ok).map(_.seconds)
+    def coreBuilds: Seq[Int] = runs.map(_.coreBuilds)
+    def failures: Int = runs.size - okTimes.size
+    def min: Double = if (okTimes.nonEmpty) okTimes.min else 9999.0
+    // The one-time SharedStage core cost this query paid: its cheapest
+    // cold (core-building) repeat minus its cheapest warm one. Cores
+    // live for the pass, so each core is counted once. Zero when there
+    // is no cold or no warm successful repeat: the cost is then not
+    // separable, and claiming one would be a guess.
+    def coreCost: Double = {
+      val ok = runs.filter(_.ok)
+      val cold = ok.filter(_.coreBuilds > 0).map(_.seconds)
+      val warm = ok.filter(_.coreBuilds == 0).map(_.seconds)
+      if (cold.nonEmpty && warm.nonEmpty) (cold.min - warm.min).max(0.0)
+      else 0.0
+    }
+  }
+
+  /** Absolute slack over a pin before it can flag: 0.5·pin clamped to
+    * [0.1, 0.2] s, so this host's ~0.1 s scheduler jitter on trivial
+    * queries never flags while a small pin still cannot drift multi-x. */
+  def slackFor(pin: Double): Double = (0.5 * pin).max(0.1).min(0.2)
+
+  def isInflated(min: Double, pin: Double): Boolean =
+    pin > 0.05 && min / pin > 1.5 && min - pin > slackFor(pin)
+
+  def isMicroOutlier(min: Double, pin: Double): Boolean =
+    pin > 0 && pin <= 0.05 && min / pin > 3.0 && min - pin > 0.05
+
+  // Locale.ROOT: a comma-decimal locale would emit 52,123 and break JSON.
+  def fmt(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** The stdout line. Consumers read it from a bounded tail window of
+    * the output (~2000 chars), so it stays within 1600: 3-decimal mins,
+    * and when they do not all fit the FASTEST queries leave the map
+    * (`queries_omitted`) while `total` still sums every query. `fields`
+    * are the `,"key":value` pairs that follow the map. */
+  def stdoutLine(mins: Seq[(String, Double)], fields: String): String = {
+    val total = mins.map(_._2).sum
+    val bySlowest = mins.sortBy(-_._2)
+    def render(n: Int): String = {
+      val m = bySlowest.take(n).sortBy(_._1)
+        .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+        .mkString("{", ",", "}")
+      val om =
+        if (n < mins.size) s""","queries_omitted":${mins.size - n}""" else ""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$m$om$fields}"""
+    }
+    Iterator.range(mins.size, 0, -1).map(render).find(_.length <= 1600)
+      .getOrElse(render(1))
+  }
+
+  /** (median, max) of `ratios`, or (-1, -1) when there are none. */
+  private def p50Max(ratios: Seq[Double]): (Double, Double) =
+    if (ratios.isEmpty) (-1.0, -1.0)
+    else { val r = ratios.sorted; (r(r.size / 2), r.last) }
+
+  // Host MemAvailable (GiB), so a memory squeeze is attributable per query.
+  private def memAvailGiB: Double =
+    try "MemAvailable:\\s+(\\d+) kB".r
+      .findFirstMatchIn(Files.readString(Paths.get("/proc/meminfo")))
+      .map(_.group(1).toDouble / 1048576.0).getOrElse(-1.0)
+    catch { case _: Throwable => -1.0 }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEAT", "3")
+      .toInt.max(1)
     val cpus = GraftSession.cpus
     val spark = GraftSession(cpus)
     Tables.warmup(spark, sfDir)
-    val repeatBase = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEAT", "2")
-      .toInt.max(1)
-    // Host load average: r11's artifact comparison was polluted by
-    // co-tenant load — 45 untouched queries drifted 1.2-1.4x in
-    // lockstep (PLANS.md records ~20% variance on this host), and r13's
-    // official run was 2.2x inflated by a spike the endpoint-only
-    // markers could not see. Sampled before EVERY query now.
-    def load1: Double =
-      try java.nio.file.Files.readString(
-          java.nio.file.Paths.get("/proc/loadavg"))
-        .split("\\s+")(0).toDouble
-      catch { case _: Throwable => -1.0 }
-    // Host MemAvailable (GiB): the r13 degraded run's tail carried
-    // Spark's "serious performance degradation" low-memory warning;
-    // a per-query sample makes memory squeeze attributable.
-    def memAvailGiB: Double =
-      try {
-        val s = java.nio.file.Files.readString(
-          java.nio.file.Paths.get("/proc/meminfo"))
-        val m = "MemAvailable:\\s+(\\d+) kB".r.findFirstMatchIn(s)
-        m.map(_.group(1).toDouble / 1048576.0).getOrElse(-1.0)
-      } catch { case _: Throwable => -1.0 }
-    val loadStart = load1
-    // The two r9 `weak` flags (graph_triangles, emb_cluster_purity) need
-    // one extra repeat to make contention-vs-regression decidable; their
-    // whole families get it so family-internal comparisons stay
-    // like-for-like. r11 added the CC-consumer family (cluster_*,
-    // dedup_*, samp_*) after cluster_keep_best's official 2.85 s turned
-    // out to be contention ([7.7, 2.85] at order 20; warm steady state
-    // 1.5-1.7 s — see candidatePairsFromBands' A/B note). r13 added
-    // mm_* — the demux-heavy queries pay first-repeat codegen/JNI
-    // warm-up (mm_frame_dedup ABBench: rep1 9.9 s, warm 3.7-4.0 s).
-    // Only widen — never shrink an explicit REPEAT=1.
-    def repeatsFor(name: String): Int =
-      if (repeatBase == 1) 1
-      else if (name.startsWith("graph_") || name.startsWith("emb_") ||
-        name.startsWith("cluster_") || name.startsWith("dedup_") ||
-        name.startsWith("samp_") || name.startsWith("mm_"))
-        repeatBase.max(3)
-      else repeatBase
-    // Reference mins from the committed known-good controlled run.
-    // Flat regex parse (no JSON dep): every "name":float pair except
-    // the "total" summary key is a query min. Only comparable when this
-    // run's scale factor matches the reference's — an sf0.01 iteration
-    // run against the sf0.1 reference would flag nonsense.
-    val refMins: Map[String, Double] =
-      try {
-        val s = java.nio.file.Files.readString(
-          java.nio.file.Paths.get("bench_ref.json"))
-        val refSf = "\"sf\":\\s*\"([^\"]+)\"".r.findFirstMatchIn(s)
-          .map(_.group(1)).getOrElse("")
-        if (refSf != sfDir) Map.empty
-        else "\"([A-Za-z0-9_]+)\":\\s*([0-9]+\\.[0-9]+)".r
-          .findAllMatchIn(s)
-          .map(m => m.group(1) -> m.group(2).toDouble)
-          .filter(_._1 != "total").toMap
-      } catch { case _: Throwable => Map.empty }
-    // Absolute slack for ref comparisons, scaled with the pin (r15
-    // ADVICE): a flat 0.2 s let a 0.05 s pin drift 5x unflagged, while
-    // anything tighter than ~0.1 s flags this host's scheduler floor
-    // (PLANS.md: 0.08→0.14 s drift on trivial queries is noise). So
-    // 0.5·pin, clamped to [0.1, 0.2] — sub-second pins keep a floor
-    // that ignores the host jitter but catches multi-x drift, and the
-    // raw vs_ref ratio is recorded per query in bench_full.json so
-    // even sub-slack drift stays visible in the artifact.
-    def slackFor(r: Double): Double = (0.5 * r).max(0.1).min(0.2)
-    // One repeat = (elapsed s, succeeded, SharedStage cores built).
-    final case class QStat(runs: Seq[(Double, Boolean, Int)],
-      order: Int, loadPre: Double, memPre: Double, escalated: Int,
-      nReadj: Int = 0, readjLoad: Double = -1.0) {
-      def times: Seq[Double] = runs.map(_._1)
-      def okTimes: Seq[Double] = runs.filter(_._2).map(_._1)
-      def coreBuilds: Seq[Int] = runs.map(_._3)
-      def failures: Int = runs.size - okTimes.size
-      // All repeats failed → the sentinel keeps min well-defined and
-      // makes the failure loud in the total (times themselves are of a
-      // fast-failing query and would understate).
-      def min: Double = if (okTimes.nonEmpty) okTimes.min else 9999.0
-      // One-time SharedStage core cost this query paid: the gap
-      // between its cheapest cold (core-building) repeat and its
-      // cheapest warm one. Counted once per core key across the whole
-      // bench pass by construction — cores live for the pass, so only
-      // the repeat that built a core shows builds > 0. Zero when the
-      // query never paid a build (or has no warm repeat to difference
-      // against — then the cost is not separable and claiming one
-      // would be a guess).
-      def coreCost: Double = {
-        val ok = runs.filter(_._2)
-        val cold = ok.filter(_._3 > 0).map(_._1)
-        val warm = ok.filter(_._3 == 0).map(_._1)
-        if (cold.nonEmpty && warm.nonEmpty) (cold.min - warm.min).max(0.0)
-        else 0.0
-      }
+    val loadStart = Probe.load1
+    // bench_ref.json is a committed, deliberately chosen known-good run
+    // (not simply the previous artifact, which may itself be degraded):
+    // every "name": float pair except the "total" summary is a pin.
+    val refMins = Probe.readPins("bench_ref.json", sfDir,
+      "\"([A-Za-z0-9_]+)\":\\s*([0-9]+\\.[0-9]+)".r) - "total"
+    val results = SparkEntry.queries.toSeq.sortBy(_._1).zipWithIndex.map {
+      case ((name, fn), order) =>
+        val (loadPre, memPre) = (Probe.load1, memAvailGiB)
+        val runs = (1 to repeats)
+          .map(_ => Probe.noopRun(spark, name)(fn(spark, sfDir)))
+        name -> QStat(runs, order, loadPre, memPre)
     }
-    def oneRun(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Boolean, Int) = {
-      val b0 = graft.operators.SharedStage.totalBuilds(spark)
-      val t0 = System.nanoTime()
-      val ok =
-        try {
-          fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-          true
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          false
-        }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // SharedStage cores built during this run: a repeat that paid
-      // a cold core build is attributable in bench_full.json
-      // (core_builds), so its time is read as cold, not variance.
-      val built = graft.operators.SharedStage.totalBuilds(spark) - b0
-      // Drop the query's dead blocks; SharedStage cores live for the
-      // whole bench pass, so the artifact measures the marginal plan,
-      // with the one cold build visible via core_builds on the repeat
-      // that paid it.
-      graft.operators.SharedStage.sweep(spark, keepCores = true)
-      (dt, ok, built)
-    }
-    // Untimed per-JVM warm-up for the recurring flag-prone class (r19
-    // VERDICT item 5): ev_disorder_report flagged three rounds running
-    // and mm_audio_* joined it in r19 — each time adjudicated as
-    // JIT-warm-up/host-state, never a regression. One untimed execution
-    // of each before the sweep warms the codegen/JNI paths those plans
-    // hit first, so their timed repeats measure steady state and the
-    // self-defending artifact stops crying wolf. SharedStage cores a
-    // warm-up happens to build are dropped afterwards: the warm-up may
-    // pre-pay JVM state (unmeasured by design) but must NOT pre-pay
-    // core materializations the timed pass attributes via core_builds.
-    // Env-overridable; skipped under explicit REPEAT=1.
-    if (repeatBase > 1) {
-      val warmNames = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM",
-          "ev_disorder_report,mm_audio_energy,mm_audio_features")
-        .split(",").map(_.trim).filter(_.nonEmpty)
-      warmNames.foreach { n =>
-        SparkEntry.queries.get(n).foreach { fn => oneRun(n, fn) }
-      }
-      graft.operators.SharedStage.sweep(spark, keepCores = false)
-    }
-    var execIdx = -1
-    val swept = SparkEntry.queries.toSeq.sortBy(_._1).map {
-      case (name, fn) =>
-        execIdx += 1
-        val lPre = load1
-        val mPre = memAvailGiB
-        var runs = (1 to repeatsFor(name)).map(_ => oneRun(name, fn))
-        // Repeat escalation (r13 VERDICT item 1): a >2x spread across
-        // successful repeats means at least one repeat ran degraded —
-        // add up to 2 repeats so min reflects steady state. Skipped
-        // under explicit REPEAT=1 (quick local iteration).
-        var extra = 0
-        def spreadTooWide: Boolean = {
-          // Repeats that paid a cold SharedStage core build are
-          // excluded from the spread test — cold-vs-warm is explained
-          // by core_builds, not contention, and escalating on it would
-          // burn repeats re-measuring a known effect.
-          val ok = runs.filter(r => r._2 && r._3 == 0).map(_._1)
-          ok.size >= 2 && ok.max / ok.min.max(1e-9) > 2.0
-        }
-        while (repeatBase > 1 && extra < 2 && spreadTooWide) {
-          runs = runs :+ oneRun(name, fn); extra += 1
-        }
-        // Reference escalation (r14 VERDICT item 1): internal spread
-        // cannot catch a query whose EVERY repeat ran contended — the
-        // repeats agree with each other and still sit far above the
-        // committed known-good pin. When the running min is >1.5x the
-        // reference, spend up to 2 more repeats: a co-tenant blip
-        // settles back toward the pin and the artifact stays clean; a
-        // real regression survives all repeats and flags honestly.
-        // Both a RATIO and an ABSOLUTE guard: a 0.08 s pin drifting to
-        // 0.14 s is scheduler noise (this host's floor), not a 1.7x
-        // regression — the absolute slack scales with the pin
-        // (slackFor: 0.5·pin in [0.1, 0.2]) so small pins can't drift
-        // multi-x behind a flat allowance (r15 ADVICE).
-        def minVsRefTooHigh: Boolean = {
-          val ok = runs.filter(_._2).map(_._1)
-          ok.nonEmpty && refMins.get(name)
-            .exists(r => r > 0.05 && ok.min / r > 1.5 &&
-              ok.min - r > slackFor(r))
-        }
-        while (repeatBase > 1 && extra < 4 && minVsRefTooHigh) {
-          runs = runs :+ oneRun(name, fn); extra += 1
-        }
-        // Micro-pin escalation (r18 VERDICT item 2): the branch above
-        // requires pin > 0.05 s, so a micro-pin query at 7x its 29 ms
-        // pin got the minimum 2 repeats and its outlier ratio was
-        // displayed (micro_drift_max) but never re-measured. Micro
-        // outliers — ratio > 3x AND > 50 ms absolute over the pin, so
-        // this host's 0.08-0.14 s scheduler floor on trivial queries
-        // can't flag — now spend up to 2 extra repeats and join the
-        // end-of-run quiet re-measure below, same chain as the big
-        // pins; they still do NOT enter inflated_vs_ref/contention
-        // flags (absolute cost of the whole class is < 1 s).
-        def minVsMicroRefTooHigh: Boolean = {
-          val ok = runs.filter(_._2).map(_._1)
-          ok.nonEmpty && refMins.get(name)
-            .exists(r => r > 0 && r <= 0.05 && ok.min / r > 3.0 &&
-              ok.min - r > 0.05)
-        }
-        // Own budget: up to 2 extra repeats as documented above (r19
-        // ADVICE — sharing the big-pin `extra < 4` cap let a micro
-        // outlier spend 4, since the big-pin loop never runs for it).
-        val microCap = extra + 2
-        while (repeatBase > 1 && extra < microCap && minVsMicroRefTooHigh) {
-          runs = runs :+ oneRun(name, fn); extra += 1
-        }
-        name -> QStat(runs, execIdx, lPre, mPre, extra)
-    }
-    def isInflated(name: String, s: QStat): Boolean =
-      refMins.get(name).exists(r => r > 0.05 &&
-        s.min / r > 1.5 && s.min - r > slackFor(r))
-    def isMicroOutlier(name: String, s: QStat): Boolean =
-      refMins.get(name).exists(r => r > 0 && r <= 0.05 &&
-        s.min / r > 3.0 && s.min - r > 0.05)
-    // END-OF-RUN RE-ADJUDICATION (r16 VERDICT item 1): the per-query
-    // escalations above re-measure a query IMMEDIATELY, while the
-    // co-tenant blip that inflated it is often still running — r16's
-    // official artifact carried 21 inflated entries even though the
-    // same-night manual re-run was clean. So after the sweep, requeue
-    // exactly the still-inflated set once more, first waiting (bounded)
-    // for the host to go quiet: poll load1 until it drops below a
-    // threshold or the wait budget (default 300 s) expires. The re-run
-    // is a legitimate extra repeat — min over successful repeats is
-    // still the recorded statistic, so it can only replace a flagged
-    // min downward — and every touched entry is annotated
-    // (readjudicated count + the load1 the re-run actually saw), so
-    // the artifact distinguishes "re-measured quiet, still slow" (a
-    // real regression) from "never got a quiet window". The official
-    // record stops depending on which run the driver happens to take.
-    def fmt0(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    val results: Seq[(String, QStat)] = {
-      // Micro-pin outliers share the quiet re-measure (r18 VERDICT
-      // item 2) — adjudication, not just the visibility r18 added.
-      val flaggedNow = swept.filter { case (n, s) =>
-        isInflated(n, s) || isMicroOutlier(n, s) }
-      if (flaggedNow.isEmpty || repeatBase == 1) swept
-      else {
-        val quietLoad = sys.env.getOrElse(
-          "SPARK_GRAFT_QUIET_LOAD", "3.0").toDouble
-        val waitBudgetS = sys.env.getOrElse(
-          "SPARK_GRAFT_QUIET_WAIT_S", "300").toLong
-        System.err.println(s"[bench] re-adjudicating " +
-          s"${flaggedNow.size} inflated queries (load1=${fmt0(load1)})")
-        val deadline = System.nanoTime() + waitBudgetS * 1000000000L
-        // The sweep's own work inflates load1 (1-minute decay), so a
-        // wait is useful even with zero co-tenants.
-        while (load1 > quietLoad && System.nanoTime() < deadline)
-          Thread.sleep(15000L)
-        val readj = flaggedNow.map { case (name, _) =>
-          name -> (load1, (1 to 2).map(_ =>
-            oneRun(name, SparkEntry.queries(name))))
-        }.toMap
-        swept.map { case (name, s) =>
-          readj.get(name) match {
-            case Some((l, extraRuns)) => name ->
-              s.copy(runs = s.runs ++ extraRuns,
-                nReadj = extraRuns.size, readjLoad = l)
-            case None => name -> s
-          }
-        }
-      }
-    }
-    val total = results.map(_._2.min).sum
-    // One-time SharedStage core cost, aggregated (r16 VERDICT item 2):
-    // `total` sums warm-plan mins — the marginal cost of each query in
-    // a long-lived session — so the cold core builds only appeared
-    // per-repeat (core_builds). This aggregate makes total+cores the
-    // honest end-to-end number and a core that silently becomes
-    // expensive visible in one field.
-    val coreBuildCost = results.map(_._2.coreCost).sum
-    // Contention self-flag: queries whose min inflates >1.5x over the
-    // committed reference. A handful inflating is a real regression
-    // signal (code changed); >=10 inflating TOGETHER — across families,
-    // including untouched trivial queries — is the r13 contention
-    // signature, and the artifact says so itself.
-    val inflated = results.collect {
-      case (name, s) if isInflated(name, s) =>
-        name -> (s.min / refMins(name))
-    }.sortBy(-_._2)
-    val contentionSuspected = inflated.size >= 10
-    // Sub-slack drift aggregate (r16 ADVICE residue): inflation flags
-    // only fire above slackFor, so slow creep spread across many small
-    // pins was invisible. Summarize min/ref over the UNFLAGGED pinned
-    // queries: drift_p50 creeping above ~1.1 means the whole registry
-    // got slower without any single query tripping its flag.
-    val driftRatios = results.collect {
-      case (name, s) if refMins.get(name).exists(_ > 0.05) &&
-        !isInflated(name, s) => s.min / refMins(name)
-    }.sorted
-    val driftP50 =
-      if (driftRatios.isEmpty) -1.0
-      else driftRatios(driftRatios.size / 2)
-    val driftMax = if (driftRatios.isEmpty) -1.0 else driftRatios.last
-    // Micro-pin drift aggregate (r17 VERDICT item 2): both the
-    // inflation flag and drift_* above require pin > 0.05 s, so the
-    // sub-50 ms pin class was invisible to EVERY aggregate — an entry
-    // at 8x its 32 ms pin appeared nowhere. Absolute cost of that
-    // class is trivial (sum of pins < 1 s), so no flagging/escalation
-    // — but the ratios are now RECORDED so creep across the whole
-    // micro class shows up as micro_drift_p50 rising, and any single
-    // outlier is visible as micro_drift_max.
-    val microRatios = results.collect {
-      case (name, s) if refMins.get(name).exists(r => r > 0 && r <= 0.05) =>
-        s.min / refMins(name)
-    }.sorted
-    val microP50 =
-      if (microRatios.isEmpty) -1.0
-      else microRatios(microRatios.size / 2)
-    val microMax = if (microRatios.isEmpty) -1.0 else microRatios.last
-    // The driver extracts this line from a bounded tail window of the sbt
-    // output (~2000 chars; BENCH_r01/r02 both came back parsed:null — r02's
-    // full-precision 75-query line overran the window). Keep the line
-    // compact: 3-decimal seconds, and if it still would not fit, drop the
-    // FASTEST queries from the map (total stays over ALL queries). Full
-    // per-repeat detail goes to bench_full.json for audit.
-    // Locale.ROOT: a comma-decimal default locale would emit 52,123 and
-    // break the JSON line (the parsed:null failure class).
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    val loadEnd = Probe.load1
     val loadMax = results.map(_._2.loadPre).max
-    def line(qs: Seq[(String, QStat)], omitted: Int): String = {
-      val m = qs.map { case (k, s) => "\"" + k + "\":" + fmt(s.min) }
-        .mkString("{", ",", "}")
-      val om = if (omitted > 0) s""","queries_omitted":$omitted""" else ""
-      val fails = results.map(_._2.failures).sum
-      val fl = if (fails > 0) s""","repeat_failures":$fails""" else ""
-      val ct = if (contentionSuspected)
-        s""","suspect_contention":${inflated.size}""" else ""
-      val cc = if (coreBuildCost > 0.005)
-        s""","core_build_cost_s":${fmt(coreBuildCost)}""" else ""
-      val dr = if (driftP50 >= 0)
-        s""","drift_p50":${fmt(driftP50)},"drift_max":${fmt(driftMax)}"""
-      else ""
-      val mdr = if (microP50 >= 0)
-        s""","micro_drift_p50":${fmt(microP50)},"micro_drift_max":${fmt(microMax)}"""
-      else ""
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$m$om$fl$ct$cc$dr$mdr,"sf":"$sfDir","load1_start":${fmt(loadStart)},"load1_max":${fmt(loadMax)},"load1_end":${fmt(load1)}}"""
+    val total = results.map(_._2.min).sum
+    val coreBuildCost = results.map(_._2.coreCost).sum
+    def vsPin(pinned: (Double, Double) => Boolean) = results.collect {
+      case (k, s) if refMins.get(k).exists(pinned(s.min, _)) =>
+        k -> s.min / refMins(k)
     }
-    val bySlowest = results.sortBy(-_._2.min)
-    val maxLen = 1600
-    val keep = Iterator.range(bySlowest.size, 0, -1)
-      .find(n => line(bySlowest.take(n).sortBy(_._1),
-        bySlowest.size - n).length <= maxLen)
-      .getOrElse(1)
+    val inflated = vsPin(isInflated).sortBy(-_._2)
+    val contention = inflated.size >= 10
+    val (driftP50, driftMax) = p50Max(vsPin((m, r) =>
+      r > 0.05 && !isInflated(m, r)).map(_._2))
+    val (microP50, microMax) =
+      p50Max(vsPin((_, r) => r > 0 && r <= 0.05).map(_._2))
+    val microOutliers = vsPin(isMicroOutlier)
+    def obj(kv: Seq[(String, Double)]): String =
+      kv.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+
+    val fails = results.map(_._2.failures).sum
+    val fields =
+      (if (fails > 0) s""","repeat_failures":$fails""" else "") +
+      (if (contention) s""","suspect_contention":${inflated.size}""" else "") +
+      (if (coreBuildCost > 0.005)
+        s""","core_build_cost_s":${fmt(coreBuildCost)}""" else "") +
+      (if (driftP50 >= 0)
+        s""","drift_p50":${fmt(driftP50)},"drift_max":${fmt(driftMax)}"""
+      else "") +
+      (if (microP50 >= 0)
+        s""","micro_drift_p50":${fmt(microP50)},"micro_drift_max":${fmt(microMax)}"""
+      else "") +
+      s""","sf":"$sfDir","load1_start":${fmt(loadStart)},""" +
+      s""""load1_max":${fmt(loadMax)},"load1_end":${fmt(loadEnd)}"""
+
     val full = results.map { case (k, s) =>
-      val ts = s.times.map(fmt).mkString("[", ",", "]")
-      val esc = if (s.escalated > 0) s""","escalated":${s.escalated}""" else ""
-      // Unfiltered drift vs the committed pin — recorded even under
-      // the flagging slack so sub-slack drift stays visible (r15
-      // ADVICE), and cold SharedStage core builds per repeat so a slow
-      // first repeat is attributable to the build that paid it.
       val vr = refMins.get(k)
         .map(r => s""","vs_ref":${fmt(s.min / r)}""").getOrElse("")
       val cb = if (s.coreBuilds.exists(_ > 0))
         s""","core_builds":${s.coreBuilds.mkString("[", ",", "]")}"""
       else ""
-      // Re-adjudicated entries: the LAST `readjudicated` entries of
-      // `times` ran after the end-of-sweep quiet-window wait, at the
-      // recorded load1 — "still inflated after this" means a real
-      // regression, not a contended first pass.
-      val rj = if (s.nReadj > 0)
-        s""","readjudicated":${s.nReadj},"readj_load1":${fmt(s.readjLoad)}"""
-      else ""
-      "\"" + k + "\":{\"min\":" + s.min + ",\"times\":" + ts +
+      "\"" + k + "\":{\"min\":" + s.min + ",\"times\":" +
+        s.times.map(fmt).mkString("[", ",", "]") +
         ",\"order\":" + s.order + ",\"failures\":" + s.failures +
         ",\"load1_pre\":" + fmt(s.loadPre) +
-        ",\"mem_avail_gib\":" + fmt(s.memPre) + esc + vr + cb + rj + "}"
+        ",\"mem_avail_gib\":" + fmt(s.memPre) + vr + cb + "}"
     }.mkString("{", ",", "}")
-    val suspectJson = inflated.map { case (k, r) =>
-      "\"" + k + "\":" + fmt(r)
-    }.mkString("{", ",", "}")
-    // Micro-pin outliers still standing AFTER their escalation +
-    // quiet re-measure — recorded separately from inflated_vs_ref
-    // (they never feed the contention flag; sum of the whole class's
-    // pins is < 1 s), so a persistent micro regression is visible by
-    // name, not only as micro_drift_max.
-    val microOutlierJson = results.collect {
-      case (k, s) if isMicroOutlier(k, s) => "\"" + k + "\":" +
-        fmt(s.min / refMins(k))
-    }.mkString("{", ",", "}")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_full.json"),
-      s"""{"total":$total,"sf":"$sfDir","load1_start":$loadStart,""" +
-        s""""load1_max":$loadMax,"load1_end":$load1,""" +
-        s""""suspect_contention":$contentionSuspected,""" +
-        s""""inflated_vs_ref":$suspectJson,""" +
+    Files.writeString(Paths.get("bench_full.json"),
+      s"""{"total":$total,"sf":"$sfDir","cpus":$cpus,""" +
+        s""""load1_start":$loadStart,"load1_max":$loadMax,""" +
+        s""""load1_end":$loadEnd,"suspect_contention":$contention,""" +
+        s""""inflated_vs_ref":${obj(inflated)},""" +
         s""""core_build_cost_s":${fmt(coreBuildCost)},""" +
         s""""drift_p50":${fmt(driftP50)},"drift_max":${fmt(driftMax)},""" +
         s""""micro_drift_p50":${fmt(microP50)},""" +
         s""""micro_drift_max":${fmt(microMax)},""" +
-        s""""micro_outliers":$microOutlierJson,""" +
+        s""""micro_outliers":${obj(microOutliers)},""" +
         s""""ref_queries":${refMins.size},""" +
         s""""queries":$full}""" + "\n")
-    // Generated registry index (r10 VERDICT item 7): one line per
-    // registered query — family, oracle discipline, bench time — so the
-    // round artifact is self-describing at 199 queries. Checked in;
-    // regenerate by running Bench.
+    // Generated registry index: one line per registered query — family,
+    // oracle discipline, bench time. Checked in; regenerate by running
+    // Bench.
     val famNames = Seq("agg", "dedup", "emb", "ev", "graph", "samp",
       "txt", "tok", "mm", "pack", "chunk", "pipeline", "pii", "sketch",
       "scale", "shuf", "curriculum", "dq", "sql", "cluster")
-    val idxRows = results.sortBy(_._1).map { case (k, s) =>
+    val idxRows = results.map { case (k, s) =>
       val fam = k.split("_").headOption.filter(famNames.contains)
         .getOrElse(k.split("_").headOption.getOrElse(k) match {
           case p if p.matches("[a-z]\\d*") => "relational"
@@ -471,13 +204,13 @@ object Bench {
         else "spec/rows-only"
       s"| $k | $fam | $otype | ${fmt(s.min)} |"
     }.mkString("\n")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("QUERIES.md"),
+    Files.writeString(Paths.get("QUERIES.md"),
       s"# Query index — generated by graft.Bench ($sfDir, local[$cpus])\n\n" +
         s"${results.size} registered queries; times are min over " +
         "successful repeats, seconds.\n\n" +
         "| query | family | oracle | bench (s) |\n|---|---|---|---|\n" +
         idxRows + "\n")
-    println(line(bySlowest.take(keep).sortBy(_._1), bySlowest.size - keep))
+    println(stdoutLine(results.map { case (k, s) => k -> s.min }, fields))
     spark.stop()
   }
 }

@@ -1,10 +1,11 @@
 package graft
 
 import scala.collection.mutable
+import scala.util.matching.Regex
 
 import org.apache.spark.GraftMetricsHook
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 
@@ -108,6 +109,54 @@ object Probe {
     (r, metrics.total - c0, metrics.stages -- s0)
   }
 
+  /** One timed run: seconds, whether it succeeded, and the SharedStage
+    * cores it built. */
+  final case class Run(seconds: Double, ok: Boolean, coreBuilds: Int)
+
+  /** The one timer of Bench, Probe and ScaleProbe: builds `df` and fully
+    * materializes it through the `noop` sink — every column of every
+    * row, no driver collect, no count-only pruning. A failure is logged
+    * and returned as `ok = false`, never thrown. The clock stops before
+    * the sweep that drops the run's dead blocks; `keepCores` keeps the
+    * SharedStage cores for the next run, as a long-lived session
+    * would. */
+  def noopRun(spark: SparkSession, name: String, keepCores: Boolean = true)(
+      df: => DataFrame): Run = {
+    val b0 = SharedStage.totalBuilds(spark)
+    val t0 = System.nanoTime()
+    val ok =
+      try { df.write.mode("overwrite").format("noop").save(); true }
+      catch { case e: Throwable =>
+        System.err.println(s"[run] $name failed: ${e.getMessage}")
+        false
+      }
+    val dt = (System.nanoTime() - t0) / 1e9
+    val built = SharedStage.totalBuilds(spark) - b0
+    SharedStage.sweep(spark, keepCores)
+    Run(dt, ok, built)
+  }
+
+  /** Host 1-minute load average, or -1 where /proc/loadavg is absent. */
+  def load1: Double =
+    try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
+      .split("\\s+")(0).toDouble
+    catch { case _: Throwable => -1.0 }
+
+  /** A committed pin file as name -> value, one entry per match of
+    * `entry` (group 1 the name, group 2 the value). Pins are only
+    * comparable at their own scale factor: a missing or unreadable
+    * file, or one pinned at another sf than `sfDir`, reads as empty. */
+  def readPins(path: String, sfDir: String, entry: Regex)
+      : Map[String, Double] =
+    try {
+      val s = java.nio.file.Files.readString(java.nio.file.Paths.get(path))
+      val pinSf = "\"sf\":\\s*\"([^\"]+)\"".r.findFirstMatchIn(s)
+        .map(_.group(1)).getOrElse("")
+      if (pinSf != sfDir) Map.empty
+      else entry.findAllMatchIn(s)
+        .map(m => m.group(1) -> m.group(2).toDouble).toMap
+    } catch { case _: Throwable => Map.empty }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: Probe <ab|stages|shuffle|plan|approx> <sfDir> [args]")
@@ -140,30 +189,16 @@ object Probe {
     names
   }
 
-  /** Seconds to build and fully materialize one query (noop sink, as
-    * Bench times it); then its dead blocks are swept, cores kept. */
-  private def timed(spark: SparkSession, sfDir: String, name: String)
-      : Double = {
-    val t0 = System.nanoTime()
-    SparkEntry.queries(name)(spark, sfDir)
-      .write.mode("overwrite").format("noop").save()
-    val t = (System.nanoTime() - t0) / 1e9
-    SharedStage.sweep(spark, keepCores = true)
-    t
-  }
-
   private def ab(spark: SparkSession, sfDir: String, reps: Int,
       names: Seq[String]): Unit = {
-    def load1: Double =
-      try java.nio.file.Files.readString(
-          java.nio.file.Paths.get("/proc/loadavg"))
-        .split("\\s+")(0).toDouble
-      catch { case _: Throwable => -1.0 }
     Tables.warmup(spark, sfDir)
     for ((order, tag) <- Seq((names, "given"), (names.reverse, "reversed"))) {
       println(f"[ab] order=$tag load1=$load1%.2f")
-      for (r <- 1 to reps; q <- order)
-        println(f"[ab] $tag rep=$r $q%-24s ${timed(spark, sfDir, q)}%8.3f s")
+      for (r <- 1 to reps; q <- order) {
+        val t = noopRun(spark, q)(SparkEntry.queries(q)(spark, sfDir))
+        println(f"[ab] $tag rep=$r $q%-24s ${t.seconds}%8.3f s" +
+          (if (t.ok) "" else " FAILED"))
+      }
       println(f"[ab] order=$tag done load1=$load1%.2f")
     }
   }
@@ -173,8 +208,10 @@ object Probe {
     def mb(b: Long): String = f"${b / 1048576.0}%8.1f"
     Tables.warmup(spark, sfDir)
     for (n <- names; tag <- Seq("cold", "warm")) {
-      val (t, _, st) = measure(spark, metrics)(timed(spark, sfDir, n))
-      println(f"\n===== $n $tag=$t%.2fs =====")
+      val (t, _, st) = measure(spark, metrics)(
+        noopRun(spark, n)(SparkEntry.queries(n)(spark, sfDir)))
+      val failed = if (t.ok) "" else " FAILED"
+      println(f"\n===== $n $tag=${t.seconds}%.2fs$failed =====")
       println("  wall_ms task_ms tasks  input_MB  shRd_MB  shWr_MB spill_MB  stage")
       st.toSeq.sortBy(-_._2.wallMs).take(25).foreach { case (id, s) =>
         val c = s.cost
@@ -261,18 +298,9 @@ object Probe {
     // not. Discipline mirrors bench_ref: a flag means adjudicate the
     // plan change, then re-pin deliberately — never bump blind. Only
     // comparable at the pin's scale factor.
-    val refShuffle: Map[String, Double] =
-      try {
-        val s = java.nio.file.Files.readString(
-          java.nio.file.Paths.get("shuffle_ref.json"))
-        val refSf = "\"sf\":\\s*\"([^\"]+)\"".r.findFirstMatchIn(s)
-          .map(_.group(1)).getOrElse("")
-        if (refSf != sfDir) Map.empty
-        else ("\"([A-Za-z0-9_]+)\":\\s*\\{\"input_mb\":[^}]*" +
-          "\"shuffle_write_mb\":\\s*([0-9.]+)").r
-          .findAllMatchIn(s)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } catch { case _: Throwable => Map.empty }
+    val refShuffle = readPins("shuffle_ref.json", sfDir,
+      ("\"([A-Za-z0-9_]+)\":\\s*\\{\"input_mb\":[^}]*" +
+        "\"shuffle_write_mb\":\\s*([0-9.]+)").r)
     val flagged = rows.flatMap { case (n, c, _) =>
       val swMb = c.shuffleWrite / 1048576.0
       refShuffle.get(n).collect {
@@ -302,7 +330,8 @@ object Probe {
       "\"" + n + "\": \"" + m + "\""
     }.mkString("{", ", ", "}")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson),
-      s"""{"sf": "$sfDir", "ref_queries": ${refShuffle.size}, """ +
+      s"""{"sf": "$sfDir", "cpus": ${GraftSession.cpus}, """ +
+        s""""ref_queries": ${refShuffle.size}, """ +
         s""""n_failed": ${failed.size}, "failed": $failedJson, """ +
         s""""flagged_vs_ref": $flaggedJson,\n"queries": $qjson\n}\n""")
 

@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Empirical scaling probe for the pair-generation backbone — the
@@ -16,22 +15,24 @@ import org.apache.spark.sql.functions._
   *
   * r14 (r13 VERDICT item 4 + ADVICE): probe INPUTS are materialized
   * to parquet BEFORE the timer starts, so the measured time is the
-  * operator, not the synthetic generator (the old by-name `time(df)`
-  * ran frameLike's count() inside the timed region); the capped
-  * generator is additionally probed at cap=64, where the hot key
+  * operator, not the synthetic generator (frameLike's count() never
+  * runs inside the timed region); the capped generator is
+  * additionally probed at cap=64, where the hot key
   * (~1% of rows — 250 at 1×, far under the 4096 default) actually
   * crosses the cap at BOTH scales, so the salt-split path itself is
   * exercised rather than just its under-cap fast path; and the two
   * formerly-unprobed backbones are covered — the star-edge →
-  * fixpoint-CC chain (mm_video_keep_best's shape, whose ROUND COUNT
-  * could in principle grow with replication) and the salted-band
-  * horizon gate (dedup_first_in_horizon's shape).
+  * fixpoint-CC chain (mm_video_keep_best's `TextOps.starEdges`, whose
+  * ROUND COUNT could in principle grow with replication) and the
+  * salted-band horizon gate (dedup_first_in_horizon's
+  * `TextOps.horizonHits`), both timed as the registry builds them.
   *
   * Usage: runMain graft.ScaleProbe <sfDir> <mult> [repeats] [only]
-  * (times are min over repeats of a noop-sink materialization,
-  * same discipline as Bench; `only` is a comma list of probe-name
-  * substrings — unmatched probes AND their input materializations are
-  * skipped, so a targeted run doesn't pay the full setup). */
+  * (times are min over repeats of `Probe.noopRun`, the timer Bench
+  * uses, with SharedStage cores dropped after each run; `only` is a
+  * comma list of probe-name substrings — unmatched probes AND their
+  * input materializations are skipped, so a targeted run doesn't pay
+  * the full setup). */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
@@ -76,49 +77,20 @@ object ScaleProbe {
       df.write.mode("overwrite").parquet(p)
       spark.read.parquet(p)
     }
-    def time(mk: () => DataFrame): Double =
+    def time(mk: => DataFrame): Double =
       (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        mk().write.mode("overwrite").format("noop").save()
-        graft.operators.SharedStage.sweep(spark, keepCores = false)
-        (System.nanoTime() - t0) / 1e9
+        val r = Probe.noopRun(spark, "scale probe", keepCores = false)(mk)
+        require(r.ok, "scale probe run failed (see stderr)")
+        r.seconds
       }.min
 
     // The star-edge → exact-CC chain of mm_video_keep_best
     // (TextOps.videoKeepBest): |Σbucket| hub edges, capped, then
     // fixpoint CC over the media nodes.
-    def starCc(frames: DataFrame): DataFrame = {
-      val wB = Window.partitionBy("fhash", "__sub")
-      val edges = frames
-        .withColumn("__n", count(lit(1))
-          .over(Window.partitionBy("fhash")))
-        .withColumn("__sub", pmod(xxhash64(col("media_id")),
-          ceil(col("__n").cast("double") / 4096).cast("long")))
-        .withColumn("hub", min(col("media_id")).over(wB))
-        .filter(col("media_id") =!= col("hub"))
-        .select(col("media_id").as("left_id"), col("hub").as("right_id"))
-        .distinct()
+    def starCc(frames: DataFrame): DataFrame =
       graft.api.GraftOps.connectedComponentsFixpoint(
         frames.select(col("media_id")).distinct(), "media_id",
-        edges, "left_id", "right_id")._1
-    }
-    // The salted-band horizon gate of dedup_first_in_horizon.
-    def horizonGate(docs: DataFrame): DataFrame = {
-      val bands = graft.api.GraftOps
-        .minhashBands(docs, "doc_id", "text")
-        .withColumn("__n", count(lit(1))
-          .over(Window.partitionBy("band_idx", "band_hash")))
-        .withColumn("__sub", pmod(xxhash64(col("doc_id")),
-          ceil(col("__n").cast("double") / 4096).cast("long")))
-        .drop("__n")
-        .localCheckpoint()
-      val idx = bands.select(col("doc_id").as("i_doc"),
-        col("band_idx"), col("band_hash"), col("__sub"))
-      bands.join(idx, Seq("band_idx", "band_hash", "__sub"))
-        .filter(col("i_doc") < col("doc_id") &&
-          col("i_doc") >= col("doc_id") - 30)
-        .select("doc_id").distinct()
-    }
+        graft.queries.TextOps.starEdges(frames), "left_id", "right_id")._1
 
     // ANN/IVFPQ backbone (r14 second batch): replicate the EMBEDDING
     // corpus — replica r keeps the original vectors and labels under
@@ -220,32 +192,32 @@ object ScaleProbe {
       }
       k -> Seq[(String, () => Double)](
         "incremental CC merge (FIXED ingest)" ->
-          (() => time(() => graft.api.GraftOps.incrementalComponents(
+          (() => time(graft.api.GraftOps.incrementalComponents(
             baseLblK, "doc_id", newNodesK, deltaK,
             "left_id", "right_id"))),
         "full CC recompute (contrast)" ->
-          (() => time(() => graft.api.GraftOps
+          (() => time(graft.api.GraftOps
             .connectedComponentsFixpoint(
               docs.select("doc_id"), "doc_id", pairsK,
               "left_id", "right_id")._1)),
         "dedup_exact (hash groupBy)" ->
-          (() => time(() => graft.api.GraftOps
+          (() => time(graft.api.GraftOps
             .dedupExact(docs, "doc_id", "text"))),
         "minhashCandidatePairs (LSH collect path)" ->
-          (() => time(() => graft.api.GraftOps
+          (() => time(graft.api.GraftOps
             .minhashCandidatePairs(docs, "doc_id", "text"))),
         "cappedKeyPairCounts (salted join, cap 4096)" ->
-          (() => time(() => graft.api.GraftOps
+          (() => time(graft.api.GraftOps
             .cappedKeyPairCounts(frames, "fhash", "media_id"))),
         "cappedKeyPairCounts (OVER-cap, cap 64)" ->
-          (() => time(() => graft.api.GraftOps
+          (() => time(graft.api.GraftOps
             .cappedKeyPairCounts(frames, "fhash", "media_id", 64))),
         "star edges + fixpoint CC (video keep-best)" ->
-          (() => time(() => starCc(frames))),
+          (() => time(starCc(frames))),
         "horizon gate (salted band self-join)" ->
-          (() => time(() => horizonGate(docs))),
+          (() => time(graft.queries.TextOps.horizonHits(docs))),
         "emb_ivf_pq (probe + ADC, real registry plan)" ->
-          (() => time(() => graft.queries.Similarity
+          (() => time(graft.queries.Similarity
             .queries("emb_ivf_pq")(spark, corpus))),
         // The heaviest RELATIONAL shapes (r17 VERDICT item 6): the
         // three TPC-H-shaped registry joins get fitted exponents like
@@ -259,13 +231,13 @@ object ScaleProbe {
         // any of them means a join side stopped partitioning on the
         // grown key.
         "q9_product_profit (real registry plan)" ->
-          (() => time(() => SparkEntry
+          (() => time(SparkEntry
             .queries("q9_product_profit")(spark, tpch))),
         "q18_large_orders (real registry plan)" ->
-          (() => time(() => SparkEntry
+          (() => time(SparkEntry
             .queries("q18_large_orders")(spark, tpch))),
         "q21_waiting_supplier (real registry plan)" ->
-          (() => time(() => SparkEntry
+          (() => time(SparkEntry
             .queries("q21_waiting_supplier")(spark, tpch))),
         // Disorder spine (r14 VERDICT item 3): FIXED row count, id
         // RANGE grown k× (event_id·k keeps arrival order and the
@@ -278,7 +250,7 @@ object ScaleProbe {
           val evK = materialize(s"ev$k", evBase.select(
             (col("event_id") * k).cast("long").as("event_id"),
             col("ts_us")))
-          time(() => graft.api.GraftOps
+          time(graft.api.GraftOps
             .disorderReport(evK, "event_id", "ts_us"))
         }),
         // Global PPJoin (r15 VERDICT item 2): the slowest registered
@@ -292,7 +264,7 @@ object ScaleProbe {
         // outgrow it (candidate/output ratio ~flat), and the time row
         // here is the full doc-pair expansion.
         "global PPJoin (collapse+prefix+positional)" ->
-          (() => time(() =>
+          (() => time(
             graft.queries.TextOps.ppjoinGlobalPairs(docs))))
         .filter(p => selected(p._1))
         .map { case (n, thunk) => n -> thunk() }

@@ -269,17 +269,6 @@ object GraftOps {
   /** Heuristic language-ID column for a text column. */
   def languageOf(textCol: Column): Column = langId(tokens(textCol))
 
-  /** Unit-normalized embeddings (id, label?, u) — cosine becomes one dot
-    * product per pair downstream; rows with zero norm are dropped. */
-  def unitNormalize(emb: DataFrame, vecCol: String): DataFrame = {
-    val v = transform(col(vecCol), _.cast("double"))
-    emb.withColumn("__v", v)
-      .withColumn("__nrm", l2Norm(col("__v")))
-      .filter(col("__nrm") > 0)
-      .withColumn(vecCol, transform(col("__v"), x => x / col("__nrm")))
-      .drop("__v", "__nrm")
-  }
-
   /** Brute-force cosine top-k: queries broadcast against the corpus;
     * scores via the native graft_vec_dot expression, ranked with a full
     * deterministic tiebreak. Inputs must be unit-normalized. */

@@ -522,6 +522,47 @@ object TextOps {
           Tables.documents(s, d).select(col("doc_id")), "doc_id", 5))
     }
 
+  /** Star edges of the video keep-best chain over (media_id, fhash)
+    * frame rows: every media links to the smallest media_id of its
+    * content-hash bucket (left_id -> right_id = hub), so CC needs
+    * |bucket| edges instead of |bucket|². Buckets over 4096 rows are
+    * salt-split by a media_id hash, one hub per sub-bucket. */
+  private[graft] def starEdges(frames: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    frames
+      .withColumn("__n", count(lit(1))
+        .over(Window.partitionBy("fhash")))
+      .withColumn("__sub", pmod(xxhash64(col("media_id")),
+        ceil(col("__n").cast("double") / 4096).cast("long")))
+      .withColumn("hub", min(col("media_id"))
+        .over(Window.partitionBy("fhash", "__sub")))
+      .filter(col("media_id") =!= col("hub"))
+      .select(col("media_id").as("left_id"), col("hub").as("right_id"))
+      .distinct()
+  }
+
+  /** The dedup_first_in_horizon gate: the doc_ids that share a minhash
+    * band with an earlier doc at most 30 ids back. The band self-join
+    * is salted under the 4096 bucket cap; see the query's comment. */
+  private[graft] def horizonHits(docs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val bands = graft.api.GraftOps
+      .minhashBands(docs, "doc_id", "text")
+      .withColumn("__n", count(lit(1))
+        .over(Window.partitionBy("band_idx", "band_hash")))
+      .withColumn("__sub", pmod(xxhash64(col("doc_id")),
+        ceil(col("__n").cast("double") / 4096).cast("long")))
+      .drop("__n")
+      .localCheckpoint()
+    val idx = bands.select(col("doc_id").as("i_doc"),
+      col("band_idx"), col("band_hash"), col("__sub"))
+    bands
+      .join(idx, Seq("band_idx", "band_hash", "__sub"))
+      .filter(col("i_doc") < col("doc_id") &&
+        col("i_doc") >= col("doc_id") - 30)
+      .select("doc_id").distinct()
+  }
+
   /** The video keep-best core is a SHARED STAGE (r13 VERDICT item 8):
     * mm_video_keep_best and pipeline_video_retention both consume this
     * table, and under the one-query-one-plan registry contract each
@@ -536,18 +577,8 @@ object TextOps {
     val frames = frameHashCore(s, d)
     val nf = frames.groupBy("media_id")
       .agg(count(lit(1)).as("nf"))
-    val wB = Window.partitionBy("fhash", "__sub")
-    val edges = frames
-      .withColumn("__n", count(lit(1))
-        .over(Window.partitionBy("fhash")))
-      .withColumn("__sub", pmod(xxhash64(col("media_id")),
-        ceil(col("__n").cast("double") / 4096).cast("long")))
-      .withColumn("hub", min(col("media_id")).over(wB))
-      .filter(col("media_id") =!= col("hub"))
-      .select(col("media_id").as("left_id"), col("hub").as("right_id"))
-      .distinct()
     val cc = graft.api.GraftOps.connectedComponentsFixpoint(
-      nf.select(col("media_id")), "media_id", edges,
+      nf.select(col("media_id")), "media_id", starEdges(frames),
       "left_id", "right_id")._1
     val w = Window.partitionBy("cluster_id")
       .orderBy(col("nf").desc, col("media_id"))
@@ -864,24 +895,8 @@ object TextOps {
     // evaluation free, so the join form wins; see cappedKeyPairCounts'
     // Scaladoc for the trade).
     "dedup_first_in_horizon" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val docs = docsOf(s, d)
-      val bands = graft.api.GraftOps
-        .minhashBands(docs, "doc_id", "text")
-        .withColumn("__n", count(lit(1))
-          .over(Window.partitionBy("band_idx", "band_hash")))
-        .withColumn("__sub", pmod(xxhash64(col("doc_id")),
-          ceil(col("__n").cast("double") / 4096).cast("long")))
-        .drop("__n")
-        .localCheckpoint()
-      val idx = bands.select(col("doc_id").as("i_doc"),
-        col("band_idx"), col("band_hash"), col("__sub"))
-      val hits = bands
-        .join(idx, Seq("band_idx", "band_hash", "__sub"))
-        .filter(col("i_doc") < col("doc_id") &&
-          col("i_doc") >= col("doc_id") - 30)
-        .select("doc_id").distinct()
-        .withColumn("hit", lit(true))
+      val hits = horizonHits(docs).withColumn("hit", lit(true))
       docs.select("doc_id")
         .join(hits, Seq("doc_id"), "left")
         .select(col("doc_id"),

@@ -67,8 +67,6 @@ object EventStream {
       watermarkDelay: String): DataFrame =
     sessionAgg(events.withWatermark("ts", watermarkDelay), gap)
 
-  val streamingOutputMode: OutputMode = OutputMode.Append()
-
   /** Streaming exact deduplication — the streaming twin of
     * `GraftOps.dedupExact`: first event per key wins, and
     * dropDuplicatesWithinWatermark evicts a key's dedup state once the
