@@ -58,8 +58,7 @@ object Demo {
     // format("graft-docs"), read back with a batch_id predicate that
     // prunes at the directory level.
     val pay = struct(members.columns.toIndexedSeq.map(col): _*)
-    val docsDf = members.select(
-      sinks.Sinks.docId(pay).as("_id"), to_json(pay).as("doc"))
+    val docsDf = members.select(jobs.ImportJob.storeDoc(pay): _*)
     for (b <- 0L to 1L)
       docsDf.write.format("graft-docs")
         .option("path", s"$outDir/members_v2").option("batchId", b)

@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   *
   *  - `POST /import/extract` with a form-encoded body carrying
   *    `organization_id` and `dispensary_id` (server.py:8-11) runs the
-  *    extract for that organization: the payload is serialized with the
-  *    SAME options as [[ImportJob.writeImportFiles]], written to
+  *    extract for that organization: the payload is serialized in the
+  *    file form ([[ImportJob.fileJson]]), written to
   *    `outDir/mmj-<org>.json` (etl_import.py:63-64), appended to the
   *    `graft-docs` store as a fresh monotonic batch (the
   *    utils.py:123-146 insert leg, via the connector's commit
@@ -35,11 +35,37 @@ import org.apache.spark.sql.functions._
   * documented divergence), so `dispensary_id` is required for wire
   * parity but does not further scope.
   *
-  * Requests serialize through one lock: extraction writes a store
-  * batch, and the connector's contract is single-writer per store.
-  * The driver-side collect is ONE row (the requested org's payload) —
-  * the same bounded-control-flow pattern as the drift summaries. */
+  * Handlers run on a small pool ([[HandlerThreads]]), not on the
+  * server's dispatcher thread. Extracts serialize through one lock:
+  * extraction writes a store batch, and the connector's contract is
+  * single-writer per store. `/healthcheck`, 400, 404 and 405 replies
+  * never take the lock, so they do not wait behind a running extract;
+  * a 404 reads only the organization spine
+  * ([[ImportJob.organizations]]). The driver-side collect is ONE row
+  * (the requested org's payload) — the same bounded-control-flow
+  * pattern as the drift summaries. */
 object ImportService {
+
+  /** Handler threads: up to [[HandlerThreads]], daemon, and each exits
+    * after [[HandlerIdleSeconds]] idle, so a stopped server leaves no
+    * live thread behind. */
+  private val HandlerThreads = 4
+  private val HandlerIdleSeconds = 10L
+
+  private def handlerPool(): java.util.concurrent.ExecutorService = {
+    val n = new AtomicLong()
+    val pool = new java.util.concurrent.ThreadPoolExecutor(
+      HandlerThreads, HandlerThreads,
+      HandlerIdleSeconds, java.util.concurrent.TimeUnit.SECONDS,
+      new java.util.concurrent.LinkedBlockingQueue[Runnable](),
+      (r: Runnable) => {
+        val t = new Thread(r, s"import-service-${n.getAndIncrement()}")
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    pool
+  }
 
   def start(spark: SparkSession, dataDir: String, outDir: String,
       store: String, port: Int = 0): HttpServer = {
@@ -70,6 +96,10 @@ object ImportService {
         .toMap
     }
 
+    def notFound(ex: HttpExchange): Unit =
+      respond(ex, 404, s"""{ "success": false, "status": 404, """ +
+        s""""error": "unknown organization_id" }""")
+
     server.createContext("/healthcheck", (ex: HttpExchange) => {
       if (ex.getRequestMethod == "GET")
         respond(ex, 200, """{ "success": true, "status": 200 }""")
@@ -84,40 +114,40 @@ object ImportService {
           val params = formParams(ex)
           (params.get("organization_id"), params.get("dispensary_id"))
           match {
-            case (Some(orgId), Some(_)) => lock.synchronized {
-              val row = ImportJob.payloads(spark, dataDir)
-                .filter(col("organizationId") === orgId)
-                .select(to_json(col("payload"),
-                    Map("ignoreNullFields" -> "false")).as("value"))
-                .collect()
-              if (row.isEmpty)
-                respond(ex, 404,
-                  s"""{ "success": false, "status": 404, """ +
-                    s""""error": "unknown organization_id" }""")
-              else {
-                val json = row(0).getString(0)
-                // etl_import.py:63-64 — the per-org file artifact
-                val dest = new org.apache.hadoop.fs.Path(
-                  s"$outDir/mmj-$orgId.json")
-                val fs = dest.getFileSystem(
-                  spark.sparkContext.hadoopConfiguration)
-                val os = fs.create(dest, true)
-                try os.write(json.getBytes(UTF_8)) finally os.close()
-                // utils.py:123-146 — the doc-store insert leg, one
-                // fresh monotonic batch per extraction request
-                import spark.implicits._
-                Seq(json).toDF("doc")
-                  // content-hash id over the ALREADY-serialized
-                  // payload (Sinks.docId serializes a struct; here the
-                  // wire bytes are the document)
-                  .select(sha2(col("doc"), 256).as("_id"), col("doc"))
-                  .write.format("graft-docs")
-                  .option("path", store)
-                  .option("batchId", nextBatch.getAndIncrement())
-                  .mode("append").save()
-                respond(ex, 200, json)
+            case (Some(orgId), Some(_)) =>
+              // An unknown org is answered from the spine alone; a known
+              // one is re-checked by the extract itself.
+              val known = !ImportJob.organizations(spark, dataDir)
+                .filter(col("organizationId") === orgId).isEmpty
+              if (known) lock.synchronized {
+                val row = ImportJob.payloads(spark, dataDir)
+                  .filter(col("organizationId") === orgId)
+                  .select(ImportJob.fileJson(col("payload")))
+                  .collect()
+                if (row.isEmpty) notFound(ex)
+                else {
+                  val json = row(0).getString(0)
+                  // etl_import.py:63-64 — the per-org file artifact
+                  val dest = new org.apache.hadoop.fs.Path(
+                    s"$outDir/mmj-$orgId.json")
+                  val fs = dest.getFileSystem(
+                    spark.sparkContext.hadoopConfiguration)
+                  val os = fs.create(dest, true)
+                  try os.write(json.getBytes(UTF_8)) finally os.close()
+                  // utils.py:123-146 — the doc-store insert leg, one
+                  // fresh monotonic batch per extraction request; the
+                  // wire bytes are the document, `_id` their hash
+                  import spark.implicits._
+                  Seq(json).toDF("doc")
+                    .select(ImportJob.jsonDoc(col("doc")): _*)
+                    .write.format("graft-docs")
+                    .option("path", store)
+                    .option("batchId", nextBatch.getAndIncrement())
+                    .mode("append").save()
+                  respond(ex, 200, json)
+                }
               }
-            }
+              else notFound(ex)
             case _ =>
               respond(ex, 400,
                 """{ "success": false, "status": 400, """ +
@@ -132,6 +162,7 @@ object ImportService {
               s""""${e.getClass.getSimpleName}" }""")
       }
     })
+    server.setExecutor(handlerPool())
     server.start()
     server
   }

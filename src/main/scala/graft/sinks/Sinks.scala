@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.jobs.ImportJob
 
 /** Sink layer (SURVEY §2.1 S5/S6/S9).
   *
@@ -20,8 +21,9 @@ object Sinks {
 
   /** S6: deterministic document id — sha256 of the serialized payload.
     * Replaces the reference's random ObjectId + collision-check loop
-    * (utils.py:123-146) with something reproducible and shard-safe. */
-  def docId(payload: Column): Column = sha2(to_json(payload), 256)
+    * (utils.py:123-146) with something reproducible and shard-safe.
+    * It is the `_id` of [[ImportJob.storeDoc]]. */
+  def docId(payload: Column): Column = ImportJob.storeDoc(payload).head
 
   /** Retention for `format("graft-docs")` stores: drop every committed
     * batch below `keepFrom`, returning the dropped ids — see
@@ -58,7 +60,7 @@ object Sinks {
   /** S6: document-collection sink emulation: (id, json) pairs written as
     * parquet — swap `.parquet` for a connector format in production. */
   def writeDocCollection(df: DataFrame, payload: Column, path: String): Unit =
-    df.select(docId(payload).as("_id"), to_json(payload).as("doc"))
+    df.select(ImportJob.storeDoc(payload): _*)
       .write.mode("overwrite").parquet(path)
 
   /** S6 INSERT with the reference's unique-id contract
@@ -87,7 +89,7 @@ object Sinks {
   def insertDocCollection(spark: org.apache.spark.sql.SparkSession,
       df: DataFrame, payload: Column, path: String): Long = {
     val docs = df
-      .select(docId(payload).as("_id"), to_json(payload).as("doc"))
+      .select(ImportJob.storeDoc(payload): _*)
       .dropDuplicates("_id")
     val existing =
       try spark.read.parquet(path).select("_id")
@@ -148,7 +150,7 @@ object Sinks {
         s"invalid table identifier segment '$seg' in '$table'")
     }
     val docs = df
-      .select(docId(payload).as("_id"), to_json(payload).as("doc"))
+      .select(ImportJob.storeDoc(payload): _*)
       .dropDuplicates("_id")
     val inserted = docs.mapPartitions { it =>
       if (!it.hasNext) Iterator.single(0L)

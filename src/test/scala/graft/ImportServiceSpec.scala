@@ -3,6 +3,12 @@ package graft
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+
+import org.apache.spark.GraftMetricsHook
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.scalatest.BeforeAndAfterAll
 
 import graft.jobs.{ImportJob, ImportService}
@@ -12,8 +18,9 @@ import graft.jobs.{ImportJob, ImportService}
   * loopback socket — healthcheck byte parity, the extract POST
   * returning the same payload bytes [[ImportJob.writeImportFiles]]
   * serializes, the mmj-<org>.json file artifact, the doc-store insert
-  * leg landing one fresh batch per request, and the 400/404/405 error
-  * contract. */
+  * leg landing one fresh batch per request, the 400/404/405 error
+  * contract, a 404 answered from the organization spine, and a
+  * healthcheck that does not wait behind a running extract. */
 class ImportServiceSpec extends SparkSpec with BeforeAndAfterAll {
   import spark.implicits._
 
@@ -94,5 +101,69 @@ class ImportServiceSpec extends SparkSpec with BeforeAndAfterAll {
     assert(post("/import/extract",
       "organization_id=org-999&dispensary_id=d").statusCode() == 404)
     assert(get("/import/extract").statusCode() == 405)
+  }
+
+  test("an unknown organization is answered from the spine alone: no " +
+      "payload job, the same 404 body") {
+    val sc = spark.sparkContext
+    GraftMetricsHook.drainListenerBus(sc, 60000L)
+    val jobs = new AtomicInteger
+    val rows = new AtomicLong
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          rows.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+    }
+    sc.addSparkListener(l)
+    val r =
+      try {
+        val r = post("/import/extract",
+          "organization_id=org-99&dispensary_id=d-1")
+        GraftMetricsHook.drainListenerBus(sc, 60000L)
+        r
+      } finally sc.removeSparkListener(l)
+    assert(r.statusCode() == 404)
+    assert(r.body() == """{ "success": false, "status": 404, """ +
+      """"error": "unknown organization_id" }""")
+    // the region table alone: one job over its few rows
+    assert(jobs.get == 1, s"${jobs.get} jobs")
+    assert(rows.get <= Tables.region(spark, d).count(), s"${rows.get} rows")
+  }
+
+  test("a healthcheck sent during an extract returns before the " +
+      "extract does") {
+    val sc = spark.sparkContext
+    GraftMetricsHook.drainListenerBus(sc, 60000L)
+    // the spine check is the extract's first job, the payload plan's
+    // jobs follow it
+    val started = new CountDownLatch(2)
+    val lastStart = new AtomicLong
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        lastStart.accumulateAndGet(e.time, math.max)
+        started.countDown()
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      val extract = client.sendAsync(
+        HttpRequest.newBuilder(URI.create(s"$base/import/extract"))
+          .header("Content-Type", "application/x-www-form-urlencoded")
+          .POST(HttpRequest.BodyPublishers.ofString(
+            "organization_id=org-3&dispensary_id=disp-1")).build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(started.await(120, TimeUnit.SECONDS), "the extract never ran")
+      val h = get("/healthcheck")
+      val answered = System.currentTimeMillis()
+      assert(!extract.isDone, "the extract finished before the healthcheck")
+      assert(h.statusCode() == 200)
+      assert(extract.get(120, TimeUnit.SECONDS).statusCode() == 200)
+      // on the server, too: the extract still started jobs after the
+      // healthcheck was answered
+      GraftMetricsHook.drainListenerBus(sc, 60000L)
+      assert(lastStart.get > answered, "the healthcheck waited")
+    } finally sc.removeSparkListener(l)
   }
 }
