@@ -30,10 +30,7 @@ object SparkEntry {
     * emb_bitext_mine 1.07×.) This is registry-scoped, not a harness
     * change: every query build pins the session floor to its declared
     * value, so ordering cannot leak one query's floor into another,
-    * and Verify executes under the exact config Bench times.
-    * SPARK_GRAFT_AQE_MINPART still overrides the non-exempt default
-    * for A/B runs; SPARK_GRAFT_AQE_MINPART_EXEMPT overrides the
-    * exempt value (set both equal to reproduce a flat-floor run). */
+    * and Verify executes under the exact config Bench times. */
   private val aqeFloorExempt: Set[String] = Set(
     "graph_pagerank", "sql_recursive_cte", "emb_ivf_pq_recall",
     "txt_ngram_novelty", "mm_scene_keyframes", "mm_image_dedup")
@@ -42,18 +39,13 @@ object SparkEntry {
     "spark.sql.adaptive.coalescePartitions.minPartitionSize"
 
   /** The non-exempt floor: the session default and every non-exempt
-    * query's pin. */
-  private[graft] def aqeFloor: String =
-    sys.env.getOrElse("SPARK_GRAFT_AQE_MINPART", "16k")
+    * query's pin. Exempt queries pin Spark's own 1m default. */
+  private[graft] val aqeFloor = "16k"
 
   private def withFloor(name: String,
       fn: (SparkSession, String) => DataFrame)
       : (SparkSession, String) => DataFrame = { (s, d) =>
-    val v =
-      if (aqeFloorExempt(name))
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MINPART_EXEMPT", "1m")
-      else aqeFloor
-    s.conf.set(MinPartKey, v)
+    s.conf.set(MinPartKey, if (aqeFloorExempt(name)) "1m" else aqeFloor)
     fn(s, d)
   }
 

@@ -29,16 +29,12 @@ object Tables {
   // `sparkSession` field made every map value reach its own key),
   // (b) direct self-joins of two `table(...)` calls work without alias
   // gymnastics (distinct plan instances), and (c) the file LISTING is
-  // current each call. Only the SCHEMA is frozen — correct for the
-  // immutable harness testdata; callers whose files change schema
-  // mid-session should call `invalidateSchemaCache()`.
+  // current each call. Only the SCHEMA is frozen for the life of the
+  // JVM — correct for the immutable harness testdata; a table whose
+  // schema changes mid-session needs a fresh JVM.
   private val schemaCache =
     scala.collection.concurrent.TrieMap
       .empty[String, org.apache.spark.sql.types.StructType]
-
-  /** Drop all cached parquet schemas (for sources whose schema evolved
-    * mid-session; data-only changes never need this). */
-  def invalidateSchemaCache(): Unit = schemaCache.clear()
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
@@ -74,11 +70,9 @@ object Tables {
     * aggregation/join to parallelize the few scan-heavy maps. Only the
     * ~13 queries whose per-row scan work is the measured bottleneck
     * (image decode, PII scrub, lang-id, unit-vector scoring) win from
-    * it, so only those call it. SPARK_GRAFT_SPREAD_SCANS=0 disables it
-    * everywhere for A/B runs. */
+    * it, so only those call it. */
   def spreadCpuDense(spark: SparkSession, df: DataFrame, path: String)
       : DataFrame = {
-    if (sys.env.getOrElse("SPARK_GRAFT_SPREAD_SCANS", "1") == "0") return df
     val bytes = sizeCache.getOrElseUpdate(path,
       try {
         val p = new org.apache.hadoop.fs.Path(path)
@@ -165,40 +159,4 @@ object Tables {
       .option("numPartitions", numPartitions)
       .jdbc(url, table, p)
   }
-
-  /** CSV source with an EXPLICIT schema — never schema inference, which
-    * costs an extra full pass over the data and can silently mistype
-    * columns at scale. `mode=FAILFAST` surfaces malformed rows instead
-    * of nulling them (flip to PERMISSIVE + columnNameOfCorruptRecord
-    * for quarantine-style pipelines). */
-  def csvTable(s: SparkSession, path: String, ddl: String,
-      header: Boolean = true, delimiter: String = ","): DataFrame =
-    s.read
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
-      .option("header", header)
-      .option("delimiter", delimiter)
-      .option("mode", "FAILFAST")
-      .csv(path)
-
-  /** JSON-lines source with an explicit schema (same inference/FAILFAST
-    * reasoning as csvTable). One JSON object per line — the splittable
-    * layout; a single multi-line document would serialize the read. */
-  def jsonTable(s: SparkSession, path: String, ddl: String): DataFrame =
-    s.read
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
-      .option("mode", "FAILFAST")
-      .json(path)
-
-  /** ORC source — columnar like parquet, same pushdown/pruning
-    * semantics through the same DataSource V2 scan machinery. */
-  def orcTable(s: SparkSession, path: String): DataFrame =
-    s.read.orc(path)
-
-  /** Parquet read across files with EVOLVED schemas (columns added over
-    * time): mergeSchema unions the footers so old files surface the new
-    * columns as null. Off by default because footer-merging at listing
-    * time costs a pass over every file's metadata — at 100 TB turn it
-    * on only for tables that actually evolved. */
-  def parquetMerged(s: SparkSession, path: String): DataFrame =
-    s.read.option("mergeSchema", "true").parquet(path)
 }

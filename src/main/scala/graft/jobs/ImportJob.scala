@@ -315,9 +315,9 @@ object ImportJob {
     }
 
   /** The document-store leg of the import through the NATIVE connector
-    * surface (r17 VERDICT item 3): the same (content-hash `_id`,
-    * serialized payload) rows [[graft.sinks.Sinks.insertDocCollection]]
-    * lands, but written via `format("graft-docs")` so commit
+    * surface (r17 VERDICT item 3): the (content-hash `_id`,
+    * serialized payload) rows of [[storeDoc]], written via
+    * `format("graft-docs")` so commit
     * adjudication — task retries, speculative attempts, replayed batch
     * jobs — is the CONNECTOR's commit protocol, not caller code. A
     * replayed `batchId` replaces its own `batch_id=` partition

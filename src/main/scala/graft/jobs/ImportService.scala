@@ -42,8 +42,7 @@ import org.apache.spark.sql.functions._
   * never take the lock, so they do not wait behind a running extract;
   * a 404 reads only the organization spine
   * ([[ImportJob.organizations]]). The driver-side collect is ONE row
-  * (the requested org's payload) — the same bounded-control-flow
-  * pattern as the drift summaries. */
+  * (the requested org's payload). */
 object ImportService {
 
   /** Handler threads: up to [[HandlerThreads]], daemon, and each exits
@@ -111,7 +110,13 @@ object ImportService {
         if (ex.getRequestMethod != "POST")
           respond(ex, 405, """{ "success": false, "status": 405 }""")
         else {
-          val params = formParams(ex)
+          // A bad escape (`%zz`) throws in URLDecoder: the client sent
+          // no usable parameters, so it gets the 400 below.
+          val params =
+            try formParams(ex)
+            catch {
+              case _: IllegalArgumentException => Map.empty[String, String]
+            }
           (params.get("organization_id"), params.get("dispensary_id"))
           match {
             case (Some(orgId), Some(_)) =>

@@ -20,7 +20,7 @@ import org.apache.spark.sql.types._
   *     byte arithmetic, no codec required.
   * Payloads a decoder does not recognize fall back to `fakeDecode`, a
   * deterministic stand-in, never a task failure. Sample-data transforms
-  * (`resizeStub`, frame content) remain stubs — pixel/PCM codecs don't
+  * (frame content) remain stubs — pixel/PCM codecs don't
   * ship in this container — but the schema, the mapPartitions batch
   * shape, the explicit output StructType, and the per-partition
   * amortization pattern are the real 100 TB-relevant plumbing and are
@@ -43,8 +43,7 @@ object Multimodal {
     * MP4 paths (the demux cores — core_build 41.4→37.2 s); the WAV
     * paths measured WORSE with it (mm_audio_energy 0.29→0.71 s — the
     * PCM window sums are too cheap to pay for the extra stage) and
-    * keep the raw scan.
-    * SPARK_GRAFT_SPREAD_SCANS=0 disables for A/B runs. Determinism:
+    * keep the raw scan. Determinism:
     * round-robin repartition is deterministic (sort-before-repartition)
     * and every consumer is row-wise then aggregated — the 4-vs-32-core
     * determinism gate pins it. */
@@ -52,8 +51,7 @@ object Multimodal {
       : org.apache.spark.rdd.RDD[Row] = {
     val base = ids.select(col(idCol).cast("long"))
     val par = ids.sparkSession.sparkContext.defaultParallelism
-    if (sys.env.getOrElse("SPARK_GRAFT_SPREAD_SCANS", "1") == "0" ||
-        base.rdd.getNumPartitions >= par) base.rdd
+    if (base.rdd.getNumPartitions >= par) base.rdd
     else base.repartition(par).rdd
   }
 
@@ -1298,27 +1296,6 @@ object Multimodal {
       }
     }
     spark.createDataFrame(rdd, featureSchema)
-  }
-
-  /** STUB resize: deterministic byte-domain downsample standing in for an
-    * image resize (real impl swaps the body for a codec scale call; the
-    * operator shape — binary in, binary out + new dims, partition-
-    * parallel projection — is unchanged). Keeps every `factor`-th byte. */
-  def resizeStub(media: DataFrame, factor: Int): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select("media_id", "payload").rdd.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val payload = if (r.isNullAt(1)) Array.empty[Byte]
-        else r.getAs[Array[Byte]](1)
-        val resized = payload.grouped(factor).map(_.head).toArray
-        Row(id, resized, resized.length.toLong)
-      }
-    }
-    spark.createDataFrame(rdd, StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = true),
-      StructField("byte_len", LongType, nullable = false))))
   }
 
   /** Frame sampling for video-shaped payloads: emit every `stride`-th

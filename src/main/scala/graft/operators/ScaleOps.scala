@@ -14,10 +14,8 @@ import org.apache.spark.sql.functions._
   *    parallel. Deterministic: the salt is a hash of the whole left row,
   *    not a random number, so retries/speculative tasks agree.
   *
-  *  - **Bucketed tables** for repeat co-located joins: pre-shuffle both
-  *    fact tables into the same bucket layout once at write time; every
-  *    subsequent equi-join on the bucket key runs shuffle-free (verified
-  *    by plan assertion in ScaleOpsSpec).
+  *  - **Bloom prefilter** for selective joins, and the **Morton code**
+  *    a Z-ordered layout sorts by.
   */
 object ScaleOps {
 
@@ -219,49 +217,6 @@ object ScaleOps {
           col(s"__graft_bf_build.`$buildKey`"))
   }
 
-  /** Write `df` bucketed by `key` into the session catalog as `table`.
-    * Both sides of a repeated join written this way join without any
-    * Exchange (bucket layout replaces the shuffle). */
-  def writeBucketed(df: DataFrame, table: String, key: String,
-      numBuckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(numBuckets, key)
-      .sortBy(key)
-      .saveAsTable(table)
-
-  /** Partitioned-by-column write: directory-level partition pruning for
-    * the common time/tenant predicates (PartitionFilters in the scan).
-    * Repartitions by (keys, bounded salt) first so each Hive partition
-    * is written by at most `saltBuckets` tasks — without any
-    * repartition, every task writes a file into every partition
-    * directory (tasks × partitions small files, the classic layout
-    * failure at scale); repartitioning by the bare keys instead routes
-    * a hot partition value's entire data to ONE task (straggler/OOM at
-    * 100 TB — maxRecordsPerFile splits files, not work). The salt
-    * bounds both failure modes: ≤ saltBuckets files per partition dir
-    * (before maxRecordsPerFile splits) and hot values spread over
-    * saltBuckets tasks. saltBuckets=1 recovers the strict
-    * one-task-per-partition layout for known-uniform keys. */
-  def writePartitioned(df: DataFrame, path: String,
-      partitionCols: Seq[String], saltBuckets: Int = 8): Unit = {
-    require(saltBuckets >= 1, "saltBuckets must be >= 1")
-    require(!df.columns.contains("__salt"),
-      "writePartitioned: input already has a __salt column (reserved); " +
-        "rename or drop it before writing")
-    // Deterministic salt (content hash, not monotonically_increasing_id):
-    // a nondeterministic shuffle key can drop/duplicate rows when a map
-    // task is retried after some reducers already fetched its output.
-    val salted = df.withColumn("__salt",
-      pmod(hash(df.columns.toIndexedSeq.map(col): _*), lit(saltBuckets)))
-    salted
-      .repartition(partitionCols.map(col) :+ col("__salt"): _*)
-      .drop("__salt")
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", 1000000L)
-      .partitionBy(partitionCols: _*)
-      .parquet(path)
-  }
-
   /** Morton (Z-order) code: interleave the low `bits` bits of two
     * non-negative integer columns. Pure shift/and/or — whole-stage
     * codegen, engine-neutral integer arithmetic (the layout key must
@@ -274,81 +229,5 @@ object ScaleOps {
         .bitwiseOR(
           shiftleft(shiftright(ys, i).bitwiseAND(lit(1L)), 2 * i + 1))
     }.reduce(_ bitwiseOR _)
-  }
-
-  /** Z-ordered parquet layout (Delta OPTIMIZE ZORDER's mechanism,
-    * expressed with stock Spark): range-partition + sort by the Morton
-    * code of two filter columns, so each output file covers a small
-    * bounding box in BOTH dimensions and parquet min/max stats prune
-    * file reads for predicates on EITHER column. A single-column sort
-    * gives perfect pruning on that column and none on the other; the
-    * Z-curve splits the benefit. File contents depend on
-    * repartitionByRange's boundary sampling — a layout property, not a
-    * result property (the row set is unchanged; asserted in
-    * ScaleOpsSpec together with the two-sided pruning). */
-  def writeZOrdered(df: DataFrame, path: String, c1: String, c2: String,
-      numFiles: Int = 32, bits: Int = 16): Unit = {
-    require(!df.columns.contains("__z"),
-      "writeZOrdered: input already has a __z column (reserved)")
-    df.withColumn("__z", mortonCode(col(c1), col(c2), bits))
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Small-files compaction (the OPTIMIZE/rewrite pass every long-lived
-    * 100 TB table needs): rewrite a parquet directory into
-    * ceil(totalBytes / targetFileBytes) files. Thousands of kilobyte
-    * files — the natural residue of incremental ingest and fine-grained
-    * partition writes — cost a task launch + footer read each at scan
-    * time and throttle the namenode; compaction restores scan
-    * efficiency without changing a row. Sizing comes from the
-    * FileSystem's listing (driver-side metadata, no data read), and the
-    * rewrite lands in `outPath` then swaps — never in place, so a
-    * failed rewrite leaves the source intact (rename-based swap is the
-    * caller's choice at real scale; here the two-path contract keeps
-    * the operator testable and object-store-safe). Returns the output
-    * file count.
-    *
-    * `clusterBy` preserves a sorted/Z-ordered layout through the
-    * rewrite: a bare `.repartition(n)` is a hash/round-robin shuffle
-    * that scatters rows across files, silently destroying the min/max
-    * locality a `writeZOrdered` table was built for (every future scan
-    * un-prunes). With cluster columns the rewrite routes through
-    * `repartitionByRange + sortWithinPartitions` — the same layout
-    * mechanism as the Z-order writer — so each compacted file again
-    * covers a narrow range of the cluster key. Pass the expression the
-    * table was originally laid out by — a plain sort column, or
-    * `mortonCode(x, y)` to re-derive the Z-curve (the code column
-    * itself is dropped at write time, so it must be recomputed); empty
-    * keeps the plain unordered compaction. */
-  def compactFiles(df0: org.apache.spark.sql.SparkSession, path: String,
-      outPath: String, targetFileBytes: Long = 128L * 1024 * 1024,
-      clusterBy: Seq[Column] = Nil): Int = {
-    require(targetFileBytes > 0, "compactFiles: targetFileBytes must be > 0")
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(df0.sparkContext.hadoopConfiguration)
-    // Enforce the documented two-path contract: outPath == path with
-    // mode(overwrite) on a lazily-read source would delete the data
-    // before the rewrite reads it. Compare fully-qualified URIs so
-    // "file:/a" and "/a" (or a trailing slash) don't slip past.
-    val hq = fs.makeQualified(hp)
-    val oq = new org.apache.hadoop.fs.Path(outPath)
-    val oqQ = oq.getFileSystem(df0.sparkContext.hadoopConfiguration)
-      .makeQualified(oq)
-    require(hq != oqQ,
-      s"compactFiles: outPath must differ from path (both resolve to $hq); " +
-        "an in-place overwrite deletes the source before it is read")
-    val totalBytes = fs.getContentSummary(hp).getLength
-    val nFiles = math.max(1,
-      math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    val src = df0.read.parquet(path)
-    val laidOut =
-      if (clusterBy.isEmpty) src.repartition(nFiles)
-      else src.repartitionByRange(nFiles, clusterBy: _*)
-        .sortWithinPartitions(clusterBy: _*)
-    laidOut.write.mode("overwrite").parquet(outPath)
-    nFiles
   }
 }

@@ -780,11 +780,11 @@ object Relational {
         .drop("dr")
     }),
 
-    // Z-order layout key (ScaleOps.mortonCode / writeZOrdered): the
-    // Morton code must be identical on every engine that computes or
-    // reads the layout — this pins the bit-interleave arithmetic against
-    // the oracle. Top-k by code with a full tiebreak; pure projection +
-    // TakeOrdered, no shuffle beyond the k-row merge.
+    // Z-order layout key (ScaleOps.mortonCode): the Morton code must be
+    // identical on every engine that computes or reads the layout —
+    // this pins the bit-interleave arithmetic against the oracle. Top-k
+    // by code with a full tiebreak; pure projection + TakeOrdered, no
+    // shuffle beyond the k-row merge.
     "scale_zorder_code" -> ((s, d) =>
       Tables.orders(s, d)
         .select(col("o_orderkey"),

@@ -415,9 +415,8 @@ object Similarity {
     "emb_kmeans_iter" -> ((s, d) =>
       storedCells(s, d).select("vec_id", "cluster", "score")),
 
-    // IVF index MAINTENANCE — the batch twin of the streaming
-    // `EventStream.upsertIvfCellsBatch` (r17 VERDICT item 4) and the
-    // ANN analogue of idx_band_upsert: vectors already in the stored
+    // IVF index MAINTENANCE — the ANN analogue of idx_band_upsert
+    // (r17 VERDICT item 4): vectors already in the stored
     // cell table (vec_id % 5 != 0 stands in for the indexed corpus)
     // keep their cells under FIRST-WINS per vec_id; an ingest batch is
     // assigned against the STORED centroids — serving, not retraining
@@ -430,9 +429,8 @@ object Similarity {
     // keep-existing rule were violated the perturbed values would
     // leak into the output and break the hash — the DuckDB twin must
     // reproduce first-wins, not just the assignment math. `drifted`
-    // is the retrain-trigger signal: an ingest vector whose best-cell
-    // score fell below the threshold no longer belongs to any trained
-    // cell.
+    // flags an ingest vector whose best-cell score fell below the
+    // threshold: it no longer belongs to any trained cell.
     "idx_ivf_upsert" -> ((s, d) => {
       val cells = storedCells(s, d) // the stored trained index
         .select(col("vec_id"), col("cluster"), col("score"))
@@ -1222,101 +1220,15 @@ object Similarity {
   private val ServedK = 4
   private val ServedIters = 1
 
-  /** Served-index VERSION register + the retrain hook that CONSUMES
-    * the drift signal (r18 VERDICT item 6): `ivfDriftStats` is the
-    * per-batch summary [[graft.streaming.EventStream.upsertIvfCellsBatch]]
-    * maintains; until now nothing acted on it. The core keys embed a
-    * serving version alongside k/iters, so a retrain builds the new
-    * centroid/cell frames under the NEXT version's keys and swaps the
-    * pointer — in-flight readers holding the old DataFrames keep
-    * reading the old, still-alive cores (key-versioned swap, never an
-    * in-place mutation), while every subsequent probe plans against
-    * the new ones. Replay-safe: the trigger is keyed to the newest
-    * drift batch id, so a replayed/repeated evaluation of the same
-    * signal window cannot double-retrain. */
-  private object IvfServing {
-    private val versions =
-      scala.collection.concurrent.TrieMap.empty[String, Long]
-    private val lastTrigger =
-      scala.collection.concurrent.TrieMap.empty[String, Long]
-    private def key(s: SparkSession, d: String): String =
-      s"${System.identityHashCode(s)}:$d"
-    def current(s: SparkSession, d: String): Long =
-      versions.getOrElse(key(s, d), 0L)
-    def bumpIfFresh(s: SparkSession, d: String, triggerBatch: Long)
-        : Boolean = synchronized {
-      val k = key(s, d)
-      if (lastTrigger.get(k).exists(_ >= triggerBatch)) false
-      else {
-        lastTrigger.put(k, triggerBatch)
-        versions.put(k, current(s, d) + 1L)
-        true
-      }
-    }
-  }
-
-  /** The serving version the stored IVF cores currently carry —
-    * bumped only by [[maybeRetrainIvf]]. */
-  def servedIvfVersion(s: SparkSession, d: String): Long =
-    IvfServing.current(s, d)
-
-  /** Retrain-if-drifted (r18 VERDICT item 6): pool the trailing-k
-    * drift summaries (newest first — the one-row-per-batch frames the
-    * maintenance stream writes under `cellsPath/_drift`); when the
-    * pooled share of new vectors scoring below their cell threshold
-    * reaches `threshold`, rebuild centroids+cells under the next
-    * version's keys and swap. Returns whether a retrain happened.
-    * The collect is bounded: trailingK pre-aggregated one-row
-    * summaries, never vector data. */
-  def maybeRetrainIvf(s: SparkSession, d: String, cellsPath: String,
-      threshold: Double = 0.5, trailingK: Int = 3): Boolean = {
-    // No drift history yet (store never written, or an empty first
-    // batch left a footer-less dir): same missing-path arm as
-    // upsertIvfCellsBatch's first-batch read — "no evidence of drift"
-    // is false, not an AnalysisException (r19 ADVICE).
-    val drift =
-      try graft.streaming.EventStream.ivfDriftStats(s, cellsPath)
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage.contains("PATH_NOT_FOUND") ||
-              e.getMessage.toLowerCase.contains("path does not exist") ||
-              e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") ||
-              e.getMessage.toLowerCase.contains(
-                "unable to infer schema") =>
-          return false
-      }
-    val row = drift
-      .limit(trailingK)
-      .agg(coalesce(sum(col("n_drifted")), lit(0L)).cast("double")
-          .as("nd"),
-        coalesce(sum(col("n_new")), lit(0L)).cast("double").as("nn"),
-        max(col("batch_id")).cast("long").as("mb"))
-      .collect()(0)
-    if (row.isNullAt(2)) return false // no drift history yet
-    val share = if (row.getDouble(1) > 0) row.getDouble(0) / row.getDouble(1)
-      else 0.0
-    if (share < threshold) false
-    else if (!IvfServing.bumpIfFresh(s, d, row.getLong(2))) false
-    else {
-      // Eager rebuild under the new keys: the swap is complete before
-      // this returns, so the next probe serves the retrained index.
-      storedCentroids(s, d)
-      storedCells(s, d)
-      true
-    }
-  }
-
   private def storedCentroids(s: SparkSession, d: String): DataFrame =
     graft.operators.SharedStage(s,
-      s"ivfCentroids:$d:k=$ServedK:iters=$ServedIters" +
-        s":v=${IvfServing.current(s, d)}") {
+      s"ivfCentroids:$d:k=$ServedK:iters=$ServedIters") {
       kmeansCentroids(s, d, ServedK)
     }
 
   private def storedCells(s: SparkSession, d: String): DataFrame =
     graft.operators.SharedStage(s,
-      s"ivfCells:$d:k=$ServedK:iters=$ServedIters" +
-        s":v=${IvfServing.current(s, d)}") {
+      s"ivfCells:$d:k=$ServedK:iters=$ServedIters") {
       kmeansAssign(s, d, ServedK)
     }
 

@@ -315,9 +315,7 @@ object TextOps {
       // ROW-LOCAL form (TextFunctions.classifierMarginMicro): one
       // aggregate over the token array per row — ZERO shuffle, where
       // the explode/groupBy formulation pays a (map-side-combined)
-      // exchange. Bit-identical sums either way; the row-local
-      // expression is also what the streaming admission gate runs, so
-      // batch and stream share one arithmetic definition.
+      // exchange. Bit-identical sums either way.
       docsOf(s, d)
         .select(col("doc_id"), tokenCount(col("text")).cast("long")
           .as("n_tokens"),

@@ -22,10 +22,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** DataSource V2 document-collection sink — `format("graft-docs")`
   * (r17 VERDICT item 3).
   *
-  * The reference's MongoDB collection sink (utils.py:123-146) was until
-  * now served by adapter methods ([[Sinks.insertDocCollection]] /
-  * [[Sinks.insertDocCollectionJdbc]]); this is the same store contract
-  * behind Spark's native connector surface, the shape a real Mongo/ES
+  * The reference's MongoDB collection sink (utils.py:123-146), behind
+  * Spark's native connector surface — the shape a real Mongo/ES
   * connector ports into: the engine plans an `AppendData` /
   * streaming-write node, tasks stream documents through
   * [[DataWriter]]s, and the DRIVER adjudicates commit — so task
@@ -42,18 +40,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * Documents are JSON-lines rows `{"_id": ..., "doc": ...}` with the
   * fixed schema (`_id` STRING, `doc` STRING) — `_id` is the content
   * hash ([[Sinks.docId]]), so equal content always carries the same
-  * key. Uniqueness scope differs from the adapter paths, though:
-  * [[Sinks.insertDocCollection]] anti-joins the whole store and
-  * inserts only absent ids, while the connector's contract is
-  * BATCH-REPLACE — the same `_id` written under two different batch
-  * ids is stored once per batch. Callers needing store-wide `_id`
-  * uniqueness anti-join the earlier batches before writing, exactly
-  * as the EventStream index upserts do (strictly-earlier anti-join +
-  * own-partition overwrite). A leading-underscore staging dir is
-  * invisible to Spark's file index, so readers
-  * (`spark.read.schema(..).json(path)`) only ever see committed
-  * batches, and the `batch_id=` layout surfaces as a partition column
-  * for free.
+  * key. The connector's contract is BATCH-REPLACE: the same `_id`
+  * written under two different batch ids is stored once per batch
+  * (store-wide uniqueness is what [[Sinks.insertDocCollectionJdbc]]'s
+  * primary key enforces). Callers needing store-wide `_id` uniqueness
+  * here anti-join the strictly-earlier batches before writing. A
+  * leading-underscore staging dir is invisible to Spark's file index,
+  * so readers (`spark.read.schema(..).json(path)`) only ever see
+  * committed batches, and the `batch_id=` layout surfaces as a
+  * partition column for free.
   *
   * Exactly-once: [[Sinks.writeBatchIdempotent]]'s recipe moved behind
   * the V2 API. Tasks write to staging and return the staged file in

@@ -4,18 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.jobs.ImportJob
 
-/** Sink layer (SURVEY §2.1 S5/S6/S9).
+/** Sink layer (SURVEY §2.1 S6).
   *
   * The reference writes one JSON file and one MongoDB document per import
-  * (etl_import.py:59-64, utils.py:123-146). At scale a sink must write
-  * partition-parallel, so:
-  *  - S5 JSON: `df.write.json` with deterministic column order (struct
-  *    field order IS the JSON key order — no driver-side json.dumps).
-  *  - S6 document collection: any Spark connector sink; the app-generated
-  *    unique id becomes a content hash (deterministic, collision-safe by
-  *    construction — the reference's retry loop is unnecessary).
-  *  - S9 chunking: `maxRecordsPerFile` replaces the manual `chunks()`
-  *    batching (utils.py:109-114) without a driver materialization.
+  * (etl_import.py:59-64, utils.py:123-146). The JSON files and the
+  * `graft-docs` store batch are written by [[ImportJob]]; this object
+  * holds the document id, the JDBC insert with the reference's
+  * unique-id contract, and the idempotent micro-batch writer. The
+  * app-generated unique id becomes a content hash (deterministic,
+  * collision-safe by construction — the reference's retry loop is
+  * unnecessary).
   */
 object Sinks {
 
@@ -25,99 +23,19 @@ object Sinks {
     * It is the `_id` of [[ImportJob.storeDoc]]. */
   def docId(payload: Column): Column = ImportJob.storeDoc(payload).head
 
-  /** Retention for `format("graft-docs")` stores: drop every committed
-    * batch below `keepFrom`, returning the dropped ids — see
-    * [[GraftDocs.vacuumBelow]] for the consumer-lag contract. */
-  def vacuumDocStore(spark: org.apache.spark.sql.SparkSession,
-      path: String, keepFrom: Long): Seq[Long] =
-    GraftDocs.vacuumBelow(spark.sparkContext.hadoopConfiguration,
-      path, keepFrom)
-
-  /** OPTIMIZE for `format("graft-docs")` stores: rewrite runs of small
-    * committed batches below `keepFrom` into packed ones under the
-    * same atomic `_SUCCESS`/monotonic-id protocol — see
-    * [[GraftDocs.compactBelow]] for the full contract (tails at or
-    * past the horizon never re-read; replayed writes of absorbed
-    * epochs are idempotent no-ops). Returns the (lo, hi) ranges
-    * packed. */
-  def compactDocStore(spark: org.apache.spark.sql.SparkSession,
-      path: String, keepFrom: Long,
-      targetBytes: Long = 128L << 20): Seq[(Long, Long)] =
-    GraftDocs.compactBelow(spark.sparkContext.hadoopConfiguration,
-      path, keepFrom, targetBytes)
-
-  /** S5+S9: JSON-lines sink with bounded file sizes. `orderBy` before
-    * write pins deterministic output for golden comparisons (the analogue
-    * of the reference's sort_keys+indent dumps). */
-  def writeJsonDocs(df: DataFrame, path: String, orderCol: String,
-      maxRecordsPerFile: Int = 100000): Unit =
-    df.orderBy(col(orderCol))
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile.toLong)
-      .option("ignoreNullFields", "false")
-      .json(path)
-
-  /** S6: document-collection sink emulation: (id, json) pairs written as
-    * parquet — swap `.parquet` for a connector format in production. */
-  def writeDocCollection(df: DataFrame, payload: Column, path: String): Unit =
-    df.select(ImportJob.storeDoc(payload): _*)
-      .write.mode("overwrite").parquet(path)
-
-  /** S6 INSERT with the reference's unique-id contract
-    * (utils.py:123-146), against a filesystem-backed store: append only
-    * documents whose `_id` is not already present. The reference
-    * generates a random ObjectId and retries until it finds one with no
-    * collision; with content-hash ids the retry loop inverts into a
-    * skip — a colliding `_id` IS the same document (sha256 of its
-    * serialized payload), so "regenerate until unique" becomes "already
-    * stored, don't append". Consequences the contract test pins:
-    * replayed batches are idempotent (the restart-between-write-and-ack
-    * failure window), distinct payloads never collide, and — under a
-    * SINGLE writer — the store never holds two rows with one `_id`.
-    * Single-writer is load-bearing (r15 ADVICE): the read-existing →
-    * anti-join → append sequence is not atomic, so two concurrent
-    * inserts of the same payload can both pass the anti-join and both
-    * append. A deployment needing the uniqueness guarantee under
-    * concurrent writers must target a keyed/transactional store that
-    * enforces it — `insertDocCollectionJdbc` below is that shape: the
-    * STORE's primary key rejects the duplicate and the conflict
-    * handler treats it as already-stored. The existing-id probe here
-    * is an anti join against the store's `_id` column only
-    * (column-pruned scan); at real scale the same shape runs against
-    * the connector's key index. Returns the number of documents
-    * actually appended. */
-  def insertDocCollection(spark: org.apache.spark.sql.SparkSession,
-      df: DataFrame, payload: Column, path: String): Long = {
-    val docs = df
-      .select(ImportJob.storeDoc(payload): _*)
-      .dropDuplicates("_id")
-    val existing =
-      try spark.read.parquet(path).select("_id")
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage.contains("PATH_NOT_FOUND") ||
-              e.getMessage.toLowerCase.contains("path does not exist") =>
-          spark.emptyDataFrame.select(lit("").as("_id")).limit(0)
-      }
-    val fresh = docs.join(existing, Seq("_id"), "left_anti")
-      .localCheckpoint() // one evaluation: counted AND appended below
-    fresh.write.mode("append").parquet(path)
-    fresh.count()
-  }
-
   /** S6 insert against a store that ENFORCES uniqueness (r15 VERDICT
     * item 5 — the reference's MongoDB insert loop, utils.py:123-146,
     * against a real unique index instead of an emulated one): one row
     * per document into a JDBC table whose `_id` column carries a
-    * PRIMARY KEY constraint. Unlike `insertDocCollection` there is NO
-    * read-existing/anti-join prefilter — every row is attempted and
-    * the STORE adjudicates. A duplicate-key rejection means the
-    * document is already present (content-hash ids: same `_id` IS the
-    * same payload), so the reference's "regenerate id and retry" loop
-    * inverts into "verified stored, continue" — and because the
-    * decision is the store's own constraint, the uniqueness guarantee
-    * holds under CONCURRENT writers, which the filesystem-backed
-    * variant cannot promise (see its Scaladoc). Partition-parallel:
+    * PRIMARY KEY constraint. There is NO read-existing/anti-join
+    * prefilter — every row is attempted and the STORE adjudicates. A
+    * duplicate-key rejection means the document is already present
+    * (content-hash ids: same `_id` IS the same payload), so the
+    * reference's "regenerate id and retry" loop inverts into
+    * "verified stored, continue" — and because the decision is the
+    * store's own constraint, the uniqueness guarantee holds under
+    * CONCURRENT writers, which a read-then-append sequence against a
+    * plain file store cannot promise. Partition-parallel:
     * each partition opens one connection and streams single-row
     * INSERTs; at real scale the same shape batches inserts against
     * the connector's keyed store. Returns the number of rows actually

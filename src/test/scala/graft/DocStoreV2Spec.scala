@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.jobs.ImportJob
-import graft.sinks.Sinks
+import graft.sinks.{GraftDocs, Sinks}
 
 /** The DataSource V2 document sink (`format("graft-docs")`): commit
   * protocol semantics — idempotent replayed batches, schema
@@ -16,6 +16,8 @@ class DocStoreV2Spec extends SparkSpec {
   private val DocSchema = StructType(Seq(
     StructField("_id", StringType, nullable = false),
     StructField("doc", StringType, nullable = true)))
+
+  private def hconf = spark.sparkContext.hadoopConfiguration
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString + "/store"
@@ -271,7 +273,7 @@ class DocStoreV2Spec extends SparkSpec {
     tailOnce() // tail checkpoints past the compaction horizon (id 6)
     assert(spark.read.parquet(out).count() == 6)
 
-    val packed = graft.sinks.Sinks.compactDocStore(spark, store,
+    val packed = GraftDocs.compactBelow(hconf, store,
       keepFrom = 6L)
     assert(packed == Seq((0L, 5L)), s"packed $packed")
     // one pack dir remains; absorbed dirs deleted
@@ -334,7 +336,7 @@ class DocStoreV2Spec extends SparkSpec {
         .option("path", store).option("batchId", b)
         .mode("append").save()
     for (b <- 0L until 4L) writeBatch(Seq(s"x$b"), b)
-    assert(graft.sinks.Sinks.compactDocStore(spark, store, 4L)
+    assert(GraftDocs.compactBelow(hconf, store, 4L)
       == Seq((0L, 3L)))
     // simulate a crashed covered-dir sweep: resurrect an absorbed dir
     // (as if the sweep died before deleting it) — readers must still
@@ -356,7 +358,7 @@ class DocStoreV2Spec extends SparkSpec {
       badStage.resolve("part-00000-compact.jsonl"), "junk")
     // second compaction round: two more tiny batches + recovery
     for (b <- 4L until 6L) writeBatch(Seq(s"x$b"), b)
-    val packed2 = graft.sinks.Sinks.compactDocStore(spark, store, 6L)
+    val packed2 = GraftDocs.compactBelow(hconf, store, 6L)
     assert(packed2 == Seq((0L, 5L)), s"re-compaction packed $packed2")
     assert(!java.nio.file.Files.exists(zombie),
       "recovery did not sweep the zombie covered dir")
@@ -597,7 +599,7 @@ class DocStoreV2Spec extends SparkSpec {
         .option("path", store).option("batchId", b)
         .mode("append").save()
     for (b <- 0L to 3L) write(s"v$b", b)
-    val dropped = Sinks.vacuumDocStore(spark, store, keepFrom = 2L)
+    val dropped = GraftDocs.vacuumBelow(hconf, store, keepFrom = 2L)
     assert(dropped == Seq(0L, 1L), s"dropped $dropped")
     assert(spark.read.format("graft-docs").load(store)
       .select("batch_id").distinct.as[Long].collect().toSet ==
@@ -670,18 +672,18 @@ class DocStoreV2Spec extends SparkSpec {
   }
 
   test("ImportJob writes through the connector: same ids and payload " +
-      "bytes as the adapter path, replayed batch idempotent") {
+      "bytes as Sinks.docId and to_json, replayed batch idempotent") {
     val d = "/root/testdata/sf0.001"
     val store = tmp("graft-docs-import")
     ImportJob.writeImportDocsV2(spark, d, store)
     val v2 = readStore(store).select("_id", "doc")
       .as[(String, String)].collect().toMap
-    // the adapter path's exact (content-hash id, serialized payload)
+    // the store form's exact (content-hash id, serialized payload)
     val expect = ImportJob.payloads(spark, d)
       .select(Sinks.docId(col("payload")).cast("string"),
         to_json(col("payload")))
       .as[(String, String)].collect().toMap
-    assert(v2 == expect, "V2 store differs from the adapter contract")
+    assert(v2 == expect, "V2 store differs from the store-form contract")
     // replayed import (same batchId): byte-identical store
     ImportJob.writeImportDocsV2(spark, d, store)
     assert(readStore(store).select("_id", "doc")

@@ -3,11 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import com.fasterxml.jackson.databind.JsonNode
 import graft.jobs.ImportJob
-import graft.sinks.Sinks
 
 /** End-to-end import payload job (etl_import.py:21-64 parity — r14
-  * VERDICT item 2) and the document-collection insert contract
-  * (utils.py:123-146 — item 8).
+  * VERDICT item 2). The unique-id insert contract (utils.py:123-146) is
+  * pinned by SinksJdbcSpec and DocStoreV2Spec.
   *
   * The payload files are golden BYTE-compared: sha256 pins over the
   * driver's seed-42 sf0.001 testdata (deterministic by construction —
@@ -160,42 +159,5 @@ class ImportJobSpec extends SparkSpec {
       java.nio.file.Paths.get(files.find(_.endsWith("mmj-org-9.json")).get)))
     assert(body.contains("\"members\":[]") &&
       body.contains("\"settings\":[]"), body.take(200))
-  }
-
-  test("document-collection insert contract: content-hash unique ids, " +
-      "idempotent replay, append-only growth (utils.py:123-146)") {
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-docstore").toString + "/imports"
-    val payloads = ImportJob.payloads(spark, d)
-    // first insert: all five org payloads land with distinct ids
-    val n1 = Sinks.insertDocCollection(spark, payloads,
-      col("payload"), store)
-    assert(n1 == 5L, s"first insert appended $n1 of 5")
-    val stored1 = spark.read.parquet(store).collect()
-    assert(stored1.map(_.getString(0)).distinct.length == 5,
-      "_id collision in store after first insert")
-    // replayed batch (restart between write and ack): zero appended,
-    // store unchanged — the content-hash inversion of the reference's
-    // regenerate-until-unique loop
-    val n2 = Sinks.insertDocCollection(spark, payloads,
-      col("payload"), store)
-    assert(n2 == 0L, s"replay appended $n2 docs — not idempotent")
-    assert(spark.read.parquet(store).count() == 5L)
-    // a genuinely new document (different extraction stamp ⇒ different
-    // payload bytes ⇒ different hash) appends without touching the rest
-    val n3 = Sinks.insertDocCollection(spark,
-      ImportJob.payloads(spark, d, extractedEpoch = 1700000001L)
-        .filter(col("organizationId") === "org-0"),
-      col("payload"), store)
-    assert(n3 == 1L)
-    val after = spark.read.parquet(store).collect()
-    assert(after.length == 6 &&
-      after.map(_.getString(0)).distinct.length == 6)
-    // round trip: stored docs are the exact serialized payloads
-    val expect = payloads
-      .select(to_json(col("payload")).as("doc")).collect()
-      .map(_.getString(0)).sorted
-    val got = stored1.map(_.getString(1)).sorted
-    assert(got.toSeq == expect.toSeq, "stored docs differ from payloads")
   }
 }

@@ -96,8 +96,13 @@ class ImportServiceSpec extends SparkSpec with BeforeAndAfterAll {
 
   test("error contract: missing params 400, unknown org 404, wrong " +
       "method 405") {
-    assert(post("/import/extract", "organization_id=org-1")
-      .statusCode() == 400)
+    val missing = post("/import/extract", "organization_id=org-1")
+    assert(missing.statusCode() == 400)
+    // a bad percent-escape is the client's error too: the same 400 body
+    val malformed = post("/import/extract",
+      "organization_id=%zz&dispensary_id=d")
+    assert(malformed.statusCode() == 400, malformed.body())
+    assert(malformed.body() == missing.body())
     assert(post("/import/extract",
       "organization_id=org-999&dispensary_id=d").statusCode() == 404)
     assert(get("/import/extract").statusCode() == 405)

@@ -150,12 +150,6 @@ class MultimodalSpec extends SparkSpec {
     assert(got == want)
   }
 
-  test("resizeStub: deterministic downsample, schema pinned") {
-    val out = Multimodal.resizeStub(media, 4).orderBy("media_id")
-      .select("media_id", "byte_len").as[(Long, Long)].collect()
-    assert(out.toSeq == Seq((1L, 4L), (2L, 0L), (3L, 9L)))
-  }
-
   test("sampleFrames: generator shape with stride filter") {
     val frames = Multimodal.sampleFrames(media.filter($"media_id" === 3), 4, 2)
     val idx = frames.select("frame_idx").as[Int].collect().toSeq

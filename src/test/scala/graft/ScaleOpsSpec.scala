@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.ScaleOps
 
-/** Plan-level assertions for the scale utilities: salting preserves join
-  * results; bucketed joins run shuffle-free; partitioned reads prune. */
+/** Assertions for the scale utilities: salting and the Bloom prefilter
+  * preserve join results; shared stages build once per session. */
 class ScaleOpsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -93,73 +93,6 @@ class ScaleOpsSpec extends SparkSpec {
     assert(bloomed.length == 3 * 20)
   }
 
-  test("bucketed tables join without a shuffle (no Exchange in plan)") {
-    Seq("bkt_a", "bkt_b").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(
-        spark.conf.get("spark.sql.warehouse.dir")
-          .stripPrefix("file:"), t)
-      org.apache.commons.io.FileUtils.deleteQuietly(loc)
-    }
-    val a = (1 to 500).map(i => (i.toLong, s"a$i")).toDF("id", "av")
-    val b = (1 to 500).map(i => (i.toLong, s"b$i")).toDF("id", "bv")
-    ScaleOps.writeBucketed(a, "bkt_a", "id", 4)
-    ScaleOps.writeBucketed(b, "bkt_b", "id", 4)
-    // Force the shuffle-join path (at real scale the sides exceed the
-    // broadcast threshold anyway) to show bucketing replaces the shuffle.
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.table("bkt_a").join(spark.table("bkt_b"), "id")
-      val physical = joined.queryExecution.executedPlan.toString
-      assert(!physical.contains("Exchange"),
-        s"bucketed join should be shuffle-free, got:\n$physical")
-      assert(physical.contains("SortMergeJoin"))
-      assert(joined.count() == 500)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
-  test("partitionBy write + filter read prunes partitions in the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
-    val df = (1 to 300).map(i => (i, s"d${i % 3}", i * 1.0))
-      .toDF("id", "day", "v")
-    ScaleOps.writePartitioned(df, dir, Seq("day"), saltBuckets = 1)
-    val read = spark.read.parquet(dir).filter(col("day") === "d1")
-    // inputFiles reports the pre-pruning listing; the pruning evidence is
-    // the PartitionFilters entry on the file scan node.
-    val plan = read.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("(day"),
-      s"expected directory-level partition pruning, got:\n$plan")
-    assert(read.count() == 100)
-    // Small-file guard: the pre-write repartition means each partition
-    // dir holds files from only the owning task(s), not one per task.
-    val files = new java.io.File(s"$dir/day=d1")
-      .listFiles().count(_.getName.endsWith(".parquet"))
-    assert(files == 1, s"expected 1 file in day=d1, got $files")
-  }
-
-  test("writePartitioned salt bounds files per dir AND spreads hot keys") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-salt").toString
-    // One hot partition value carrying ~all rows (the skew case the salt
-    // exists for) — default salt must spread it over >1 task/file while
-    // keeping the per-dir file count bounded by saltBuckets.
-    val df = (1 to 4000).map(i => (i, "hot", i * 1.0)).toDF("id", "day", "v")
-    // At test scale AQE coalesces the tiny salted shuffle partitions back
-    // into one (hiding the spread we're asserting); at real scale a hot
-    // partition's splits are far above the coalesce target.
-    val prev = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-    try {
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      ScaleOps.writePartitioned(df, dir, Seq("day"), saltBuckets = 4)
-    } finally
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prev)
-    val files = new java.io.File(s"$dir/day=hot")
-      .listFiles().count(_.getName.endsWith(".parquet"))
-    assert(files > 1 && files <= 4,
-      s"expected 2..4 files in hot dir (salt spread, bounded), got $files")
-    assert(spark.read.parquet(dir).count() == 4000)
-  }
-
   test("mortonCode interleaves bits (hand-computed values)") {
     // x=3 (011), y=5 (101): bit i of x lands at 2i, of y at 2i+1 →
     // 1<<0 | 1<<1 | 1<<2 | 1<<5 = 39. Plus identities and the diagonal.
@@ -168,148 +101,6 @@ class ScaleOpsSpec extends SparkSpec {
       .select(ScaleOps.mortonCode(col("x"), col("y"), 8).as("z"))
     assert(df.as[Long].collect().toSeq ==
       Seq(39L, 0L, 1L, 2L, 65535L))
-  }
-
-  test("writeZOrdered prunes file reads on BOTH dimensions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-z").toString
-    // 256×256 grid. A y-only predicate against an x-sorted layout must
-    // touch every file; against the Z-order layout each file's bounding
-    // box covers a fraction of y too, so most files' stats exclude it.
-    val grid = spark.range(256L * 256L)
-      .select((col("id") / 256L).cast("long").as("x"),
-        pmod(col("id"), lit(256L)).as("y"))
-    // Pin range-partition boundary sampling high enough to be
-    // effectively exact — boundary placement otherwise drifts with the
-    // session's prior state (suite order), which would force a loose
-    // pruning bound below.
-    val prevSample =
-      spark.conf.get("spark.sql.execution.rangeExchange.sampleSizePerPartition")
-    spark.conf.set(
-      "spark.sql.execution.rangeExchange.sampleSizePerPartition", "100000")
-    try ScaleOps.writeZOrdered(grid, dir, "x", "y", numFiles = 16, bits = 8)
-    finally spark.conf.set(
-      "spark.sql.execution.rangeExchange.sampleSizePerPartition", prevSample)
-    val boxes = spark.read.parquet(dir)
-      .groupBy(input_file_name().as("f"))
-      .agg(min("x").as("x0"), max("x").as("x1"),
-        min("y").as("y0"), max("y").as("y1"))
-      .collect()
-    assert(boxes.length >= 8, s"expected ~16 files, got ${boxes.length}")
-    // Row set unchanged by the re-layout.
-    assert(spark.read.parquet(dir).count() == 256L * 256L)
-    def touched(lo: Long, hi: Long, isY: Boolean): Int =
-      boxes.count { r =>
-        val (a, b) = if (isY) (r.getLong(3), r.getLong(4))
-          else (r.getLong(1), r.getLong(2))
-        b >= lo && a <= hi
-      }
-    // 16-wide probes on each dimension: an x-sorted layout would touch
-    // ALL files for the y probe; Z-order must keep both probes to at
-    // most half the files (quadrant-aligned the bound is ~1/4; exact
-    // sampling above makes 1/2 safe deterministically).
-    assert(touched(96, 111, isY = false) <= boxes.length / 2,
-      "x-probe touched too many files")
-    assert(touched(96, 111, isY = true) <= boxes.length / 2,
-      "y-probe touched too many files")
-  }
-
-  test("compactFiles rewrites a fragmented directory to the computed " +
-      "file count with identical rows") {
-    val src = java.nio.file.Files
-      .createTempDirectory("graft_compact_src").toString
-    val dst = java.nio.file.Files
-      .createTempDirectory("graft_compact_dst").toString + "/out"
-    // 64 tiny files (repartition(64) on 2000 rows).
-    (1 to 2000).map(i => (i.toLong, s"row$i")).toDF("id", "v")
-      .repartition(64).write.mode("overwrite").parquet(src)
-    val smallFiles = new java.io.File(src).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(smallFiles == 64)
-    // Target sized so the math lands on a small handful of files.
-    val totalBytes = new java.io.File(src).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.length).sum
-    val target = totalBytes / 3
-    val n = ScaleOps.compactFiles(spark, src, dst, target)
-    assert(n == math.ceil(
-      // getContentSummary counts _SUCCESS etc. too; allow either side
-      // of the parquet-only estimate by recomputing with the op's rule.
-      new org.apache.hadoop.fs.Path(src)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .getContentSummary(new org.apache.hadoop.fs.Path(src))
-        .getLength.toDouble / target).toInt)
-    val outFiles = new java.io.File(dst).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(outFiles == n && n < 64)
-    // Row-identical, not just count-identical.
-    val a = spark.read.parquet(src).as[(Long, String)].collect().toSet
-    val b = spark.read.parquet(dst).as[(Long, String)].collect().toSet
-    assert(a == b && a.size == 2000)
-  }
-
-  test("compactFiles refuses an in-place rewrite (qualified-path compare)") {
-    val src = java.nio.file.Files
-      .createTempDirectory("graft_compact_inplace").toString
-    Seq((1L, "a")).toDF("id", "v").write.mode("overwrite").parquet(src)
-    // Same directory spelled three ways: raw, trailing slash, file: URI.
-    for (alias <- Seq(src, src + "/", "file:" + src)) {
-      val e = intercept[IllegalArgumentException] {
-        ScaleOps.compactFiles(spark, src, alias)
-      }
-      assert(e.getMessage.contains("outPath must differ"))
-    }
-    // The refused calls must not have touched the source.
-    assert(spark.read.parquet(src).count() == 1)
-  }
-
-  test("compactFiles with clusterBy preserves Z-order pruning") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-zc").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-zc-out")
-      .toString + "/compacted"
-    val grid = spark.range(256L * 256L)
-      .select((col("id") / 256L).cast("long").as("x"),
-        pmod(col("id"), lit(256L)).as("y"))
-    val prevSample =
-      spark.conf.get("spark.sql.execution.rangeExchange.sampleSizePerPartition")
-    spark.conf.set(
-      "spark.sql.execution.rangeExchange.sampleSizePerPartition", "100000")
-    try {
-      // Fragmented Z-ordered table (64 small files), then compact it
-      // down WITH the recomputed Morton key — the code column is
-      // dropped at write time, so the compactor re-derives it.
-      ScaleOps.writeZOrdered(grid, dir, "x", "y", numFiles = 64, bits = 8)
-      // 64 → ~16 files: a real 4× compaction that keeps each output
-      // file at the quadrant size the writeZOrdered spec's ≤ n/2
-      // probe bound was derived for (coarser files necessarily span
-      // wider Z ranges and weaken the per-dimension bound).
-      val target = new java.io.File(dir).listFiles()
-        .filter(_.getName.endsWith(".parquet")).map(_.length).sum / 16
-      val n = ScaleOps.compactFiles(spark, dir, out, target,
-        clusterBy = Seq(ScaleOps.mortonCode(col("x"), col("y"), 8)))
-      assert(n < 64, s"compaction did not reduce file count ($n)")
-    } finally spark.conf.set(
-      "spark.sql.execution.rangeExchange.sampleSizePerPartition", prevSample)
-    val boxes = spark.read.parquet(out)
-      .groupBy(input_file_name().as("f"))
-      .agg(min("x").as("x0"), max("x").as("x1"),
-        min("y").as("y0"), max("y").as("y1"))
-      .collect()
-    assert(boxes.length >= 4, s"expected several files, got ${boxes.length}")
-    assert(spark.read.parquet(out).count() == 256L * 256L)
-    def touched(lo: Long, hi: Long, isY: Boolean): Int =
-      boxes.count { r =>
-        val (a, b) = if (isY) (r.getLong(3), r.getLong(4))
-          else (r.getLong(1), r.getLong(2))
-        b >= lo && a <= hi
-      }
-    // The writeZOrdered spec's bound: a 16-wide probe on EITHER
-    // dimension touches at most half the files. A plain
-    // .repartition(n) compaction scatters rows so every file's
-    // bounding box covers everything and both probes touch ALL files —
-    // this asserts the compactor preserved the layout, not just rows.
-    assert(touched(96, 111, isY = false) <= boxes.length / 2,
-      "x-probe touched too many files after compaction")
-    assert(touched(96, 111, isY = true) <= boxes.length / 2,
-      "y-probe touched too many files after compaction")
   }
 
   test("SharedStage: two consumers of the video keep-best core share " +
@@ -434,10 +225,7 @@ class ScaleOpsSpec extends SparkSpec {
     // emb_ivf_k_recall exercises both paths in one query (k=4 and
     // k=ceil(sqrt(n))).
     val d = "/root/testdata/sf0.001"
-    // r19: keys additionally carry the serving version maybeRetrainIvf
-    // bumps — pinned here at whatever this session currently serves.
-    val v = graft.queries.Similarity.servedIvfVersion(spark, d)
-    val servedKey = s"ivfCentroids:$d:k=4:iters=1:v=$v"
+    val servedKey = s"ivfCentroids:$d:k=4:iters=1"
     val n = Tables.embeddings(spark, d).count()
     val kBig = math.ceil(math.sqrt(n.toDouble)).toInt
     val before = graft.operators.SharedStage.buildsFor(spark, servedKey)
@@ -448,10 +236,10 @@ class ScaleOpsSpec extends SparkSpec {
       s"served-k centroid core: builds went $before -> $after")
     if (kBig != 4) {
       assert(graft.operators.SharedStage.buildsFor(spark,
-        s"ivfCentroids:$d:k=$kBig:iters=1:v=$v") == 0,
+        s"ivfCentroids:$d:k=$kBig:iters=1") == 0,
         "non-served k populated a centroid core")
       assert(graft.operators.SharedStage.buildsFor(spark,
-        s"ivfCells:$d:k=$kBig:iters=1:v=$v") == 0,
+        s"ivfCells:$d:k=$kBig:iters=1") == 0,
         "non-served k populated a cell core")
     }
     // The pre-r18 parameterless keys must be dead: a key that omits

@@ -370,280 +370,4 @@ class StreamingRecoverySpec extends SparkSpec {
     assert(Seq("inserted", "changed", "unchanged")
       .forall(s => byStatus.getOrElse(s, 0) > 0), byStatus.toString)
   }
-
-  // --- streaming band-index maintenance (r16 VERDICT item 6) ---
-
-  private val textA = "the quick brown fox jumps over the lazy dog"
-  private val textB = "pack my box with five dozen liquor jugs today"
-  private val textC = "sphinx of black quartz judge my vow tonight"
-
-  private def bandsOf(text: String) = {
-    import spark.implicits._
-    graft.api.GraftOps
-      .minhashBands(Seq((0L, text)).toDF("doc_id", "text"),
-        "doc_id", "text")
-      .select("band_idx", "band_hash")
-      .as[(Int, String)].collect().toSet
-  }
-
-  test("band-index maintenance restarted from checkpoint equals the " +
-      "uninterrupted first-wins index state") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-ckpt-idx").toString
-    val idxDir = java.nio.file.Files
-      .createTempDirectory("graft-band-idx").toString + "/index"
-
-    val stream = MemoryStream[(Long, String)]
-    def start() = EventStream.bandIndexMaintenanceStream(
-      stream.toDF().toDF("doc_id", "text"), idxDir, ckpt)
-
-    // Phase 1: docs 10 (text A) and 11 (text B) land, commit, stop.
-    stream.addData(Seq((10L, textA), (11L, textB)))
-    val q1 = start()
-    try q1.processAllAvailable() finally q1.stop()
-    // Phase 2: restart from the SAME checkpoint. Doc 5 re-offers
-    // text A with a SMALLER id — first-wins means it must NOT steal
-    // the A buckets from doc 10; doc 12 brings genuinely new buckets.
-    stream.addData(Seq((5L, textA), (12L, textC)))
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-
-    val idx = spark.read.parquet(idxDir)
-      .select("band_idx", "band_hash", "owner", "batch_id")
-      .as[(Int, String, Long, Long)].collect().toSet
-    val expected =
-      bandsOf(textA).map { case (bi, bh) => (bi, bh, 10L, 0L) } ++
-      bandsOf(textB).map { case (bi, bh) => (bi, bh, 11L, 0L) } ++
-      bandsOf(textC).map { case (bi, bh) => (bi, bh, 12L, 1L) }
-    assert(idx == expected,
-      s"restarted maintenance must equal first-wins state:\n" +
-        s" got  $idx\n want $expected")
-  }
-
-  test("a replayed index-upsert micro-batch cannot steal ownership " +
-      "or duplicate buckets") {
-    import spark.implicits._
-    val idxDir = java.nio.file.Files
-      .createTempDirectory("graft-band-replay").toString + "/index"
-    val sink = EventStream.upsertBandIndexBatch(idxDir) _
-
-    def snapshot() = spark.read.parquet(idxDir)
-      .select("band_idx", "band_hash", "owner", "batch_id")
-      .as[(Int, String, Long, Long)].collect().toSet
-
-    // Batch 0 stores text A under doc 10; batch 1 re-offers text A
-    // under the SMALLER doc 5 (must not own) plus new text C (must).
-    val batch0 = Seq((10L, textA)).toDF("doc_id", "text")
-    val batch1 = Seq((5L, textA), (12L, textC)).toDF("doc_id", "text")
-    sink(batch0, 0L)
-    sink(batch1, 1L)
-    val committed = snapshot()
-    assert(committed ==
-      bandsOf(textA).map { case (bi, bh) => (bi, bh, 10L, 0L) } ++
-      bandsOf(textC).map { case (bi, bh) => (bi, bh, 12L, 1L) })
-
-    // Replay window: a restart between sink write and checkpoint
-    // commit re-runs the SAME batchId with the same offsets. The
-    // strict `batch_id < current` probe plus dynamic overwrite of the
-    // batch's own partition must reproduce the state byte-for-byte —
-    // doc 5 still cannot claim the A buckets on the second attempt.
-    sink(batch1, 1L)
-    assert(snapshot() == committed,
-      "replaying batch 1 changed the index")
-    sink(batch0, 0L)
-    assert(snapshot() == committed,
-      "replaying batch 0 changed the index")
-  }
-
-  test("a replayed IVF-cells micro-batch cannot reassign a vector or " +
-      "duplicate it; drift stats are replay-stable") {
-    import spark.implicits._
-    val cellsDir = java.nio.file.Files
-      .createTempDirectory("graft-ivf-replay").toString + "/cells"
-    // fixed TRAINED centroids — the maintenance path serves them,
-    // never retrains
-    val cents = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0)))
-      .toDF("cid", "cu")
-    val sink = EventStream
-      .upsertIvfCellsBatch(cellsDir, cents, driftThreshold = 0.9) _
-
-    def cells() = spark.read.parquet(cellsDir)
-      .select("vec_id", "cluster", "score", "drifted", "batch_id")
-      .as[(Long, Long, Double, Boolean, Long)].collect().toSet
-
-    // batch 0: vec 10 → cell 0 (score 1.0, not drifted at 0.9);
-    // vec 11 = [0.6, 0.8] → cell 1 (score 0.8, drifted); vec 13 is
-    // zero-norm and must be dropped, not assigned.
-    sink(Seq((10L, Seq(1.0, 0.0)), (11L, Seq(0.6, 0.8)),
-      (13L, Seq(0.0, 0.0))).toDF("vec_id", "embedding"), 0L)
-    // batch 1: vec 10 RE-OFFERED with bytes that would flip it to
-    // cell 1 — first-wins must keep cell 0; vec 12 is genuinely new.
-    sink(Seq((10L, Seq(0.0, 1.0)), (12L, Seq(0.0, 1.0)))
-      .toDF("vec_id", "embedding"), 1L)
-    val committed = cells()
-    assert(committed == Set(
-      (10L, 0L, 1.0, false, 0L), (11L, 1L, 0.8, true, 0L),
-      (12L, 1L, 1.0, false, 1L)),
-      s"committed cell state wrong: $committed")
-
-    // replay both batches (restart between sink write and checkpoint
-    // commit): byte-identical state — no reassignment, no duplicates
-    sink(Seq((10L, Seq(0.0, 1.0)), (12L, Seq(0.0, 1.0)))
-      .toDF("vec_id", "embedding"), 1L)
-    assert(cells() == committed, "replaying batch 1 changed the cells")
-    sink(Seq((10L, Seq(1.0, 0.0)), (11L, Seq(0.6, 0.8)),
-      (13L, Seq(0.0, 0.0))).toDF("vec_id", "embedding"), 0L)
-    assert(cells() == committed, "replaying batch 0 changed the cells")
-
-    // drift counter: batch 0 had 1 of 2 new vectors below 0.9; batch 1
-    // had 0 of 1 (vec 10's re-offer is not NEW). Replays above must
-    // have overwritten, not appended, the per-batch summaries.
-    val drift = EventStream.ivfDriftStats(spark, cellsDir)
-      .select("batch_id", "n_new", "n_drifted", "drift_share")
-      .as[(Long, Long, Long, Double)].collect().toSet
-    assert(drift == Set((0L, 2L, 1L, 0.5), (1L, 1L, 0L, 0.0)),
-      s"drift stats wrong: $drift")
-  }
-
-  test("IVF maintenance stream restarted from checkpoint equals the " +
-      "first-wins state") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val cellsDir = java.nio.file.Files
-      .createTempDirectory("graft-ivf-restart").toString + "/cells"
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-ivf-ckpt").toString
-    val cents = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0)))
-      .toDF("cid", "cu")
-    val stream = MemoryStream[(Long, Seq[Double])]
-    def start() = EventStream.ivfCellsMaintenanceStream(
-      stream.toDF().toDF("vec_id", "embedding"), cents, cellsDir, ckpt,
-      driftThreshold = 0.9)
-
-    stream.addData(Seq((10L, Seq(1.0, 0.0)), (11L, Seq(0.6, 0.8))))
-    val q1 = start()
-    try q1.processAllAvailable() finally q1.stop()
-    // restart from the SAME checkpoint; vec 10 re-arrives with flipped
-    // bytes (must keep its cell), vec 12 is new
-    stream.addData(Seq((10L, Seq(0.0, 1.0)), (12L, Seq(0.0, 1.0))))
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-
-    val cells = spark.read.parquet(cellsDir)
-      .select("vec_id", "cluster", "score", "batch_id")
-      .as[(Long, Long, Double, Long)].collect().toSet
-    assert(cells == Set((10L, 0L, 1.0, 0L), (11L, 1L, 0.8, 0L),
-      (12L, 1L, 1.0, 1L)),
-      s"restarted maintenance state wrong: $cells")
-  }
-
-  test("an index directory with no parquet footers reads as empty " +
-      "ownership, not a permanent stream failure (r17 ADVICE)") {
-    import spark.implicits._
-    val idxDir = java.nio.file.Files
-      .createTempDirectory("graft-band-emptydir").toString + "/index"
-    // The failure shape: the directory EXISTS but holds no footers
-    // (a zero-row first micro-batch wrote only _SUCCESS, or a crash
-    // left an empty dir) — spark.read.parquet then throws
-    // UNABLE_TO_INFER_SCHEMA, not PATH_NOT_FOUND, and without the
-    // schema-less fallback every later batch fails, including replays.
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(idxDir))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(idxDir, "_SUCCESS"), "")
-    val sink = EventStream.upsertBandIndexBatch(idxDir) _
-    sink(Seq((10L, textA)).toDF("doc_id", "text"), 1L)
-    val idx = spark.read.parquet(idxDir)
-      .select("band_idx", "band_hash", "owner", "batch_id")
-      .as[(Int, String, Long, Long)].collect().toSet
-    assert(idx ==
-      bandsOf(textA).map { case (bi, bh) => (bi, bh, 10L, 1L) },
-      "the schema-less index dir did not recover to first-batch state")
-  }
-
-  test("a batch of only re-offers still emits a drift summary row " +
-      "(n_new = 0), so a stagnant stream is visible (r18 ADVICE)") {
-    import spark.implicits._
-    val cellsDir = java.nio.file.Files
-      .createTempDirectory("graft-ivf-stagnant").toString + "/cells"
-    val cents = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0)))
-      .toDF("cid", "cu")
-    val sink = graft.streaming.EventStream
-      .upsertIvfCellsBatch(cellsDir, cents, driftThreshold = 0.9) _
-    sink(Seq((10L, Seq(1.0, 0.0))).toDF("vec_id", "embedding"), 0L)
-    // batch 1 is ALL re-offers (vec 10 again) — zero fresh rows; the
-    // old groupBy(batch_id) emitted nothing for it, so a stream
-    // dominated by re-offers looked healthy rather than stagnant
-    sink(Seq((10L, Seq(0.0, 1.0))).toDF("vec_id", "embedding"), 1L)
-    // batch 2 is only a zero-norm vector — also zero fresh rows
-    sink(Seq((13L, Seq(0.0, 0.0))).toDF("vec_id", "embedding"), 2L)
-    val drift = graft.streaming.EventStream.ivfDriftStats(spark, cellsDir)
-      .select("batch_id", "n_new", "n_drifted", "drift_share")
-      .as[(Long, Long, Long, Double)].collect().toSet
-    assert(drift == Set((0L, 1L, 0L, 0.0), (1L, 0L, 0L, 0.0),
-      (2L, 0L, 0L, 0.0)),
-      s"every processed batch must appear in the signal: $drift")
-  }
-
-  test("maybeRetrainIvf consumes the drift signal: key-versioned core " +
-      "swap, replay-safe trigger (r18 VERDICT item 6)") {
-    import spark.implicits._
-    val d = "/root/testdata/sf0.001"
-    val cellsDir = java.nio.file.Files
-      .createTempDirectory("graft-ivf-retrain").toString + "/cells"
-    val cents = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0)))
-      .toDF("cid", "cu")
-    // before ANY maintenance batch: no drift history is "no", not an
-    // AnalysisException on the missing _drift path (r19 ADVICE)
-    assert(!graft.queries.Similarity.maybeRetrainIvf(spark, d, cellsDir,
-      threshold = 0.5, trailingK = 3),
-      "missing drift history must mean no-retrain, not a throw")
-    // driftThreshold 2.0: every new vector scores below it → the
-    // pooled drift share is 1.0, far past the retrain threshold
-    val sink = graft.streaming.EventStream
-      .upsertIvfCellsBatch(cellsDir, cents, driftThreshold = 2.0) _
-    sink(Seq((10L, Seq(1.0, 0.0)), (11L, Seq(0.6, 0.8)))
-      .toDF("vec_id", "embedding"), 0L)
-
-    val v0 = graft.queries.Similarity.servedIvfVersion(spark, d)
-    // materialize the currently-served core; hold a frame on it
-    val before = SparkEntry.queries("emb_kmeans_iter")(spark, d)
-      .collect().toSet
-    def buildsAt(v: Long): Int = graft.operators.SharedStage
-      .buildsFor(spark, s"ivfCentroids:$d:k=4:iters=1:v=$v")
-    val builtV0 = buildsAt(v0)
-    assert(builtV0 >= 1, "served core not materialized")
-
-    // drift share 1.0 >= 0.5 → retrain: version bumps, new cores
-    // build eagerly under the NEW keys, old core untouched
-    assert(graft.queries.Similarity.maybeRetrainIvf(spark, d, cellsDir,
-      threshold = 0.5, trailingK = 3), "drift past threshold must retrain")
-    val v1 = graft.queries.Similarity.servedIvfVersion(spark, d)
-    assert(v1 == v0 + 1, s"version did not bump: $v0 -> $v1")
-    assert(buildsAt(v1) == 1, "retrain did not build the new core")
-    assert(buildsAt(v0) == builtV0,
-      "retrain rebuilt/mutated the old core instead of key-swapping")
-
-    // a replayed/repeated evaluation of the SAME signal window must
-    // not double-retrain (the trigger is keyed to the newest batch id)
-    assert(!graft.queries.Similarity.maybeRetrainIvf(spark, d, cellsDir,
-      threshold = 0.5, trailingK = 3), "same signal retrained twice")
-    assert(graft.queries.Similarity.servedIvfVersion(spark, d) == v1)
-
-    // subsequent probes serve the new version (and, trained on the
-    // same corpus, reproduce the same assignments)
-    val after = SparkEntry.queries("emb_kmeans_iter")(spark, d)
-      .collect().toSet
-    assert(buildsAt(v1) == 1, "probe after retrain rebuilt the core")
-    assert(after == before, "retrained-on-same-data assignments moved")
-
-    // NEW drift evidence (a later batch past the threshold) retrains
-    // again — the guard is per-trigger, not once-ever
-    sink(Seq((12L, Seq(0.0, 1.0))).toDF("vec_id", "embedding"), 1L)
-    assert(graft.queries.Similarity.maybeRetrainIvf(spark, d, cellsDir,
-      threshold = 0.5, trailingK = 3), "fresh drift evidence ignored")
-    assert(graft.queries.Similarity.servedIvfVersion(spark, d) == v1 + 1)
-  }
 }

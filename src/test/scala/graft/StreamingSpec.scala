@@ -119,50 +119,6 @@ class StreamingSpec extends SparkSpec {
     assert(out == Set((1L, 2L, 3.0), (1L, 1L, 4.0)))
   }
 
-  test("flatMapGroupsWithState sessionization: watermark timeout emits " +
-    "and evicts") {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[EventStream.SessionEvent]
-    val q = EventStream.sessionizeWithState(stream.toDS(), 30)
-      .writeStream.format("memory").queryName("fmgws_sessions")
-      .outputMode("append").start()
-    try {
-      // batch 1: u1 has two gap-adjacent events → one OPEN session
-      stream.addData(EventStream.SessionEvent(1L, ts(0), 1.0),
-        EventStream.SessionEvent(1L, ts(10), 2.0))
-      q.processAllAvailable()
-      assert(spark.table("fmgws_sessions").count() == 0) // still open
-      // batch 2: far-future event on another key advances the watermark
-      // past u1's timeout (00:10 + 30m = 00:40)
-      stream.addData(EventStream.SessionEvent(2L,
-        Timestamp.valueOf("2024-01-01 02:00:00"), 8.0))
-      q.processAllAvailable()
-      // batch 3: another tick lets the timeout fire
-      stream.addData(EventStream.SessionEvent(2L,
-        Timestamp.valueOf("2024-01-01 03:00:00"), 16.0))
-      q.processAllAvailable()
-      val out = spark.table("fmgws_sessions")
-        .select("user_id", "n_events", "session_value")
-        .as[(Long, Long, Double)].collect().toSet
-      assert(out.contains((1L, 2L, 3.0)),
-        s"u1's closed session should have been emitted on timeout: $out")
-      // in-batch gap split: one batch containing a gap closes in place.
-      // Timestamps must sit ABOVE the current watermark (03:00) or the
-      // watermark filter drops them before the state function runs.
-      stream.addData(
-        EventStream.SessionEvent(3L,
-          Timestamp.valueOf("2024-01-01 04:00:00"), 1.0),
-        EventStream.SessionEvent(3L,
-          Timestamp.valueOf("2024-01-01 04:50:00"), 2.0))
-      q.processAllAvailable()
-      val u3 = spark.table("fmgws_sessions")
-        .filter($"user_id" === 3L)
-        .select("n_events", "session_value").as[(Long, Double)]
-        .collect().toSet
-      assert(u3 == Set((1L, 1.0))) // first closed in-batch; second open
-    } finally q.stop()
-  }
-
   test("dedupStream keeps first event per key and bounds state by " +
     "watermark") {
     implicit val sqlCtx = spark.sqlContext
@@ -412,219 +368,6 @@ class StreamingSpec extends SparkSpec {
       assert(slots.values.exists(_.size > 1),
         "no ts tie in the fixture — the tiebreak path went untested")
     } finally q.stop()
-  }
-
-  test("imageDupGateStream flags a 3-bit-perturbed corpus hash (band " +
-      "guarantee) and passes a hash with no band in the index") {
-    implicit val sqlCtx = spark.sqlContext
-    val d = "/root/testdata/sf0.001"
-    val ah = graft.multimodal.Multimodal.extractAHash(
-      graft.multimodal.Multimodal.synthPngFamilies(
-        Tables.documents(spark, d).select(col("doc_id")), "doc_id"))
-    def bandsOf(h: String): Seq[(Int, String)] =
-      (0 until 4).map(b => b -> h.substring(b * 16, (b + 1) * 16))
-    val idx = ah.select(col("media_id"),
-        posexplode(array((0 to 3).map(b =>
-          substring(col("ahash"), b * 16 + 1, 16)): _*))
-          .as(Seq("band_idx", "band_val")))
-      .select("band_idx", "band_val").distinct().localCheckpoint()
-    val idxSet = idx.as[(Int, String)].collect().toSet
-    val h0 = ah.filter(col("media_id") === 0)
-      .select("ahash").as[String].collect().head
-    // Dup-suspect: 3 flipped bits leave >= 1 of h0's bands intact
-    // (pigeonhole), so the gate MUST flag it.
-    val dup = { val a = h0.toCharArray
-      Seq(1, 20, 40).foreach(p => a(p) = if (a(p) == '0') '1' else '0')
-      new String(a) }
-    assert(bandsOf(dup).exists(idxSet.contains))
-    // Novel: deterministically search a hash with NO band in the
-    // index (exists by counting: the corpus holds < 2^16 band values).
-    val novel = Iterator.from(1).map { k =>
-      (0 until 64).map { i =>
-        val b = i / 16
-        if (((k * 4 + b) >> (i % 16) & 1) == 1) '1' else '0'
-      }.mkString
-    }.find(h => !bandsOf(h).exists(idxSet.contains)).get
-    val stream = MemoryStream[(Long, Timestamp, String)]
-    val q = EventStream.imageDupGateStream(
-      stream.toDF().toDF("media_id", "ts", "ahash"), idx,
-      watermarkDelay = "5 minutes")
-      .writeStream.format("memory").queryName("img_gate")
-      .outputMode("append").start()
-    try {
-      stream.addData((1000L, ts(0), dup), (1001L, ts(0), novel))
-      q.processAllAvailable()
-      stream.addData((9999L, ts(1000), novel))
-      q.processAllAvailable()
-      val got = spark.table("img_gate")
-        .select("media_id").as[Long].collect().toSet - 9999L
-      assert(got == Set(1000L),
-        s"gate should flag only the banded perturbation, got $got")
-    } finally q.stop()
-  }
-
-  test("audioDupGateStream flags a corpus signature and passes a " +
-      "novel one") {
-    implicit val sqlCtx = spark.sqlContext
-    // Index = two known signatures; stream one match, one miss, at
-    // the same instant — the gate must flag exactly the match.
-    val idx = Seq("64:65", "70:71").toDF("sig").localCheckpoint()
-    val stream = MemoryStream[(Long, Timestamp, String)]
-    val q = EventStream.audioDupGateStream(
-      stream.toDF().toDF("media_id", "ts", "sig"), idx,
-      watermarkDelay = "5 minutes")
-      .writeStream.format("memory").queryName("aud_gate")
-      .outputMode("append").start()
-    try {
-      stream.addData((1L, ts(0), "64:65"), (2L, ts(0), "99:99"))
-      q.processAllAvailable()
-      stream.addData((9999L, ts(1000), "99:99"))
-      q.processAllAvailable()
-      val got = spark.table("aud_gate")
-        .select("media_id").as[Long].collect().toSet - 9999L
-      assert(got == Set(1L), s"expected only the indexed sig, got $got")
-    } finally q.stop()
-  }
-
-  test("attributionJoin pairs purchases with in-horizon clicks, " +
-    "null row when none") {
-    implicit val sqlCtx = spark.sqlContext
-    val purchases = MemoryStream[(Long, Timestamp, Long)]
-    val clicks = MemoryStream[(Long, Timestamp, Long)]
-    def df(m: MemoryStream[(Long, Timestamp, Long)]) =
-      m.toDF().toDF("user_id", "ts", "event_id")
-    val q = EventStream
-      .attributionJoin(df(purchases), df(clicks), "'1' HOUR", "10 minutes")
-      .writeStream.format("memory").queryName("attr_out")
-      .outputMode("append").start()
-    try {
-      // user 1: clicks at 00:05 (in horizon) and a purchase at 00:30;
-      // user 2: purchase with NO preceding click.
-      clicks.addData((1L, ts(5), 100L))
-      purchases.addData((1L, ts(30), 10L), (2L, ts(31), 20L))
-      q.processAllAvailable()
-      // Advance both watermarks far enough that the no-match row for
-      // user 2 is provably final and gets emitted.
-      clicks.addData((9L, Timestamp.valueOf("2024-01-01 03:00:00"), 999L))
-      purchases.addData((9L, Timestamp.valueOf("2024-01-01 03:00:00"), 99L))
-      q.processAllAvailable()
-      val out = spark.table("attr_out")
-        .select("purchase_id", "click_id")
-        .as[(Long, Option[Long])].collect().toSeq
-      assert(out.contains((10L, Some(100L))), s"got $out")
-      assert(out.contains((20L, None)), s"got $out") // watermark-final null
-    } finally q.stop()
-  }
-
-  test("streaming attribution reduces to the batch as-of join") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.api.GraftOps
-    // Same dataset through both paths: the batch as-of join picks THE
-    // latest prior click; the streaming join emits ALL in-horizon
-    // clicks — reducing those pairs by max(click_ts) must agree.
-    val clicks = Seq((1L, ts(5), 100L), (1L, ts(20), 101L),
-      (2L, ts(10), 200L))
-    val purchases = Seq((1L, ts(30), 10L), (2L, ts(40), 20L),
-      (3L, ts(50), 30L))
-    val cs = MemoryStream[(Long, Timestamp, Long)]
-    val ps = MemoryStream[(Long, Timestamp, Long)]
-    val q = EventStream.attributionJoin(
-      ps.toDF().toDF("user_id", "ts", "event_id"),
-      cs.toDF().toDF("user_id", "ts", "event_id"),
-      "'1' HOUR", "0 seconds")
-      .writeStream.format("memory").queryName("attr_equiv_out")
-      .outputMode("append").start()
-    try {
-      cs.addData(clicks); ps.addData(purchases)
-      q.processAllAvailable()
-      // Advance watermarks so unmatched purchases emit their null rows.
-      cs.addData((9L, ts(59, 59), 999L)); ps.addData((9L, ts(59, 59), 99L))
-      q.processAllAvailable()
-      val streamed = spark.table("attr_equiv_out")
-        .filter($"purchase_id" < 99L)
-        .groupBy("purchase_id")
-        .agg(max(struct($"c_ts", $"click_id")).getField("click_id")
-          .as("click_id"))
-        .as[(Long, Option[Long])].collect().toMap
-      val batch = GraftOps.asofJoin(
-        purchases.toDF("user_id", "ts", "event_id"),
-        clicks.toDF("user_id", "ts", "click_id"),
-        "user_id", "ts", Seq("click_id"))
-        .select("event_id", "asof_click_id")
-        .as[(Long, Option[Long])].collect().toMap
-      assert(streamed == batch, s"streamed $streamed vs batch $batch")
-      assert(batch == Map(10L -> Some(101L), 20L -> Some(200L),
-        30L -> None))
-    } finally q.stop()
-  }
-
-  test("attributionJoin pairs a click that ARRIVES after the purchase " +
-    "(within watermark)") {
-    implicit val sqlCtx = spark.sqlContext
-    val purchases = MemoryStream[(Long, Timestamp, Long)]
-    val clicks = MemoryStream[(Long, Timestamp, Long)]
-    def df(m: MemoryStream[(Long, Timestamp, Long)]) =
-      m.toDF().toDF("user_id", "ts", "event_id")
-    val q = EventStream
-      .attributionJoin(df(purchases), df(clicks), "'1' HOUR", "10 minutes")
-      .writeStream.format("memory").queryName("attr_late_out")
-      .outputMode("append").start()
-    try {
-      // The purchase is processed FIRST; the matching click (event-time
-      // before the purchase) arrives a batch later. The join must have
-      // buffered the purchase and still emit the pair — the reason a
-      // stream-stream join holds both sides in state until the
-      // watermark closes the window.
-      purchases.addData((1L, ts(30), 10L))
-      q.processAllAvailable()
-      clicks.addData((1L, ts(25), 100L))
-      q.processAllAvailable()
-      val out = spark.table("attr_late_out")
-        .select("purchase_id", "click_id")
-        .as[(Long, Option[Long])].collect().toSeq
-      assert(out.contains((10L, Some(100L))), s"got $out")
-    } finally q.stop()
-  }
-
-  test("admissionGateStream: stream margins bit-match the batch " +
-      "classifier; token-less docs pass through as keep=false") {
-    implicit val sqlCtx = spark.sqlContext
-    val docs = Seq(
-      (1L, ts(0), "alpha beta gamma delta"),
-      (2L, ts(1), "one two three four five six"),
-      (3L, ts(2), "   "), // token-less: null margin, keep=false
-      (4L, ts(3), "zzz yyy xxx www vvv uuu ttt sss"))
-    val stream = MemoryStream[(Long, Timestamp, String)]
-    val q = EventStream.admissionGateStream(
-        stream.toDF().toDF("doc_id", "ts", "text"))
-      .writeStream.format("memory").queryName("admission_out")
-      .outputMode("append").start()
-    try {
-      stream.addData(docs: _*)
-      q.processAllAvailable()
-      val got = spark.table("admission_out")
-        .select("doc_id", "margin", "keep")
-        .as[(Long, Option[Double], Boolean)].collect()
-        .map(r => r._1 -> ((r._2, r._3))).toMap
-      // batch twin: the same row-local expression over a static frame
-      val want = docs.toDF("doc_id", "ts", "text")
-        .select($"doc_id",
-          (graft.functions.TextFunctions.classifierMarginMicro($"text")
-            .cast("double") / 1000000.0).as("margin"))
-        .as[(Long, Option[Double])].collect()
-        .map(r => r._1 -> ((r._2, r._2.exists(_ > 0)))).toMap
-      assert(got == want, s"got $got want $want")
-      assert(got(3L) == ((None, false)), "token-less doc contract")
-      assert(got.size == 4)
-    } finally q.stop()
-  }
-
-  test("mapGroupsWithState running totals accumulate per key") {
-    val out = EventStream.runningTotals(
-      Seq(EventStream.UserEvent(1L, 2.0), EventStream.UserEvent(1L, 3.0),
-        EventStream.UserEvent(2L, 7.0)).toDS())
-      .collect().map(t => t.user_id -> ((t.n, t.total))).toMap
-    assert(out(1L) == ((2L, 5.0)) && out(2L) == ((1L, 7.0)))
   }
 
   test("importClassifyStream: stream-static classification matches the " +

@@ -89,7 +89,7 @@ class VectorFunctionsSpec extends SparkSpec {
     val path = "/tmp/graft-spec-ivf-index"
     // the 100 TB layout: the index lives ON DISK partitioned by coarse
     // cell, so an nprobe-cell query reads only those cells' files
-    graft.operators.ScaleOps.writePartitioned(e, path, Seq("cell"))
+    e.write.mode("overwrite").partitionBy("cell").parquet(path)
     val back = spark.read.parquet(path)
     val probed = back.filter($"cell".isin(1L, 3L))
     val plan = probed.queryExecution.executedPlan.toString
