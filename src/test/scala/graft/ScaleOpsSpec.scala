@@ -2,9 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.ScaleOps
+import graft.sinks.Sinks
 
 /** Assertions for the scale utilities: salting and the Bloom prefilter
-  * preserve join results; shared stages build once per session. */
+  * preserve join results; partitioned reads prune; shared stages build
+  * once per session. */
 class ScaleOpsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -91,6 +93,30 @@ class ScaleOpsSpec extends SparkSpec {
     // No false negatives: every matching key's full multiplicity is
     // present (3 build keys × 20 probe rows each).
     assert(bloomed.length == 3 * 20)
+  }
+
+  test("partitionBy write + filter read prunes partitions in the scan") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-part")
+      .toString + "/out"
+    // Sinks.writeBatchIdempotent lays each micro-batch under its own
+    // batch_id=N directory; a read filtered on batch_id must prune to it.
+    val sink = Sinks.writeBatchIdempotent(dir) _
+    (0 to 2).foreach { b =>
+      sink((1 to 100).map(i => (b * 100 + i, s"d$b", i * 1.0))
+        .toDF("id", "day", "v"), b.toLong)
+    }
+    assert(new java.io.File(dir).listFiles().map(_.getName)
+      .filter(_.startsWith("batch_id=")).sorted.toSeq ==
+      Seq("batch_id=0", "batch_id=1", "batch_id=2"))
+    val read = spark.read.parquet(dir).filter(col("batch_id") === 1L)
+    // inputFiles reports the pre-pruning listing; the pruning evidence is
+    // the PartitionFilters entry on the file scan node.
+    val plan = read.queryExecution.executedPlan.toString
+    assert(plan.contains("PartitionFilters") && plan.contains("(batch_id"),
+      s"expected directory-level partition pruning, got:\n$plan")
+    assert(read.count() == 100)
+    assert(read.select("day").distinct().as[String].collect().toSeq ==
+      Seq("d1"))
   }
 
   test("mortonCode interleaves bits (hand-computed values)") {

@@ -1,12 +1,28 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.sinks.Sinks
 
-/** Source coverage beyond the parquet harness tables: the reference's
-  * JDBC read (tenant-filter pushdown, latin-1 charset) and the
-  * pluggable media fetcher. */
+/** Source coverage beyond the parquet harness tables: schema evolution
+  * across sink batches, the reference's JDBC read (tenant-filter
+  * pushdown, latin-1 charset) and the pluggable media fetcher. */
 class SourcesSpec extends SparkSpec {
   import spark.implicits._
+
+  test("mergeSchema surfaces evolved columns, old files read as null") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ev")
+      .toString + "/out"
+    // Each Sinks.writeBatchIdempotent batch owns its batch_id=N files, so
+    // a batch that adds a column leaves the earlier footers as written.
+    Sinks.writeBatchIdempotent(dir)(Seq((1L, "a")).toDF("id", "v"), 0L)
+    Sinks.writeBatchIdempotent(dir)(
+      Seq((2L, "b", 9L)).toDF("id", "v", "added"), 1L)
+    val merged = spark.read.option("mergeSchema", "true").parquet(dir)
+      .select("id", "v", "added", "batch_id")
+      .as[(Long, String, Option[Long], Long)].collect().sortBy(_._1)
+    assert(merged.toSeq ==
+      Seq((1L, "a", None, 0L), (2L, "b", Some(9L), 1L)))
+  }
 
   // --- JDBC (the reference's actual source modality, utils.py:24-31) ---
   // Embedded in-memory Derby (ships with the Spark distribution) stands

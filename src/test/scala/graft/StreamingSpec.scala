@@ -195,6 +195,53 @@ class StreamingSpec extends SparkSpec {
     assert(admitted("0 seconds") == arrivals.length - 2)
   }
 
+  test("streaming attribution reduces to the batch as-of join") {
+    implicit val sqlCtx = spark.sqlContext
+    import graft.api.GraftOps
+    // Same dataset through both paths: GraftOps.asofJoin picks THE
+    // latest prior click; an event-time interval join over the streams
+    // emits ALL in-horizon clicks — reducing those pairs by
+    // max(click_ts) must agree.
+    val clicks = Seq((1L, ts(5), 100L), (1L, ts(20), 101L),
+      (2L, ts(10), 200L))
+    val purchases = Seq((1L, ts(30), 10L), (2L, ts(40), 20L),
+      (3L, ts(50), 30L))
+    val cs = MemoryStream[(Long, Timestamp, Long)]
+    val ps = MemoryStream[(Long, Timestamp, Long)]
+    val p = ps.toDF().toDF("user_id", "p_ts", "purchase_id")
+      .withWatermark("p_ts", "0 seconds")
+    val c = cs.toDF().toDF("c_user", "c_ts", "click_id")
+      .withWatermark("c_ts", "0 seconds")
+    val q = p.join(c,
+        col("user_id") === col("c_user") && col("c_ts") <= col("p_ts") &&
+          col("c_ts") >= col("p_ts") - expr("INTERVAL '1' HOUR"),
+        "leftOuter")
+      .writeStream.format("memory").queryName("attr_equiv_out")
+      .outputMode("append").start()
+    try {
+      cs.addData(clicks); ps.addData(purchases)
+      q.processAllAvailable()
+      // Advance watermarks so unmatched purchases emit their null rows.
+      cs.addData((9L, ts(59, 59), 999L)); ps.addData((9L, ts(59, 59), 99L))
+      q.processAllAvailable()
+      val streamed = spark.table("attr_equiv_out")
+        .filter($"purchase_id" < 99L)
+        .groupBy("purchase_id")
+        .agg(max(struct($"c_ts", $"click_id")).getField("click_id")
+          .as("click_id"))
+        .as[(Long, Option[Long])].collect().toMap
+      val batch = GraftOps.asofJoin(
+        purchases.toDF("user_id", "ts", "event_id"),
+        clicks.toDF("user_id", "ts", "click_id"),
+        "user_id", "ts", Seq("click_id"))
+        .select("event_id", "asof_click_id")
+        .as[(Long, Option[Long])].collect().toMap
+      assert(streamed == batch, s"streamed $streamed vs batch $batch")
+      assert(batch == Map(10L -> Some(101L), 20L -> Some(200L),
+        30L -> None))
+    } finally q.stop()
+  }
+
   test("rowlocal minhash bands are bit-identical to the batch pipeline") {
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
