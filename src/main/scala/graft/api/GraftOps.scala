@@ -127,11 +127,17 @@ object GraftOps {
   def candidatePairsFromBands(bands: DataFrame, idCol: String,
       bucketCap: Int = 4096): DataFrame = {
     require(bucketCap >= 2, "candidatePairsFromBands: bucketCap must be >= 2")
-    val buckets = bands
-      .withColumn("__n", count(lit(1))
-        .over(Window.partitionBy("band_idx", "band_hash")))
-      .withColumn("__sub", pmod(xxhash64(col(idCol)),
-        ceil(col("__n").cast("double") / bucketCap).cast("long")))
+    bandPairs(bands, idCol, bucketCap).distinct()
+  }
+
+  /** Per-band pair emission under the bucket cap: one (left_id, right_id)
+    * row, left < right, for every salted band bucket both ids share — a
+    * pair agreeing on m bands appears m times (`candidatePairsFromBands`
+    * distincts them; `dedup_minhash_eval` counts them). */
+  private[graft] def bandPairs(bands: DataFrame, idCol: String,
+      bucketCap: Int = 4096): DataFrame = {
+    val buckets = bucketSalt(bands, Seq("band_idx", "band_hash"), idCol,
+        bucketCap)
       .groupBy("band_idx", "band_hash", "__sub")
       .agg(sort_array(collect_list(col(idCol))).as("ids"))
       .filter(size(col("ids")) > 1)
@@ -141,7 +147,26 @@ object GraftOps {
     buckets.select(explode(pairs).as("p"))
       .select(col("p.left_id").as("left_id"),
         col("p.right_id").as("right_id"))
-      .distinct()
+  }
+
+  /** The bucket-cap salt: adds `__sub = pmod(xxhash64(id), ceil(n/cap))`,
+    * n the row count of the row's `keyCols` bucket, so a bucket over
+    * `bucketCap` rows splits into ceil(n/cap) id-hash sub-buckets and
+    * every bucket at or under the cap is sub-bucket 0. Callers group or
+    * join on (keyCols, `__sub`). The count is a window over the bucket
+    * key, so it rides the exchange the caller's bucket step needs. */
+  private[graft] def bucketSalt(rows: DataFrame, keyCols: Seq[String],
+      idCol: String, bucketCap: Int = 4096): DataFrame = {
+    // An input already carrying either name would be silently
+    // overwritten and the pair semantics corrupted.
+    require(!rows.columns.contains("__n") && !rows.columns.contains("__sub"),
+      "bucketSalt: input must not carry reserved columns __n/__sub")
+    rows
+      .withColumn("__n", count(lit(1))
+        .over(Window.partitionBy(keyCols.map(col): _*)))
+      .withColumn("__sub", pmod(xxhash64(col(idCol)),
+        ceil(col("__n").cast("double") / bucketCap).cast("long")))
+      .drop("__n")
   }
 
   /** Co-occurrence pair COUNTS under the bucket cap: for every pair of
@@ -184,11 +209,6 @@ object GraftOps {
   def cappedKeyPairCounts(rows: DataFrame, keyCol: String, idCol: String,
       bucketCap: Int = 4096): DataFrame = {
     require(bucketCap >= 2, "cappedKeyPairCounts: bucketCap must be >= 2")
-    // The salt plumbing writes __n/__sub via withColumn — an input
-    // already carrying either name would be silently overwritten and
-    // the pair semantics corrupted (r13 ADVICE). Fail loudly instead.
-    require(!rows.columns.contains("__n") && !rows.columns.contains("__sub"),
-      "cappedKeyPairCounts: input must not carry reserved columns __n/__sub")
     // The salted table is localCheckpointed so BOTH join sides read
     // one materialization: without it each side recomputes the count
     // window (and whatever pipeline feeds `rows`), and — because
@@ -197,12 +217,7 @@ object GraftOps {
     // AND a (key, __sub) join exchange. Measured on mm_frame_dedup at
     // sf0.1 (ABBench, both orders): 4.15-4.7 s un-checkpointed vs
     // 3.7-4.0 s checkpointed.
-    val salted = rows
-      .withColumn("__n", count(lit(1))
-        .over(Window.partitionBy(keyCol)))
-      .withColumn("__sub", pmod(xxhash64(col(idCol)),
-        ceil(col("__n").cast("double") / bucketCap).cast("long")))
-      .drop("__n")
+    val salted = bucketSalt(rows, Seq(keyCol), idCol, bucketCap)
       .localCheckpoint()
     val a = salted.select(col(idCol).as("left_id"), col(keyCol),
       col("__sub"))

@@ -82,6 +82,18 @@ object ImportJob {
       .select(col("id"),
         concat(lit("org-"), col("n_regionkey")).as("organizationId"))
 
+  /** The flattened members, vendors and products extracts, each with its
+    * organizationId — the entity frames `importDelta` diffs and
+    * `validationReport` checks. */
+  private def orgEntities(s: SparkSession, d: String)
+      : (DataFrame, DataFrame, DataFrame) =
+    (Entities.queries("members_doc")(s, d)
+      .join(orgOfCustomer(s, d), Seq("id")),
+     Entities.queries("vendors_doc")(s, d)
+      .join(orgOfSupplier(s, d), Seq("id")),
+     Entities.queries("menu_items_doc")(s, d)
+      .withColumn("organizationId", concat(lit("org-"), col("id") % 5)))
+
   /** Deterministic id-ascending order for a collected doc array —
     * collect_list order is partition-dependent; every payload array is
     * sorted by the entity id before serialization. */
@@ -434,13 +446,7 @@ object ImportJob {
           col("n_inserted"), col("n_deleted"), col("n_changed"),
           col("n_unchanged"))
     }
-    val members = Entities.queries("members_doc")(s, d)
-      .join(orgOfCustomer(s, d), Seq("id"))
-    val vendors = Entities.queries("vendors_doc")(s, d)
-      .join(orgOfSupplier(s, d), Seq("id"))
-    val products = Entities.queries("menu_items_doc")(s, d)
-      .withColumn("organizationId",
-        concat(lit("org-"), col("id") % 5))
+    val (members, vendors, products) = orgEntities(s, d)
     // The three entity deltas are independent and each pays an eager
     // checkpoint job of many small stages — build them from a thread
     // pool so the jobs overlap instead of running their sub-300 ms
@@ -489,12 +495,7 @@ object ImportJob {
         .select(lit(entity).as("entity"),
           col("organizationId").as("organization_id"), col("rule"),
           col("n_violations").cast("long").as("n_violations"))
-    val members = Entities.queries("members_doc")(s, d)
-      .join(orgOfCustomer(s, d), Seq("id"))
-    val vendors = Entities.queries("vendors_doc")(s, d)
-      .join(orgOfSupplier(s, d), Seq("id"))
-    val products = Entities.queries("menu_items_doc")(s, d)
-      .withColumn("organizationId", concat(lit("org-"), col("id") % 5))
+    val (members, vendors, products) = orgEntities(s, d)
     rules(members, "members", Seq(
         "missing_dob" -> (col("dob") ===
           to_timestamp(lit("1970-01-01 00:00:00"))),
@@ -559,7 +560,9 @@ object ImportJob {
         val dest =
           new org.apache.hadoop.fs.Path(s"$outDir/mmj-${orgId}.json")
         if (fs.exists(dest)) fs.delete(dest, false)
-        fs.rename(part.head.getPath, dest)
+        if (!fs.rename(part.head.getPath, dest))
+          throw new java.io.IOException(
+            s"writeImportFiles: rename ${part.head.getPath} -> $dest failed")
         dest.toUri.getPath
       }.sorted
     fs.delete(stagePath, true)

@@ -20,6 +20,23 @@ import graft.Tables
 object EventOps {
   private val D182 = DecimalType(18, 2)
 
+  /** Every event with its per-user `session_idx` under a 30-minute
+    * inactivity gap: lag → new-session flag → running sum over the
+    * user's (ts, event_id) order. Micros arithmetic on both engines
+    * (DuckDB epoch() is fractional seconds; epoch_us matches Spark's
+    * unix_micros exactly). Callers aggregate by (user_id, session_idx). */
+  private def gapSessions(s: SparkSession, d: String): DataFrame = {
+    val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    val gapUs  = 30L * 60 * 1000000
+    Tables.events(s, d)
+      .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(byUser))
+      .withColumn("new_sess",
+        when(col("prev_us").isNull ||
+          unix_micros(col("ts")) - col("prev_us") > gapUs, 1L)
+          .otherwise(0L))
+      .withColumn("session_idx", sum(col("new_sess")).over(byUser))
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Tumbling 10-minute windows (epoch-aligned in both engines). The
     // SAME function drives the Structured Streaming variant
@@ -239,25 +256,14 @@ object EventOps {
     }),
 
     // Gap-based sessionization (30-minute inactivity gap) per user:
-    // lag → new-session flag → running session index → per-session agg.
-    // Micros arithmetic on both engines (DuckDB epoch() is fractional
-    // seconds; epoch_us matches Spark's unix_micros exactly).
-    "ev_sessionize" -> ((s, d) => {
-      val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val gapUs  = 30L * 60 * 1000000
-      Tables.events(s, d)
-        .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(byUser))
-        .withColumn("new_sess",
-          when(col("prev_us").isNull ||
-            unix_micros(col("ts")) - col("prev_us") > gapUs, 1L)
-            .otherwise(0L))
-        .withColumn("session_idx", sum(col("new_sess")).over(byUser))
+    // gapSessions' session index → per-session agg.
+    "ev_sessionize" -> ((s, d) =>
+      gapSessions(s, d)
         .groupBy("user_id", "session_idx")
         .agg(count(lit(1)).as("n_events"),
           min(col("ts")).as("session_start"),
           max(col("ts")).as("session_end"),
-          sum(col("value").cast(D182)).cast("double").as("session_value"))
-    }),
+          sum(col("value").cast(D182)).cast("double").as("session_value"))),
 
     // Interval-OVERLAP join (campaign attribution): user sessions
     // (30-min-gap sessionization, the ev_sessionize core) joined to the
@@ -272,15 +278,7 @@ object EventOps {
     // bounded-dimension case.
     "j17_interval_overlap" -> ((s, d) => {
       import s.implicits._
-      val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val gapUs = 30L * 60 * 1000000
-      val sess = Tables.events(s, d)
-        .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(byUser))
-        .withColumn("new_sess",
-          when(col("prev_us").isNull ||
-            unix_micros(col("ts")) - col("prev_us") > gapUs, 1L)
-            .otherwise(0L))
-        .withColumn("session_idx", sum(col("new_sess")).over(byUser))
+      val sess = gapSessions(s, d)
         .groupBy("user_id", "session_idx")
         .agg(min(unix_micros(col("ts"))).as("s_us"),
           max(unix_micros(col("ts"))).as("e_us"))
@@ -321,15 +319,7 @@ object EventOps {
     // over the sessionize core, conditional sums only — the whole
     // report is a single reduced row regardless of corpus size.
     "ev_duration_survival" -> ((s, d) => {
-      val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val gapUs = 30L * 60 * 1000000
-      val dur = Tables.events(s, d)
-        .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(byUser))
-        .withColumn("new_sess",
-          when(col("prev_us").isNull ||
-            unix_micros(col("ts")) - col("prev_us") > gapUs, 1L)
-            .otherwise(0L))
-        .withColumn("session_idx", sum(col("new_sess")).over(byUser))
+      val dur = gapSessions(s, d)
         .groupBy("user_id", "session_idx")
         .agg((max(unix_micros(col("ts")))
           - min(unix_micros(col("ts")))).as("dur_us"))
@@ -353,15 +343,7 @@ object EventOps {
     // then session identity) makes the curve total-ordered and the
     // peak deterministic.
     "ev_peak_concurrency" -> ((s, d) => {
-      val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val gapUs = 30L * 60 * 1000000
-      val sess = Tables.events(s, d)
-        .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(byUser))
-        .withColumn("new_sess",
-          when(col("prev_us").isNull ||
-            unix_micros(col("ts")) - col("prev_us") > gapUs, 1L)
-            .otherwise(0L))
-        .withColumn("session_idx", sum(col("new_sess")).over(byUser))
+      val sess = gapSessions(s, d)
         .groupBy("user_id", "session_idx")
         .agg(min(unix_micros(col("ts"))).as("s_us"),
           max(unix_micros(col("ts"))).as("e_us"))

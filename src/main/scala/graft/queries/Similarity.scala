@@ -67,6 +67,37 @@ object Similarity {
     }
   }
 
+  /** Native cosine score of two unit vectors (graft_vec_dot); shadows
+    * VectorFunctions' composed `dot` for every query in this file. */
+  private def dot(a: Column, b: Column): Column =
+    call_function("graft_vec_dot", a, b)
+
+  /** The Matryoshka truncation of (vec_id, u): the first 16 dims,
+    * re-normalized, as (vec_id, ut); zero-norm prefixes drop out. */
+  private def truncUnit16(e: DataFrame): DataFrame =
+    e.select(col("vec_id"), slice(col("u"), 1, 16).as("t16"))
+      .withColumn("tn", sqrt(dot(col("t16"), col("t16"))))
+      .filter(col("tn") > 0)
+      .select(col("vec_id"),
+        transform(col("t16"), x => x / col("tn")).as("ut"))
+
+  /** Within-cell search over (vec_id, u, `cellCol`): each of the first
+    * five vectors (vec_id < 5) scored against every other vector of its
+    * own cell, ranked by score with the candidate id as tiebreak —
+    * (q_id, cand_id, score, rnk), every candidate, not just the top. */
+  private def cellRanked(cells: DataFrame, cellCol: String): DataFrame = {
+    val q = cells.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("q_id"), col(cellCol).as("q_cell"),
+        col("u").as("q_u"))
+    val w = Window.partitionBy("q_id")
+      .orderBy(col("score").desc, col("cand_id"))
+    cells.join(broadcast(q), col(cellCol) === col("q_cell") &&
+        col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id").as("cand_id"),
+        round(dot(col("u"), col("q_u")), 6).as("score"))
+      .withColumn("rnk", row_number().over(w).cast("long"))
+  }
+
   /** The emb_dim_stats core (see its registry comment): per-dimension
     * mean / variance / whitening scale from exact micro-unit DECIMAL
     * sums. Shared by the fit query and emb_whiten_apply. */
@@ -328,20 +359,8 @@ object Similarity {
           round(col("pos_score") - col("neg_score"), 6).as("margin"))
     }),
 
-    "emb_ivf_topk" -> ((s, d) => {
-      val e = unitVecs(s, d)
-      val q = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("label").as("q_label"),
-          col("u").as("q_u"))
-      val w = Window.partitionBy("q_id")
-        .orderBy(col("score").desc, col("cand_id"))
-      e.join(broadcast(q), col("label") === col("q_label") &&
-          col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id").as("cand_id"),
-          round(expr("graft_vec_dot(u, q_u)"), 6).as("score"))
-        .withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= 5)
-    }),
+    "emb_ivf_topk" -> ((s, d) =>
+      cellRanked(unitVecs(s, d), "label").filter(col("rnk") <= 5)),
 
     // Embedding-cosine near-dup: candidate pairs restricted to the same
     // coarse cell (label = IVF centroid stand-in), kept above a cosine
@@ -453,20 +472,9 @@ object Similarity {
     // IVF search over the k-means cells just produced — the composed
     // end-to-end ANN path (cluster → probe own cell → top-k), replacing
     // emb_ivf_topk's label stand-in with real learned cells.
-    "emb_ivf_kmeans_topk" -> ((s, d) => {
-      val cells = storedCells(s, d).select("vec_id", "u", "cluster")
-      val q = cells.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("cluster").as("q_cluster"),
-          col("u").as("q_u"))
-      val w = Window.partitionBy("q_id")
-        .orderBy(col("score").desc, col("cand_id"))
-      cells.join(broadcast(q), col("cluster") === col("q_cluster") &&
-          col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id").as("cand_id"),
-          round(expr("graft_vec_dot(u, q_u)"), 6).as("score"))
-        .withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= 5)
-    }),
+    "emb_ivf_kmeans_topk" -> ((s, d) =>
+      cellRanked(storedCells(s, d).select("vec_id", "u", "cluster"),
+        "cluster").filter(col("rnk") <= 5)),
 
     // Symmetric int8 scalar quantization (the memory lever for ANN at
     // scale: 4× smaller vectors, dot products on integers). Per-row
@@ -569,26 +577,11 @@ object Similarity {
     // retrieve-then-rerank cascade.
     "emb_mrl_recall" -> ((s, d) => {
       val e = unitVecs(s, d).select("vec_id", "u")
-      val t = e.select(col("vec_id"), slice(col("u"), 1, 16).as("t16"))
-        .withColumn("tn",
-          sqrt(call_function("graft_vec_dot", col("t16"), col("t16"))))
-        .filter(col("tn") > 0)
-        .select(col("vec_id"),
-          transform(col("t16"), x => x / col("tn")).as("ut"))
-      def topk(corpus: DataFrame, vc: String): DataFrame = {
-        val q = corpus.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("q_id"), col(vc).as("q_v"))
-        val w = Window.partitionBy("q_id")
-          .orderBy(col("score").desc, col("cand_id"))
-        corpus.select(col("vec_id").as("cand_id"), col(vc))
-          .crossJoin(broadcast(q))
-          .filter(col("cand_id") =!= col("q_id"))
-          .select(col("q_id"), col("cand_id"),
-            round(call_function("graft_vec_dot", col(vc), col("q_v")), 6)
-              .as("score"))
-          .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 10)
+      val t = truncUnit16(e)
+      def topk(corpus: DataFrame, vc: String): DataFrame =
+        graft.api.GraftOps.cosineTopK(corpus,
+          corpus.filter(col("vec_id") < 5), "vec_id", vc, 10)
           .select("q_id", "cand_id")
-      }
       val full  = topk(e, "u")
       val trunc = topk(t, "ut")
       full.join(trunc, Seq("q_id", "cand_id"), "left_semi")
@@ -607,7 +600,6 @@ object Similarity {
     // probe joins on the cell id — nprobe multiplies candidates
     // scanned, never corpus passes.
     "emb_ivf_nprobe" -> ((s, d) => {
-      def dot(a: Column, b: Column) = call_function("graft_vec_dot", a, b)
       val cells = storedCells(s, d).select("vec_id", "u", "cluster")
       val cents = storedCentroids(s, d)
       val q0 = cells.filter(col("vec_id") < 5)
@@ -640,7 +632,6 @@ object Similarity {
     // brute-force top-10 baseline is computed ONCE and semi-joined.
     // The assignment table is checkpointed — three consumers.
     "emb_nprobe_sweep" -> ((s, d) => {
-      def dot(a: Column, b: Column) = call_function("graft_vec_dot", a, b)
       val cells = storedCells(s, d).select("vec_id", "u", "cluster")
         .localCheckpoint()
       val cents = storedCentroids(s, d)
@@ -666,15 +657,8 @@ object Similarity {
         .withColumn("rnk", row_number().over(wTop))
         .filter(col("rnk") <= 10)
         .select("np", "q_id", "cand_id")
-      val wBf = Window.partitionBy("q_id")
-        .orderBy(col("score").desc, col("cand_id"))
-      val bf = cells.select(col("vec_id").as("cand_id"), col("u"))
-        .crossJoin(broadcast(q0))
-        .filter(col("cand_id") =!= col("q_id"))
-        .select(col("q_id"), col("cand_id"),
-          round(dot(col("u"), col("q_u")), 6).as("score"))
-        .withColumn("bfr", row_number().over(wBf))
-        .filter(col("bfr") <= 10)
+      val bf = graft.api.GraftOps.cosineTopK(cells,
+          cells.filter(col("vec_id") < 5), "vec_id", "u", 10)
         .select("q_id", "cand_id")
       val hits = cand.join(bf, Seq("q_id", "cand_id"), "left_semi")
         .groupBy("np", "q_id").agg(count(lit(1)).as("h"))
@@ -705,7 +689,6 @@ object Similarity {
     // serving). At 100 TB: centroids broadcast, cells partition the
     // corpus, the cascade touches 2 cells coarse + 50 rows fine.
     "emb_ivf_cascade" -> ((s, d) => {
-      def dot(a: Column, b: Column) = call_function("graft_vec_dot", a, b)
       // The assignment table feeds FOUR consumers (truncated index,
       // query set, fine rerank, brute-force eval); materialize it once
       // or the whole k-means subtree re-derives per consumer (~6× in
@@ -751,15 +734,8 @@ object Similarity {
           round(dot(col("u"), col("q_u")), 6).as("score"))
         .withColumn("rnk", row_number().over(wFine).cast("long"))
         .filter(col("rnk") <= 5)
-      val wBf = Window.partitionBy("q_id")
-        .orderBy(col("score").desc, col("cand_id"))
-      val bf = cells.select(col("vec_id").as("cand_id"), col("u"))
-        .crossJoin(broadcast(q0))
-        .filter(col("cand_id") =!= col("q_id"))
-        .select(col("q_id"), col("cand_id"),
-          round(dot(col("u"), col("q_u")), 6).as("score"))
-        .withColumn("bfr", row_number().over(wBf))
-        .filter(col("bfr") <= 5)
+      val bf = graft.api.GraftOps.cosineTopK(cells,
+          cells.filter(col("vec_id") < 5), "vec_id", "u", 5)
         .select("q_id", "cand_id")
       val rec = fine.join(bf, Seq("q_id", "cand_id"), "left_semi")
         .groupBy("q_id").agg(count(lit(1)).as("n_overlap"))
@@ -786,7 +762,6 @@ object Similarity {
     // posexplode centroid update — the standard IVF training cost, run
     // once, amortized over every query thereafter.
     "emb_ivf_k_recall" -> ((s, d) => {
-      def dot(a: Column, b: Column) = call_function("graft_vec_dot", a, b)
       val n = Tables.embeddings(s, d).count()
       val kBig = math.ceil(math.sqrt(n.toDouble)).toInt
       // .distinct: for n <= 16, ceil(sqrt(n)) collapses to the toy
@@ -814,17 +789,9 @@ object Similarity {
       // let both branches' recall joins read it.
       val eAll = unitVecs(s, d).select("vec_id", "u")
       val bfF = Future {
-        val qbf = eAll.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("q_id"), col("u").as("q_u"))
-        val wBf = Window.partitionBy("q_id")
-          .orderBy(col("score").desc, col("cand_id"))
-        eAll.select(col("vec_id").as("cand_id"), col("u"))
-          .crossJoin(broadcast(qbf))
-          .filter(col("cand_id") =!= col("q_id"))
-          .select(col("q_id"), col("cand_id"),
-            round(dot(col("u"), col("q_u")), 6).as("score"))
-          .withColumn("rnk", row_number().over(wBf))
-          .filter(col("rnk") <= 5).select("q_id", "cand_id")
+        graft.api.GraftOps.cosineTopK(eAll,
+            eAll.filter(col("vec_id") < 5), "vec_id", "u", 5)
+          .select("q_id", "cand_id")
           .localCheckpoint()
       }
       val branches = Seq(4, kBig).distinct.map { k => Future {
@@ -838,22 +805,13 @@ object Similarity {
             .select("vec_id", "u", "cluster")
           else kmeansAssign(s, d, k).select("vec_id", "u", "cluster")
             .localCheckpoint()
-        val q0 = cells.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("q_id"), col("cluster").as("q_cl"),
-            col("u").as("q_u"))
-        val cand = cells.join(broadcast(q0),
-            col("cluster") === col("q_cl") && col("vec_id") =!= col("q_id"))
-          .select(col("q_id"), col("vec_id").as("cand_id"),
-            round(dot(col("u"), col("q_u")), 6).as("score"))
-        val wTop = Window.partitionBy("q_id")
-          .orderBy(col("score").desc, col("cand_id"))
-        val top = cand.withColumn("rnk", row_number().over(wTop))
-          .filter(col("rnk") <= 5).select("q_id", "cand_id")
+        val cand = cellRanked(cells, "cluster")
+        val top = cand.filter(col("rnk") <= 5).select("q_id", "cand_id")
         val bf = Await.result(bfF, Duration.Inf)
         val rec = top.join(bf, Seq("q_id", "cand_id"), "left_semi")
           .groupBy("q_id").agg(count(lit(1)).as("n_overlap"))
         val nc = cand.groupBy("q_id").agg(count(lit(1)).as("n_cands"))
-        q0.select("q_id")
+        cells.filter(col("vec_id") < 5).select(col("vec_id").as("q_id"))
           .join(rec, Seq("q_id"), "left").join(nc, Seq("q_id"), "left")
           .agg(count(lit(1)).as("n_queries"),
             sum(coalesce(col("n_overlap"), lit(0L))).as("so"),
@@ -907,24 +865,11 @@ object Similarity {
     // coarse candidates the fine pass promoted/demoted.
     "emb_cascade_rerank" -> ((s, d) => {
       val e = unitVecs(s, d).select("vec_id", "u")
-      val t = e.select(col("vec_id"), slice(col("u"), 1, 16).as("t16"))
-        .withColumn("tn",
-          sqrt(call_function("graft_vec_dot", col("t16"), col("t16"))))
-        .filter(col("tn") > 0)
-        .select(col("vec_id"),
-          transform(col("t16"), x => x / col("tn")).as("ut"))
-      val qt = t.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("ut").as("q_t"))
-      val wCoarse = Window.partitionBy("q_id")
-        .orderBy(col("c_score").desc, col("cand_id"))
-      val coarse = t.select(col("vec_id").as("cand_id"), col("ut"))
-        .crossJoin(broadcast(qt))
-        .filter(col("cand_id") =!= col("q_id"))
-        .select(col("q_id"), col("cand_id"),
-          round(call_function("graft_vec_dot", col("ut"), col("q_t")), 6)
-            .as("c_score"))
-        .withColumn("c_rnk", row_number().over(wCoarse).cast("long"))
-        .filter(col("c_rnk") <= 50)
+      val t = truncUnit16(e)
+      val coarse = graft.api.GraftOps.cosineTopK(t,
+          t.filter(col("vec_id") < 5), "vec_id", "ut", 50)
+        .select(col("q_id"), col("cand_id"), col("score").as("c_score"),
+          col("rnk").as("c_rnk"))
       val qf = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("u").as("q_u"))
       val wFine = Window.partitionBy("q_id")
@@ -952,7 +897,6 @@ object Similarity {
     // d² as exact scaled longs so partition order can't wiggle an ulp.
     "emb_pq" -> ((s, d) => {
       graft.expressions.VectorExpressions.register(s)
-      def dot(a: Column, b: Column) = call_function("graft_vec_dot", a, b)
       val e = unitVecs(s, d).select("vec_id", "u")
       def subSplit(src: DataFrame, idAs: String, vecAs: String) =
         src.select(col("vec_id").as(idAs), posexplode(
@@ -1005,23 +949,14 @@ object Similarity {
     // left-semi join, per-query rows so a single pathological query
     // is visible instead of averaged away.
     "emb_ivf_pq_recall" -> ((s, d) => {
-      def dot(a: Column, b: Column) = call_function("graft_vec_dot", a, b)
       val pq = ivfPqTopK(s, d).select("q_id", "cand_id")
       val e = unitVecs(s, d).select("vec_id", "u")
       val q0 = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("u").as("q_u"))
-      val wBf = Window.partitionBy("q_id")
-        .orderBy(col("score").desc, col("cand_id"))
-      val bf = e.select(col("vec_id").as("cand_id"), col("u"))
-        .crossJoin(broadcast(q0))
-        .filter(col("cand_id") =!= col("q_id"))
-        .select(col("q_id"), col("cand_id"),
-          round(dot(col("u"), col("q_u")), 6).as("score"))
-        .withColumn("brn", row_number().over(wBf))
-        .filter(col("brn") <= 5).select("q_id", "cand_id")
+      val bf = graft.api.GraftOps.cosineTopK(e, q0, "vec_id", "u", 5)
+        .select("q_id", "cand_id")
       val ov = pq.join(bf, Seq("q_id", "cand_id"), "left_semi")
         .groupBy("q_id").agg(count(lit(1)).as("n_overlap"))
-      q0.select("q_id").join(ov, Seq("q_id"), "left")
+      q0.select(col("vec_id").as("q_id")).join(ov, Seq("q_id"), "left")
         .select(col("q_id"),
           coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
           round(coalesce(col("n_overlap"), lit(0L)).cast("double") / 5.0,
@@ -1046,7 +981,6 @@ object Similarity {
     // production, with real clusters, the cosine term joins the gate.
     "dq_embedding_drift" -> ((s, d) => {
       graft.expressions.VectorExpressions.register(s)
-      def dot(a: Column, b: Column) = call_function("graft_vec_dot", a, b)
       val e = Tables.embeddings(s, d).select(
         col("label").cast("long").as("label"),
         asDouble(col("embedding")).as("v"),
@@ -1087,7 +1021,6 @@ object Similarity {
     * re-rank of the ADC top-20 to top-5. */
   private def ivfPqTopK(s: SparkSession, d: String): DataFrame = {
       graft.expressions.VectorExpressions.register(s)
-      def dot(a: Column, b: Column) = call_function("graft_vec_dot", a, b)
       val cells = storedCells(s, d).select("vec_id", "u", "cluster")
         .localCheckpoint() // three consumers: codes, candidates, rerank
       val cents = storedCentroids(s, d)
@@ -1166,7 +1099,6 @@ object Similarity {
   private def kmeansCentroids(s: SparkSession, d: String,
       k: Int = 4): DataFrame = {
     graft.expressions.VectorExpressions.register(s)
-    def dot(a: Column, b: Column) = call_function("graft_vec_dot", a, b)
     val e = unitVecs(s, d).select("vec_id", "u")
     val c0 = e.filter(col("vec_id") < k)
       .select(col("vec_id").as("cid"), col("u").as("cu"))
@@ -1235,7 +1167,6 @@ object Similarity {
   private def kmeansAssign(s: SparkSession, d: String,
       k: Int = 4): DataFrame = {
     graft.expressions.VectorExpressions.register(s)
-    def dot(a: Column, b: Column) = call_function("graft_vec_dot", a, b)
     val e = unitVecs(s, d).select("vec_id", "u")
     val c1 =
       if (k == ServedK) storedCentroids(s, d)

@@ -270,7 +270,6 @@ object TextOps {
     * pipeline_media_retention both consume it. */
   private def imageKeepBest(s: SparkSession, d: String): DataFrame =
     graft.operators.SharedStage(s, s"imageKeepBest:$d") {
-      import org.apache.spark.sql.expressions.Window
       val media = graft.multimodal.Multimodal.synthPngFamilies(
         Tables.documents(s, d).select(col("doc_id")), "doc_id")
         .localCheckpoint()
@@ -294,15 +293,9 @@ object TextOps {
         .filter(expr("size(filter(zip_with(split(a_hash, ''), " +
           "split(b_hash, ''), (x, y) -> x != y), p -> p)) <= 3"))
         .select("left_id", "right_id")
-      val cc = graft.api.GraftOps.connectedComponentsFixpoint(
+      keepBest(graft.api.GraftOps.connectedComponentsFixpoint(
         ah.select(col("media_id")), "media_id", dup,
-        "left_id", "right_id")._1
-      val w = Window.partitionBy("cluster_id")
-        .orderBy(col("pixels").desc, col("media_id"))
-      cc.join(px, Seq("media_id"))
-        .withColumn("rnk", row_number().over(w))
-        .select(col("media_id"), col("cluster_id"), col("pixels"),
-          (col("rnk") === 1).as("keep"))
+        "left_id", "right_id")._1, px, "media_id", "pixels")
     }
 
   /** The hashed-feature linear classifier core (see
@@ -407,7 +400,6 @@ object TextOps {
     * longest cut. A SharedStage like its image/video siblings. */
   private def audioKeepBest(s: SparkSession, d: String): DataFrame =
     graft.operators.SharedStage(s, s"audioKeepBest:$d") {
-      import org.apache.spark.sql.expressions.Window
       val sg = audioSigTable(s, d)
       val dup = graft.api.GraftOps.cappedKeyPairCounts(
           sg.select(col("sig"), col("media_id")), "sig", "media_id")
@@ -417,16 +409,10 @@ object TextOps {
           col("s0").as("r0"), col("s1").as("r1")), Seq("right_id"))
         .filter(col("l0") === col("r0") && col("l1") === col("r1"))
         .select("left_id", "right_id")
-      val cc = graft.api.GraftOps.connectedComponentsFixpoint(
-        sg.select(col("media_id")), "media_id", dup,
-        "left_id", "right_id")._1
-      val w = Window.partitionBy("cluster_id")
-        .orderBy(col("nf_total").desc, col("media_id"))
-      cc.join(sg.select(col("media_id"), col("nf_total")),
-          Seq("media_id"))
-        .withColumn("rnk", row_number().over(w))
-        .select(col("media_id"), col("cluster_id"), col("nf_total"),
-          (col("rnk") === 1).as("keep"))
+      keepBest(graft.api.GraftOps.connectedComponentsFixpoint(
+          sg.select(col("media_id")), "media_id", dup,
+          "left_id", "right_id")._1,
+        sg.select(col("media_id"), col("nf_total")), "media_id", "nf_total")
     }
 
   /** DuckDB replay of synthWavFamilies' signature chain (seed →
@@ -527,11 +513,7 @@ object TextOps {
     * salt-split by a media_id hash, one hub per sub-bucket. */
   private[graft] def starEdges(frames: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    frames
-      .withColumn("__n", count(lit(1))
-        .over(Window.partitionBy("fhash")))
-      .withColumn("__sub", pmod(xxhash64(col("media_id")),
-        ceil(col("__n").cast("double") / 4096).cast("long")))
+    graft.api.GraftOps.bucketSalt(frames, Seq("fhash"), "media_id")
       .withColumn("hub", min(col("media_id"))
         .over(Window.partitionBy("fhash", "__sub")))
       .filter(col("media_id") =!= col("hub"))
@@ -543,14 +525,9 @@ object TextOps {
     * band with an earlier doc at most 30 ids back. The band self-join
     * is salted under the 4096 bucket cap; see the query's comment. */
   private[graft] def horizonHits(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val bands = graft.api.GraftOps
-      .minhashBands(docs, "doc_id", "text")
-      .withColumn("__n", count(lit(1))
-        .over(Window.partitionBy("band_idx", "band_hash")))
-      .withColumn("__sub", pmod(xxhash64(col("doc_id")),
-        ceil(col("__n").cast("double") / 4096).cast("long")))
-      .drop("__n")
+    val bands = graft.api.GraftOps.bucketSalt(
+        graft.api.GraftOps.minhashBands(docs, "doc_id", "text"),
+        Seq("band_idx", "band_hash"), "doc_id")
       .localCheckpoint()
     val idx = bands.select(col("doc_id").as("i_doc"),
       col("band_idx"), col("band_hash"), col("__sub"))
@@ -571,20 +548,36 @@ object TextOps {
     * — numbers stay honest, hashes unchanged. */
   private def videoKeepBest(s: SparkSession, d: String): DataFrame =
     graft.operators.SharedStage(s, s"videoKeepBest:$d") {
-    import org.apache.spark.sql.expressions.Window
     val frames = frameHashCore(s, d)
     val nf = frames.groupBy("media_id")
       .agg(count(lit(1)).as("nf"))
-    val cc = graft.api.GraftOps.connectedComponentsFixpoint(
+    keepBest(graft.api.GraftOps.connectedComponentsFixpoint(
       nf.select(col("media_id")), "media_id", starEdges(frames),
-      "left_id", "right_id")._1
+      "left_id", "right_id")._1, nf, "media_id", "nf")
+  }
+
+  /** Keep-best retention over a cluster map (id, cluster_id): joins the
+    * per-id `qualityCol` from `quality` and flags the best member of
+    * each cluster — highest quality, smallest id on ties — as
+    * (id, cluster_id, quality, keep). */
+  private def keepBest(cc: DataFrame, quality: DataFrame, idCol: String,
+      qualityCol: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("cluster_id")
-      .orderBy(col("nf").desc, col("media_id"))
-    cc.join(nf, Seq("media_id"))
+      .orderBy(col(qualityCol).desc, col(idCol))
+    cc.join(quality, Seq(idCol))
       .withColumn("rnk", row_number().over(w))
-      .select(col("media_id"), col("cluster_id"), col("nf"),
+      .select(col(idCol), col("cluster_id"), col(qualityCol),
         (col("rnk") === 1).as("keep"))
   }
+
+  /** The near-dup cluster map (doc_id, cluster_id): bounded 2-round
+    * min-label CC over the shared LSH pair table. A plain def, so each
+    * consumer plans it inline (no materialization of its own). */
+  private def nearDupClusters(s: SparkSession, d: String): DataFrame =
+    graft.api.GraftOps.connectedComponents(
+      docsOf(s, d).select(col("doc_id")), "doc_id",
+      pairTable(s, d), "left_id", "right_id", rounds = 2)
 
   /** Shared DuckDB CTEs reproducing signatures/bandTable. */
   private val SigCte =
@@ -917,18 +910,13 @@ object TextOps {
     // the sibling; StreamingSpec closes the loop by feeding the
     // stream gate these exact timestamps.
     "dedup_first_in_horizon_ts" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val docs = docsOf(s, d)
       def tsCol = expr("TIMESTAMP '2024-01-01 00:00:00' + " +
         "make_interval(0, 0, 0, 0, 0, CAST(doc_id * 37 % 97 AS INT), 0)")
-      val bands = graft.api.GraftOps
-        .minhashBands(docs, "doc_id", "text")
-        .withColumn("ts", tsCol)
-        .withColumn("__n", count(lit(1))
-          .over(Window.partitionBy("band_idx", "band_hash")))
-        .withColumn("__sub", pmod(xxhash64(col("doc_id")),
-          ceil(col("__n").cast("double") / 4096).cast("long")))
-        .drop("__n")
+      val bands = graft.api.GraftOps.bucketSalt(
+          graft.api.GraftOps.minhashBands(docs, "doc_id", "text")
+            .withColumn("ts", tsCol),
+          Seq("band_idx", "band_hash"), "doc_id")
         .localCheckpoint()
       val idx = bands.select(col("doc_id").as("i_doc"),
         col("ts").as("i_ts"), col("band_idx"), col("band_hash"),
@@ -1117,15 +1105,10 @@ object TextOps {
     // two of three). 2 rounds covers diameter-2 chains; the oracle
     // computes the same bounded reachability recursively, so both sides
     // agree by construction at any diameter.
-    "dedup_cluster_cc" -> ((s, d) => {
-      val docs = docsOf(s, d)
-      val pairs = pairTable(s, d)
-      graft.api.GraftOps.connectedComponents(
-          docs.select(col("doc_id")), "doc_id",
-          pairs, "left_id", "right_id", rounds = 2)
+    "dedup_cluster_cc" -> ((s, d) =>
+      nearDupClusters(s, d)
         .select(col("doc_id"), col("cluster_id"),
-          (col("doc_id") === col("cluster_id")).as("is_canonical"))
-    }),
+          (col("doc_id") === col("cluster_id")).as("is_canonical"))),
 
     // SOFT dedup — down-WEIGHT near-duplicates instead of dropping
     // them (per-doc sampling weight 1/cluster_size): keeps every
@@ -1135,11 +1118,7 @@ object TextOps {
     // is the same bounded-round CC as dedup_cluster_cc; the size join
     // keys on cluster_id, the natural post-CC partitioning.
     "dedup_soft_weights" -> ((s, d) => {
-      val docs = docsOf(s, d)
-      val pairs = pairTable(s, d)
-      val cc = graft.api.GraftOps.connectedComponents(
-        docs.select(col("doc_id")), "doc_id",
-        pairs, "left_id", "right_id", rounds = 2)
+      val cc = nearDupClusters(s, d)
       val sizes = cc.groupBy("cluster_id")
         .agg(count(lit(1)).as("cluster_size"))
       cc.join(sizes, Seq("cluster_id"))
@@ -2939,29 +2918,14 @@ object TextOps {
       // band buckets, free at generation time. (The earlier form joined
       // the band table back twice per pair to recount what the bucket
       // membership already knew — two shuffles gone.)
-      val bands = graft.api.GraftOps.minhashBands(docs, "doc_id", "text")
-      // Same bucketCap salt-split as GraftOps.candidatePairsFromBands
-      // (window count rides the bucket groupBy's own exchange): a hot
-      // boilerplate bucket must not collect unbounded or emit n² pairs
-      // here either. Under the cap (always, at tested SFs) the output
-      // is bit-identical; n_bands_agree then counts same-sub-bucket
-      // band agreements — the identical quantity.
-      import org.apache.spark.sql.expressions.Window
-      val buckets = bands
-        .withColumn("__n", count(lit(1))
-          .over(Window.partitionBy("band_idx", "band_hash")))
-        .withColumn("__sub", pmod(xxhash64(col("doc_id")),
-          ceil(col("__n").cast("double") / 4096).cast("long")))
-        .groupBy("band_idx", "band_hash", "__sub")
-        .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-        .filter(size(col("ids")) > 1)
-      val perBandPairs = buckets.select(explode(
-        flatten(transform(col("ids"), (x, i) =>
-          transform(slice(col("ids"), i + 2, size(col("ids"))),
-            y => struct(x.as("left_id"), y.as("right_id")))))).as("p"))
-        .select(col("p.left_id").as("left_id"),
-          col("p.right_id").as("right_id"))
-      val agree = perBandPairs.groupBy("left_id", "right_id")
+      // The per-band emission under the same bucket cap as
+      // candidatePairsFromBands: a hot boilerplate bucket must not
+      // collect unbounded or emit n² pairs here either. Under the cap
+      // (always, at tested SFs) n_bands_agree counts every band
+      // agreement; over it, same-sub-bucket agreements.
+      val agree = graft.api.GraftOps.bandPairs(
+          graft.api.GraftOps.minhashBands(docs, "doc_id", "text"), "doc_id")
+        .groupBy("left_id", "right_id")
         .agg(count(lit(1)).as("n_bands_agree"))
         .localCheckpoint()
       val pairs = agree.select("left_id", "right_id")
@@ -3014,20 +2978,9 @@ object TextOps {
     // tiebreak — instead of the arbitrary min-id canonical. This is the
     // policy composition an actual corpus clean uses: cluster, then
     // argmax quality within cluster.
-    "cluster_keep_best" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val docs = docsOf(s, d)
-      val pairs = pairTable(s, d)
-      val cc = graft.api.GraftOps.connectedComponents(
-        docs.select(col("doc_id")), "doc_id",
-        pairs, "left_id", "right_id", rounds = 2)
-      val w = Window.partitionBy("cluster_id")
-        .orderBy(col("n_chars").desc, col("doc_id"))
-      cc.join(docs.select("doc_id", "n_chars"), Seq("doc_id"))
-        .withColumn("rnk", row_number().over(w))
-        .select(col("doc_id"), col("cluster_id"), col("n_chars"),
-          (col("rnk") === 1).as("keep"))
-    }),
+    "cluster_keep_best" -> ((s, d) =>
+      keepBest(nearDupClusters(s, d),
+        docsOf(s, d).select("doc_id", "n_chars"), "doc_id", "n_chars")),
 
     // BPE merge learning — the classic byte-pair-encoding training loop
     // (Sennrich et al. 2016), run over the DISTINCT-WORD frequency table,

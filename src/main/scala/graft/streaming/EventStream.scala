@@ -18,14 +18,11 @@ import org.apache.spark.sql.types.DecimalType
 object EventStream {
   private val D182 = DecimalType(18, 2)
 
-  /** Tumbling event-time aggregation; batch and streaming share this. */
+  /** Tumbling event-time aggregation; batch and streaming share this.
+    * A tumbling window is a sliding one whose slide equals its length
+    * (`window(ts, d)` is `window(ts, d, d)`). */
   def tumblingAgg(events: DataFrame, windowDur: String): DataFrame =
-    events
-      .groupBy(window(col("ts"), windowDur).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(D182)).cast("double").as("total"))
-      .select(col("w.start").as("window_start"), col("event_type"),
-        col("n"), col("total"))
+    slidingAgg(events, windowDur, windowDur)
 
   /** Streaming variant: watermark bounds the state store and admits
     * bounded-late data. Append-mode capable (final windows only). */

@@ -163,6 +163,29 @@ class ImportJobSpec extends SparkSpec {
       body.contains("\"settings\":[]"), body.take(200))
   }
 
+  test("writeImportFiles throws when renaming a part file to its " +
+      "mmj-{org}.json fails, and the stage's part files survive") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.failrename.impl", classOf[FailingRenameFs].getName)
+    conf.setBoolean("fs.failrename.impl.disable.cache", true)
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-mmj-rename").toString
+    try {
+      val e = intercept[java.io.IOException](
+        ImportJob.writeImportFiles(spark, d, s"failrename://$dir"))
+      assert(e.getMessage.contains("part-") && e.getMessage.contains("mmj-"),
+        e.getMessage)
+      val parts = java.nio.file.Files.walk(
+          java.nio.file.Paths.get(dir, "_stage"))
+        .filter(p => p.getFileName.toString.startsWith("part-"))
+        .count()
+      assert(parts == 5, s"expected the 5 orgs' part files, found $parts")
+    } finally {
+      conf.unset("fs.failrename.impl")
+      conf.unset("fs.failrename.impl.disable.cache")
+    }
+  }
+
   test("document-collection insert contract: content-hash unique ids, " +
       "idempotent replay, append-only growth (utils.py:123-146)") {
     // Embedded in-memory Derby with a PRIMARY KEY on `_id` stands in for
@@ -220,4 +243,15 @@ class ImportJobSpec extends SparkSpec {
     val got = stored1.map(_._2).sorted
     assert(got == expect.toSeq, "stored docs differ from payloads")
   }
+}
+
+/** The local file system under the `failrename` scheme, whose `rename`
+  * into an `mmj-*` name reports failure by returning false, as Hadoop
+  * file systems do. Every other rename (the write's own commit) works. */
+class FailingRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri(): java.net.URI = java.net.URI.create("failrename:///")
+  override def getScheme(): String = "failrename"
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean =
+    !dst.getName.startsWith("mmj-") && super.rename(src, dst)
 }
