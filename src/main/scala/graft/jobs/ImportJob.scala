@@ -513,6 +513,7 @@ object ImportJob {
     * written partition-parallel (text sink partitioned by org), then
     * each org's single part file is renamed to its `mmj-{org}.json`
     * name — a driver-side METADATA pass (one list + one rename per org,
+    * two when the org's previous file first moves aside into the stage;
     * no data read), the same O(#orgs) cost any partitioned-export job
     * pays. Returns the written file paths.
     *
@@ -559,10 +560,18 @@ object ImportJob {
             s"got ${part.length}")
         val dest =
           new org.apache.hadoop.fs.Path(s"$outDir/mmj-${orgId}.json")
-        if (fs.exists(dest)) fs.delete(dest, false)
-        if (!fs.rename(part.head.getPath, dest))
+        // The org's previous file waits in the stage until the new one
+        // is in place, and moves back when that rename fails.
+        val prev = new org.apache.hadoop.fs.Path(stagePath, s"prev-$orgId")
+        val hadPrev = fs.exists(dest)
+        if (hadPrev && !fs.rename(dest, prev))
+          throw new java.io.IOException(
+            s"writeImportFiles: rename $dest -> $prev failed")
+        if (!fs.rename(part.head.getPath, dest)) {
+          if (hadPrev) fs.rename(prev, dest)
           throw new java.io.IOException(
             s"writeImportFiles: rename ${part.head.getPath} -> $dest failed")
+        }
         dest.toUri.getPath
       }.sorted
     fs.delete(stagePath, true)

@@ -47,12 +47,84 @@ object Multimodal {
     * round-robin repartition is deterministic (sort-before-repartition)
     * and every consumer is row-wise then aggregated — the 4-vs-32-core
     * determinism gate pins it. */
-  private def spreadIds(ids: DataFrame, idCol: String)
-      : org.apache.spark.rdd.RDD[Row] = {
+  private def spreadIds(ids: DataFrame, idCol: String): DataFrame = {
     val base = ids.select(col(idCol).cast("long"))
     val par = ids.sparkSession.sparkContext.defaultParallelism
-    if (base.rdd.getNumPartitions >= par) base.rdd
-    else base.repartition(par).rdd
+    if (base.rdd.getNumPartitions >= par) base else base.repartition(par)
+  }
+
+  /** The synthesizer scaffold: one `mime` payload per row of the
+    * one-column long id frame `idScan`, encoded executor-side — the
+    * driver never sees a payload. `encoder` is evaluated once per
+    * partition, so per-partition setup (codec config, a reused digest)
+    * goes in front of the per-id function it returns. The caller picks
+    * the id scan: `spreadIds` or the raw one (see `spreadIds`). */
+  private def synth(idScan: DataFrame, mime: String)(
+      encoder: => Long => Array[Byte]): DataFrame = {
+    val rdd = idScan.rdd.mapPartitions { it =>
+      val encode = encoder
+      it.map { r =>
+        val id = r.getLong(0)
+        Row(id, encode(id), mime)
+      }
+    }
+    idScan.sparkSession.createDataFrame(rdd, mediaSchema)
+  }
+
+  /** The decoder scaffold: one mapPartitions pass over (media_id,
+    * payload) with a NULL payload read as empty, output under the
+    * explicit `schema` (no inference, no driver involvement).
+    * `decoder` is evaluated once per partition — per-partition setup
+    * goes in front of the function it returns — and that function maps
+    * one payload to its output rows: exactly one for the feature
+    * extractors, any number for the generator-shaped ones. */
+  private def decode(media: DataFrame, schema: StructType)(
+      decoder: => (Long, Array[Byte]) => Iterator[Row]): DataFrame = {
+    val rdd = media.select("media_id", "payload").rdd.mapPartitions { it =>
+      val rowsOf = decoder
+      it.flatMap { r =>
+        rowsOf(r.getLong(0),
+          if (r.isNullAt(1)) Array.empty[Byte] else r.getAs[Array[Byte]](1))
+      }
+    }
+    media.sparkSession.createDataFrame(rdd, schema)
+  }
+
+  /** The one PNG encoder: a w×h RGB image whose pixel (x, y) is the
+    * gray value `gray(x, y)`, written through the JDK's ImageIO. */
+  private def png(w: Int, h: Int)(gray: (Int, Int) => Int): Array[Byte] = {
+    val img = new java.awt.image.BufferedImage(
+      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) {
+        val v = gray(x, y)
+        img.setRGB(x, y, (v << 16) | (v << 8) | v)
+        x += 1
+      }
+      y += 1
+    }
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "png", bos)
+    bos.toByteArray
+  }
+
+  /** Lower-case hex md5 of `s`'s UTF-8 bytes through a reused digest. */
+  private def md5Hex(md: java.security.MessageDigest, s: String): String = {
+    md.reset()
+    val hex = new java.lang.StringBuilder(32)
+    md.digest(s.getBytes("UTF-8")).foreach(b => hex.append(f"${b & 0xff}%02x"))
+    hex.toString
+  }
+
+  /** `n` bytes with byte i = (i·step + base) mod 256 — the deterministic
+    * body of the WAV fixtures and of the MP4 fixtures' mdat stream. */
+  private def bytePattern(n: Int, step: Int, base: Int): Array[Byte] = {
+    val out = new Array[Byte](n)
+    var i = 0
+    while (i < n) { out(i) = ((i * step + base) & 0xff).toByte; i += 1 }
+    out
   }
 
   /** Typed media-metadata schema carried beside the binary payload. */
@@ -153,46 +225,26 @@ object Multimodal {
     * TRUE (sample_rate, channels, n_frames); anything else gets the
     * deterministic fallback so the pipeline never stalls on a bad row.
     * duration_us is exact integer microseconds (frames·10⁶/rate). */
-  def extractAudioFeatures(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select("media_id", "payload").rdd.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val payload = if (r.isNullAt(1)) Array.empty[Byte]
-        else r.getAs[Array[Byte]](1)
-        val (sr, ch, fr) = audioMeta(payload).getOrElse {
-          val (w, h, c) = fakeDecode(payload)
-          (w * 25, c, h.toLong) // fake-but-deterministic audio shape
-        }
-        val durUs = if (sr > 0) fr * 1000000L / sr else 0L
-        Row(id, payload.length.toLong, sr, ch, fr, durUs)
+  def extractAudioFeatures(media: DataFrame): DataFrame =
+    decode(media, audioFeatureSchema) { (id, payload) =>
+      val (sr, ch, fr) = audioMeta(payload).getOrElse {
+        val (w, h, c) = fakeDecode(payload)
+        (w * 25, c, h.toLong) // fake-but-deterministic audio shape
       }
+      val durUs = if (sr > 0) fr * 1000000L / sr else 0L
+      Iterator.single(Row(id, payload.length.toLong, sr, ch, fr, durUs))
     }
-    spark.createDataFrame(rdd, audioFeatureSchema)
-  }
 
   /** Synthesize one REAL PNG per id (executor-side, via the same JDK
     * ImageIO the decoder reads with): dims 16+(id%32) × 16+(id%16),
     * RGB. The byte stream is encoder-dependent (never oracle it); the
     * PARSED dimensions are the deterministic contract `mm_image_features`
     * checks — the image twin of `synthWav`/`synthMp4`. */
-  def synthPng(ids: DataFrame, idCol: String): DataFrame = {
-    val spark = ids.sparkSession
-    val rdd = spreadIds(ids, idCol).mapPartitions { it =>
+  def synthPng(ids: DataFrame, idCol: String): DataFrame =
+    synth(spreadIds(ids, idCol), "image/png") {
       javax.imageio.ImageIO.setUseCache(false)
-      it.map { r =>
-        val id = r.getLong(0)
-        val w = 16 + (id % 32).toInt
-        val h = 16 + (id % 16).toInt
-        val img = new java.awt.image.BufferedImage(
-          w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos)
-        Row(id, bos.toByteArray, "image/png")
-      }
+      id => png(16 + (id % 32).toInt, 16 + (id % 16).toInt)((_, _) => 0)
     }
-    spark.createDataFrame(rdd, mediaSchema)
-  }
 
   /** Synthesize one PATTERNED 32×32 grayscale PNG per id: pixel
     * (x, y) carries gray value (id·31 + x·7 + y·13) mod 256 — written
@@ -201,31 +253,11 @@ object Multimodal {
     * Spark side must recover it by actually DECODING the PNG bytes
     * (`extractAHash`), making this the first pixel-content round trip
     * (the header paths stop at dimensions). */
-  def synthPngPattern(ids: DataFrame, idCol: String): DataFrame = {
-    val spark = ids.sparkSession
-    val rdd = spreadIds(ids, idCol).mapPartitions { it =>
+  def synthPngPattern(ids: DataFrame, idCol: String): DataFrame =
+    synth(spreadIds(ids, idCol), "image/png") {
       javax.imageio.ImageIO.setUseCache(false)
-      it.map { r =>
-        val id = r.getLong(0)
-        val img = new java.awt.image.BufferedImage(
-          32, 32, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        var y = 0
-        while (y < 32) {
-          var x = 0
-          while (x < 32) {
-            val v = ((id * 31 + x * 7 + y * 13) % 256).toInt
-            img.setRGB(x, y, (v << 16) | (v << 8) | v)
-            x += 1
-          }
-          y += 1
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos)
-        Row(id, bos.toByteArray, "image/png")
-      }
+      id => png(32, 32)((x, y) => ((id * 31 + x * 7 + y * 13) % 256).toInt)
     }
-    spark.createDataFrame(rdd, mediaSchema)
-  }
 
   /** Family-structured near-duplicate image corpus — the image twin of
     * `synthMp4FramesShared` (which gives video families sharing
@@ -261,19 +293,15 @@ object Multimodal {
     * so a violation would fail loudly, not corrupt parity.
     * Encoded through the real JDK PNG encoder; the consumer must
     * decode actual bytes (extractAHash) to recover the grid. */
-  def synthPngFamilies(ids: DataFrame, idCol: String): DataFrame = {
-    val spark = ids.sparkSession
-    val rdd = spreadIds(ids, idCol).mapPartitions { it =>
+  def synthPngFamilies(ids: DataFrame, idCol: String): DataFrame =
+    synth(spreadIds(ids, idCol), "image/png") {
       javax.imageio.ImageIO.setUseCache(false)
       val md = java.security.MessageDigest.getInstance("MD5")
-      it.map { r =>
-        val id = r.getLong(0)
+      id =>
         val fam = id / 4
         val pert = (id % 4).toInt
         val side = 16 + 8 * (pert % 3)
-        md.reset()
-        val hex = md.digest(fam.toString.getBytes("UTF-8"))
-          .map(b => f"$b%02x").mkString
+        val hex = md5Hex(md, fam.toString)
         def famBit(i: Int): Int = {
           val h = Character.digit(hex.charAt(i / 2), 16)
           if (i % 2 == 0) h & 1 else (h >> 1) & 1
@@ -288,26 +316,9 @@ object Multimodal {
           else if (j == 63) 64
           else if (famBit(j - 3) == 0) 64
           else 192
-        val img = new java.awt.image.BufferedImage(
-          side, side, java.awt.image.BufferedImage.TYPE_INT_RGB)
         val bw = side / 8
-        var y = 0
-        while (y < side) {
-          var x = 0
-          while (x < side) {
-            val v = blockVal((y / bw) * 8 + (x / bw))
-            img.setRGB(x, y, (v << 16) | (v << 8) | v)
-            x += 1
-          }
-          y += 1
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos)
-        Row(id, bos.toByteArray, "image/png")
-      }
+        png(side, side)((x, y) => blockVal((y / bw) * 8 + (x / bw)))
     }
-    spark.createDataFrame(rdd, mediaSchema)
-  }
 
   val aHashSchema: StructType = StructType(Seq(
     StructField("media_id", LongType, nullable = false),
@@ -327,14 +338,10 @@ object Multimodal {
     * Per-row cost is the decode itself — unlike the header paths this
     * one reads pixel data, which is the honest cost of content
     * hashing; it stays mapPartitions-parallel with zero shuffle. */
-  def extractAHash(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select("media_id", "payload").rdd.mapPartitions { it =>
+  def extractAHash(media: DataFrame): DataFrame =
+    decode(media, aHashSchema) {
       javax.imageio.ImageIO.setUseCache(false)
-      it.map { r =>
-        val id = r.getLong(0)
-        val payload = if (r.isNullAt(1)) Array.empty[Byte]
-        else r.getAs[Array[Byte]](1)
+      (id, payload) =>
         val hash: String =
           try {
             val img = javax.imageio.ImageIO.read(
@@ -372,11 +379,8 @@ object Multimodal {
               }
             }
           } catch { case scala.util.control.NonFatal(_) => null }
-        Row(id, hash)
-      }
+        Iterator.single(Row(id, hash))
     }
-    spark.createDataFrame(rdd, aHashSchema)
-  }
 
   val bandSumSchema: StructType = StructType(Seq(
     StructField("media_id", LongType, nullable = false),
@@ -393,14 +397,10 @@ object Multimodal {
     * undecodable payload) — every synth corpus here is 8-divisible.
     * mapPartitions-parallel, zero shuffle; per-row cost is the decode,
     * the honest price of content-derived features. */
-  def extractBandSums(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select("media_id", "payload").rdd.mapPartitions { it =>
+  def extractBandSums(media: DataFrame): DataFrame =
+    decode(media, bandSumSchema) {
       javax.imageio.ImageIO.setUseCache(false)
-      it.map { r =>
-        val id = r.getLong(0)
-        val payload = if (r.isNullAt(1)) Array.empty[Byte]
-        else r.getAs[Array[Byte]](1)
+      (id, payload) =>
         val sums: Array[Long] =
           try {
             val img = javax.imageio.ImageIO.read(
@@ -422,51 +422,43 @@ object Multimodal {
               out
             }
           } catch { case scala.util.control.NonFatal(_) => null }
-        Row(id, sums)
-      }
+        Iterator.single(Row(id, sums))
     }
-    spark.createDataFrame(rdd, bandSumSchema)
-  }
 
-  /** Canonical 44-byte PCM WAV container around `nFrames` frames of
-    * 16-bit audio with deterministic body bytes — the test-fixture
-    * payload generator for the audio path (the container format is the
+  /** The one RIFF/WAVE writer: the canonical 44-byte 16-bit PCM
+    * header around `data`, the interleaved little-endian samples (the
     * public RIFF/WAVE layout; no codec needed for PCM). */
-  def wavBytes(sampleRate: Int, channels: Int, nFrames: Int): Array[Byte] = {
-    val dataSize = nFrames * channels * 2
-    val bb = java.nio.ByteBuffer.allocate(44 + dataSize)
+  private def wav(sampleRate: Int, channels: Int,
+      data: Array[Byte]): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(44 + data.length)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataSize)
+    bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + data.length)
     bb.put("WAVE".getBytes("US-ASCII"))
     bb.put("fmt ".getBytes("US-ASCII")).putInt(16)
     bb.putShort(1).putShort(channels.toShort) // PCM, channel count
     bb.putInt(sampleRate).putInt(sampleRate * channels * 2)
     bb.putShort((channels * 2).toShort).putShort(16) // block align, bits
-    bb.put("data".getBytes("US-ASCII")).putInt(dataSize)
-    var i = 0
-    while (i < dataSize) {
-      bb.put(((i * 31 + sampleRate) & 0xff).toByte); i += 1
-    }
-    bb.array()
+    bb.put("data".getBytes("US-ASCII")).putInt(data.length)
+    bb.put(data).array()
   }
+
+  /** Canonical 44-byte PCM WAV container around `nFrames` frames of
+    * 16-bit audio with deterministic body bytes (byte i = (31·i +
+    * sampleRate) mod 256) — the test-fixture payload generator for the
+    * audio path. */
+  def wavBytes(sampleRate: Int, channels: Int, nFrames: Int): Array[Byte] =
+    wav(sampleRate, channels, bytePattern(nFrames * channels * 2, 31,
+      sampleRate))
 
   /** Mono 16-bit PCM WAV around EXPLICIT samples — the generator hook
     * for corpora whose sample values carry structure (silence runs)
     * that wavBytes' byte-pattern fill cannot express. */
   def wavBytesSamples(sampleRate: Int,
       samples: Array[Short]): Array[Byte] = {
-    val dataSize = samples.length * 2
-    val bb = java.nio.ByteBuffer.allocate(44 + dataSize)
+    val bb = java.nio.ByteBuffer.allocate(samples.length * 2)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataSize)
-    bb.put("WAVE".getBytes("US-ASCII"))
-    bb.put("fmt ".getBytes("US-ASCII")).putInt(16)
-    bb.putShort(1).putShort(1) // PCM, mono
-    bb.putInt(sampleRate).putInt(sampleRate * 2)
-    bb.putShort(2).putShort(16) // block align, bits
-    bb.put("data".getBytes("US-ASCII")).putInt(dataSize)
     samples.foreach(bb.putShort)
-    bb.array()
+    wav(sampleRate, 1, bb.array())
   }
 
   /** Silence-structured AUDIO corpus for voice-activity segmentation:
@@ -476,27 +468,21 @@ object Multimodal {
     * The closed form is the oracle contract — window energy is
     * exactly 0 or 50·amplitude, so the consumer must decode real PCM
     * to recover the silence map the oracle derives arithmetically. */
-  def synthWavSegments(ids: DataFrame, idCol: String): DataFrame = {
-    val spark = ids.sparkSession
-    val rdd = ids.select(col(idCol).cast("long")).rdd.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val nWin = 8 + (id % 5).toInt
-        val samples = Array.ofDim[Short](nWin * 50)
-        var w = 0
-        while (w < nWin) {
-          val a: Short =
-            if ((id + w) % 3 == 0) 0
-            else (100 + (id * 13 + w * 7) % 500).toShort
-          var j = 0
-          while (j < 50) { samples(w * 50 + j) = a; j += 1 }
-          w += 1
-        }
-        Row(id, wavBytesSamples(8000, samples), "audio/wav")
+  def synthWavSegments(ids: DataFrame, idCol: String): DataFrame =
+    synth(ids.select(col(idCol).cast("long")), "audio/wav") { id =>
+      val nWin = 8 + (id % 5).toInt
+      val samples = Array.ofDim[Short](nWin * 50)
+      var w = 0
+      while (w < nWin) {
+        val a: Short =
+          if ((id + w) % 3 == 0) 0
+          else (100 + (id * 13 + w * 7) % 500).toShort
+        var j = 0
+        while (j < 50) { samples(w * 50 + j) = a; j += 1 }
+        w += 1
       }
+      wavBytesSamples(8000, samples)
     }
-    spark.createDataFrame(rdd, mediaSchema)
-  }
 
   /** Family-structured near-duplicate AUDIO corpus — the audio twin of
     * `synthPngFamilies`: every 4 consecutive ids are cuts of ONE
@@ -512,40 +498,16 @@ object Multimodal {
     * closed-form. Container: PCM WAV, 8000 Hz mono, via the same RIFF
     * layout as `wavBytes`; consumers must decode real samples
     * (`extractAudioEnergy`) to recover the profile. */
-  def synthWavFamilies(ids: DataFrame, idCol: String): DataFrame = {
-    val spark = ids.sparkSession
-    val rdd = ids.select(col(idCol).cast("long")).rdd.mapPartitions { it =>
+  def synthWavFamilies(ids: DataFrame, idCol: String): DataFrame =
+    synth(ids.select(col(idCol).cast("long")), "audio/wav") {
       val md = java.security.MessageDigest.getInstance("MD5")
-      it.map { r =>
-        val id = r.getLong(0)
-        val fam = id / 4
-        val m = (id % 4).toInt
-        md.reset()
-        val hex = md.digest(fam.toString.getBytes("UTF-8"))
-          .map(b => f"$b%02x").mkString
-        val seed16 = Integer.parseInt(hex.substring(0, 4), 16)
-        val step = 31 + 2 * (seed16 >> 8)
-        val base = seed16 & 0xff
-        val nFrames = 100 + 25 * m
-        val dataSize = nFrames * 2
-        val bb = java.nio.ByteBuffer.allocate(44 + dataSize)
-          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataSize)
-        bb.put("WAVE".getBytes("US-ASCII"))
-        bb.put("fmt ".getBytes("US-ASCII")).putInt(16)
-        bb.putShort(1).putShort(1.toShort)
-        bb.putInt(8000).putInt(8000 * 2)
-        bb.putShort(2.toShort).putShort(16)
-        bb.put("data".getBytes("US-ASCII")).putInt(dataSize)
-        var i = 0
-        while (i < dataSize) {
-          bb.put(((i * step + base) & 0xff).toByte); i += 1
-        }
-        Row(id, bb.array(), "audio/wav")
-      }
+      id =>
+        val seed16 = Integer.parseInt(
+          md5Hex(md, (id / 4).toString).substring(0, 4), 16)
+        val nFrames = 100 + 25 * (id % 4).toInt
+        wav(8000, 1, bytePattern(nFrames * 2, 31 + 2 * (seed16 >> 8),
+          seed16 & 0xff))
     }
-    spark.createDataFrame(rdd, mediaSchema)
-  }
 
   val audioEnergySchema: StructType = StructType(Seq(
     StructField("media_id", LongType, nullable = false),
@@ -569,47 +531,40 @@ object Multimodal {
     * Non-audio payloads emit no rows (per-row skip, never a failure). */
   def extractAudioEnergy(media: DataFrame, windowFrames: Int): DataFrame = {
     require(windowFrames >= 1, "extractAudioEnergy: windowFrames >= 1")
-    val spark = media.sparkSession
-    val rdd = media.select("media_id", "payload").rdd.mapPartitions { it =>
-      it.flatMap { r =>
-        val id = r.getLong(0)
-        val payload = if (r.isNullAt(1)) Array.empty[Byte]
-        else r.getAs[Array[Byte]](1)
+    decode(media, audioEnergySchema) { (id, payload) =>
+      try {
+        val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
+          new java.io.ByteArrayInputStream(payload))
         try {
-          val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-            new java.io.ByteArrayInputStream(payload))
-          try {
-            val fmt = ais.getFormat
-            val ch = fmt.getChannels
-            val ok = fmt.getSampleSizeInBits == 16 && !fmt.isBigEndian &&
-              fmt.getEncoding ==
-                javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED
-            if (!ok) Iterator.empty
-            else {
-              val bytes = ais.readAllBytes()
-              val nFramesTotal = bytes.length / (2 * ch)
-              val nWindows = (nFramesTotal + windowFrames - 1) / windowFrames
-              val sums = Array.ofDim[Long](nWindows.max(0))
-              var k = 0
-              val nSamples = nFramesTotal * ch
-              while (k < nSamples) {
-                val lo = bytes(2 * k) & 0xff
-                val hi = bytes(2 * k + 1)
-                val v = ((hi << 8) | lo).toShort.toLong
-                sums((k / ch) / windowFrames) += math.abs(v)
-                k += 1
-              }
-              (0 until nWindows).iterator.map { w =>
-                val nf = math.min(windowFrames.toLong,
-                  nFramesTotal.toLong - w.toLong * windowFrames)
-                Row(id, w.toLong, nf, sums(w))
-              }
+          val fmt = ais.getFormat
+          val ch = fmt.getChannels
+          val ok = fmt.getSampleSizeInBits == 16 && !fmt.isBigEndian &&
+            fmt.getEncoding ==
+              javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED
+          if (!ok) Iterator.empty
+          else {
+            val bytes = ais.readAllBytes()
+            val nFramesTotal = bytes.length / (2 * ch)
+            val nWindows = (nFramesTotal + windowFrames - 1) / windowFrames
+            val sums = Array.ofDim[Long](nWindows.max(0))
+            var k = 0
+            val nSamples = nFramesTotal * ch
+            while (k < nSamples) {
+              val lo = bytes(2 * k) & 0xff
+              val hi = bytes(2 * k + 1)
+              val v = ((hi << 8) | lo).toShort.toLong
+              sums((k / ch) / windowFrames) += math.abs(v)
+              k += 1
             }
-          } finally ais.close()
-        } catch { case scala.util.control.NonFatal(_) => Iterator.empty }
-      }
+            (0 until nWindows).iterator.map { w =>
+              val nf = math.min(windowFrames.toLong,
+                nFramesTotal.toLong - w.toLong * windowFrames)
+              Row(id, w.toLong, nf, sums(w))
+            }
+          }
+        } finally ais.close()
+      } catch { case scala.util.control.NonFatal(_) => Iterator.empty }
     }
-    spark.createDataFrame(rdd, audioEnergySchema)
   }
 
   /** Synthesize one REAL WAV payload per input id (executor-side
@@ -619,19 +574,11 @@ object Multimodal {
     * recomputes the expected metadata from the same arithmetic while
     * the Spark side must recover it by actually parsing the bytes it
     * built — an end-to-end build→parse round trip per row. */
-  def synthWav(ids: DataFrame, idCol: String): DataFrame = {
-    val spark = ids.sparkSession
-    val rdd = ids.select(col(idCol).cast("long")).rdd.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val sr = 8000 + (id % 4).toInt * 2000
-        val ch = 1 + (id % 2).toInt
-        val fr = 100 + (id % 50).toInt
-        Row(id, wavBytes(sr, ch, fr), "audio/wav")
-      }
+  def synthWav(ids: DataFrame, idCol: String): DataFrame =
+    synth(ids.select(col(idCol).cast("long")), "audio/wav") { id =>
+      wavBytes(8000 + (id % 4).toInt * 2000, 1 + (id % 2).toInt,
+        100 + (id % 50).toInt)
     }
-    spark.createDataFrame(rdd, mediaSchema)
-  }
 
   val videoFeatureSchema: StructType = StructType(Seq(
     StructField("media_id", LongType, nullable = false),
@@ -641,18 +588,6 @@ object Multimodal {
     StructField("width", IntegerType, nullable = false),
     StructField("height", IntegerType, nullable = false)))
 
-  /** REAL video-container metadata: a minimal ISO-BMFF (MP4) box walker
-    * — the box layout (size + fourcc framing, big-endian fields) is the
-    * public ISO/IEC 14496-12 structure, and reading mvhd
-    * timescale/duration plus tkhd width/height needs NO codec, only
-    * byte arithmetic, exactly like the WAV header path. Walks top-level
-    * boxes to `moov`, then its children for version-0 `mvhd`
-    * (timescale at +12, duration at +16 after the box header) and the
-    * first `trak`→`tkhd` (16.16 fixed-point width/height at +76/+80).
-    * Returns (timescale, durationTicks, width, height); None for
-    * anything that is not a well-formed MP4 prefix — truncated boxes,
-    * other formats, or v1 (64-bit) headers this minimal reader does not
-    * speak — so the caller falls back instead of failing the task. */
   /** Big-endian u32 at `off`, or -1 when the read would run past the
     * payload — callers must treat -1 as malformed, never as a value. */
   private def u32(payload: Array[Byte], off: Int): Long =
@@ -666,7 +601,7 @@ object Multimodal {
 
   /** Walk sibling boxes in [from, until) for `name`; box size 0/1
     * (to-end / 64-bit) is out of scope for this minimal reader. Shared
-    * by `videoMeta` and `videoSampleTimes`. */
+    * by `videoMeta`, `videoSampleTimes` and `videoSampleRanges`. */
   private def findBox(payload: Array[Byte], name: String, from: Int,
       until: Int): Option[(Int, Int)] = {
     var off = from
@@ -679,21 +614,41 @@ object Multimodal {
     None
   }
 
+  /** The first track's sample table: walks moov→trak→mdia→minf→stbl
+    * and returns the (start, end) bounds of `mdia` (for mdhd) and of
+    * `stbl` — the walk both sample-table readers take. */
+  private def sampleTable(
+      payload: Array[Byte]): Option[((Int, Int), (Int, Int))] = for {
+    (moov, moovEnd) <- findBox(payload, "moov", 0, payload.length)
+    (trak, trakEnd) <- findBox(payload, "trak", moov + 8, moovEnd)
+    (mdia, mdiaEnd) <- findBox(payload, "mdia", trak + 8, trakEnd)
+    (minf, minfEnd) <- findBox(payload, "minf", mdia + 8, mdiaEnd)
+    (stbl, stblEnd) <- findBox(payload, "stbl", minf + 8, minfEnd)
+  } yield ((mdia, mdiaEnd), (stbl, stblEnd))
+
+  /** REAL video-container metadata: a minimal ISO-BMFF (MP4) box walker
+    * — the box layout (size + fourcc framing, big-endian fields) is the
+    * public ISO/IEC 14496-12 structure, and reading mvhd
+    * timescale/duration plus tkhd width/height needs NO codec, only
+    * byte arithmetic, exactly like the WAV header path. Walks top-level
+    * boxes to `moov`, then its children for version-0 `mvhd`
+    * (timescale at +12, duration at +16 after the box header) and the
+    * first `trak`→`tkhd` (16.16 fixed-point width/height at +76/+80).
+    * Returns (timescale, durationTicks, width, height); None for
+    * anything that is not a well-formed MP4 prefix — truncated boxes,
+    * other formats, or v1 (64-bit) headers this minimal reader does not
+    * speak — so the caller falls back instead of failing the task. */
   private[multimodal] def videoMeta(
       payload: Array[Byte]): Option[(Int, Long, Int, Int)] = {
     if (payload == null || payload.length < 8) return None
-    def u32(off: Int): Long = Multimodal.u32(payload, off)
-    def fourcc(off: Int): String = Multimodal.fourcc(payload, off)
-    def find(name: String, from: Int, until: Int): Option[(Int, Int)] =
-      findBox(payload, name, from, until)
     try {
-      if (fourcc(4) != "ftyp") return None
+      if (fourcc(payload, 4) != "ftyp") return None
       for {
-        (moov, moovEnd) <- find("moov", 0, payload.length)
-        (mvhd, mvhdEnd) <- find("mvhd", moov + 8, moovEnd)
+        (moov, moovEnd) <- findBox(payload, "moov", 0, payload.length)
+        (mvhd, mvhdEnd) <- findBox(payload, "mvhd", moov + 8, moovEnd)
         // Field-extent guards: a well-FRAMED box can still be smaller
         // than the fields this reader pulls from it (e.g. an mvhd of
-        // size 12 passes find()'s sz >= 8 check), and u32 past the
+        // size 12 passes findBox's sz >= 8 check), and u32 past the
         // payload returns a -1 sentinel that would otherwise surface
         // as a "real" timescale/dimension. v0 mvhd fields end at +28,
         // v0 tkhd width/height at +92 — anything shorter is malformed
@@ -701,12 +656,12 @@ object Multimodal {
         // not-well-formed prefix.
         if mvhdEnd - mvhd >= 28
         if payload(mvhd + 8) == 0 // version 0: 32-bit fields
-        (trak, trakEnd) <- find("trak", moov + 8, moovEnd)
-        (tkhd, tkhdEnd) <- find("tkhd", trak + 8, trakEnd)
+        (trak, trakEnd) <- findBox(payload, "trak", moov + 8, moovEnd)
+        (tkhd, tkhdEnd) <- findBox(payload, "tkhd", trak + 8, trakEnd)
         if tkhdEnd - tkhd >= 92
         if payload(tkhd + 8) == 0
-        ts = u32(mvhd + 20); dur = u32(mvhd + 24)
-        w = u32(tkhd + 84); h = u32(tkhd + 88)
+        ts = u32(payload, mvhd + 20); dur = u32(payload, mvhd + 24)
+        w = u32(payload, tkhd + 84); h = u32(payload, tkhd + 88)
         if ts >= 0 && dur >= 0 && w >= 0 && h >= 0 // no -1 sentinels
       } yield (ts.toInt, dur, (w >> 16).toInt, (h >> 16).toInt)
     } catch { case scala.util.control.NonFatal(_) => None }
@@ -728,22 +683,16 @@ object Multimodal {
   private[graft] def videoSampleTimes(payload: Array[Byte],
       maxSamples: Int = 65536): Option[(Int, Array[Long])] = {
     if (payload == null || payload.length < 8) return None
-    def find(name: String, from: Int, until: Int): Option[(Int, Int)] =
-      findBox(payload, name, from, until)
     try {
       if (fourcc(payload, 4) != "ftyp") return None
       for {
-        (moov, moovEnd) <- find("moov", 0, payload.length)
-        (trak, trakEnd) <- find("trak", moov + 8, moovEnd)
-        (mdia, mdiaEnd) <- find("mdia", trak + 8, trakEnd)
-        (mdhd, mdhdEnd) <- find("mdhd", mdia + 8, mdiaEnd)
+        ((mdia, mdiaEnd), (stbl, stblEnd)) <- sampleTable(payload)
+        (mdhd, mdhdEnd) <- findBox(payload, "mdhd", mdia + 8, mdiaEnd)
         // v0 mdhd: version at +8, timescale at +20 (after ctime/mtime).
         if mdhdEnd - mdhd >= 32 && payload(mdhd + 8) == 0
         mts = u32(payload, mdhd + 20)
         if mts > 0
-        (minf, minfEnd) <- find("minf", mdia + 8, mdiaEnd)
-        (stbl, stblEnd) <- find("stbl", minf + 8, minfEnd)
-        (stts, sttsEnd) <- find("stts", stbl + 8, stblEnd)
+        (stts, sttsEnd) <- findBox(payload, "stts", stbl + 8, stblEnd)
         if sttsEnd - stts >= 16 && payload(stts + 8) == 0
         nEntries = u32(payload, stts + 12)
         // The box must physically contain every entry it declares.
@@ -787,23 +736,16 @@ object Multimodal {
     * bounded by videoSampleTimes' maxSamples cap. */
   def sampleFrameTimes(media: DataFrame, stride: Int): DataFrame = {
     require(stride >= 1, "sampleFrameTimes: stride must be >= 1")
-    val spark = media.sparkSession
-    val rdd = media.select("media_id", "payload").rdd.mapPartitions { it =>
-      it.flatMap { r =>
-        val id = r.getLong(0)
-        val payload = if (r.isNullAt(1)) Array.empty[Byte]
-        else r.getAs[Array[Byte]](1)
-        videoSampleTimes(payload) match {
-          case Some((mts, ticks)) =>
-            ticks.iterator.zipWithIndex.collect {
-              case (t, k) if k % stride == 0 =>
-                Row(id, k.toLong, t * 1000L / mts)
-            }
-          case None => Iterator.empty
-        }
+    decode(media, frameTimeSchema) { (id, payload) =>
+      videoSampleTimes(payload) match {
+        case Some((mts, ticks)) =>
+          ticks.iterator.zipWithIndex.collect {
+            case (t, k) if k % stride == 0 =>
+              Row(id, k.toLong, t * 1000L / mts)
+          }
+        case None => Iterator.empty
       }
     }
-    spark.createDataFrame(rdd, frameTimeSchema)
   }
 
   /** REAL sample-payload demux: walk to the sample table, read the
@@ -820,24 +762,18 @@ object Multimodal {
       payload: Array[Byte], maxSamples: Int = 65536)
       : Option[Array[(Long, Int)]] = {
     if (payload == null || payload.length < 8) return None
-    def find(name: String, from: Int, until: Int): Option[(Int, Int)] =
-      findBox(payload, name, from, until)
     try {
       if (fourcc(payload, 4) != "ftyp") return None
       val ranges = for {
-        (moov, moovEnd) <- find("moov", 0, payload.length)
-        (trak, trakEnd) <- find("trak", moov + 8, moovEnd)
-        (mdia, mdiaEnd) <- find("mdia", trak + 8, trakEnd)
-        (minf, minfEnd) <- find("minf", mdia + 8, mdiaEnd)
-        (stbl, stblEnd) <- find("stbl", minf + 8, minfEnd)
-        (stsz, stszEnd) <- find("stsz", stbl + 8, stblEnd)
+        (_, (stbl, stblEnd)) <- sampleTable(payload)
+        (stsz, stszEnd) <- findBox(payload, "stsz", stbl + 8, stblEnd)
         if stszEnd - stsz >= 20 && payload(stsz + 8) == 0
         // stsz sample_size == 0 → per-sample sizes follow.
         if u32(payload, stsz + 12) == 0
         n0 = u32(payload, stsz + 16)
         n = math.min(n0, maxSamples.toLong)
         if n0 >= 0 && stszEnd - stsz >= 20 + 4 * n0
-        (stco, stcoEnd) <- find("stco", stbl + 8, stblEnd)
+        (stco, stcoEnd) <- findBox(payload, "stco", stbl + 8, stblEnd)
         if stcoEnd - stco >= 20 && u32(payload, stco + 12) == 1
         base = u32(payload, stco + 16)
         if base >= 0
@@ -872,38 +808,102 @@ object Multimodal {
     * arithmetic, so a wrong stsz stride, stco base, or slice bound
     * anywhere shows up as a hash mismatch. Generator-shaped
     * mapPartitions; undemuxable payloads emit no rows. */
-  def extractFrameBytes(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select("media_id", "payload").rdd.mapPartitions { it =>
-      it.flatMap { r =>
-        val id = r.getLong(0)
-        val payload = if (r.isNullAt(1)) Array.empty[Byte]
-        else r.getAs[Array[Byte]](1)
-        videoSampleRanges(payload) match {
-          case Some(ranges) =>
-            // Zero-size samples (legal in stsz) emit NO row: they have
-            // no content to summarize, and a (0, 0, 0, 0) row would be
-            // indistinguishable from a real 1-byte 0x00 sample's
-            // neighborhood. Sample_idx still counts them (k is the
-            // stsz position), so downstream joins stay aligned.
-            ranges.iterator.zipWithIndex
-              .filter { case ((_, sz), _) => sz > 0 }
-              .map { case ((off, sz), k) =>
-                var s = 0L
-                var j = 0
-                while (j < sz) {
-                  s += payload(off.toInt + j) & 0xff; j += 1
-                }
-                Row(id, k.toLong, sz.toLong, s,
-                  payload(off.toInt) & 0xff,
-                  payload(off.toInt + sz - 1) & 0xff)
+  def extractFrameBytes(media: DataFrame): DataFrame =
+    decode(media, frameBytesSchema) { (id, payload) =>
+      videoSampleRanges(payload) match {
+        case Some(ranges) =>
+          // Zero-size samples (legal in stsz) emit NO row: they have
+          // no content to summarize, and a (0, 0, 0, 0) row would be
+          // indistinguishable from a real 1-byte 0x00 sample's
+          // neighborhood. Sample_idx still counts them (k is the
+          // stsz position), so downstream joins stay aligned.
+          ranges.iterator.zipWithIndex
+            .filter { case ((_, sz), _) => sz > 0 }
+            .map { case ((off, sz), k) =>
+              var s = 0L
+              var j = 0
+              while (j < sz) {
+                s += payload(off.toInt + j) & 0xff; j += 1
               }
-          case None => Iterator.empty
-        }
+              Row(id, k.toLong, sz.toLong, s,
+                payload(off.toInt) & 0xff,
+                payload(off.toInt + sz - 1) & 0xff)
+            }
+        case None => Iterator.empty
       }
     }
-    spark.createDataFrame(rdd, frameBytesSchema)
+
+  /** Big-endian 32-bit fields — the unit every MP4 box body here is
+    * written in. */
+  private def u32s(fields: Int*): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(4 * fields.length)
+    fields.foreach(bb.putInt)
+    bb.array()
   }
+
+  /** One ISO-BMFF box: its size field is 8 plus the bodies' lengths. */
+  private def box(fourcc: String, body: Array[Byte]*): Array[Byte] = {
+    val size = 8 + body.map(_.length).sum
+    val bb = java.nio.ByteBuffer.allocate(size)
+      .putInt(size).put(fourcc.getBytes("US-ASCII"))
+    body.foreach(bb.put)
+    bb.array()
+  }
+
+  /** The constant 20-byte ftyp box: major brand isom, minor version
+    * 0x200, one compatible brand isom. */
+  private val ftyp: Array[Byte] =
+    u32s(20) ++ "ftypisom".getBytes("US-ASCII") ++ u32s(0x200) ++
+      "isom".getBytes("US-ASCII")
+
+  private val unityMatrix: Array[Byte] =
+    u32s(0x00010000, 0, 0, 0, 0x00010000, 0, 0, 0, 0x40000000)
+
+  private def mvhd(timescale: Int, durationTicks: Long): Array[Byte] =
+    box("mvhd",
+      u32s(0, 0, 0, timescale, durationTicks.toInt, // v0+flags, c/mtime
+        0x00010000, 0x01000000, 0, 0), // rate 1.0, volume 1.0, reserved
+      unityMatrix,
+      u32s(0, 0, 0, 0, 0, 0, 2)) // predefined, next track id
+
+  private def tkhd(durationTicks: Long, width: Int, height: Int)
+      : Array[Byte] =
+    box("tkhd",
+      u32s(0, 0, 0, 1, 0, durationTicks.toInt, // v0+flags, c/mtime, track
+        0, 0, 0, 0), // reserved, layer/alternate group/volume/reserved
+      unityMatrix,
+      u32s(width << 16, height << 16)) // 16.16 fixed point
+
+  /** mdhd v0: the MEDIA timescale, and a duration in media ticks of the
+    * whole stts span. */
+  private def mdhd(mediaTs: Int, runs: Seq[(Int, Int)]): Array[Byte] =
+    box("mdhd", u32s(0, 0, 0, mediaTs,
+      runs.map { case (n, d) => n.toLong * d }.sum.toInt,
+      0x55c40000)) // language "und", predefined
+
+  private def stts(runs: Seq[(Int, Int)]): Array[Byte] =
+    box("stts", u32s(0, runs.length), // v0+flags, entry_count
+      u32s(runs.flatMap { case (n, d) => Seq(n, d) }: _*))
+
+  private def stsz(sizes: Seq[Int]): Array[Byte] =
+    box("stsz", u32s(0, 0, sizes.length), // v0, sample_size=0 (varied)
+      u32s(sizes: _*))
+
+  private def stsc(nSamples: Int): Array[Byte] =
+    box("stsc", u32s(0, 1, 1, nSamples, 1)) // v0, one run of one chunk
+
+  private def stco(chunkOffset: Int): Array[Byte] =
+    box("stco", u32s(0, 1, chunkOffset)) // v0, one chunk
+
+  /** moov(mvhd + trak(tkhd + mdia(mdhd + minf(stbl(stts + `tables`))))):
+    * one track with a sample table. */
+  private def moov(timescale: Int, durationTicks: Long, width: Int,
+      height: Int, mediaTs: Int, runs: Seq[(Int, Int)])(
+      tables: Array[Byte]*): Array[Byte] =
+    box("moov", mvhd(timescale, durationTicks),
+      box("trak", tkhd(durationTicks, width, height),
+        box("mdia", mdhd(mediaTs, runs),
+          box("minf", box("stbl", stts(runs) +: tables: _*)))))
 
   /** Minimal DEMUXABLE MP4: the mp4BytesStts layout extended with the
     * full sample-location tables (stsz per-sample sizes, stsc one-run
@@ -913,14 +913,13 @@ object Multimodal {
     * container. */
   def mp4BytesFrames(timescale: Int, durationTicks: Long, width: Int,
       height: Int, mediaTs: Int, stts: Seq[(Int, Int)],
-      sampleSizes: Seq[Int], seed: Long): Array[Byte] =
-    mp4ContainerWith(timescale, durationTicks, width, height, mediaTs,
-      stts, sampleSizes) { (bb, mdatBody) =>
-      var j = 0
-      while (j < mdatBody) {
-        bb.put(((17L * j + seed) % 256).toByte); j += 1
-      }
-    }
+      sampleSizes: Seq[Int], seed: Long): Array[Byte] = {
+    val stream = bytePattern(sampleSizes.sum, 17, seed.toInt)
+    val starts = sampleSizes.scanLeft(0)(_ + _)
+    mp4BytesFramesOf(timescale, durationTicks, width, height, mediaTs, stts,
+      sampleSizes.indices.map(k =>
+        stream.slice(starts(k), starts(k) + sampleSizes(k))))
+  }
 
   /** Same container as `mp4BytesFrames` but with EXPLICIT per-sample
     * payloads — the generator hook for corpora whose frame CONTENT
@@ -928,74 +927,14 @@ object Multimodal {
     * (17j+seed) byte stream cannot express. */
   def mp4BytesFramesOf(timescale: Int, durationTicks: Long, width: Int,
       height: Int, mediaTs: Int, stts: Seq[(Int, Int)],
-      frames: Seq[Array[Byte]]): Array[Byte] =
-    mp4ContainerWith(timescale, durationTicks, width, height, mediaTs,
-      stts, frames.map(_.length)) { (bb, _) =>
-      frames.foreach(bb.put)
-    }
-
-  private def mp4ContainerWith(timescale: Int, durationTicks: Long,
-      width: Int, height: Int, mediaTs: Int, stts: Seq[(Int, Int)],
-      sampleSizes: Seq[Int])(
-      fillMdat: (java.nio.ByteBuffer, Int) => Unit): Array[Byte] = {
-    val n = sampleSizes.length
-    val mdatBody = sampleSizes.sum
-    val sttsSz = 16 + 8 * stts.length
-    val stszSz = 20 + 4 * n
-    val stscSz = 28
-    val stcoSz = 20
-    val stblSz = 8 + sttsSz + stszSz + stscSz + stcoSz
-    val minfSz = 8 + stblSz
-    val mdhdSz = 32
-    val mdiaSz = 8 + mdhdSz + minfSz
-    val trakSz = 8 + 92 + mdiaSz
-    val moovSz = 8 + 108 + trakSz
-    val total = 20 + moovSz + 8 + mdatBody
-    val mdatPayloadOff = 20 + moovSz + 8
-    val bb = java.nio.ByteBuffer.allocate(total)
-      .order(java.nio.ByteOrder.BIG_ENDIAN)
-    bb.putInt(20).put("ftypisom".getBytes("US-ASCII"))
-    bb.putInt(0x200).put("isom".getBytes("US-ASCII"))
-    bb.putInt(moovSz).put("moov".getBytes("US-ASCII"))
-    bb.putInt(108).put("mvhd".getBytes("US-ASCII"))
-    bb.putInt(0).putInt(0).putInt(0)
-    bb.putInt(timescale).putInt(durationTicks.toInt)
-    bb.putInt(0x00010000).putShort(0x0100.toShort)
-    bb.put(new Array[Byte](10))
-    Seq(0x00010000, 0, 0, 0, 0x00010000, 0, 0, 0, 0x40000000)
-      .foreach(bb.putInt)
-    bb.put(new Array[Byte](24)).putInt(2)
-    bb.putInt(trakSz).put("trak".getBytes("US-ASCII"))
-    bb.putInt(92).put("tkhd".getBytes("US-ASCII"))
-    bb.putInt(0).putInt(0).putInt(0)
-    bb.putInt(1).putInt(0).putInt(durationTicks.toInt)
-    bb.put(new Array[Byte](8))
-    bb.putShort(0).putShort(0).putShort(0).putShort(0)
-    Seq(0x00010000, 0, 0, 0, 0x00010000, 0, 0, 0, 0x40000000)
-      .foreach(bb.putInt)
-    bb.putInt(width << 16).putInt(height << 16)
-    bb.putInt(mdiaSz).put("mdia".getBytes("US-ASCII"))
-    bb.putInt(mdhdSz).put("mdhd".getBytes("US-ASCII"))
-    bb.putInt(0).putInt(0).putInt(0)
-    bb.putInt(mediaTs)
-    bb.putInt(stts.map { case (c, dl) => c.toLong * dl }.sum.toInt)
-    bb.putShort(0x55c4.toShort).putShort(0)
-    bb.putInt(minfSz).put("minf".getBytes("US-ASCII"))
-    bb.putInt(stblSz).put("stbl".getBytes("US-ASCII"))
-    bb.putInt(sttsSz).put("stts".getBytes("US-ASCII"))
-    bb.putInt(0).putInt(stts.length)
-    stts.foreach { case (c, dl) => bb.putInt(c).putInt(dl) }
-    bb.putInt(stszSz).put("stsz".getBytes("US-ASCII"))
-    bb.putInt(0).putInt(0).putInt(n) // v0, sample_size=0 (varied), count
-    sampleSizes.foreach(bb.putInt)
-    bb.putInt(stscSz).put("stsc".getBytes("US-ASCII"))
-    bb.putInt(0).putInt(1) // v0, one run
-    bb.putInt(1).putInt(n).putInt(1) // first_chunk, samples/chunk, desc
-    bb.putInt(stcoSz).put("stco".getBytes("US-ASCII"))
-    bb.putInt(0).putInt(1).putInt(mdatPayloadOff) // v0, one chunk, offset
-    bb.putInt(8 + mdatBody).put("mdat".getBytes("US-ASCII"))
-    fillMdat(bb, mdatBody)
-    bb.array()
+      frames: Seq[Array[Byte]]): Array[Byte] = {
+    def moovAt(mdatOffset: Int) = moov(timescale, durationTicks, width,
+      height, mediaTs, stts)(stsz(frames.map(_.length)),
+      stsc(frames.length), stco(mdatOffset))
+    // stco points at the mdat body: past ftyp, moov and mdat's header.
+    // The offset's value does not change moov's size.
+    val mdatOffset = ftyp.length + moovAt(0).length + 8
+    ftyp ++ moovAt(mdatOffset) ++ box("mdat", frames: _*)
   }
 
   /** Scene-structured MP4 corpus: n = 6+(id%5) frames in scenes of
@@ -1007,50 +946,36 @@ object Multimodal {
     * the consumer must demux real MP4 bytes and hash actual frame
     * content to recover the scene structure the oracle derives
     * arithmetically (k DIV L). */
-  def synthMp4Scenes(ids: DataFrame, idCol: String): DataFrame = {
-    val spark = ids.sparkSession
-    val rdd = spreadIds(ids, idCol).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val n = 6 + (id % 5).toInt
-        val len = 2 + (id % 3).toInt
-        val frames = (0 until n).map { k =>
-          val s = k / len
-          val sz = 20 + ((id + s) % 30).toInt
-          val b = Array.ofDim[Byte](sz)
-          b(0) = s.toByte
-          var j = 1
-          while (j < sz) {
-            b(j) = ((id * 31 + s * 17 + j * 7) % 256).toByte; j += 1
-          }
-          b
+  def synthMp4Scenes(ids: DataFrame, idCol: String): DataFrame =
+    synth(spreadIds(ids, idCol), "video/mp4") { id =>
+      val n = 6 + (id % 5).toInt
+      val len = 2 + (id % 3).toInt
+      val frames = (0 until n).map { k =>
+        val s = k / len
+        val sz = 20 + ((id + s) % 30).toInt
+        val b = Array.ofDim[Byte](sz)
+        b(0) = s.toByte
+        var j = 1
+        while (j < sz) {
+          b(j) = ((id * 31 + s * 17 + j * 7) % 256).toByte; j += 1
         }
-        Row(id, mp4BytesFramesOf(600, 600L * n, 320, 240, 1000,
-          Seq((n, 100)), frames), "video/mp4")
+        b
       }
+      mp4BytesFramesOf(600, 600L * n, 320, 240, 1000, Seq((n, 100)), frames)
     }
-    spark.createDataFrame(rdd, mediaSchema)
-  }
 
   /** One demuxable MP4 per id: 3+(id%4) samples, sample k sized
     * 20+((id+k)%30) bytes, mdat byte j = (17j + id) mod 256 — the
     * oracle contract for `mm_frame_bytes`. */
-  def synthMp4Frames(ids: DataFrame, idCol: String): DataFrame = {
-    val spark = ids.sparkSession
-    val rdd = spreadIds(ids, idCol).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val n = 3 + (id % 4).toInt
-        val sizes = (0 until n).map(k => 20 + ((id + k) % 30).toInt)
-        val mts = 1000 + (id % 3).toInt * 500
-        val movieTs = 600 + (id % 5).toInt * 300
-        val dur = movieTs.toLong * (2 + (id % 7).toInt)
-        Row(id, mp4BytesFrames(movieTs, dur, 320, 240, mts,
-          Seq((n, 100)), sizes, id), "video/mp4")
-      }
+  def synthMp4Frames(ids: DataFrame, idCol: String): DataFrame =
+    synth(spreadIds(ids, idCol), "video/mp4") { id =>
+      val n = 3 + (id % 4).toInt
+      val sizes = (0 until n).map(k => 20 + ((id + k) % 30).toInt)
+      val mts = 1000 + (id % 3).toInt * 500
+      val movieTs = 600 + (id % 5).toInt * 300
+      val dur = movieTs.toLong * (2 + (id % 7).toInt)
+      mp4BytesFrames(movieTs, dur, 320, 240, mts, Seq((n, 100)), sizes, id)
     }
-    spark.createDataFrame(rdd, mediaSchema)
-  }
 
   /** Demuxable MP4s with CROSS-VIDEO duplicate frames: frame sizes and
     * mdat content seed from the video's FAMILY (id % familyMod), frame
@@ -1060,23 +985,16 @@ object Multimodal {
     * diverge at j=0). This is the fixture shape frame-level video
     * dedup needs: real demux work, known overlap structure. */
   def synthMp4FramesShared(ids: DataFrame, idCol: String,
-      familyMod: Int): DataFrame = {
-    val spark = ids.sparkSession
-    val rdd = spreadIds(ids, idCol).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val fam = id % familyMod
-        val n = 3 + (id % 4).toInt
-        val sizes = (0 until n).map(k => 20 + ((fam + k) % 30).toInt)
-        val mts = 1000 + (fam % 3).toInt * 500
-        val movieTs = 600 + (fam % 5).toInt * 300
-        val dur = movieTs.toLong * (2 + (fam % 7).toInt)
-        Row(id, mp4BytesFrames(movieTs, dur, 320, 240, mts,
-          Seq((n, 100)), sizes, fam), "video/mp4")
-      }
+      familyMod: Int): DataFrame =
+    synth(spreadIds(ids, idCol), "video/mp4") { id =>
+      val fam = id % familyMod
+      val n = 3 + (id % 4).toInt
+      val sizes = (0 until n).map(k => 20 + ((fam + k) % 30).toInt)
+      val mts = 1000 + (fam % 3).toInt * 500
+      val movieTs = 600 + (fam % 5).toInt * 300
+      val dur = movieTs.toLong * (2 + (fam % 7).toInt)
+      mp4BytesFrames(movieTs, dur, 320, 240, mts, Seq((n, 100)), sizes, fam)
     }
-    spark.createDataFrame(rdd, mediaSchema)
-  }
 
   val frameHashSchema: StructType = StructType(Seq(
     StructField("media_id", LongType, nullable = false),
@@ -1092,14 +1010,10 @@ object Multimodal {
     * search) join on the hash instead of re-demuxing. Zero-size samples
     * emit no row (no content to fingerprint), same contract as
     * extractFrameBytes. */
-  def extractFrameHashes(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select("media_id", "payload").rdd.mapPartitions { it =>
+  def extractFrameHashes(media: DataFrame): DataFrame =
+    decode(media, frameHashSchema) {
       val md = java.security.MessageDigest.getInstance("MD5")
-      it.flatMap { r =>
-        val id = r.getLong(0)
-        val payload = if (r.isNullAt(1)) Array.empty[Byte]
-        else r.getAs[Array[Byte]](1)
+      (id, payload) =>
         videoSampleRanges(payload) match {
           case Some(ranges) =>
             ranges.iterator.zipWithIndex
@@ -1112,71 +1026,33 @@ object Multimodal {
                   sb.append(payload(off.toInt + j) & 0xff)
                   j += 1
                 }
-                md.reset()
-                val dig = md.digest(
-                  sb.toString.getBytes("US-ASCII"))
-                val hex = new java.lang.StringBuilder(32)
-                dig.foreach(b => hex.append(f"${b & 0xff}%02x"))
-                Row(id, k.toLong, hex.toString)
+                Row(id, k.toLong, md5Hex(md, sb.toString))
               }
           case None => Iterator.empty
         }
-      }
     }
-    spark.createDataFrame(rdd, frameHashSchema)
-  }
 
   /** Video feature extraction — same mapPartitions shape as the image
     * and audio paths: real ISO-BMFF headers get TRUE
     * timescale/duration/dims, anything else the deterministic fallback.
     * duration_ms is exact integer math (ticks·1000/timescale). */
-  def extractVideoFeatures(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select("media_id", "payload").rdd.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val payload = if (r.isNullAt(1)) Array.empty[Byte]
-        else r.getAs[Array[Byte]](1)
-        val (ts, dur, w, h) = videoMeta(payload).getOrElse {
-          val (fw, fh, c) = fakeDecode(payload)
-          (600, (fw * 10).toLong, fw, fh)
-        }
-        val durMs = if (ts > 0) dur * 1000L / ts else 0L
-        Row(id, payload.length.toLong, ts, durMs, w, h)
+  def extractVideoFeatures(media: DataFrame): DataFrame =
+    decode(media, videoFeatureSchema) { (id, payload) =>
+      val (ts, dur, w, h) = videoMeta(payload).getOrElse {
+        val (fw, fh, c) = fakeDecode(payload)
+        (600, (fw * 10).toLong, fw, fh)
       }
+      val durMs = if (ts > 0) dur * 1000L / ts else 0L
+      Iterator.single(Row(id, payload.length.toLong, ts, durMs, w, h))
     }
-    spark.createDataFrame(rdd, videoFeatureSchema)
-  }
 
   /** Minimal real MP4: ftyp + moov(mvhd v0 + trak(tkhd v0)) — enough
     * container for any ISO-BMFF reader to report timescale, duration
     * and track dimensions. Test-fixture twin of `wavBytes`. */
   def mp4Bytes(timescale: Int, durationTicks: Long, width: Int,
-      height: Int): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(20 + 8 + 108 + 8 + 92)
-      .order(java.nio.ByteOrder.BIG_ENDIAN)
-    bb.putInt(20).put("ftypisom".getBytes("US-ASCII"))
-    bb.putInt(0x200).put("isom".getBytes("US-ASCII")) // minor, compat
-    bb.putInt(8 + 108 + 8 + 92).put("moov".getBytes("US-ASCII"))
-    bb.putInt(108).put("mvhd".getBytes("US-ASCII"))
-    bb.putInt(0).putInt(0).putInt(0) // v0+flags, ctime, mtime
-    bb.putInt(timescale).putInt(durationTicks.toInt)
-    bb.putInt(0x00010000).putShort(0x0100.toShort) // rate 1.0, volume
-    bb.put(new Array[Byte](10)) // reserved
-    Seq(0x00010000, 0, 0, 0, 0x00010000, 0, 0, 0, 0x40000000)
-      .foreach(bb.putInt) // unity matrix
-    bb.put(new Array[Byte](24)).putInt(2) // predefined, next track id
-    bb.putInt(8 + 92).put("trak".getBytes("US-ASCII"))
-    bb.putInt(92).put("tkhd".getBytes("US-ASCII"))
-    bb.putInt(0).putInt(0).putInt(0) // v0+flags, ctime, mtime
-    bb.putInt(1).putInt(0).putInt(durationTicks.toInt) // track id, rsvd
-    bb.put(new Array[Byte](8)) // reserved
-    bb.putShort(0).putShort(0).putShort(0).putShort(0) // layer/alt/vol
-    Seq(0x00010000, 0, 0, 0, 0x00010000, 0, 0, 0, 0x40000000)
-      .foreach(bb.putInt)
-    bb.putInt(width << 16).putInt(height << 16) // 16.16 fixed point
-    bb.array()
-  }
+      height: Int): Array[Byte] =
+    ftyp ++ box("moov", mvhd(timescale, durationTicks),
+      box("trak", tkhd(durationTicks, width, height)))
 
   /** Minimal real MP4 WITH a sample table: ftyp + moov(mvhd +
     * trak(tkhd + mdia(mdhd + minf(stbl(stts))))) — the full box
@@ -1186,50 +1062,8 @@ object Multimodal {
     * oracle); `stts` is the run-length (sampleCount, deltaTicks) list
     * written verbatim as the stts entry table. */
   def mp4BytesStts(timescale: Int, durationTicks: Long, width: Int,
-      height: Int, mediaTs: Int, stts: Seq[(Int, Int)]): Array[Byte] = {
-    val sttsSz = 16 + 8 * stts.length
-    val stblSz = 8 + sttsSz
-    val minfSz = 8 + stblSz
-    val mdhdSz = 32
-    val mdiaSz = 8 + mdhdSz + minfSz
-    val trakSz = 8 + 92 + mdiaSz
-    val moovSz = 8 + 108 + trakSz
-    val bb = java.nio.ByteBuffer.allocate(20 + moovSz)
-      .order(java.nio.ByteOrder.BIG_ENDIAN)
-    bb.putInt(20).put("ftypisom".getBytes("US-ASCII"))
-    bb.putInt(0x200).put("isom".getBytes("US-ASCII")) // minor, compat
-    bb.putInt(moovSz).put("moov".getBytes("US-ASCII"))
-    bb.putInt(108).put("mvhd".getBytes("US-ASCII"))
-    bb.putInt(0).putInt(0).putInt(0) // v0+flags, ctime, mtime
-    bb.putInt(timescale).putInt(durationTicks.toInt)
-    bb.putInt(0x00010000).putShort(0x0100.toShort) // rate 1.0, volume
-    bb.put(new Array[Byte](10)) // reserved
-    Seq(0x00010000, 0, 0, 0, 0x00010000, 0, 0, 0, 0x40000000)
-      .foreach(bb.putInt) // unity matrix
-    bb.put(new Array[Byte](24)).putInt(2) // predefined, next track id
-    bb.putInt(trakSz).put("trak".getBytes("US-ASCII"))
-    bb.putInt(92).put("tkhd".getBytes("US-ASCII"))
-    bb.putInt(0).putInt(0).putInt(0) // v0+flags, ctime, mtime
-    bb.putInt(1).putInt(0).putInt(durationTicks.toInt) // track id, rsvd
-    bb.put(new Array[Byte](8)) // reserved
-    bb.putShort(0).putShort(0).putShort(0).putShort(0) // layer/alt/vol
-    Seq(0x00010000, 0, 0, 0, 0x00010000, 0, 0, 0, 0x40000000)
-      .foreach(bb.putInt)
-    bb.putInt(width << 16).putInt(height << 16) // 16.16 fixed point
-    bb.putInt(mdiaSz).put("mdia".getBytes("US-ASCII"))
-    bb.putInt(mdhdSz).put("mdhd".getBytes("US-ASCII"))
-    bb.putInt(0).putInt(0).putInt(0) // v0+flags, ctime, mtime
-    bb.putInt(mediaTs)
-    // mdhd duration in MEDIA ticks = total stts span.
-    bb.putInt(stts.map { case (n, d) => n.toLong * d }.sum.toInt)
-    bb.putShort(0x55c4.toShort).putShort(0) // language "und", predefined
-    bb.putInt(minfSz).put("minf".getBytes("US-ASCII"))
-    bb.putInt(stblSz).put("stbl".getBytes("US-ASCII"))
-    bb.putInt(sttsSz).put("stts".getBytes("US-ASCII"))
-    bb.putInt(0).putInt(stts.length) // v0+flags, entry_count
-    stts.foreach { case (n, d) => bb.putInt(n).putInt(d) }
-    bb.array()
-  }
+      height: Int, mediaTs: Int, stts: Seq[(Int, Int)]): Array[Byte] =
+    ftyp ++ moov(timescale, durationTicks, width, height, mediaTs, stts)()
 
   /** Synthesize one real MP4 with a sample table per id (executor-side),
     * same oracle-checkable contract as `synthMp4`: media timescale
@@ -1237,66 +1071,45 @@ object Multimodal {
     * (100+(id%5)·20) ticks, then (2+id%2) samples at (40+(id%7)·10)
     * ticks. The DuckDB twin recomputes every sample's decode time from
     * this arithmetic while Spark must expand the actual stts bytes. */
-  def synthMp4Stts(ids: DataFrame, idCol: String): DataFrame = {
-    val spark = ids.sparkSession
-    val rdd = spreadIds(ids, idCol).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val mts = 1000 + (id % 3).toInt * 500
-        val runs = Seq(
-          (3 + (id % 3).toInt, 100 + (id % 5).toInt * 20),
-          (2 + (id % 2).toInt, 40 + (id % 7).toInt * 10))
-        val movieTs = 600 + (id % 5).toInt * 300
-        val dur = movieTs.toLong * (2 + (id % 7).toInt)
-        val w = 320 + (id % 4).toInt * 160
-        val h = 240 + (id % 3).toInt * 120
-        Row(id, mp4BytesStts(movieTs, dur, w, h, mts, runs), "video/mp4")
-      }
+  def synthMp4Stts(ids: DataFrame, idCol: String): DataFrame =
+    synth(spreadIds(ids, idCol), "video/mp4") { id =>
+      val mts = 1000 + (id % 3).toInt * 500
+      val runs = Seq(
+        (3 + (id % 3).toInt, 100 + (id % 5).toInt * 20),
+        (2 + (id % 2).toInt, 40 + (id % 7).toInt * 10))
+      val movieTs = 600 + (id % 5).toInt * 300
+      val dur = movieTs.toLong * (2 + (id % 7).toInt)
+      val w = 320 + (id % 4).toInt * 160
+      val h = 240 + (id % 3).toInt * 120
+      mp4BytesStts(movieTs, dur, w, h, mts, runs)
     }
-    spark.createDataFrame(rdd, mediaSchema)
-  }
 
   /** Synthesize one real MP4 container per id (executor-side), same
     * oracle-checkable contract as `synthWav`: timescale 600+(id%5)·300,
     * duration (2+id%7) seconds exactly, dims 320+(id%4)·160 ×
     * 240+(id%3)·120. */
-  def synthMp4(ids: DataFrame, idCol: String): DataFrame = {
-    val spark = ids.sparkSession
-    val rdd = spreadIds(ids, idCol).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val ts = 600 + (id % 5).toInt * 300
-        val dur = ts.toLong * (2 + (id % 7).toInt)
-        val w = 320 + (id % 4).toInt * 160
-        val h = 240 + (id % 3).toInt * 120
-        Row(id, mp4Bytes(ts, dur, w, h), "video/mp4")
-      }
+  def synthMp4(ids: DataFrame, idCol: String): DataFrame =
+    synth(spreadIds(ids, idCol), "video/mp4") { id =>
+      val ts = 600 + (id % 5).toInt * 300
+      mp4Bytes(ts, ts.toLong * (2 + (id % 7).toInt),
+        320 + (id % 4).toInt * 160, 240 + (id % 3).toInt * 120)
     }
-    spark.createDataFrame(rdd, mediaSchema)
-  }
 
   /** Decode/feature-extract as mapPartitions over the binary column:
     * one iterator pass per partition (codec config amortized), explicit
     * output schema (no inference), no driver involvement. Images the
     * JDK recognizes get TRUE dimensions; anything else gets the
     * deterministic fallback. */
-  def extractFeatures(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select("media_id", "payload").rdd.mapPartitions { it =>
+  def extractFeatures(media: DataFrame): DataFrame =
+    decode(media, featureSchema) {
       // Per-partition codec config: in-memory ImageInputStreams (the
       // default spills every stream to an executor temp FILE — a
       // per-row disk write at scale).
       javax.imageio.ImageIO.setUseCache(false)
-      it.map { r =>
-        val id = r.getLong(0)
-        val payload = if (r.isNullAt(1)) Array.empty[Byte]
-        else r.getAs[Array[Byte]](1)
+      (id, payload) =>
         val (w, h, c) = imageDims(payload).getOrElse(fakeDecode(payload))
-        Row(id, payload.length.toLong, w, h, c)
-      }
+        Iterator.single(Row(id, payload.length.toLong, w, h, c))
     }
-    spark.createDataFrame(rdd, featureSchema)
-  }
 
   /** Frame sampling for video-shaped payloads: emit every `stride`-th
     * fixed-size chunk as a "frame" (stub for keyframe extraction). A

@@ -68,9 +68,22 @@ object Similarity {
   }
 
   /** Native cosine score of two unit vectors (graft_vec_dot); shadows
-    * VectorFunctions' composed `dot` for every query in this file. */
-  private def dot(a: Column, b: Column): Column =
+    * VectorFunctions' composed `dot` for every query in this file and
+    * in `TextOps.clipGate`. */
+  private[graft] def dot(a: Column, b: Column): Column =
     call_function("graft_vec_dot", a, b)
+
+  /** The IVF probe's cell ranking: every query (q_id, q_u) against
+    * every broadcast centroid (cid, cu), ranked per query by rounded
+    * cosine with the cell id as tiebreak — (q_id, q_u, cid, crn),
+    * crn 1 the nearest cell. */
+  private def rankedCells(q0: DataFrame, cents: DataFrame): DataFrame =
+    q0.crossJoin(broadcast(cents))
+      .select(col("q_id"), col("q_u"), col("cid"),
+        round(dot(col("q_u"), col("cu")), 6).as("csc"))
+      .withColumn("crn", row_number().over(Window.partitionBy("q_id")
+        .orderBy(col("csc").desc, col("cid"))))
+      .select("q_id", "q_u", "cid", "crn")
 
   /** The Matryoshka truncation of (vec_id, u): the first 16 dims,
     * re-normalized, as (vec_id, ut); zero-norm prefixes drop out. */
@@ -604,12 +617,7 @@ object Similarity {
       val cents = storedCentroids(s, d)
       val q0 = cells.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("u").as("q_u"))
-      val wCell = Window.partitionBy("q_id")
-        .orderBy(col("csc").desc, col("cid"))
-      val probes = q0.crossJoin(broadcast(cents))
-        .select(col("q_id"), col("q_u"), col("cid"),
-          round(dot(col("q_u"), col("cu")), 6).as("csc"))
-        .withColumn("crn", row_number().over(wCell))
+      val probes = rankedCells(q0, cents)
         .filter(col("crn") <= 2)
         .select(col("q_id"), col("q_u"), col("cid").as("q_cluster"))
       val w = Window.partitionBy("q_id")
@@ -637,12 +645,7 @@ object Similarity {
       val cents = storedCentroids(s, d)
       val q0 = cells.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("u").as("q_u"))
-      val wCell = Window.partitionBy("q_id")
-        .orderBy(col("csc").desc, col("cid"))
-      val ranked = q0.crossJoin(broadcast(cents))
-        .select(col("q_id"), col("q_u"), col("cid"),
-          round(dot(col("q_u"), col("cu")), 6).as("csc"))
-        .withColumn("crn", row_number().over(wCell))
+      val ranked = rankedCells(q0, cents)
       val ks = s.createDataFrame(Seq(1, 2, 4).map(Tuple1(_))).toDF("np")
       val probes = ranked.join(broadcast(ks), col("crn") <= col("np"))
         .select(col("np"), col("q_id"), col("q_u"),
@@ -704,12 +707,7 @@ object Similarity {
           transform(col("t16"), x => x / col("tn")).as("ut"))
       val q0 = cells.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("u").as("q_u"))
-      val wCell = Window.partitionBy("q_id")
-        .orderBy(col("csc").desc, col("cid"))
-      val probes = q0.crossJoin(broadcast(cents))
-        .select(col("q_id"), col("cid"),
-          round(dot(col("q_u"), col("cu")), 6).as("csc"))
-        .withColumn("crn", row_number().over(wCell))
+      val probes = rankedCells(q0, cents)
         .filter(col("crn") <= 2)
         .select(col("q_id"), col("cid").as("q_cluster"))
       val qt = t.filter(col("vec_id") < 5)
@@ -1042,12 +1040,7 @@ object Similarity {
         .select(col("vec_id"), col("sub"), col("cid"))
       val q0 = cells.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("u").as("q_u"))
-      val wCell = Window.partitionBy("q_id")
-        .orderBy(col("csc").desc, col("cid"))
-      val probes = q0.crossJoin(broadcast(cents))
-        .select(col("q_id"), col("cid"),
-          round(dot(col("q_u"), col("cu")), 6).as("csc"))
-        .withColumn("crn", row_number().over(wCell))
+      val probes = rankedCells(q0, cents)
         .filter(col("crn") <= 2)
         .select(col("q_id"), col("cid").as("q_cluster"))
       val qsubs = subSplit(q0.select(col("q_id"), col("q_u").as("u")),

@@ -326,7 +326,7 @@ object TextOps {
   private def clipGate(s: SparkSession, d: String): DataFrame =
     graft.operators.SharedStage(s, s"clipGate:$d") {
       graft.expressions.VectorExpressions.register(s)
-      def dot(a: Column, b: Column) = call_function("graft_vec_dot", a, b)
+      import Similarity.dot
       val img = graft.multimodal.Multimodal.extractBandSums(
         graft.multimodal.Multimodal.synthPngPattern(
           Tables.documents(s, d).select(col("doc_id")), "doc_id"))

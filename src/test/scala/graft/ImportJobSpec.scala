@@ -186,6 +186,30 @@ class ImportJobSpec extends SparkSpec {
     }
   }
 
+  test("a failed part-file rename keeps every org's previous " +
+      "mmj-{org}.json in place") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.failpartrename.impl", classOf[FailingPartRenameFs].getName)
+    conf.setBoolean("fs.failpartrename.impl.disable.cache", true)
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-mmj-keep").toString
+    def file(i: Int) = java.nio.file.Paths.get(dir, s"mmj-org-$i.json")
+    (0 to 4).foreach(i =>
+      java.nio.file.Files.write(file(i), s"previous $i".getBytes("UTF-8")))
+    try {
+      intercept[java.io.IOException](
+        ImportJob.writeImportFiles(spark, d, s"failpartrename://$dir"))
+      (0 to 4).foreach { i =>
+        assert(java.nio.file.Files.exists(file(i)), s"mmj-org-$i.json gone")
+        assert(new String(java.nio.file.Files.readAllBytes(file(i)),
+          "UTF-8") == s"previous $i", s"mmj-org-$i.json changed")
+      }
+    } finally {
+      conf.unset("fs.failpartrename.impl")
+      conf.unset("fs.failpartrename.impl.disable.cache")
+    }
+  }
+
   test("document-collection insert contract: content-hash unique ids, " +
       "idempotent replay, append-only growth (utils.py:123-146)") {
     // Embedded in-memory Derby with a PRIMARY KEY on `_id` stands in for
@@ -254,4 +278,16 @@ class FailingRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def rename(src: org.apache.hadoop.fs.Path,
       dst: org.apache.hadoop.fs.Path): Boolean =
     !dst.getName.startsWith("mmj-") && super.rename(src, dst)
+}
+
+/** The local file system under the `failpartrename` scheme, whose
+  * `rename` of a `part-` file reports failure by returning false. Every
+  * other rename works, so a moved-aside file can move back. */
+class FailingPartRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri(): java.net.URI =
+    java.net.URI.create("failpartrename:///")
+  override def getScheme(): String = "failpartrename"
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean =
+    !src.getName.startsWith("part-") && super.rename(src, dst)
 }

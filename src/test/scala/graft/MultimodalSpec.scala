@@ -467,4 +467,94 @@ class MultimodalSpec extends SparkSpec {
     assert(rows.exists(_._4) && rows.exists(!_._4), "img gate flat")
     assert(rows.exists(_._5) && rows.exists(!_._5), "overall flat")
   }
+
+  test("byte pins: the MP4/WAV encoders and every synthesizer's payloads " +
+      "are unchanged (PNG synths by decoded pixels and dimensions)") {
+    def sha(b: Array[Byte]): String =
+      java.security.MessageDigest.getInstance("SHA-256").digest(b)
+        .map(x => f"${x & 0xff}%02x").mkString
+    val encoders = Seq(
+      "mp4Bytes/a" -> Multimodal.mp4Bytes(600, 1200L, 320, 240),
+      "mp4Bytes/b" -> Multimodal.mp4Bytes(90000, 270000L, 1920, 1080),
+      "mp4BytesStts/a" -> Multimodal.mp4BytesStts(600, 1800L, 640, 360,
+        1000, Seq((3, 100), (2, 40))),
+      "mp4BytesStts/b" -> Multimodal.mp4BytesStts(1000, 5000L, 320, 240,
+        48000, Seq((1, 1024))),
+      "mp4BytesStts/empty" -> Multimodal.mp4BytesStts(600, 0L, 16, 16,
+        1000, Seq.empty),
+      "mp4BytesFrames/a" -> Multimodal.mp4BytesFrames(600, 1200L, 320, 240,
+        1000, Seq((3, 100)), Seq(20, 21, 22), 7L),
+      "mp4BytesFrames/b" -> Multimodal.mp4BytesFrames(900, 2700L, 480, 360,
+        1500, Seq((2, 100), (1, 50)), Seq(0, 5, 300), 300L),
+      "mp4BytesFramesOf/a" -> Multimodal.mp4BytesFramesOf(600, 1200L, 320,
+        240, 1000, Seq((2, 100)),
+        Seq(Array[Byte](1, 2, 3), Array[Byte](-9))),
+      "mp4BytesFramesOf/empty" -> Multimodal.mp4BytesFramesOf(600, 0L, 320,
+        240, 1000, Seq.empty, Seq.empty),
+      "wavBytes/a" -> Multimodal.wavBytes(11025, 2, 250),
+      "wavBytes/b" -> Multimodal.wavBytes(8000, 1, 0),
+      "wavBytes/c" -> Multimodal.wavBytes(44100, 1, 3),
+      "wavBytesSamples/a" -> Multimodal.wavBytesSamples(8000,
+        Array[Short](0, 1, -1, 32767, -32768)),
+      "wavBytesSamples/empty" -> Multimodal.wavBytesSamples(16000,
+        Array.empty[Short]))
+    val ids = spark.range(20).toDF("id")
+    // One digest per corpus over (id, mime, sha256(payload)) in id order.
+    def corpus(df: org.apache.spark.sql.DataFrame)(
+        payload: Array[Byte] => String): String = sha(
+      df.orderBy("media_id").as[(Long, Array[Byte], String)].collect()
+        .map { case (id, p, mime) => s"$id|$mime|${payload(p)}" }
+        .mkString("\n").getBytes("UTF-8"))
+    // PNG bytes are encoder-dependent: pin the decoded grid instead.
+    def pixels(p: Array[Byte]): String = {
+      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(p))
+      val (w, h) = (img.getWidth, img.getHeight)
+      s"${w}x$h:" + sha(img.getRGB(0, 0, w, h, null, 0, w)
+        .flatMap(v => Array((v >> 16).toByte, (v >> 8).toByte, v.toByte)))
+    }
+    val synths = Seq(
+      "synthWav" -> corpus(Multimodal.synthWav(ids, "id"))(sha),
+      "synthWavSegments" -> corpus(Multimodal.synthWavSegments(ids, "id"))(sha),
+      "synthWavFamilies" -> corpus(Multimodal.synthWavFamilies(ids, "id"))(sha),
+      "synthMp4" -> corpus(Multimodal.synthMp4(ids, "id"))(sha),
+      "synthMp4Stts" -> corpus(Multimodal.synthMp4Stts(ids, "id"))(sha),
+      "synthMp4Frames" -> corpus(Multimodal.synthMp4Frames(ids, "id"))(sha),
+      "synthMp4FramesShared" ->
+        corpus(Multimodal.synthMp4FramesShared(ids, "id", 3))(sha),
+      "synthMp4Scenes" -> corpus(Multimodal.synthMp4Scenes(ids, "id"))(sha),
+      "synthPng" -> corpus(Multimodal.synthPng(ids, "id"))(pixels),
+      "synthPngPattern" ->
+        corpus(Multimodal.synthPngPattern(ids, "id"))(pixels),
+      "synthPngFamilies" ->
+        corpus(Multimodal.synthPngFamilies(ids, "id"))(pixels))
+    val got = (encoders.map { case (k, b) => k -> sha(b) } ++ synths).toMap
+    val want = Map(
+      "mp4Bytes/a" -> "c3c344011c72c4e644e03d9f5806f25a58afd6fb9a78c09926182dc7f47e0936",
+      "mp4Bytes/b" -> "dd2ca954011da5cb83c09531bc79eaa5c5908dbc53870d511d765a312f97379b",
+      "mp4BytesFrames/a" -> "bbd61a62ae8e0d281351763f7ff0d0caf058c44158c785e17d9d0a40551f8b9d",
+      "mp4BytesFrames/b" -> "4b45546da8bdd26a44b447ce3987c747e367950978b66e094359e0bf0a788f77",
+      "mp4BytesFramesOf/a" -> "3ae157ba81550349bc0733b084cdc21083a43bae166d4b135d0f7fd3a4b36c32",
+      "mp4BytesFramesOf/empty" -> "28ceb3dd5d194907198f3da159c2795c70f220f54120fcd927d5ee3b42867bac",
+      "mp4BytesStts/a" -> "8b42a28c51b7a1b14d168b8974ee1926f491c28120a5b18de2d860a2c9612d2d",
+      "mp4BytesStts/b" -> "a6b635d2c11c3ba11f3aa0f01491a62d7de5ba623e1f1b4098c2ef3f46803267",
+      "mp4BytesStts/empty" -> "30978ada77d072d3e453b2d01918ce3e864adf88683a036251535ff7604afa13",
+      "synthMp4" -> "f5279bad0852eb57744529584401db7b0892b3f3a64d00adbfae7948b8b7b21d",
+      "synthMp4Frames" -> "7e43824143b2d5cd3bdd4632b202a3a59a950b7d049ac42ddb3d13aa6f96c381",
+      "synthMp4FramesShared" -> "9d174205a6a1019574218012f270ffbf9833c69bbe6c3076d4ede8f047aa5227",
+      "synthMp4Scenes" -> "534535e4129be2bb40738c2f2dc27d73b42c7b49ea5fa757360031e85e04e562",
+      "synthMp4Stts" -> "5fcaa7b8569d88ff314a06be0ddb028288a484cf0714bfc617128639a465ef2d",
+      "synthPng" -> "bd22eb7995e120ddae1a86d1c2241771acfc317ec91cc075f6638e5772b34340",
+      "synthPngFamilies" -> "0097266374656d27c5c5f8a3fdec4854fd6658867cf42c1af40655e0f2bf2fa3",
+      "synthPngPattern" -> "18d18b854f7fefa4462d7bb34d29b779de4f467f2246c961b0d81ae10e0863cd",
+      "synthWav" -> "6697a18b9ef79ba489f7ef6838134263c3811a6d91a519948c174c6044d80fd6",
+      "synthWavFamilies" -> "4dad3bb138a90abd920bc231881a94cdeba6c43fc805f89761c42e00f1e64353",
+      "synthWavSegments" -> "58ed021c69dcf9d3f60501b7fd61fb9b98bedc89e1601d3221a7f82a265b6a68",
+      "wavBytes/a" -> "6e41f18e8f5111e7e6f6eafcedcd3b23bc322896b8f23ea302a5cd8375fb4272",
+      "wavBytes/b" -> "4f8734c5e13ac599e168cf247a51c1dd0758537ce00bf16d7fed1a3d14d07041",
+      "wavBytes/c" -> "ea7614c14f1b55ceea98f658a356ddafd45db744a53201a3a9211c9b5c9c64be",
+      "wavBytesSamples/a" -> "e07f7c36b6eb8ec6eb1b0ff3107e6f08f9e93934407a5de3221857ca459cc37f",
+      "wavBytesSamples/empty" -> "ba584a378b11d9e9c98736fd8c256fe1453a84ee4139416d24b07acff424f0fb")
+    assert(got == want, got.toSeq.sorted.map { case (k, v) =>
+      s"\"$k\" -> \"$v\"" }.mkString("\n", ",\n", "\n"))
+  }
 }
