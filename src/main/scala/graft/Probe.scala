@@ -4,7 +4,8 @@ import scala.collection.mutable
 import scala.util.matching.Regex
 
 import org.apache.spark.GraftMetricsHook
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
@@ -27,9 +28,10 @@ import graft.operators.SharedStage
   *       query with `repeats` = N times it cold, then warm.
   *   stages <sfDir> <q1,q2,...>
   *       Per-stage profile — where the time actually goes, without the
-  *       Spark UI. Runs each query cold then warm and prints every
-  *       stage's wall-clock, summed task time, task count, input/shuffle
-  *       bytes and spill, sorted by wall time.
+  *       Spark UI. Runs each query cold then warm and prints its job
+  *       and stage counts, then every stage's wall-clock, summed task
+  *       time, task count, input/shuffle bytes and spill, sorted by wall
+  *       time (the 25 longest).
   *   shuffle <sfDir> [outJson]
   *       Shuffle-volume audit of every registered query (artifact
   *       shuffle_audit.json, gated against shuffle_ref.json).
@@ -62,15 +64,20 @@ object Probe {
   final case class Stage(name: String = "", wallMs: Long = -1,
       cost: Cost = Cost())
 
-  /** The run's task metrics: a running total and one row per stage,
-    * from the same TaskEnd events the Spark UI shows. Events arrive
-    * asynchronously, so read through [[measure]], which drains the
-    * listener bus first. */
+  /** The run's task metrics: a running total, one row per stage and a
+    * count of jobs, from the same events the Spark UI shows. Events
+    * arrive asynchronously, so read through [[measure]], which drains
+    * the listener bus first. */
   final class TaskMetrics extends SparkListener {
     private var sum = Cost()
     private val byStage = mutable.Map.empty[Int, Stage]
+    private var nJobs = 0L
     def total: Cost = synchronized(sum)
     def stages: Map[Int, Stage] = synchronized(byStage.toMap)
+    def jobs: Long = synchronized(nJobs)
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      synchronized(nJobs += 1)
 
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
       val m = e.taskMetrics
@@ -208,10 +215,13 @@ object Probe {
     def mb(b: Long): String = f"${b / 1048576.0}%8.1f"
     Tables.warmup(spark, sfDir)
     for (n <- names; tag <- Seq("cold", "warm")) {
+      GraftMetricsHook.drainListenerBus(spark.sparkContext, 60000L)
+      val j0 = metrics.jobs
       val (t, _, st) = measure(spark, metrics)(
         noopRun(spark, n)(SparkEntry.queries(n)(spark, sfDir)))
       val failed = if (t.ok) "" else " FAILED"
-      println(f"\n===== $n $tag=${t.seconds}%.2fs$failed =====")
+      println(f"\n===== $n $tag=${t.seconds}%.2fs$failed " +
+        f"jobs=${metrics.jobs - j0} stages=${st.size} =====")
       println("  wall_ms task_ms tasks  input_MB  shRd_MB  shWr_MB spill_MB  stage")
       st.toSeq.sortBy(-_._2.wallMs).take(25).foreach { case (id, s) =>
         val c = s.cost

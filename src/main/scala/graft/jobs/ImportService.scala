@@ -125,31 +125,34 @@ object ImportService {
               val known = !ImportJob.organizations(spark, dataDir)
                 .filter(col("organizationId") === orgId).isEmpty
               if (known) lock.synchronized {
-                val row = ImportJob.payloads(spark, dataDir)
-                  .filter(col("organizationId") === orgId)
-                  .select(ImportJob.fileJson(col("payload")))
-                  .collect()
-                if (row.isEmpty) notFound(ex)
-                else {
-                  val json = row(0).getString(0)
-                  // etl_import.py:63-64 — the per-org file artifact
-                  val dest = new org.apache.hadoop.fs.Path(
-                    s"$outDir/mmj-$orgId.json")
-                  val fs = dest.getFileSystem(
-                    spark.sparkContext.hadoopConfiguration)
-                  val os = fs.create(dest, true)
-                  try os.write(json.getBytes(UTF_8)) finally os.close()
-                  // utils.py:123-146 — the doc-store insert leg, one
-                  // fresh monotonic batch per extraction request; the
-                  // wire bytes are the document, `_id` their hash
-                  import spark.implicits._
-                  Seq(json).toDF("doc")
-                    .select(ImportJob.jsonDoc(col("doc")): _*)
-                    .write.format("graft-docs")
-                    .option("path", store)
-                    .option("batchId", nextBatch.getAndIncrement())
-                    .mode("append").save()
-                  respond(ex, 200, json)
+                ImportJob.described(spark,
+                    s"ImportService extract: $orgId") {
+                  val row = ImportJob.payloads(spark, dataDir)
+                    .filter(col("organizationId") === orgId)
+                    .select(ImportJob.fileJson(col("payload")))
+                    .collect()
+                  if (row.isEmpty) notFound(ex)
+                  else {
+                    val json = row(0).getString(0)
+                    // etl_import.py:63-64 — the per-org file artifact
+                    val dest = new org.apache.hadoop.fs.Path(
+                      s"$outDir/mmj-$orgId.json")
+                    val fs = dest.getFileSystem(
+                      spark.sparkContext.hadoopConfiguration)
+                    val os = fs.create(dest, true)
+                    try os.write(json.getBytes(UTF_8)) finally os.close()
+                    // utils.py:123-146 — the doc-store insert leg, one
+                    // fresh monotonic batch per extraction request; the
+                    // wire bytes are the document, `_id` their hash
+                    import spark.implicits._
+                    Seq(json).toDF("doc")
+                      .select(ImportJob.jsonDoc(col("doc")): _*)
+                      .write.format("graft-docs")
+                      .option("path", store)
+                      .option("batchId", nextBatch.getAndIncrement())
+                      .mode("append").save()
+                    respond(ex, 200, json)
+                  }
                 }
               }
               else notFound(ex)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -11,14 +11,14 @@ import graft.functions.Scalars._
   * single declarative DataFrame plans over the testdata analogs:
   * fieldmap-style projections, keys-map falsy-stripping, nested
   * address/phone assembly, correlated lookups decorrelated into broadcast /
-  * semi joins, and last-wins folds via windows.
+  * semi joins, and last-wins folds (a window, or a `max_by` aggregate).
   *
   * Structs/arrays are built columnar and FLATTENED in the output so the
   * DuckDB oracle can hash-compare scalars (nested shapes themselves are
   * pinned by the scalatest golden-document suite instead).
   *
   * Scale: every pipeline is scan → broadcast-join dims → one projection;
-  * the only shuffles are the last-wins windows (keyed by the entity id) —
+  * the only shuffles are the last-wins folds (keyed by the entity id) —
   * no row loops, no collect, no N+1 lookups (the reference's per-row SQL
   * round-trips become map-side joins).
   */
@@ -27,70 +27,27 @@ object Entities {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // members.py:38-163 — customer⋈nation⋈region, fieldmap + keys map +
     // address struct + enum scalars.
-    "members_doc" -> ((s, d) => {
-      val c = Tables.customer(s, d)
-      val n = Tables.nation(s, d)
-      val r = Tables.region(s, d)
-      val dob = when(col("c_custkey") % 5 === 0,
-        to_timestamp(lit("1990-03-15 00:00:00")))
-      val keysMap = stripFalsy(map(
-        lit("custkey"), col("c_custkey").cast("string"),
-        lit("caregiver"), when(col("c_custkey") % 3 === 0, "77"),
-        lit("points"), when(col("c_acctbal") < 0, "0").otherwise("12")))
-      c.join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-        .select(
-          c("c_custkey").as("id"),
-          c("c_name").as("name"),
-          memberType(col("c_nationkey") % 2).as("member_type"),
-          accountStatus(col("c_custkey") % 2).as("status"),
-          trueOrFalse(col("c_nationkey") % 2).as("tax_exempt"),
-          dobOrEpoch0(dob).as("dob"),
-          dollarsToCents(col("c_acctbal")).as("balance_cents"),
-          n("n_name").as("addr_city"),
-          r("r_name").as("addr_country"),
-          concat_ws(",", transform(array_sort(map_keys(keysMap)),
-            k => concat(k, lit("="), element_at(keysMap, k))))
-            .as("keys_kv"))
-    }),
+    "members_doc" -> ((s, d) => membersByOrg(s, d).drop("organizationId")),
 
     // employees.py:40-177 — supplier⋈nation + activity semi-probe + role
     // chain + masked email + fixed DOB.
-    "employees_doc" -> ((s, d) => {
-      val su  = Tables.supplier(s, d)
-      val n   = Tables.nation(s, d)
-      val act = Tables.lineitem(s, d).select(col("l_suppkey")).distinct()
-      val first = when(col("s_suppkey") % 4 =!= 0,
-        split(col("s_name"), "#").getItem(0))
-      val last  = when(col("s_suppkey") % 3 =!= 0, col("n_name"))
-      su.join(broadcast(n), su("s_nationkey") === n("n_nationkey"))
-        .join(act, su("s_suppkey") === act("l_suppkey"), "left")
-        .select(
-          su("s_suppkey").as("id"),
-          setName(first, last, concat(lit("user"), col("s_suppkey")))
-            .as("name"),
-          maskEmail(su("s_name")).as("email"),
-          when(act("l_suppkey").isNotNull, "ACTIVE").otherwise("INACTIVE")
-            .as("status"),
-          when(su("s_suppkey") === 3, "store-manager")
-            .when(su("s_nationkey").isin(1, 2), "site-admin")
-            .otherwise("budtender").as("role"),
-          employeeDob.as("dob"))
-    }),
+    "employees_doc" -> ((s, d) =>
+      employeesByOrg(s, d).drop("organizationId")),
 
     // menu_items.py:41-314 — part + last-price fold (J9) + existence probe
     // (J5) + uom dim swap (J6) + category normalization (X10) + cents/url.
+    // Both lineitem lookups are ONE aggregate on l_partkey, so lineitem
+    // is read once: the last price is max_by over (shipdate, orderkey,
+    // linenumber) — the oracle's row_number window order, since a struct
+    // ranks a null shipdate below every date (the window's DESC NULLS
+    // LAST) and (orderkey, linenumber) is the lineitem key, so no two
+    // rows tie — and the existence probe is a bool_or of the 'R' flag.
     "menu_items_doc" -> ((s, d) => {
       val p = Tables.part(s, d)
-      val l = Tables.lineitem(s, d)
-      val w = Window.partitionBy("l_partkey")
-        .orderBy(col("l_shipdate").desc, col("l_orderkey").desc,
-          col("l_linenumber").desc)
-      val lastPrice = l.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("l_partkey"), col("l_extendedprice").as("last_price"))
-      val wm = l.filter(col("l_returnflag") === "R")
-        .select(col("l_partkey").as("wm_partkey")).distinct()
+      val perPart = Tables.lineitem(s, d).groupBy(col("l_partkey"))
+        .agg(max_by(col("l_extendedprice"), struct(col("l_shipdate"),
+            col("l_orderkey"), col("l_linenumber"))).as("last_price"),
+          bool_or(col("l_returnflag") === "R").as("any_returned"))
       val catName = when(col("p_partkey") % 8 === 0, "Cannabis")
         .when(col("p_partkey") % 8 === 1, "Paraphernalia")
         .when(col("p_partkey") % 8 === 2, "Tincture")
@@ -102,15 +59,14 @@ object Entities {
       val uom  = when(col("p_size") === 1, 2).otherwise(1)
       val file = when(col("p_partkey") % 4 =!= 0,
         concat(lit("img_"), col("p_partkey"), lit(".jpg")))
-      p.join(lastPrice, p("p_partkey") === lastPrice("l_partkey"), "left")
-        .join(wm, p("p_partkey") === wm("wm_partkey"), "left")
+      p.join(perPart, p("p_partkey") === perPart("l_partkey"), "left")
         .select(
           p("p_partkey").as("id"),
           p("p_name").as("name"),
           mapCategory(catName, col("p_size"), lit(100) - col("p_size"))
             .as("category"),
           dollarsToCents(col("last_price")).as("price_cents"),
-          wm("wm_partkey").isNotNull.as("share_on_wm"),
+          coalesce(col("any_returned"), lit(false)).as("share_on_wm"),
           uom.as("uom"),
           activeFlag(col("p_size") % 2).as("active"),
           netMarijuana(uom, p("p_retailprice")).as("net_mj"),
@@ -120,65 +76,12 @@ object Entities {
 
     // vendors.py:30-128 — address struct (gated), phone array, any-null-
     // drops-all licence/email/website trio.
-    "vendors_doc" -> ((s, d) => {
-      val su = Tables.supplier(s, d)
-      val n  = Tables.nation(s, d)
-      val r  = Tables.region(s, d)
-      val gate = when(col("s_suppkey") % 5 =!= 0, col("n_name"))
-      val addr = structWhenPresent(gate, struct(
-        concat(col("s_suppkey"), lit(" Main St")).as("line1"),
-        col("n_name").as("city"),
-        col("r_name").as("country")))
-      val phone = phoneArray("business",
-        when(col("s_suppkey") % 3 =!= 0,
-          concat(lit("555-010"), col("s_suppkey"))))
-      val licence = concat(lit("LIC-"), col("s_suppkey"))
-      val email   = maskEmail(col("s_name"))
-      val website = when(col("s_suppkey") % 2 =!= 0,
-        concat(lit("https://v"), col("s_suppkey"), lit(".example.com")))
-      val anyNull = licence.isNull || email.isNull || website.isNull
-      su.join(broadcast(n), su("s_nationkey") === n("n_nationkey"))
-        .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-        .select(
-          su("s_suppkey").as("id"),
-          su("s_name").as("name"),
-          addr.getField("line1").as("addr_line1"),
-          addr.getField("city").as("addr_city"),
-          addr.getField("country").as("addr_country"),
-          element_at(phone, 1).getField("name").as("phone_name"),
-          element_at(phone, 1).getField("number").as("phone_number"),
-          element_at(phone, 1).getField("default").as("phone_default"),
-          when(!anyNull, licence).as("licence"),
-          when(!anyNull, email).as("email"),
-          when(!anyNull, website).as("website"))
-    }),
+    "vendors_doc" -> ((s, d) => vendorsByOrg(s, d).drop("organizationId")),
 
     // physicians.py:30-136 — Dr-title strip regex, constant specialty,
     // any-present-gated address array, work phone.
-    "physicians_doc" -> ((s, d) => {
-      val c = Tables.customer(s, d)
-      val rawName = when(col("c_custkey") % 3 === 0,
-        concat(lit("Dr. "), col("c_name")))
-        .when(col("c_custkey") % 7 === 0, concat(lit("Drs "), col("c_name")))
-        .otherwise(col("c_name"))
-      val line1 = when(col("c_custkey") % 4 =!= 0,
-        concat(col("c_custkey"), lit(" Elm St")))
-      val city = when(col("c_custkey") % 6 =!= 0, col("c_mktsegment"))
-      val anyPresent = line1.isNotNull || city.isNotNull
-      val addrArr = when(anyPresent,
-        array(struct(line1.as("line1"), city.as("city"))))
-      val phone = phoneArray("work",
-        when(col("c_custkey") % 2 === 0,
-          concat(lit("555-020"), col("c_custkey"))))
-      c.select(
-        col("c_custkey").as("id"),
-        stripDoctorTitle(rawName).as("name"),
-        lit("General").as("specialty"),
-        element_at(addrArr, 1).getField("line1").as("addr_line1"),
-        element_at(addrArr, 1).getField("city").as("addr_city"),
-        element_at(phone, 1).getField("name").as("phone_name"),
-        element_at(phone, 1).getField("number").as("phone_number"))
-    }),
+    "physicians_doc" -> ((s, d) =>
+      Tables.customer(s, d).select(physicianColumns: _*)),
 
     // settings.py:31-267 — widest nesting: tax last-wins (J8), logo URL,
     // medicalLimits monthly = two_week*2, pp-gated crm settings.
@@ -249,6 +152,140 @@ object Entities {
     // summary.errors arrays imply but never populate.
     "payload_validate" -> ((s, d) =>
       graft.jobs.ImportJob.validationReport(s, d)))
+
+  /** An entity row's organization, `org-{n_regionkey}`, from the nation
+    * its extract already joins. */
+  private def orgOfNation: Column =
+    concat(lit("org-"), col("n_regionkey")).as("organizationId")
+
+  // The org-keyed extracts: the `*_doc` columns plus `organizationId`.
+  // The registry entries drop the org column again, which the optimizer
+  // folds into the projection, so their plans stay as they were; the
+  // import payload, delta and validation read the org from here instead
+  // of re-joining nation on the entity id.
+
+  /** members.py:38-163, keyed by organization. */
+  def membersByOrg(s: SparkSession, d: String): DataFrame = {
+    val c = Tables.customer(s, d)
+    val n = Tables.nation(s, d)
+    val r = Tables.region(s, d)
+    val dob = when(col("c_custkey") % 5 === 0,
+      to_timestamp(lit("1990-03-15 00:00:00")))
+    val keysMap = stripFalsy(map(
+      lit("custkey"), col("c_custkey").cast("string"),
+      lit("caregiver"), when(col("c_custkey") % 3 === 0, "77"),
+      lit("points"), when(col("c_acctbal") < 0, "0").otherwise("12")))
+    c.join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
+      .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
+      .select(
+        c("c_custkey").as("id"),
+        c("c_name").as("name"),
+        memberType(col("c_nationkey") % 2).as("member_type"),
+        accountStatus(col("c_custkey") % 2).as("status"),
+        trueOrFalse(col("c_nationkey") % 2).as("tax_exempt"),
+        dobOrEpoch0(dob).as("dob"),
+        dollarsToCents(col("c_acctbal")).as("balance_cents"),
+        n("n_name").as("addr_city"),
+        r("r_name").as("addr_country"),
+        concat_ws(",", transform(array_sort(map_keys(keysMap)),
+          k => concat(k, lit("="), element_at(keysMap, k))))
+          .as("keys_kv"),
+        orgOfNation)
+  }
+
+  /** employees.py:40-177, keyed by organization. */
+  def employeesByOrg(s: SparkSession, d: String): DataFrame = {
+    val su  = Tables.supplier(s, d)
+    val n   = Tables.nation(s, d)
+    val act = Tables.lineitem(s, d).select(col("l_suppkey")).distinct()
+    val first = when(col("s_suppkey") % 4 =!= 0,
+      split(col("s_name"), "#").getItem(0))
+    val last  = when(col("s_suppkey") % 3 =!= 0, col("n_name"))
+    su.join(broadcast(n), su("s_nationkey") === n("n_nationkey"))
+      .join(act, su("s_suppkey") === act("l_suppkey"), "left")
+      .select(
+        su("s_suppkey").as("id"),
+        setName(first, last, concat(lit("user"), col("s_suppkey")))
+          .as("name"),
+        maskEmail(su("s_name")).as("email"),
+        when(act("l_suppkey").isNotNull, "ACTIVE").otherwise("INACTIVE")
+          .as("status"),
+        when(su("s_suppkey") === 3, "store-manager")
+          .when(su("s_nationkey").isin(1, 2), "site-admin")
+          .otherwise("budtender").as("role"),
+        employeeDob.as("dob"),
+        orgOfNation)
+  }
+
+  /** vendors.py:30-128, keyed by organization. */
+  def vendorsByOrg(s: SparkSession, d: String): DataFrame = {
+    val su = Tables.supplier(s, d)
+    val n  = Tables.nation(s, d)
+    val r  = Tables.region(s, d)
+    val gate = when(col("s_suppkey") % 5 =!= 0, col("n_name"))
+    val addr = structWhenPresent(gate, struct(
+      concat(col("s_suppkey"), lit(" Main St")).as("line1"),
+      col("n_name").as("city"),
+      col("r_name").as("country")))
+    val phone = phoneArray("business",
+      when(col("s_suppkey") % 3 =!= 0,
+        concat(lit("555-010"), col("s_suppkey"))))
+    val licence = concat(lit("LIC-"), col("s_suppkey"))
+    val email   = maskEmail(col("s_name"))
+    val website = when(col("s_suppkey") % 2 =!= 0,
+      concat(lit("https://v"), col("s_suppkey"), lit(".example.com")))
+    val anyNull = licence.isNull || email.isNull || website.isNull
+    su.join(broadcast(n), su("s_nationkey") === n("n_nationkey"))
+      .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
+      .select(
+        su("s_suppkey").as("id"),
+        su("s_name").as("name"),
+        addr.getField("line1").as("addr_line1"),
+        addr.getField("city").as("addr_city"),
+        addr.getField("country").as("addr_country"),
+        element_at(phone, 1).getField("name").as("phone_name"),
+        element_at(phone, 1).getField("number").as("phone_number"),
+        element_at(phone, 1).getField("default").as("phone_default"),
+        when(!anyNull, licence).as("licence"),
+        when(!anyNull, email).as("email"),
+        when(!anyNull, website).as("website"),
+        orgOfNation)
+  }
+
+  /** physicians.py:30-136's projection of a customer row. */
+  private def physicianColumns: Seq[Column] = {
+    val rawName = when(col("c_custkey") % 3 === 0,
+      concat(lit("Dr. "), col("c_name")))
+      .when(col("c_custkey") % 7 === 0, concat(lit("Drs "), col("c_name")))
+      .otherwise(col("c_name"))
+    val line1 = when(col("c_custkey") % 4 =!= 0,
+      concat(col("c_custkey"), lit(" Elm St")))
+    val city = when(col("c_custkey") % 6 =!= 0, col("c_mktsegment"))
+    val anyPresent = line1.isNotNull || city.isNotNull
+    val addrArr = when(anyPresent,
+      array(struct(line1.as("line1"), city.as("city"))))
+    val phone = phoneArray("work",
+      when(col("c_custkey") % 2 === 0,
+        concat(lit("555-020"), col("c_custkey"))))
+    Seq(
+      col("c_custkey").as("id"),
+      stripDoctorTitle(rawName).as("name"),
+      lit("General").as("specialty"),
+      element_at(addrArr, 1).getField("line1").as("addr_line1"),
+      element_at(addrArr, 1).getField("city").as("addr_city"),
+      element_at(phone, 1).getField("name").as("phone_name"),
+      element_at(phone, 1).getField("number").as("phone_number"))
+  }
+
+  /** physicians.py:30-136 keyed by organization: the same projection
+    * over customer ⋈ broadcast(nation). The registry's `physicians_doc`
+    * reads customer alone, as the reference does. */
+  def physiciansByOrg(s: SparkSession, d: String): DataFrame = {
+    val c = Tables.customer(s, d)
+    val n = Tables.nation(s, d)
+    c.join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
+      .select(physicianColumns :+ orgOfNation: _*)
+  }
 
   private val KeysKvSql =
     """concat_ws(',',

@@ -188,6 +188,8 @@ class ImportJobSpec extends SparkSpec {
 
   test("a failed part-file rename keeps every org's previous " +
       "mmj-{org}.json in place") {
+    // The third org's rename fails after the first two orgs' new files
+    // are already in place: those two must move back as well.
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.failpartrename.impl", classOf[FailingPartRenameFs].getName)
     conf.setBoolean("fs.failpartrename.impl.disable.cache", true)
@@ -197,8 +199,9 @@ class ImportJobSpec extends SparkSpec {
     (0 to 4).foreach(i =>
       java.nio.file.Files.write(file(i), s"previous $i".getBytes("UTF-8")))
     try {
-      intercept[java.io.IOException](
+      val e = intercept[java.io.IOException](
         ImportJob.writeImportFiles(spark, d, s"failpartrename://$dir"))
+      assert(e.getMessage.contains("mmj-org-2.json"), e.getMessage)
       (0 to 4).foreach { i =>
         assert(java.nio.file.Files.exists(file(i)), s"mmj-org-$i.json gone")
         assert(new String(java.nio.file.Files.readAllBytes(file(i)),
@@ -208,6 +211,35 @@ class ImportJobSpec extends SparkSpec {
       conf.unset("fs.failpartrename.impl")
       conf.unset("fs.failpartrename.impl.disable.cache")
     }
+  }
+
+  test("every job of writeImportFiles carries the files leg's job " +
+      "description, and the caller's description comes back after it") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        descs.add(String.valueOf(
+          e.properties.getProperty("spark.job.description")))
+    }
+    val out = java.nio.file.Files
+      .createTempDirectory("graft-mmj-desc").toString
+    org.apache.spark.GraftMetricsHook.drainListenerBus(sc, 60000L)
+    sc.setJobDescription("the caller's")
+    sc.addSparkListener(l)
+    try {
+      ImportJob.writeImportFiles(spark, d, out)
+      org.apache.spark.GraftMetricsHook.drainListenerBus(sc, 60000L)
+      assert(sc.getLocalProperty("spark.job.description") == "the caller's")
+    } finally {
+      sc.removeSparkListener(l)
+      sc.setJobDescription(null)
+    }
+    val seen = descs.toArray.toSeq.map(_.toString)
+    assert(seen.nonEmpty, "no job started")
+    assert(seen.forall(_.startsWith("ImportJob files leg")),
+      s"jobs without the files leg's description: ${seen.distinct}")
   }
 
   test("document-collection insert contract: content-hash unique ids, " +
@@ -281,13 +313,15 @@ class FailingRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 }
 
 /** The local file system under the `failpartrename` scheme, whose
-  * `rename` of a `part-` file reports failure by returning false. Every
-  * other rename works, so a moved-aside file can move back. */
+  * `rename` of a `part-` file to `mmj-org-2.json` reports failure by
+  * returning false. Every other rename works, so the orgs renamed before
+  * it, and moved-aside files, can move back. */
 class FailingPartRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri(): java.net.URI =
     java.net.URI.create("failpartrename:///")
   override def getScheme(): String = "failpartrename"
   override def rename(src: org.apache.hadoop.fs.Path,
       dst: org.apache.hadoop.fs.Path): Boolean =
-    !src.getName.startsWith("part-") && super.rename(src, dst)
+    !(src.getName.startsWith("part-") &&
+      dst.getName == "mmj-org-2.json") && super.rename(src, dst)
 }

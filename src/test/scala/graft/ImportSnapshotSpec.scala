@@ -6,6 +6,8 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.GraftMetricsHook
 import org.apache.spark.scheduler.{SparkListener,
   SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 
 import graft.jobs.ImportJob
@@ -15,7 +17,13 @@ import graft.jobs.ImportJob
   * writes them without reading a table, and every other case (a new
   * import, a rewritten input, a store-only call) extracts afresh. Both
   * outputs are byte-compared with an independent `to_json` over
-  * [[ImportJob.payloads]]. */
+  * [[ImportJob.payloads]].
+  *
+  * One payload plan per input listing: repeated calls with the same
+  * session, data directory, stamp and input files reuse the held plan
+  * (their executions read the same relation instances) but still run
+  * and read the tables; any other call, or a rewritten table, gets a
+  * plan of its own. */
 class ImportSnapshotSpec extends SparkSpec {
   import spark.implicits._
 
@@ -23,13 +31,7 @@ class ImportSnapshotSpec extends SparkSpec {
 
   /** A private copy of the six tables the payload reads, so a test may
     * rewrite one. */
-  private def inputs(): String = {
-    val dir = Files.createTempDirectory("graft-snap-in")
-    Seq("region", "nation", "customer", "supplier", "part", "lineitem")
-      .foreach(t => Files.copy(Paths.get(src, s"$t.parquet"),
-        dir.resolve(s"$t.parquet")))
-    dir.toString
-  }
+  private def inputs(): String = copyOf(src)
 
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
@@ -80,6 +82,66 @@ class ImportSnapshotSpec extends SparkSpec {
   private def gotDocs(store: String): Map[String, String] =
     spark.read.format("graft-docs").load(store).select("_id", "doc")
       .as[(String, String)].collect().toMap
+
+  /** The file relations a plan reads: the same instances in two plans
+    * mean the second reused the first's built plan. */
+  private def relations(plan: LogicalPlan): Seq[AnyRef] = plan.collect {
+    case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+      r.relation
+  }
+
+  private def sameRelations(a: Seq[AnyRef], b: Seq[AnyRef]): Boolean =
+    a.nonEmpty && a.size == b.size && a.zip(b).forall(p => p._1 eq p._2)
+
+  private def sharedRelations(a: Seq[AnyRef], b: Seq[AnyRef]): Boolean =
+    a.exists(x => b.exists(_ eq x))
+
+  /** The analyzed plans of the `localCheckpoint` executions `body`
+    * ran: a files leg's extraction. */
+  private def checkpointPlans[T](body: => T): (T, Seq[LogicalPlan]) = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val sc = spark.sparkContext
+    GraftMetricsHook.drainListenerBus(sc, 60000L)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint") plans.add(qe.analyzed)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      val r = body
+      GraftMetricsHook.drainListenerBus(sc, 60000L)
+      (r, plans.toArray(Array.empty[LogicalPlan]).toSeq)
+    } finally spark.listenerManager.unregister(l)
+  }
+
+  /** A fresh copy of the six tables of `d`: a directory no plan was
+    * built for. */
+  private def copyOf(d: String): String = {
+    val dir = Files.createTempDirectory("graft-snap-in")
+    Seq("region", "nation", "customer", "supplier", "part", "lineitem")
+      .foreach { t =>
+        val from = Paths.get(d, s"$t.parquet")
+        Files.walk(from).forEach(f =>
+          Files.copy(f, dir.resolve(s"$t.parquet")
+            .resolve(from.relativize(f).toString)))
+      }
+    dir.toString
+  }
+
+  /** Replace table `t` of `d` with `df`'s rows, written aside first
+    * (so `df` may read the table it replaces). */
+  private def rewrite(d: String, t: String, df: DataFrame): Unit = {
+    val staged = tmp("graft-snap-rewrite") + s"/$t.parquet"
+    df.coalesce(1).write.parquet(staged)
+    val old = Paths.get(d, s"$t.parquet")
+    Files.walk(old).sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => Files.delete(p))
+    Files.move(Paths.get(staged), old)
+  }
 
   /** Ids of the context's persisted RDDs: a snapshot's blocks. */
   private def persisted(): Set[Int] =
@@ -136,11 +198,8 @@ class ImportSnapshotSpec extends SparkSpec {
     val files = ImportJob.writeImportFiles(spark, d, tmp("graft-snap-out"))
     assert(files.size == 5)
     // drop one region, hence one organization, from the inputs
-    val staged = tmp("graft-snap-region") + "/region.parquet"
-    Tables.region(spark, d).filter(col("r_regionkey") =!= 4)
-      .coalesce(1).write.parquet(staged)
-    Files.delete(Paths.get(d, "region.parquet"))
-    Files.move(Paths.get(staged), Paths.get(d, "region.parquet"))
+    rewrite(d, "region",
+      Tables.region(spark, d).filter(col("r_regionkey") =!= 4))
     val (_, storeRows) =
       inputRows(ImportJob.writeImportDocsV2(spark, d, store))
     assert(storeRows > 0L, "the store leg wrote the stale snapshot")
@@ -170,5 +229,84 @@ class ImportSnapshotSpec extends SparkSpec {
       stamped, extractedEpoch = epoch + 1L))
     assert(stampRows > 0L, "a snapshot of another stamp was used")
     assert(gotDocs(stamped) == wantDocs(d, epoch + 1L))
+  }
+
+  test("two imports with unchanged inputs reuse the held payload plan, " +
+      "and the second one still reads its input rows") {
+    val d = inputs()
+    val a = ImportJob.payloads(spark, d)
+    val b = ImportJob.payloads(spark, d)
+    assert(a.queryExecution ne b.queryExecution,
+      "two calls share one QueryExecution")
+    assert(sameRelations(relations(a.queryExecution.analyzed),
+      relations(b.queryExecution.analyzed)), "the second call rebuilt")
+    val ((_, firstPlans), _) = inputRows(checkpointPlans(
+      ImportJob.writeImportFiles(spark, d, tmp("graft-snap-out"))))
+    val ((files, secondPlans), secondRows) = inputRows(checkpointPlans(
+      ImportJob.writeImportFiles(spark, d, tmp("graft-snap-out"))))
+    assert(firstPlans.size == 1 && secondPlans.size == 1)
+    assert(sameRelations(relations(firstPlans.head),
+      relations(secondPlans.head)), "the second import rebuilt its plan")
+    assert(sameRelations(relations(a.queryExecution.analyzed),
+      relations(secondPlans.head)))
+    assert(secondRows > 0L, "the second import read no input rows")
+    assert(gotFiles(files) == wantFiles(copyOf(d), epoch))
+  }
+
+  test("a table rewritten between two imports (a region dropped, a " +
+      "customer changed in place) makes the next import build a new " +
+      "plan that writes the new data") {
+    val d = inputs()
+    val (_, before) = checkpointPlans(
+      ImportJob.writeImportFiles(spark, d, tmp("graft-snap-out")))
+    def importNow(): (Seq[String], String, Seq[LogicalPlan]) = {
+      val store = tmp("graft-snap-store") + "/imports"
+      val (files, plans) = checkpointPlans(
+        ImportJob.writeImportFiles(spark, d, tmp("graft-snap-out")))
+      ImportJob.writeImportDocsV2(spark, d, store)
+      (files, store, plans)
+    }
+
+    rewrite(d, "region",
+      Tables.region(spark, d).filter(col("r_regionkey") =!= 4))
+    val (files, store, dropped) = importNow()
+    assert(!sharedRelations(relations(before.head), relations(dropped.head)),
+      "the import after the rewrite reused the stale plan")
+    val fresh = copyOf(d)
+    assert(files.size == 4)
+    assert(gotFiles(files) == wantFiles(fresh, epoch))
+    assert(gotDocs(store) == wantDocs(fresh, epoch))
+
+    // one customer renamed, every other row and the row count unchanged
+    val cust = Tables.customer(spark, d)
+    val key = cust.agg(min("c_custkey")).as[Long].head()
+    rewrite(d, "customer", cust.withColumn("c_name",
+      when(col("c_custkey") === key, lit("Renamed Customer"))
+        .otherwise(col("c_name"))))
+    val (files2, store2, changed) = importNow()
+    assert(!sharedRelations(relations(dropped.head),
+      relations(changed.head)), "the import after the rewrite reused " +
+      "the stale plan")
+    val fresh2 = copyOf(d)
+    assert(gotFiles(files2) == wantFiles(fresh2, epoch))
+    assert(gotDocs(store2) == wantDocs(fresh2, epoch))
+    assert(gotFiles(files2).values.exists(_.contains("Renamed Customer")))
+  }
+
+  test("another session, data directory or stamp never gets the held " +
+      "payload plan") {
+    val d = inputs()
+    def rels(df: DataFrame) =
+      relations(df.queryExecution.analyzed)
+    // each check first makes (spark, d, epoch)'s plan the held one
+    def held() = rels(ImportJob.payloads(spark, d))
+    assert(sameRelations(held(), held()), "the same key did not reuse it")
+    assert(!sharedRelations(held(),
+      rels(ImportJob.payloads(spark.newSession(), d))),
+      "another session reused it")
+    assert(!sharedRelations(held(), rels(ImportJob.payloads(spark,
+      inputs()))), "another data directory reused it")
+    assert(!sharedRelations(held(), rels(ImportJob.payloads(spark, d,
+      epoch + 1L))), "another stamp reused it")
   }
 }
