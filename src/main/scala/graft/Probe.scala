@@ -97,8 +97,15 @@ object Probe {
         val i = e.stageInfo
         val wall = for (a <- i.submissionTime; b <- i.completionTime)
           yield b - a
+        // AQE submits each query stage from a future, so the call site
+        // names nearly every stage after that future; the operator
+        // scopes name the stage's scan, exchange or codegen stage.
+        val scopes = GraftMetricsHook.scopeNames(i)
+        val name =
+          if (scopes.nonEmpty) scopes.mkString(" > ")
+          else i.name.takeWhile(_ != '\n')
         byStage(i.stageId) = byStage.getOrElse(i.stageId, Stage()).copy(
-          name = i.name.takeWhile(_ != '\n').take(90),
+          name = name.take(90),
           wallMs = wall.getOrElse(-1L))
       }
   }

@@ -386,6 +386,23 @@ object GraftOps {
         least(lit(chunkSize.toLong), col("__n") - col("chunk_id") * chunkSize)
           .cast("long").as("n_tokens"))
 
+  /** Word `n`-gram windows of `textCol`: one row per non-empty
+    * whitespace token, (idCol, pos, gram), where gram is `f` of the
+    * space-joined `n` tokens starting at that token, NULL where fewer
+    * than `n` tokens remain. `f` runs inside that null guard, so a hash
+    * passed as `f` never sees the missing tail. */
+  private[graft] def wordGrams(docs: DataFrame, idCol: String,
+      textCol: String, n: Int, f: Column => Column = c => c): DataFrame = {
+    val w = Window.partitionBy(idCol).orderBy("pos")
+    docs.select(col(idCol),
+        posexplode(split(trim(col(textCol)), "\\s+")).as(Seq("pos", "tok")))
+      .filter(col("tok") =!= "")
+      .select(col(idCol), col("pos"),
+        when(lead(col("tok"), n - 1).over(w).isNotNull,
+          f(concat_ws(" ", col("tok") +: (1 until n).map(k =>
+            lead(col("tok"), k).over(w)): _*))).as("gram"))
+  }
+
   /** Cross-document duplicated-substring detection — the declarative
     * approximation of exact-substring dedup (the suffix-array method of
     * Lee et al., "Deduplicating Training Data Makes Language Models
@@ -404,31 +421,24 @@ object GraftOps {
     * (pair, diagonal). No global structure anywhere. */
   def substringSpans(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 8, maxOcc: Int = 8, minRun: Int = 2): DataFrame = {
-    val wTok = Window.partitionBy(idCol).orderBy("pos")
-    val grams = docs
-      .select(col(idCol),
-        posexplode(split(trim(col(textCol)), "\\s+")).as(Seq("pos", "tok")))
-      .filter(col("tok") =!= "")
-      .withColumn("tpos", (row_number().over(wTok) - 1).cast("long"))
-      // Seed identity is a GROUPING key only (never output), so it is
-      // xxhash64 (8 bytes) rather than md5 hex (32-byte string): the
-      // r16 shuffle audit measured the seed exchange as this
-      // operator's dominant shuffle, and the key's only job is
-      // equality. 64-bit birthday collisions (~n²/2⁶⁵) would at worst
-      // seed a spurious match pair, which the minRun consecutive-run
-      // filter then has to confirm n more times; the DuckDB oracle
-      // derives spans from raw grams, so the gate doubles as a
-      // collision check. The hash stays INSIDE the when: Spark hash
-      // functions return the seed for null input, so hashing the
-      // null-padded tail grams directly would fabricate a shared
-      // "gram" across every document's last n-1 positions.
-      .withColumn("g",
-        when(lead(col("tok"), n - 1).over(wTok).isNotNull,
-          xxhash64(concat_ws(" ",
-            col("tok") +: (1 until n).map(k =>
-              lead(col("tok"), k).over(wTok)): _*))))
-      .filter(col("g").isNotNull)
-      .select(col(idCol).as("id"), col("tpos").as("pos"), col("g"))
+    // Seed identity is a GROUPING key only (never output), so it is
+    // xxhash64 (8 bytes) rather than md5 hex (32-byte string): the
+    // r16 shuffle audit measured the seed exchange as this
+    // operator's dominant shuffle, and the key's only job is
+    // equality. 64-bit birthday collisions (~n²/2⁶⁵) would at worst
+    // seed a spurious match pair, which the minRun consecutive-run
+    // filter then has to confirm n more times; the DuckDB oracle
+    // derives spans from raw grams, so the gate doubles as a
+    // collision check. The hash runs INSIDE wordGrams' null guard:
+    // Spark hash functions return the seed for null input, so hashing the
+    // null-padded tail grams directly would fabricate a shared
+    // "gram" across every document's last n-1 positions.
+    val grams = wordGrams(docs, idCol, textCol, n, xxhash64(_))
+      .withColumn("tpos", (row_number().over(
+        Window.partitionBy(idCol).orderBy("pos")) - 1).cast("long"))
+      .filter(col("gram").isNotNull)
+      .select(col(idCol).as("id"), col("tpos").as("pos"),
+        col("gram").as("g"))
     val buckets = grams.groupBy("g")
       .agg(sort_array(collect_list(struct(col("id"), col("pos")))).as("occ"))
       .filter(size(col("occ")).between(2, maxOcc))
@@ -674,54 +684,15 @@ object GraftOps {
       cntCol: String, ps: Seq[Double], buckets: Int = 32): DataFrame = {
     require(ps.nonEmpty && ps.forall(p => p >= 0 && p <= 1),
       "exactPercentilesFromCounts: ps must be within [0, 1]")
-    val counts = counts0.select(col(valCol).cast("double").as("__v"),
-      col(cntCol).cast("long").as("__c"))
-    val mm = counts.agg(min("__v").as("__mn"), max("__v").as("__mx"))
-    val bkted = counts.crossJoin(broadcast(mm))
-      .withColumn("__bkt",
-        when(col("__mx") === col("__mn"), lit(0L))
-          .otherwise(least(greatest(
-            floor((col("__v") - col("__mn")) * buckets
-              / (col("__mx") - col("__mn"))).cast("long"),
-            lit(0L)), lit(buckets - 1L))))
-    val offs = cumulativeOffsets(
-      bkted.groupBy("__bkt").agg(sum("__c").as("__bc")), "__bkt", "__bc")
-    val wIn = Window.partitionBy("__bkt").orderBy("__v")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val total = counts.agg(sum("__c").as("__n"))
-    val ranks = bkted.join(broadcast(offs), Seq("__bkt"))
-      .withColumn("__lo",
-        col("off") + coalesce(sum("__c").over(wIn), lit(0L)))
-      .withColumn("__hi", col("__lo") + col("__c") - 1)
-      .crossJoin(broadcast(total))
-    val probes = ranks
-      .select(col("__v"), col("__lo"), col("__hi"),
-        posexplode(array(ps.map(lit): _*)).as(Seq("__i", "__p")),
-        col("__n"))
-      .withColumn("__pos", col("__p") * (col("__n") - 1).cast("double"))
-      .withColumn("__kLo", floor(col("__pos")).cast("long"))
-      .withColumn("__kHi", ceil(col("__pos")).cast("long"))
-      .filter(col("__kLo").between(col("__lo"), col("__hi")) ||
-        col("__kHi").between(col("__lo"), col("__hi")))
-    probes.groupBy("__i")
-      .agg(
-        max(when(col("__kLo").between(col("__lo"), col("__hi")), col("__v")))
-          .as("__vLo"),
-        max(when(col("__kHi").between(col("__lo"), col("__hi")), col("__v")))
-          .as("__vHi"),
-        first(col("__pos") - col("__kLo").cast("double")).as("__frac"))
-      .select(col("__i"),
-        (col("__vLo") + col("__frac") * (col("__vHi") - col("__vLo")))
-          .as("__q"))
-      .agg(transform(array_sort(collect_list(struct(col("__i"), col("__q")))),
-        x => x.getField("__q")).as("q0"))
-      // Empty/all-null input: no probe rows survive, so the collected
-      // array is [] — but percentile(v, array(ps)) returns an array of
-      // NULLs there, and this function claims drop-in semantics
-      // (element_at(q, i) must yield NULL, not an ANSI index error).
-      .select(when(size(col("q0")) === ps.size, col("q0"))
-        .otherwise(array(ps.map(_ => lit(null).cast("double")): _*))
-        .as("q"))
+    // One group under a constant key. The global aggregate keeps one row
+    // on empty or all-NULL input, where percentile(v, array(ps)) returns
+    // NULLs and this function claims drop-in semantics (element_at(q, i)
+    // must yield NULL, not an ANSI index error).
+    percentilesByKey(counts0.select(lit(0).as("__k"),
+        col(valCol).cast("double").as("__v"),
+        col(cntCol).cast("long").as("__c")), ps, buckets)
+      .agg(max(col("q")).as("q0"))
+      .select(coalesce(col("q0"), nullQuantiles(ps)).as("q"))
   }
 
   /** Grouped [[exactPercentilesDist]]: the same exact-interpolated
@@ -747,8 +718,20 @@ object GraftOps {
     val counts = df.filter(v.isNotNull)
       .groupBy(col(keyCol).as("__k"), v.as("__v"))
       .agg(count(lit(1)).as("__c"))
-    // Per-key min/max/total in one tiny aggregate (the single-group
-    // form's mm + total, fused).
+    percentilesByKey(counts, ps, buckets)
+      .select(col("__k").as(keyCol), col("q"))
+  }
+
+  private def nullQuantiles(ps: Seq[Double]): Column =
+    array(ps.map(_ => lit(null).cast("double")): _*)
+
+  /** The engine behind every exact-percentile form: (__k, q) per key of
+    * a (__k, __v, __c) value-count table with no NULL `__v` — steps 2–4
+    * of [[exactPercentilesDist]], keyed. Per-key min/max/total come from
+    * one tiny aggregate. A key whose probe set came back incomplete
+    * yields NULLs, not a short array an element_at would mis-index. */
+  private def percentilesByKey(counts: DataFrame, ps: Seq[Double],
+      buckets: Int): DataFrame = {
     val mm = counts.groupBy("__k")
       .agg(min("__v").as("__mn"), max("__v").as("__mx"),
         sum("__c").as("__n"))
@@ -790,13 +773,8 @@ object GraftOps {
       .groupBy("__k")
       .agg(transform(array_sort(collect_list(struct(col("__i"), col("__q")))),
         x => x.getField("__q")).as("q0"))
-      // Same partial-probe guard as the single-group form: a key whose
-      // probe set came back incomplete must yield NULLs, not a short
-      // array an element_at would mis-index.
-      .select(col("__k").as(keyCol),
-        when(size(col("q0")) === ps.size, col("q0"))
-          .otherwise(array(ps.map(_ => lit(null).cast("double")): _*))
-          .as("q"))
+      .select(col("__k"), when(size(col("q0")) === ps.size, col("q0"))
+        .otherwise(nullQuantiles(ps)).as("q"))
   }
 
   /** Packing core over an existing chunk table (idCol, chunk_id,
@@ -826,22 +804,14 @@ object GraftOps {
     * the per-doc count. */
   def decontaminate(docs: DataFrame, benchmark: DataFrame, idCol: String,
       textCol: String, n: Int): DataFrame = {
-    def grams(df: DataFrame): DataFrame = {
-      val w = Window.partitionBy(idCol).orderBy("pos")
-      df.select(col(idCol),
-          posexplode(split(trim(col(textCol)), "\\s+")).as(Seq("pos", "tok")))
-        .filter(col("tok") =!= "")
-        .withColumn("g",
-          when(lead(col("tok"), n - 1).over(w).isNotNull,
-            concat_ws(" ", col("tok") +: (1 until n).map(i =>
-              lead(col("tok"), i).over(w)): _*)))
-        .filter(col("g").isNotNull)
-        .select(col(idCol), col("g"))
-    }
+    def grams(df: DataFrame): DataFrame =
+      wordGrams(df, idCol, textCol, n).filter(col("gram").isNotNull)
+        .select(col(idCol), col("gram"))
     grams(docs)
-      .join(broadcast(grams(benchmark).select("g").distinct()), Seq("g"))
+      .join(broadcast(grams(benchmark).select("gram").distinct()),
+        Seq("gram"))
       .groupBy(idCol)
-      .agg(count_distinct(col("g")).as("n_shared_grams"))
+      .agg(count_distinct(col("gram")).as("n_shared_grams"))
   }
 
   /** Symmetric int8 scalar quantization of a double-array column:
@@ -1083,11 +1053,11 @@ object GraftOps {
     pageRankLoop(e, n, rounds, damping, None, outCol)
   }
 
-  /** Degree rides ON the edge row (one partitioned window over the
-    * checkpointed edge table) instead of re-joining a degree table
-    * every round — the round loop is then exactly two shuffles: the
-    * rank join and the contribution sum. */
-  private def symEdgesWithDeg(edges: DataFrame, srcCol: String,
+  /** Both directions of every edge as long (__src, __dst) rows, in ONE
+    * pass over `edges` (explode both directions) rather than a union of
+    * two reads — halves the upstream recompute when the edge input is a
+    * pipeline instead of a table. */
+  private def bothDirections(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame =
     edges.select(explode(array(
         struct(col(srcCol).cast("long").as("s"),
@@ -1095,6 +1065,14 @@ object GraftOps {
         struct(col(dstCol).cast("long").as("s"),
           col(srcCol).cast("long").as("t")))).as("p"))
       .select(col("p.s").as("__src"), col("p.t").as("__dst"))
+
+  /** Degree rides ON the edge row (one partitioned window over the
+    * checkpointed edge table) instead of re-joining a degree table
+    * every round — the round loop is then exactly two shuffles: the
+    * rank join and the contribution sum. */
+  private def symEdgesWithDeg(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    bothDirections(edges, srcCol, dstCol)
       .distinct()
       .withColumn("__deg",
         count(lit(1)).over(Window.partitionBy("__src")))
@@ -1220,12 +1198,7 @@ object GraftOps {
     * union them back labeled as themselves. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int): DataFrame = {
-    val e = edges.select(explode(array(
-        struct(col(srcCol).cast("long").as("s"),
-          col(dstCol).cast("long").as("t")),
-        struct(col(dstCol).cast("long").as("s"),
-          col(srcCol).cast("long").as("t")))).as("p"))
-      .select(col("p.s").as("__src"), col("p.t").as("__dst"))
+    val e = bothDirections(edges, srcCol, dstCol)
       .distinct()
       .localCheckpoint()
     var labels = e.select(col("__src").as("__id")).distinct()
@@ -1331,12 +1304,7 @@ object GraftOps {
     // round i has zero surviving edges in every later round), so
     // filtering the fixed table by ONLY the latest set is identical to
     // the old cumulative restriction.
-    val e = edges.select(explode(array(
-        struct(col(srcCol).cast("long").as("s"),
-          col(dstCol).cast("long").as("t")),
-        struct(col(dstCol).cast("long").as("s"),
-          col(srcCol).cast("long").as("t")))).as("p"))
-      .select(col("p.s").as("__src"), col("p.t").as("__dst"))
+    val e = bothDirections(edges, srcCol, dstCol)
       .distinct().localCheckpoint()
     // Round state (the survivor set) is ~nodes-sized — RoundCut keeps
     // the last two alive exactly as the old edge-state loop did. The
@@ -1377,9 +1345,6 @@ object GraftOps {
   def connectedComponents(nodes: DataFrame, idCol: String,
       edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int): DataFrame = {
-    // Symmetrize with ONE pass over edges (explode both directions)
-    // rather than a union of two reads — halves the upstream recompute
-    // when the edge input is a pipeline instead of a table.
     // localCheckpoint materializes the (possibly expensive) upstream
     // pipeline ONCE — each of the `rounds` iterations rescans the stored
     // blocks instead of recomputing the edge derivation (for LSH pairs
@@ -1392,12 +1357,7 @@ object GraftOps {
     // loop is then two shuffles (label join + min groupBy) instead of
     // three — the old shape needed a third per-round left join against
     // the full node set just to re-attach unimproved labels.
-    val e = edges.select(explode(array(
-        struct(col(srcCol).cast("long").as("s"),
-          col(dstCol).cast("long").as("t")),
-        struct(col(dstCol).cast("long").as("s"),
-          col(srcCol).cast("long").as("t")))).as("p"))
-      .select(col("p.s").as("__src"), col("p.t").as("__dst"))
+    val e = bothDirections(edges, srcCol, dstCol)
       .union(nodes.select(col(idCol).cast("long").as("__src"),
         col(idCol).cast("long").as("__dst")))
       .localCheckpoint()
@@ -1440,12 +1400,7 @@ object GraftOps {
   def connectedComponentsFixpoint(nodes: DataFrame, idCol: String,
       edges: DataFrame, srcCol: String, dstCol: String,
       maxRounds: Int = 50): (DataFrame, Int) = {
-    val e = edges.select(explode(array(
-        struct(col(srcCol).cast("long").as("s"),
-          col(dstCol).cast("long").as("t")),
-        struct(col(dstCol).cast("long").as("s"),
-          col(srcCol).cast("long").as("t")))).as("p"))
-      .select(col("p.s").as("__src"), col("p.t").as("__dst"))
+    val e = bothDirections(edges, srcCol, dstCol)
       .union(nodes.select(col(idCol).cast("long").as("__src"),
         col(idCol).cast("long").as("__dst")))
       .localCheckpoint()

@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -43,15 +45,27 @@ object SharedStage {
   private val builds =
     scala.collection.concurrent.TrieMap.empty[String, Int]
 
+  // Entries are keyed by an id handed out once per session object and
+  // never reused: identityHashCode is not unique, so two live sessions
+  // could share entries, and a new session could inherit a stopped
+  // one's entries (whose RDDs still read as persisted). The map holds
+  // sessions weakly, so it does not keep a finished session alive.
+  private val nextId = new AtomicLong()
+  private val ids = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, java.lang.Long]())
+
+  private def prefix(session: SparkSession): String =
+    s"${ids.computeIfAbsent(session, _ => nextId.incrementAndGet())}:"
+
   private def alive(df: DataFrame): Boolean =
     df.queryExecution.analyzed match {
       case lr: LogicalRDD => lr.rdd.getStorageLevel != StorageLevel.NONE
       case _ => false
     }
 
-  def apply(session: org.apache.spark.sql.SparkSession, key: String)
+  def apply(session: SparkSession, key: String)
       (build: => DataFrame): DataFrame = {
-    val k = s"${System.identityHashCode(session)}:$key"
+    val k = prefix(session) + key
     // Double-checked: queries that build plan branches from a thread
     // pool (emb_ivf_k_recall's per-k futures, importDelta) may race to
     // the same core; without the lock both would materialize and one
@@ -71,22 +85,21 @@ object SharedStage {
   /** How many times `key`'s stage has been MATERIALIZED in `session`
     * (cache hits don't count) — the observable the sharing spec pins:
     * two consumers, one build. */
-  def buildsFor(session: org.apache.spark.sql.SparkSession,
-      key: String): Int =
-    builds.getOrElse(s"${System.identityHashCode(session)}:$key", 0)
+  def buildsFor(session: SparkSession, key: String): Int =
+    builds.getOrElse(prefix(session) + key, 0)
 
   /** Total stage materializations in `session` across all keys. A
     * harness diffs this around a query run to attribute cold-core
     * builds to the repeat that paid them (Bench's core_builds field). */
-  def totalBuilds(session: org.apache.spark.sql.SparkSession): Int = {
-    val p = s"${System.identityHashCode(session)}:"
+  def totalBuilds(session: SparkSession): Int = {
+    val p = prefix(session)
     builds.collect { case (k, v) if k.startsWith(p) => v }.sum
   }
 
   /** RDD ids of the currently-ALIVE memoized stages for `session`:
     * the RDDs `sweep(keepCores = true)` keeps. */
-  def liveRddIds(session: org.apache.spark.sql.SparkSession): Set[Int] = {
-    val p = s"${System.identityHashCode(session)}:"
+  def liveRddIds(session: SparkSession): Set[Int] = {
+    val p = prefix(session)
     cache.collect {
       case (k, df) if k.startsWith(p) && alive(df) =>
         df.queryExecution.analyzed match {
@@ -108,8 +121,7 @@ object SharedStage {
     * pipeline to rebuild its cores cold (media_retention's 5.5→24 s
     * repeat swings). Dropping them too makes each query pay — and be
     * billed for — its own materializations. */
-  def sweep(session: org.apache.spark.sql.SparkSession,
-      keepCores: Boolean): Unit = {
+  def sweep(session: SparkSession, keepCores: Boolean): Unit = {
     val keep = if (keepCores) liveRddIds(session) else Set.empty[Int]
     session.sparkContext.getPersistentRDDs.values
       .filterNot(r => keep.contains(r.id))

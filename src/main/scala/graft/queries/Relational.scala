@@ -52,6 +52,25 @@ object Relational {
       graft.api.GraftOps.labelPropagation(edges, "src", "dst", rounds = 3)
     }
 
+  /** `base` (c_custkey, c_name, c_acctbal) after cdc_merge's changes
+    * feed (see its registry comment); dq_table_diff diffs against it. */
+  private def cdcMerged(base: DataFrame): DataFrame = {
+    val updates = base.filter(col("c_custkey") % 5 === 0)
+      .select(col("c_custkey"), (col("c_acctbal") + 100.0).as("new_bal"))
+    val deletes = base.filter(col("c_custkey") % 7 === 0 &&
+      col("c_custkey") % 5 =!= 0).select("c_custkey")
+    val inserts = base.filter(col("c_custkey") % 11 === 0)
+      .select((col("c_custkey") + 1000000L).as("c_custkey"),
+        concat(lit("NEW-"), col("c_name")).as("c_name"),
+        lit(0.0).as("c_acctbal"))
+    base
+      .join(deletes, Seq("c_custkey"), "left_anti")
+      .join(updates, Seq("c_custkey"), "left")
+      .select(col("c_custkey"), col("c_name"),
+        coalesce(col("new_bal"), col("c_acctbal")).as("c_acctbal"))
+      .unionByName(inserts)
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- S: scans / sources --------------------------------------------
     // S1 tenant-filtered scan (utils.py:24-31). Filter reaches the parquet
@@ -963,24 +982,9 @@ object Relational {
     // anti join (deletes) + left join & coalesce (updates) + union
     // (inserts). The changes feed is derived deterministically from the
     // base so the oracle can reproduce it.
-    "cdc_merge" -> ((s, d) => {
-      val base = Tables.customer(s, d)
-        .select("c_custkey", "c_name", "c_acctbal")
-      val updates = base.filter(col("c_custkey") % 5 === 0)
-        .select(col("c_custkey"), (col("c_acctbal") + 100.0).as("new_bal"))
-      val deletes = base.filter(col("c_custkey") % 7 === 0 &&
-        col("c_custkey") % 5 =!= 0).select("c_custkey")
-      val inserts = base.filter(col("c_custkey") % 11 === 0)
-        .select((col("c_custkey") + 1000000L).as("c_custkey"),
-          concat(lit("NEW-"), col("c_name")).as("c_name"),
-          lit(0.0).as("c_acctbal"))
-      base
-        .join(deletes, Seq("c_custkey"), "left_anti")
-        .join(updates, Seq("c_custkey"), "left")
-        .select(col("c_custkey"), col("c_name"),
-          coalesce(col("new_bal"), col("c_acctbal")).as("c_acctbal"))
-        .unionByName(inserts)
-    }),
+    "cdc_merge" -> ((s, d) =>
+      cdcMerged(Tables.customer(s, d)
+        .select("c_custkey", "c_name", "c_acctbal"))),
 
     // Snapshot RECONCILIATION — the diff report run after any
     // migration/backfill/CDC apply: full-outer join two table versions
@@ -994,19 +998,7 @@ object Relational {
     "dq_table_diff" -> ((s, d) => {
       val v1 = Tables.customer(s, d)
         .select("c_custkey", "c_name", "c_acctbal")
-      val updates = v1.filter(col("c_custkey") % 5 === 0)
-        .select(col("c_custkey"), (col("c_acctbal") + 100.0).as("new_bal"))
-      val deletes = v1.filter(col("c_custkey") % 7 === 0 &&
-        col("c_custkey") % 5 =!= 0).select("c_custkey")
-      val inserts = v1.filter(col("c_custkey") % 11 === 0)
-        .select((col("c_custkey") + 1000000L).as("c_custkey"),
-          concat(lit("NEW-"), col("c_name")).as("c_name"),
-          lit(0.0).as("c_acctbal"))
-      val v2 = v1.join(deletes, Seq("c_custkey"), "left_anti")
-        .join(updates, Seq("c_custkey"), "left")
-        .select(col("c_custkey"), col("c_name"),
-          coalesce(col("new_bal"), col("c_acctbal")).as("c_acctbal"))
-        .unionByName(inserts)
+      val v2 = cdcMerged(v1)
         .select(col("c_custkey"), col("c_name").as("b_name"),
           col("c_acctbal").as("b_bal"))
       val nameChanged = col("c_name") =!= col("b_name")

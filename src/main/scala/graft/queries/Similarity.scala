@@ -1095,22 +1095,7 @@ object Similarity {
     val e = unitVecs(s, d).select("vec_id", "u")
     val c0 = e.filter(col("vec_id") < k)
       .select(col("vec_id").as("cid"), col("u").as("cu"))
-    // Best-centroid pick as a max(struct) AGGREGATE, not a row_number
-    // window (r22, guide §2.3: aggregate before you shuffle): the
-    // window shape exchanged and sorted all N·k scored rows WITH the
-    // 64-double vector riding along; the aggregate partially reduces
-    // to one row per vec_id map-side (the broadcast crossJoin keeps a
-    // vector's every centroid score in one partition), so the exchange
-    // carries N rows, not N·k. Ordering is identical: max struct picks
-    // the largest sc, ties to the largest -cid = smallest cid — the
-    // old (sc DESC, cid ASC) row_number rule; later struct fields
-    // never participate (cid is unique per vec_id).
-    val a0 = e.crossJoin(broadcast(c0))
-      .select(col("vec_id"), col("u"), col("cid"),
-        round(dot(col("u"), col("cu")), 6).as("sc"))
-      .groupBy("vec_id")
-      .agg(max(struct(col("sc"), (-col("cid")).as("nc"),
-        col("cid"), col("u"))).as("b"))
+    val a0 = nearestCentroid(e, c0)
       .select(col("vec_id"), col("b.u").as("u"), col("b.cid").as("cl"))
     a0.select(col("cl"), posexplode(col("u")).as(Seq("idx", "val")))
       .groupBy("cl", "idx")
@@ -1123,6 +1108,26 @@ object Similarity {
       .select(col("cl").as("cid"),
         transform(col("raw"), x => x / col("nrm")).as("cu"))
   }
+
+  /** Each unit vector (vec_id, u) against every centroid (cid, cu):
+    * per vec_id, `b` = max(struct(sc, -cid, cid, u)) — the largest
+    * rounded cosine sc, ties to the smallest cid; later struct fields
+    * never participate (cid is unique per vec_id). A max(struct)
+    * AGGREGATE, not a row_number window (r22, guide §2.3: aggregate
+    * before you shuffle): the window shape exchanged and sorted all N·k
+    * scored rows WITH the 64-double vector riding along (at sf0.1's
+    * k=√n branch: 682k rows ≈ 350 MB through one exchange, 19.8 CPU-s
+    * in the profile); the aggregate partially reduces to one row per
+    * vec_id map-side (the broadcast crossJoin keeps a vector's every
+    * centroid score in one partition), so the exchange carries N rows,
+    * not N·k. */
+  private def nearestCentroid(e: DataFrame, c: DataFrame): DataFrame =
+    e.crossJoin(broadcast(c))
+      .select(col("vec_id"), col("u"), col("cid"),
+        round(dot(col("u"), col("cu")), 6).as("sc"))
+      .groupBy("vec_id")
+      .agg(max(struct(col("sc"), (-col("cid")).as("nc"),
+        col("cid"), col("u"))).as("b"))
 
   /** The STORED trained IVF index — centroids and cell assignments as
     * SharedStage cores (the bandIndex/pairTable discipline applied to
@@ -1164,17 +1169,7 @@ object Similarity {
     val c1 =
       if (k == ServedK) storedCentroids(s, d)
       else kmeansCentroids(s, d, k)
-    // Same max(struct) argmax as kmeansCentroids' a0 (guide §2.3): the
-    // old row_number window exchanged+sorted N·k rows carrying the
-    // 64-double vector (at sf0.1's k=√n branch: 682k rows ≈ 350 MB
-    // through one exchange, 19.8 CPU-s in the profile); the aggregate
-    // reduces map-side to N rows. Tie rule identical (sc DESC, cid ASC).
-    e.crossJoin(broadcast(c1))
-      .select(col("vec_id"), col("u"), col("cid"),
-        round(dot(col("u"), col("cu")), 6).as("sc"))
-      .groupBy("vec_id")
-      .agg(max(struct(col("sc"), (-col("cid")).as("nc"),
-        col("cid"), col("u"))).as("b"))
+    nearestCentroid(e, c1)
       .select(col("vec_id"), col("b.u").as("u"),
         col("b.cid").as("cluster"), col("b.sc").as("score"))
   }

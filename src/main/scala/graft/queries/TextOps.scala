@@ -30,15 +30,6 @@ object TextOps {
       |   for i in range(1, greatest(len(toks) - 1, 1))] AS shingles
       |  FROM toked)""".stripMargin
 
-  /** MinHash signature table: doc_id, h0..h7 — the fan-out formulation of
-    * TextFunctions.minhashSig (two md5 digests per shingle computed ONCE,
-    * then 8 slice-minima via map-side partial aggregation; one shuffle of
-    * 8×8 hex chars per doc regardless of document length). */
-  /** Delegates to the user-facing API (graft.api.GraftOps) — the oracle
-    * below therefore continuously guards the library implementation. */
-  private def docsOf(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
-
   /** The duplicated-substring SPAN TABLE as a SharedStage core (r22):
     * dedup_substring_spans IS this table and txt_span_removal consumes
     * it as its removal input — the detector pass (gram windows, bucket
@@ -53,28 +44,30 @@ object TextOps {
     * future caller can never be served this frame. */
   private def spansCore(s: SparkSession, d: String): DataFrame =
     graft.operators.SharedStage(s, s"substringSpans:$d:n=8:occ=8:run=2") {
-      graft.api.GraftOps.substringSpans(docsOf(s, d), "doc_id", "text")
+      graft.api.GraftOps.substringSpans(Tables.documents(s, d),
+          "doc_id", "text")
     }
 
-  /** docsOf spread across the session's cores — ONLY for consumers
-    * whose per-row scan work is the measured bottleneck (the PII regex
-    * battery, the 64-column simhash fold): the harness corpus is one
-    * single-row-group parquet file, so those projections otherwise run
-    * on ONE task (Tables.spreadCpuDense rationale). Each call site is
-    * individually A/B-measured (r21): txt_pii_scrub 0.47→0.32 s and
+  /** The documents table spread across the session's cores — ONLY for
+    * consumers whose per-row scan work is the measured bottleneck (the
+    * PII regex battery, the 64-column simhash fold): the harness
+    * corpus is one single-row-group parquet file, so those projections
+    * otherwise run on ONE task (Tables.spreadCpuDense rationale). Each
+    * call site is individually A/B-measured (r21): txt_pii_scrub
+    * 0.47→0.32 s and
     * dedup_simhash 0.97→0.79 s keep it; txt_quality / txt_lang_id /
     * txt_span_removal measured neutral-to-worse (their scan work is
     * too light to pay for the exchange) and were reverted to the raw
     * scan — a blanket spread was measured at +58 s across the registry,
     * so the default everywhere else stays unspread. */
   private def docsSpread(s: SparkSession, d: String): DataFrame =
-    Tables.spreadCpuDense(s, docsOf(s, d), s"$d/documents.parquet")
+    Tables.spreadCpuDense(s, Tables.documents(s, d), s"$d/documents.parquet")
 
   /** The samp_epoch_plan core (see its registry comment): per-source
     * token counts → target-weighted, 4×-capped epoch repeat factors.
     * Shared by the plan query and pipeline_train_manifest. */
   private def epochPlan(s: SparkSession, d: String): DataFrame = {
-    val perSrc = docsOf(s, d)
+    val perSrc = Tables.documents(s, d)
       .groupBy("source")
       .agg(sum(size(tokens(col("text"))).cast("long")).as("n_tokens"))
       .withColumn("w", lit(1L) +
@@ -91,6 +84,25 @@ object TextOps {
       .withColumn("planned_tokens",
         floor(col("epochs") * col("n_tokens").cast("double") + 0.5)
           .cast("long"))
+  }
+
+  /** One `synth` payload per document id: the corpus every media
+    * query decodes. */
+  private def synthDocs(s: SparkSession, d: String)(
+      synth: (DataFrame, String) => DataFrame): DataFrame =
+    synth(Tables.documents(s, d).select(col("doc_id")), "doc_id")
+
+  /** `pairs` (left_id, right_id) with `attrs`' columns attached to each
+    * end: `left`/`right` map an `attrs` column to its name on that side,
+    * and `id` is `attrs`' id column. */
+  private def joinPairSides(pairs: DataFrame, attrs: DataFrame, id: String,
+      left: Seq[(String, String)], right: Seq[(String, String)],
+      joinType: String = "inner"): DataFrame = {
+    def side(end: String, cols: Seq[(String, String)]) =
+      attrs.select(col(id).as(end) +: cols.map { case (c, a) =>
+        col(c).as(a) }: _*)
+    pairs.join(side("left_id", left), Seq("left_id"), joinType)
+      .join(side("right_id", right), Seq("right_id"), joinType)
   }
 
   /** Shared eval-harness derivation for ngram_jaccard/txt_containment:
@@ -134,19 +146,11 @@ object TextOps {
     * xxhash64 would turn every doc's trailing null shingle into a
     * phantom set element. */
   private def docShingleSets(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    val shRows = Tables.documents(s, d)
-      .select(col("doc_id"),
-        posexplode(split(trim(col("text")), "\\s+")).as(Seq("pos", "tok")))
-      .filter(col("tok") =!= "")
-      .withColumn("sgl",
-        when(lead(col("tok"), 2).over(w).isNotNull,
-          xxhash64(concat_ws(" ", col("tok"), lead(col("tok"), 1).over(w),
-            lead(col("tok"), 2).over(w)))))
+    val shRows = graft.api.GraftOps.wordGrams(Tables.documents(s, d),
+      "doc_id", "text", 3, xxhash64(_))
     Tables.documents(s, d).select(col("doc_id"))
       .join(shRows.groupBy("doc_id")
-        .agg(collect_set(col("sgl")).as("sh0")), Seq("doc_id"), "left")
+        .agg(collect_set(col("gram")).as("sh0")), Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("sh0"), array().cast("array<bigint>")).as("sh"))
   }
@@ -186,8 +190,64 @@ object TextOps {
     (gated, keep)
   }
 
+  /** Half-up micro-quantization: `x` rounded to 6 places as exact
+    * scaled longs, so sums of them are partition-order exact. */
+  private def micro(x: Column): Column =
+    (round(x, 6) * 1000000.0 + 0.5).cast("long")
+
+  /** The unigram-LM chain: per doc (doc_id, n_tokens, snll), snll the
+    * sum of micro-quantized −ln p(token) under exact corpus counts. */
+  private def unigramNll(s: SparkSession, d: String): DataFrame = {
+    val tok = Tables.documents(s, d)
+      .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
+    val cnt = tok.groupBy("term").agg(count(lit(1)).as("cnt"))
+    val tot = cnt.agg(sum("cnt").cast("long").as("total"))
+    tok.join(cnt, "term").crossJoin(broadcast(tot))
+      .withColumn("nll",
+        micro(-log(col("cnt").cast("double") / col("total").cast("double"))))
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_tokens"), sum("nll").as("snll"))
+  }
+
+  /** The frozen train/val/test split: an id-only md5 bucket in [0, 100)
+    * and its 80/10/10 name. */
+  private def splitBucket(id: Column): Column =
+    conv(substring(md5(id.cast("string")), 1, 4), 16, 10).cast("long") % 100
+
+  private def splitName(bucket: Column): Column =
+    when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
+
+  /** Code-vs-prose features per doc: chars, symbols, indented lines,
+    * language-keyword hits and the symbol ratio. */
+  private def codeFeatures(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+        length(col("text")).cast("long").as("n_chars"),
+        regexp_count(col("text"), lit("[{}();=<>]")).cast("long")
+          .as("n_sym"),
+        regexp_count(col("text"), lit("(?m)^(    |\\t)")).cast("long")
+          .as("n_indent"),
+        regexp_count(lower(col("text")),
+          lit("\\b(def|class|return|import|function|var|const)\\b"))
+          .cast("long").as("n_kw"))
+      .withColumn("sym_ratio",
+        when(col("n_chars") > 0L,
+          round(col("n_sym").cast("double") / col("n_chars"), 6))
+          .otherwise(lit(0.0)))
+
+  /** The 1-in-20 decontamination split: (train, flagged) — the training
+    * slice (doc_id % 20 != 0) and its docs sharing a word 8-gram with
+    * the held-out slice (doc_id % 20 == 0) standing in for the eval
+    * benchmark. */
+  private def heldOutContamination(s: SparkSession, d: String)
+      : (DataFrame, DataFrame) = {
+    val docs = Tables.documents(s, d)
+    val train = docs.filter(col("doc_id") % 20 =!= 0)
+    (train, graft.api.GraftOps.decontaminate(train,
+      docs.filter(col("doc_id") % 20 === 0), "doc_id", "text", n = 8))
+  }
+
   private def bandTable(s: SparkSession, d: String): DataFrame =
-    graft.api.GraftOps.minhashBands(docsOf(s, d), "doc_id", "text")
+    graft.api.GraftOps.minhashBands(Tables.documents(s, d), "doc_id", "text")
 
   /** The STORED MinHash band index — the stored-state emulation shared
     * by `idx_band_upsert` (the index WRITE path) and
@@ -202,9 +262,7 @@ object TextOps {
     * before materializing (the horizon gates' window counts) keep
     * their own builds — only the identical raw index is shared. */
   private def bandIndex(s: SparkSession, d: String): DataFrame =
-    graft.operators.SharedStage(s, s"bandIndex:$d") {
-      graft.api.GraftOps.minhashBands(docsOf(s, d), "doc_id", "text")
-    }
+    graft.operators.SharedStage(s, s"bandIndex:$d")(bandTable(s, d))
 
   /** The STORED LSH candidate-pair table — derived FROM the stored
     * band index (one more link in the bandIndex discipline's chain:
@@ -241,8 +299,7 @@ object TextOps {
   private def audioSigTable(s: SparkSession, d: String): DataFrame =
     graft.operators.SharedStage(s, s"audioSig:$d") {
       graft.multimodal.Multimodal.extractAudioEnergy(
-          graft.multimodal.Multimodal.synthWavFamilies(
-            Tables.documents(s, d).select(col("doc_id")), "doc_id"),
+          synthDocs(s, d)(graft.multimodal.Multimodal.synthWavFamilies),
           windowFrames = 50)
         .groupBy("media_id")
         .agg(
@@ -260,9 +317,27 @@ object TextOps {
     * both cappedKeyPairCounts sides and two hash re-joins read it). */
   private def imageAHashTable(s: SparkSession, d: String): DataFrame =
     graft.multimodal.Multimodal.extractAHash(
-      graft.multimodal.Multimodal.synthPngFamilies(
-        Tables.documents(s, d).select(col("doc_id")), "doc_id"))
+      synthDocs(s, d)(graft.multimodal.Multimodal.synthPngFamilies))
       .localCheckpoint()
+
+  /** Image near-dup candidates scored: aHash (media_id, ahash) rows →
+    * 4×16-bit band keys → capped in-bucket pairs (left_id, right_id,
+    * n_shared) with both hashes and their exact Hamming distance. */
+  private def imageBandPairs(ah: DataFrame): DataFrame = {
+    val bands = ah.select(col("media_id"),
+      posexplode(array((0 to 3).map(b =>
+        substring(col("ahash"), b * 16 + 1, 16)): _*))
+        .as(Seq("band_idx", "band_val")))
+    joinPairSides(graft.api.GraftOps.cappedKeyPairCounts(
+        bands.select(
+          concat_ws(":", col("band_idx"), col("band_val")).as("bkey"),
+          col("media_id")),
+        "bkey", "media_id"),
+      ah, "media_id", Seq("ahash" -> "a_hash"), Seq("ahash" -> "b_hash"))
+      .withColumn("hamming",
+        expr("CAST(size(filter(zip_with(split(a_hash, ''), " +
+          "split(b_hash, ''), (x, y) -> x != y), p -> p)) AS BIGINT)"))
+  }
 
   /** The image keep-best core (see mm_image_keep_best's registry
     * comment): band candidates → Hamming ≤ 3 → fixpoint CC → keep the
@@ -270,28 +345,14 @@ object TextOps {
     * pipeline_media_retention both consume it. */
   private def imageKeepBest(s: SparkSession, d: String): DataFrame =
     graft.operators.SharedStage(s, s"imageKeepBest:$d") {
-      val media = graft.multimodal.Multimodal.synthPngFamilies(
-        Tables.documents(s, d).select(col("doc_id")), "doc_id")
-        .localCheckpoint()
+      val media = synthDocs(s, d)(
+        graft.multimodal.Multimodal.synthPngFamilies).localCheckpoint()
       val ah = graft.multimodal.Multimodal.extractAHash(media)
         .localCheckpoint()
       val px = graft.multimodal.Multimodal.extractFeatures(media)
         .select(col("media_id"),
           (col("width") * col("height")).cast("long").as("pixels"))
-      val bands = ah.select(col("media_id"),
-        posexplode(array((0 to 3).map(b =>
-          substring(col("ahash"), b * 16 + 1, 16)): _*))
-          .as(Seq("band_idx", "band_val")))
-      val dup = graft.api.GraftOps.cappedKeyPairCounts(
-          bands.select(concat_ws(":", col("band_idx"), col("band_val"))
-            .as("bkey"), col("media_id")),
-          "bkey", "media_id")
-        .join(ah.select(col("media_id").as("left_id"),
-          col("ahash").as("a_hash")), Seq("left_id"))
-        .join(ah.select(col("media_id").as("right_id"),
-          col("ahash").as("b_hash")), Seq("right_id"))
-        .filter(expr("size(filter(zip_with(split(a_hash, ''), " +
-          "split(b_hash, ''), (x, y) -> x != y), p -> p)) <= 3"))
+      val dup = imageBandPairs(ah).filter(col("hamming") <= 3)
         .select("left_id", "right_id")
       keepBest(graft.api.GraftOps.connectedComponentsFixpoint(
         ah.select(col("media_id")), "media_id", dup,
@@ -309,7 +370,7 @@ object TextOps {
       // aggregate over the token array per row — ZERO shuffle, where
       // the explode/groupBy formulation pays a (map-side-combined)
       // exchange. Bit-identical sums either way.
-      docsOf(s, d)
+      Tables.documents(s, d)
         .select(col("doc_id"), tokenCount(col("text")).cast("long")
           .as("n_tokens"),
           classifierMarginMicro(col("text")).as("mm"))
@@ -328,8 +389,7 @@ object TextOps {
       graft.expressions.VectorExpressions.register(s)
       import Similarity.dot
       val img = graft.multimodal.Multimodal.extractBandSums(
-        graft.multimodal.Multimodal.synthPngPattern(
-          Tables.documents(s, d).select(col("doc_id")), "doc_id"))
+        synthDocs(s, d)(graft.multimodal.Multimodal.synthPngPattern))
       val ic = img
         .withColumn("tot",
           aggregate(col("bsums"), lit(0L), (a, x) => a + x))
@@ -359,8 +419,7 @@ object TextOps {
     graft.operators.SharedStage(s, s"sceneCuts:$d") {
       import org.apache.spark.sql.expressions.Window
       val fh = graft.multimodal.Multimodal.extractFrameHashes(
-        graft.multimodal.Multimodal.synthMp4Scenes(
-          Tables.documents(s, d).select(col("doc_id")), "doc_id"))
+        synthDocs(s, d)(graft.multimodal.Multimodal.synthMp4Scenes))
       val w = Window.partitionBy("media_id").orderBy("sample_idx")
       fh.withColumn("prev", lag(col("fhash"), 1).over(w))
         .withColumn("is_scene_start",
@@ -379,8 +438,7 @@ object TextOps {
     graft.operators.SharedStage(s, s"audioSegments:$d") {
       import org.apache.spark.sql.expressions.Window
       val en = graft.multimodal.Multimodal.extractAudioEnergy(
-        graft.multimodal.Multimodal.synthWavSegments(
-          Tables.documents(s, d).select(col("doc_id")), "doc_id"),
+        synthDocs(s, d)(graft.multimodal.Multimodal.synthWavSegments),
         windowFrames = 50)
       val w = Window.partitionBy("media_id").orderBy("window_idx")
       en.withColumn("is_silent", col("abs_sum") === 0L)
@@ -395,18 +453,21 @@ object TextOps {
           col("segment_id").cast("long").as("segment_id"))
     }
 
+  /** Audio near-dup candidates: capped in-bucket pairs of equal `sig`
+    * with both sides' prefix-window sums (l0, l1) and (r0, r1). */
+  private def audioSigPairs(sg: DataFrame): DataFrame =
+    joinPairSides(graft.api.GraftOps.cappedKeyPairCounts(
+        sg.select(col("sig"), col("media_id")), "sig", "media_id"),
+      sg, "media_id", Seq("s0" -> "l0", "s1" -> "l1"),
+      Seq("s0" -> "r0", "s1" -> "r1"))
+
   /** The audio keep-best core (see mm_audio_keep_best's registry
     * comment): exact-prefix dup edges → fixpoint CC → keep the
     * longest cut. A SharedStage like its image/video siblings. */
   private def audioKeepBest(s: SparkSession, d: String): DataFrame =
     graft.operators.SharedStage(s, s"audioKeepBest:$d") {
       val sg = audioSigTable(s, d)
-      val dup = graft.api.GraftOps.cappedKeyPairCounts(
-          sg.select(col("sig"), col("media_id")), "sig", "media_id")
-        .join(sg.select(col("media_id").as("left_id"),
-          col("s0").as("l0"), col("s1").as("l1")), Seq("left_id"))
-        .join(sg.select(col("media_id").as("right_id"),
-          col("s0").as("r0"), col("s1").as("r1")), Seq("right_id"))
+      val dup = audioSigPairs(sg)
         .filter(col("l0") === col("r0") && col("l1") === col("r1"))
         .select("left_id", "right_id")
       keepBest(graft.api.GraftOps.connectedComponentsFixpoint(
@@ -502,8 +563,8 @@ object TextOps {
   private def frameHashCore(s: SparkSession, d: String): DataFrame =
     graft.operators.SharedStage(s, s"frameHashes:$d") {
       graft.multimodal.Multimodal.extractFrameHashes(
-        graft.multimodal.Multimodal.synthMp4FramesShared(
-          Tables.documents(s, d).select(col("doc_id")), "doc_id", 5))
+        synthDocs(s, d)(
+          graft.multimodal.Multimodal.synthMp4FramesShared(_, _, 5)))
     }
 
   /** Star edges of the video keep-best chain over (media_id, fhash)
@@ -576,7 +637,7 @@ object TextOps {
     * consumer plans it inline (no materialization of its own). */
   private def nearDupClusters(s: SparkSession, d: String): DataFrame =
     graft.api.GraftOps.connectedComponents(
-      docsOf(s, d).select(col("doc_id")), "doc_id",
+      Tables.documents(s, d).select(col("doc_id")), "doc_id",
       pairTable(s, d), "left_id", "right_id", rounds = 2)
 
   /** Shared DuckDB CTEs reproducing signatures/bandTable. */
@@ -652,11 +713,12 @@ object TextOps {
 
     // Quality scoring: stopword / punctuation / mean-token-length features.
     "txt_quality" -> ((s, d) =>
-      graft.api.GraftOps.qualityFeatures(docsOf(s, d), "doc_id", "text")),
+      graft.api.GraftOps.qualityFeatures(Tables.documents(s, d),
+          "doc_id", "text")),
 
     // Heuristic language-ID: argmax of per-language stopword evidence.
     "txt_lang_id" -> ((s, d) =>
-      docsOf(s, d).select(col("doc_id"),
+      Tables.documents(s, d).select(col("doc_id"),
         graft.api.GraftOps.languageOf(col("text")).as("lang_guess"))),
 
     // READABILITY (Flesch reading ease) — the classic fluency feature a
@@ -666,7 +728,7 @@ object TextOps {
     // in one fixed-order double expression. Pure per-row projection —
     // codegen'd regexp_count, zero shuffle.
     "txt_readability" -> ((s, d) =>
-      docsOf(s, d)
+      Tables.documents(s, d)
         .select(col("doc_id"),
           size(tokens(col("text"))).cast("long").as("n_words"),
           greatest(regexp_count(col("text"), lit("[.!?]+")), lit(1))
@@ -688,20 +750,7 @@ object TextOps {
     // projections, no shuffle; thresholds are explicit so downstream
     // can re-cut without recomputing features.
     "txt_code_detect" -> ((s, d) =>
-      docsOf(s, d)
-        .select(col("doc_id"),
-          length(col("text")).cast("long").as("n_chars"),
-          regexp_count(col("text"), lit("[{}();=<>]")).cast("long")
-            .as("n_sym"),
-          regexp_count(col("text"), lit("(?m)^(    |\\t)")).cast("long")
-            .as("n_indent"),
-          regexp_count(lower(col("text")),
-            lit("\\b(def|class|return|import|function|var|const)\\b"))
-            .cast("long").as("n_kw"))
-        .withColumn("sym_ratio",
-          when(col("n_chars") > 0L,
-            round(col("n_sym").cast("double") / col("n_chars"), 6))
-            .otherwise(lit(0.0)))
+      codeFeatures(Tables.documents(s, d))
         .withColumn("is_code",
           col("sym_ratio") > 0.05 || col("n_kw") >= 3L)),
 
@@ -712,21 +761,10 @@ object TextOps {
     // column; the plan is the dedup hash-groupBy + left join plus the
     // per-row detection projections — nothing corpus-squared.
     "pipeline_code_routing" -> ((s, d) => {
-      val docs = docsOf(s, d)
+      val docs = Tables.documents(s, d)
       val kept = graft.api.GraftOps.dedupExact(docs, "doc_id", "text")
         .select(col("doc_id")).withColumn("kept", lit(true))
-      docs
-        .select(col("doc_id"),
-          length(col("text")).cast("long").as("n_chars"),
-          regexp_count(col("text"), lit("[{}();=<>]")).cast("long")
-            .as("n_sym"),
-          regexp_count(lower(col("text")),
-            lit("\\b(def|class|return|import|function|var|const)\\b"))
-            .cast("long").as("n_kw"))
-        .withColumn("sym_ratio",
-          when(col("n_chars") > 0L,
-            round(col("n_sym").cast("double") / col("n_chars"), 6))
-            .otherwise(lit(0.0)))
+      codeFeatures(docs)
         .join(kept, Seq("doc_id"), "left")
         .select(col("doc_id"),
           when(coalesce(col("kept"), lit(false)) === false, "drop_dup")
@@ -810,18 +848,11 @@ object TextOps {
     // most minima. All codegen: posexplode + lead-shingles + frame-min.
     "txt_winnow_fp" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val wLead = Window.partitionBy("doc_id").orderBy("pos")
       val wFrame = Window.partitionBy("doc_id").orderBy("pos")
         .rowsBetween(Window.currentRow, 3)
-      docsOf(s, d)
-        .select(col("doc_id"),
-          posexplode(split(trim(col("text")), "\\s+")).as(Seq("pos", "tok")))
-        .filter(col("tok") =!= "")
-        .withColumn("sgl",
-          when(lead(col("tok"), 2).over(wLead).isNotNull,
-            concat_ws(" ", col("tok"), lead(col("tok"), 1).over(wLead),
-              lead(col("tok"), 2).over(wLead))))
-        .withColumn("h", substring(md5(col("sgl")), 1, 8))
+      graft.api.GraftOps.wordGrams(Tables.documents(s, d),
+          "doc_id", "text", 3)
+        .withColumn("h", substring(md5(col("gram")), 1, 8))
         .withColumn("wmin", min(col("h")).over(wFrame))
         .filter(col("wmin").isNotNull)
         .select(col("doc_id"), col("wmin").as("fp"))
@@ -854,7 +885,8 @@ object TextOps {
     // with the stored corpus index is exactly what makes the streaming
     // ingest gate's probes meaningful.
     "dedup_bands_rowlocal" -> ((s, d) =>
-      graft.api.GraftOps.rowLocalBands(docsOf(s, d), "doc_id", "text")),
+      graft.api.GraftOps.rowLocalBands(Tables.documents(s, d),
+          "doc_id", "text")),
 
     // MinHash-LSH candidate pairs, generated BUCKET-LOCALLY: group by
     // (band_idx, band_hash), collect the tiny member list, emit sorted
@@ -886,7 +918,7 @@ object TextOps {
     // evaluation free, so the join form wins; see cappedKeyPairCounts'
     // Scaladoc for the trade).
     "dedup_first_in_horizon" -> ((s, d) => {
-      val docs = docsOf(s, d)
+      val docs = Tables.documents(s, d)
       val hits = horizonHits(docs).withColumn("hit", lit(true))
       docs.select("doc_id")
         .join(hits, Seq("doc_id"), "left")
@@ -910,7 +942,7 @@ object TextOps {
     // the sibling; StreamingSpec closes the loop by feeding the
     // stream gate these exact timestamps.
     "dedup_first_in_horizon_ts" -> ((s, d) => {
-      val docs = docsOf(s, d)
+      val docs = Tables.documents(s, d)
       def tsCol = expr("TIMESTAMP '2024-01-01 00:00:00' + " +
         "make_interval(0, 0, 0, 0, 0, CAST(doc_id * 37 % 97 AS INT), 0)")
       val bands = graft.api.GraftOps.bucketSalt(
@@ -953,13 +985,8 @@ object TextOps {
     // ~6.8 KB with k = 0.2·len (the O((2k+1)·n) band), growing with
     // stricter thresholds — worth it from ~1 KB documents up.
     "dedup_edit_verified" -> ((s, d) => {
-      val docs = docsOf(s, d)
-      val cand = pairTable(s, d)
-      val a = docs.select(col("doc_id").as("left_id"),
-        col("text").as("__ta"))
-      val b = docs.select(col("doc_id").as("right_id"),
-        col("text").as("__tb"))
-      cand.join(a, Seq("left_id")).join(b, Seq("right_id"))
+      joinPairSides(pairTable(s, d), Tables.documents(s, d), "doc_id",
+          Seq("text" -> "__ta"), Seq("text" -> "__tb"))
         // One levenshtein per pair, projected ONCE and referenced
         // twice downstream. CollapseProject will not inline a
         // non-cheap expression used at two sites, so the analyzed
@@ -1004,7 +1031,7 @@ object TextOps {
     // corpus total rides in as a broadcast 1-row aggregate.
     "tok_vocab_coverage" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val freq = docsOf(s, d)
+      val freq = Tables.documents(s, d)
         .select(explode(tokens(col("text"))).as("token"))
         .groupBy("token").agg(count(lit(1)).as("freq"))
       val total = freq.agg(sum(col("freq")).as("total"))
@@ -1065,7 +1092,8 @@ object TextOps {
     // it feeds the band explode AND both sides of the pair join, and
     // exchange reuse does not cross broadcast joins.
     "dedup_simhash_pairs" -> ((s, d) => {
-      val sh = graft.api.GraftOps.simhash(docsOf(s, d), "doc_id", "text")
+      val sh = graft.api.GraftOps.simhash(Tables.documents(s, d),
+          "doc_id", "text")
       val ck = sh.select(col("doc_id") +: (0 until 4).map(i =>
           conv(substring(col("simhash"), i * 16 + 1, 16), 2, 10)
             .cast("long").as(s"c$i")): _*)
@@ -1086,11 +1114,9 @@ object TextOps {
         .select(col("p.left_id").as("left_id"),
           col("p.right_id").as("right_id"))
         .distinct()
-      val ca = ck.select(col("doc_id").as("left_id") +:
-        (0 until 4).map(i => col(s"c$i").as(s"a$i")): _*)
-      val cb = ck.select(col("doc_id").as("right_id") +:
-        (0 until 4).map(i => col(s"c$i").as(s"b$i")): _*)
-      pairs.join(ca, Seq("left_id")).join(cb, Seq("right_id"))
+      joinPairSides(pairs, ck, "doc_id",
+          (0 until 4).map(i => s"c$i" -> s"a$i"),
+          (0 until 4).map(i => s"c$i" -> s"b$i"))
         .select(col("left_id"), col("right_id"),
           (0 until 4).map(i =>
             bit_count(col(s"a$i").bitwiseXOR(col(s"b$i"))))
@@ -1134,7 +1160,7 @@ object TextOps {
     // any diameter, so a chain-shaped near-dup cluster (A~B~C where
     // A and C never pair directly) still collapses to one cluster id.
     "graph_cc_exact" -> ((s, d) => {
-      val docs = docsOf(s, d)
+      val docs = Tables.documents(s, d)
       val pairs = pairTable(s, d)
       graft.api.GraftOps.connectedComponentsFixpoint(
           docs.select(col("doc_id")), "doc_id",
@@ -1154,7 +1180,7 @@ object TextOps {
     // recompute: the ORACLE IS graph_cc_exact's full-corpus SQL,
     // verbatim — incremental == batch is the contract under test.
     "graph_cc_incremental" -> ((s, d) => {
-      val docs = docsOf(s, d)
+      val docs = Tables.documents(s, d)
       // STORED state, declared as such (the bandIndex discipline —
       // r16's shared write/read index): the LSH candidate-pair table
       // and the previous run's component labels are artifacts a
@@ -1193,7 +1219,7 @@ object TextOps {
     // driver-side count()); ties break on term so ranking is total.
     "txt_tfidf_topk" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val docs = docsOf(s, d)
+      val docs = Tables.documents(s, d)
       val tf = docs
         .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
         .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
@@ -1217,7 +1243,7 @@ object TextOps {
     // no shuffle, no sort, no state; reproducible on any engine, which is
     // exactly what corpus-mixture rebalancing needs at 100 TB.
     "samp_stratified" -> ((s, d) =>
-      docsOf(s, d)
+      Tables.documents(s, d)
         // coalesce lang to '' on BOTH engines: concat_ws would silently
         // skip a NULL lang (hashing just the doc_id) while the oracle's
         // `||` would propagate NULL and drop the row entirely.
@@ -1234,13 +1260,10 @@ object TextOps {
     // projection, no shuffle; the same md5-prefix-to-int path the
     // shuffle/curriculum queries already prove cross-engine.
     "samp_split" -> ((s, d) =>
-      docsOf(s, d).select(col("doc_id"),
-        (conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
-          .cast("long") % 100).as("bucket"))
+      Tables.documents(s, d).select(col("doc_id"),
+          splitBucket(col("doc_id")).as("bucket"))
         .select(col("doc_id"), col("bucket"),
-          when(col("bucket") < 80, "train")
-            .when(col("bucket") < 90, "val")
-            .otherwise("test").as("split"))),
+          splitName(col("bucket")).as("split"))),
 
     // The dedup THRESHOLD curve — pairs confirmed and docs dropped as
     // a function of the Jaccard cutoff τ ∈ {0.5, 0.7, 0.9}: the
@@ -1254,11 +1277,8 @@ object TextOps {
     "dedup_threshold_sweep" -> ((s, d) => {
       val pairs = pairTable(s, d)
       val sets = docShingleSets(s, d)
-      val scored = pairs
-        .join(sets.select(col("doc_id").as("left_id"),
-          col("sh").as("sh_a")), Seq("left_id"))
-        .join(sets.select(col("doc_id").as("right_id"),
-          col("sh").as("sh_b")), Seq("right_id"))
+      val scored = joinPairSides(pairs, sets, "doc_id",
+          Seq("sh" -> "sh_a"), Seq("sh" -> "sh_b"))
         .select(col("left_id"), col("right_id"),
           when(size(array_union(col("sh_a"), col("sh_b"))) > 0,
             size(array_intersect(col("sh_a"), col("sh_b")))
@@ -1285,12 +1305,7 @@ object TextOps {
     // projection joined onto the bucket-bounded pair stream: one extra
     // shuffle on doc_id beyond the LSH pipeline itself.
     "dq_split_leakage" -> ((s, d) => {
-      def splitOf(c: Column) = {
-        val bucket = conv(substring(md5(c.cast("string")), 1, 4), 16, 10)
-          .cast("long") % 100
-        when(bucket < 80, "train").when(bucket < 90, "val")
-          .otherwise("test")
-      }
+      def splitOf(c: Column) = splitName(splitBucket(c))
       val pairs = pairTable(s, d)
       pairs.select(col("left_id"), col("right_id"),
           splitOf(col("left_id")).as("split_a"),
@@ -1326,7 +1341,7 @@ object TextOps {
       val b = expr("doc_id DIV 4")
       val n = b % 50
       def s_(c: Column) = c.cast("string")
-      val raw = docsOf(s, d).select(col("doc_id"),
+      val raw = Tables.documents(s, d).select(col("doc_id"),
         when(col("doc_id") % 4 === 0,
           concat(lit("http://www.example"), s_(n), lit(".com/page/"),
             s_(b), lit("?id="), s_(b), lit("&z=1")))
@@ -1353,7 +1368,7 @@ object TextOps {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("source")
         .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
-      docsOf(s, d).select(col("doc_id"), col("source"))
+      Tables.documents(s, d).select(col("doc_id"), col("source"))
         .withColumn("pick_rank", row_number().over(w).cast("long"))
         .filter(col("pick_rank") <= 20)
     }),
@@ -1398,7 +1413,7 @@ object TextOps {
       // parity-pinned) cuts the scan to the hash-set pass.
       def grams = {
         graft.expressions.TextExpressions.register(s)
-        docsOf(s, d).select(col("doc_id"),
+        Tables.documents(s, d).select(col("doc_id"),
           explode(call_function("graft_distinct_shingles",
             col("text"), lit(3))).as("g"))
       }
@@ -1429,7 +1444,7 @@ object TextOps {
     // identical c·ln(c) doubles; round(·, 6) absorbs the ≤1 ulp/term
     // addend-order noise.
     "txt_entropy" -> ((s, d) => {
-      val tf = docsOf(s, d)
+      val tf = Tables.documents(s, d)
         .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
         .groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
       tf.groupBy("doc_id").agg(
@@ -1445,20 +1460,12 @@ object TextOps {
     }),
 
     "txt_repetition" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("doc_id").orderBy("pos")
-      val sgl = Tables.documents(s, d)
-        .select(col("doc_id"),
-          posexplode(split(trim(col("text")), "\\s+")).as(Seq("pos", "tok")))
-        .filter(col("tok") =!= "")
-        .withColumn("sgl",
-          when(lead(col("tok"), 2).over(w).isNotNull,
-            concat_ws(" ", col("tok"), lead(col("tok"), 1).over(w),
-              lead(col("tok"), 2).over(w))))
-        .filter(col("sgl").isNotNull)
+      val sgl = graft.api.GraftOps.wordGrams(Tables.documents(s, d),
+          "doc_id", "text", 3)
+        .filter(col("gram").isNotNull)
       val stats = sgl.groupBy("doc_id").agg(
         count(lit(1)).as("n_sh0"),
-        count_distinct(col("sgl")).as("n_uniq0"))
+        count_distinct(col("gram")).as("n_uniq0"))
       Tables.documents(s, d).select("doc_id")
         .join(stats, Seq("doc_id"), "left")
         .select(col("doc_id"),
@@ -1474,7 +1481,7 @@ object TextOps {
     // emitted comma-joined (driver comparator takes scalars only); at
     // scale the same plan writes the array column, bucketed by token.
     "idx_inverted" -> ((s, d) =>
-      docsOf(s, d)
+      Tables.documents(s, d)
         .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
         .distinct()
         .groupBy("token").agg(
@@ -1486,7 +1493,7 @@ object TextOps {
     // Exact-dedup result set: the surviving documents (min doc_id per
     // content hash) — what a training pipeline actually feeds downstream.
     "dedup_exact_keep" -> ((s, d) =>
-      graft.api.GraftOps.dedupExact(docsOf(s, d), "doc_id", "text")
+      graft.api.GraftOps.dedupExact(Tables.documents(s, d), "doc_id", "text")
         .select("doc_id", "lang", "source", "n_chars")),
 
     // Vocabulary: global top-50 tokens by frequency (explode + two-level
@@ -1501,19 +1508,12 @@ object TextOps {
 
     // Bigram counts: top-30 word 2-grams (n-gram LM / tokenizer-training
     // statistics). Window-lead formulation keeps it in codegen.
-    "bigram_topk" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("doc_id").orderBy("pos")
-      Tables.documents(s, d)
-        .select(col("doc_id"),
-          posexplode(split(trim(col("text")), "\\s+")).as(Seq("pos", "tok")))
-        .filter(col("tok") =!= "")
-        .withColumn("nxt", lead(col("tok"), 1).over(w))
-        .filter(col("nxt").isNotNull)
-        .select(concat_ws(" ", col("tok"), col("nxt")).as("bigram"))
-        .groupBy("bigram").agg(count(lit(1)).as("freq"))
-        .orderBy(col("freq").desc, col("bigram")).limit(30)
-    }),
+    "bigram_topk" -> ((s, d) =>
+      graft.api.GraftOps.wordGrams(Tables.documents(s, d),
+          "doc_id", "text", 2)
+        .filter(col("gram").isNotNull)
+        .groupBy(col("gram").as("bigram")).agg(count(lit(1)).as("freq"))
+        .orderBy(col("freq").desc, col("bigram")).limit(30)),
 
     // Flagship corpus-cleaning pipeline: quality gate → language gate →
     // exact dedup, composed from the operators above — the end-to-end
@@ -1547,8 +1547,7 @@ object TextOps {
     // dimensions are the deterministic contract the oracle recomputes.
     "mm_image_features" -> ((s, d) =>
       graft.multimodal.Multimodal.extractFeatures(
-        graft.multimodal.Multimodal.synthPng(
-          Tables.documents(s, d).select(col("doc_id")), "doc_id"))
+        synthDocs(s, d)(graft.multimodal.Multimodal.synthPng))
         .select(col("media_id"), col("width"), col("height"),
           col("channels"))),
 
@@ -1562,8 +1561,7 @@ object TextOps {
     // independent of payload size (the 100 TB property).
     "mm_audio_features" -> ((s, d) =>
       graft.multimodal.Multimodal.extractAudioFeatures(
-        graft.multimodal.Multimodal.synthWav(
-          Tables.documents(s, d).select(col("doc_id")), "doc_id"))),
+        synthDocs(s, d)(graft.multimodal.Multimodal.synthWav))),
 
     // Multimodal video path, REAL end-to-end like the audio twin:
     // synthMp4 builds a genuine ISO-BMFF container per doc (ftyp +
@@ -1573,8 +1571,7 @@ object TextOps {
     // arithmetic, so a box-offset bug anywhere breaks the hash compare.
     "mm_video_features" -> ((s, d) =>
       graft.multimodal.Multimodal.extractVideoFeatures(
-        graft.multimodal.Multimodal.synthMp4(
-          Tables.documents(s, d).select(col("doc_id")), "doc_id"))),
+        synthDocs(s, d)(graft.multimodal.Multimodal.synthMp4))),
 
     // The composed MULTIMODAL ingest report: all three real media
     // paths in one query — synthesize genuine PNG/WAV/MP4 containers
@@ -1649,8 +1646,7 @@ object TextOps {
     // stco base, or slice bound fails the hash gate.
     "mm_frame_bytes" -> ((s, d) =>
       graft.multimodal.Multimodal.extractFrameBytes(
-        graft.multimodal.Multimodal.synthMp4Frames(
-          Tables.documents(s, d).select(col("doc_id")), "doc_id"))),
+        synthDocs(s, d)(graft.multimodal.Multimodal.synthMp4Frames))),
 
     // FRAME-LEVEL VIDEO NEAR-DUP (r11 item 6) — the composition the
     // demux enables: ONE extractFrameHashes pass (real stsz/stsc/stco
@@ -1677,11 +1673,8 @@ object TextOps {
         .agg(count(lit(1)).as("nf"))
       val shared = graft.api.GraftOps.cappedKeyPairCounts(
         frames.select(col("media_id"), col("fhash")), "fhash", "media_id")
-      shared
-        .join(nf.select(col("media_id").as("left_id"),
-          col("nf").as("nf_l")), Seq("left_id"))
-        .join(nf.select(col("media_id").as("right_id"),
-          col("nf").as("nf_r")), Seq("right_id"))
+      joinPairSides(shared, nf, "media_id",
+          Seq("nf" -> "nf_l"), Seq("nf" -> "nf_r"))
         .select(col("left_id"), col("right_id"), col("n_shared"),
           round(col("n_shared").cast("double")
             / (col("nf_l") + col("nf_r") - col("n_shared"))
@@ -1743,8 +1736,7 @@ object TextOps {
     // extension anywhere breaks the hash gate.
     "mm_audio_energy" -> ((s, d) =>
       graft.multimodal.Multimodal.extractAudioEnergy(
-        graft.multimodal.Multimodal.synthWav(
-          Tables.documents(s, d).select(col("doc_id")), "doc_id"),
+        synthDocs(s, d)(graft.multimodal.Multimodal.synthWav),
         windowFrames = 50)),
 
     // VOICE-ACTIVITY SEGMENTATION — the audio twin of mm_scene_cuts:
@@ -1771,8 +1763,7 @@ object TextOps {
     // decode paths the per-modality queries gate.
     "mm_av_sync" -> ((s, d) => {
       val frames = graft.multimodal.Multimodal.sampleFrameTimes(
-        graft.multimodal.Multimodal.synthMp4Stts(
-          Tables.documents(s, d).select(col("doc_id")), "doc_id"),
+        synthDocs(s, d)(graft.multimodal.Multimodal.synthMp4Stts),
         stride = 2)
         .select(col("media_id"), col("sample_idx"), col("t_ms"),
           (col("t_ms") * 4L).as("t_q"))
@@ -1847,20 +1838,13 @@ object TextOps {
     // signed-16LE samples → window sums → signature → pairs from the
     // synth arithmetic, so a decode, windowing, or quantization bug
     // anywhere breaks the hash gate.
-    "mm_audio_dedup" -> ((s, d) => {
-      val sg = audioSigTable(s, d)
-      graft.api.GraftOps.cappedKeyPairCounts(
-          sg.select(col("sig"), col("media_id")), "sig", "media_id")
-        .join(sg.select(col("media_id").as("left_id"),
-          col("s0").as("l0"), col("s1").as("l1")), Seq("left_id"))
-        .join(sg.select(col("media_id").as("right_id"),
-          col("s0").as("r0"), col("s1").as("r1")), Seq("right_id"))
+    "mm_audio_dedup" -> ((s, d) =>
+      audioSigPairs(audioSigTable(s, d))
         .select(col("left_id"), col("right_id"),
           abs(col("l0") - col("r0")).as("d0"),
           abs(col("l1") - col("r1")).as("d1"),
           (col("l0") === col("r0") && col("l1") === col("r1"))
-            .as("is_dup"))
-    }),
+            .as("is_dup"))),
 
     // AUDIO RETENTION POLICY — completes the keep-best matrix across
     // all three media types (video keeps most frames, image keeps
@@ -1945,8 +1929,7 @@ object TextOps {
     // single wrong pixel anywhere flips bits and fails the hash gate.
     "mm_image_phash" -> ((s, d) =>
       graft.multimodal.Multimodal.extractAHash(
-        graft.multimodal.Multimodal.synthPngPattern(
-          Tables.documents(s, d).select(col("doc_id")), "doc_id"))),
+        synthDocs(s, d)(graft.multimodal.Multimodal.synthPngPattern))),
 
     // IMAGE NEAR-DUP PAIRING (r13 VERDICT item 3 — the last modality
     // without a dedup policy): perceptual-hash Hamming banding over
@@ -1966,29 +1949,11 @@ object TextOps {
     // ACROSS sizes — the re-encode invariance production pHash dedup
     // exists for). The oracle replays hash, banding, candidates, and
     // Hamming from the closed-form block arithmetic.
-    "mm_image_dedup" -> ((s, d) => {
-      val ah = imageAHashTable(s, d)
-      val bands = ah.select(col("media_id"),
-        posexplode(array((0 to 3).map(b =>
-          substring(col("ahash"), b * 16 + 1, 16)): _*))
-          .as(Seq("band_idx", "band_val")))
-      val cand = graft.api.GraftOps.cappedKeyPairCounts(
-        bands.select(
-          concat_ws(":", col("band_idx"), col("band_val")).as("bkey"),
-          col("media_id")),
-        "bkey", "media_id")
-      cand
-        .join(ah.select(col("media_id").as("left_id"),
-          col("ahash").as("a_hash")), Seq("left_id"))
-        .join(ah.select(col("media_id").as("right_id"),
-          col("ahash").as("b_hash")), Seq("right_id"))
-        .withColumn("hamming",
-          expr("CAST(size(filter(zip_with(split(a_hash, ''), " +
-            "split(b_hash, ''), (x, y) -> x != y), p -> p)) AS BIGINT)"))
+    "mm_image_dedup" -> ((s, d) =>
+      imageBandPairs(imageAHashTable(s, d))
         .select(col("left_id"), col("right_id"),
           col("n_shared").as("n_bands_shared"), col("hamming"),
-          (col("hamming") <= 3).as("is_dup"))
-    }),
+          (col("hamming") <= 3).as("is_dup"))),
 
     // IMAGE RETENTION POLICY — keep-best per near-dup cluster, the
     // image instance of mm_video_keep_best's composition: is_dup
@@ -2049,8 +2014,7 @@ object TextOps {
     // mix-up, or an off-by-one in the run expansion breaks the hash.
     "mm_frame_times" -> ((s, d) =>
       graft.multimodal.Multimodal.sampleFrameTimes(
-        graft.multimodal.Multimodal.synthMp4Stts(
-          Tables.documents(s, d).select(col("doc_id")), "doc_id"),
+        synthDocs(s, d)(graft.multimodal.Multimodal.synthMp4Stts),
         stride = 2)),
 
     // Benchmark decontamination: flag training docs sharing any word
@@ -2060,13 +2024,7 @@ object TextOps {
     // 100 TB), so the corpus side streams once with no shuffle until the
     // final per-doc count. 8-gram construction stays in codegen
     // (posexplode + window leads, same path as winnowing).
-    "txt_decontaminate" -> ((s, d) => {
-      val docs = docsOf(s, d)
-      graft.api.GraftOps.decontaminate(
-        docs.filter(col("doc_id") % 20 =!= 0),
-        docs.filter(col("doc_id") % 20 === 0),
-        "doc_id", "text", n = 8)
-    }),
+    "txt_decontaminate" -> ((s, d) => heldOutContamination(s, d)._2),
 
     // CONTAMINATION REPORT — the per-source rollup a data audit ships:
     // how much of each source's training slice shares word 8-grams
@@ -2076,13 +2034,8 @@ object TextOps {
     // expensive pass (benchmark-gram broadcast probe) is the same one
     // txt_decontaminate already runs.
     "pipeline_contamination_report" -> ((s, d) => {
-      val docs = docsOf(s, d)
-      val flagged = graft.api.GraftOps.decontaminate(
-        docs.filter(col("doc_id") % 20 =!= 0),
-        docs.filter(col("doc_id") % 20 === 0),
-        "doc_id", "text", n = 8)
-      docs.filter(col("doc_id") % 20 =!= 0)
-        .select(col("doc_id"), col("source"))
+      val (train, flagged) = heldOutContamination(s, d)
+      train.select(col("doc_id"), col("source"))
         .join(flagged, Seq("doc_id"), "left")
         .groupBy("source")
         .agg(count(lit(1)).cast("long").as("n_train_docs"),
@@ -2102,7 +2055,7 @@ object TextOps {
       val toks = tokens(col("text"))
       val stop = Seq("the", "be", "to", "of", "and", "a", "in", "that",
         "have", "with")
-      docsOf(s, d).select(col("doc_id"), toks.as("toks"))
+      Tables.documents(s, d).select(col("doc_id"), toks.as("toks"))
         .select(col("doc_id"),
           size(col("toks")).cast("long").as("n_words"),
           round(when(size(col("toks")) > 0,
@@ -2147,7 +2100,7 @@ object TextOps {
     // per-row projections into one tiny groupBy(lang); fertility is
     // milli-quantized by the exact-integer discipline.
     "tok_fertility" -> ((s, d) =>
-      docsOf(s, d).select(coalesce(col("lang"), lit("")).as("lang"),
+      Tables.documents(s, d).select(coalesce(col("lang"), lit("")).as("lang"),
           tokenCount(col("text")).cast("long").as("nw"),
           aggregate(tokens(col("text")), lit(0L),
             (acc, t) => acc + ((length(t) + 3) / 4).cast("long"))
@@ -2172,17 +2125,7 @@ object TextOps {
     // would die at scale) → bucket = #cuts strictly below the doc's
     // NLL. Per-bucket count and micro-exact mean NLL.
     "txt_perplexity_bucket" -> ((s, d) => {
-      val tok = docsOf(s, d)
-        .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
-      val cnt = tok.groupBy("term").agg(count(lit(1)).as("cnt"))
-      val tot = cnt.agg(sum("cnt").cast("long").as("total"))
-      val perDoc = tok.join(cnt, "term").crossJoin(broadcast(tot))
-        .withColumn("nll",
-          (round(-log(col("cnt").cast("double") /
-            col("total").cast("double")), 6) * 1000000.0 + 0.5)
-            .cast("long"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_tokens"), sum("nll").as("snll"))
+      val perDoc = unigramNll(s, d)
         .select(col("doc_id"),
           round(col("snll").cast("double") / col("n_tokens"), 0)
             .cast("long").as("mnll_micro"))
@@ -2208,7 +2151,8 @@ object TextOps {
     // slicing — embarrassingly parallel; chunk count derives from the
     // token count, so no state crosses rows.
     "chunk_docs" -> ((s, d) =>
-      graft.api.GraftOps.chunkTokens(docsOf(s, d), "doc_id", "text", 64)),
+      graft.api.GraftOps.chunkTokens(Tables.documents(s, d),
+          "doc_id", "text", 64)),
 
     // SENTENCE-boundary chunking — the semantic RAG variant: chunks
     // break at sentence ends, never mid-sentence, so retrieval units
@@ -2227,7 +2171,7 @@ object TextOps {
     "txt_sentence_chunk" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
       val sentinel = "\u0001"
-      val base = docsOf(s, d)
+      val base = Tables.documents(s, d)
         .select(col("doc_id"), tokens(col("text")).as("toks"),
           (lit(5) + pmod(col("doc_id"), lit(5))).cast("int").as("L"))
         .withColumn("n", size(col("toks")))
@@ -2267,7 +2211,7 @@ object TextOps {
     "chunk_sliding" -> ((s, d) => {
       val cSize = 64
       val stride = 48
-      val t = docsOf(s, d)
+      val t = Tables.documents(s, d)
         .select(col("doc_id"), tokens(col("text")).as("toks"))
         .withColumn("n", size(col("toks")).cast("long"))
         .filter(col("n") > 0)
@@ -2289,7 +2233,7 @@ object TextOps {
     // broadcast of the 1-row totals — no data-sized shuffle beyond the
     // language groupBy.
     "samp_mixture_weights" -> ((s, d) => {
-      val counts = docsOf(s, d).groupBy("lang")
+      val counts = Tables.documents(s, d).groupBy("lang")
         .agg(count(lit(1)).as("n_docs"))
       val tot = counts.agg(sum("n_docs").as("total"),
         count(lit(1)).as("n_langs"))
@@ -2331,7 +2275,7 @@ object TextOps {
     // claims). Composes the dedup survivor set with the token count in
     // one left join + one grouped aggregate.
     "samp_effective_tokens" -> ((s, d) => {
-      val docs = docsOf(s, d)
+      val docs = Tables.documents(s, d)
       val kept = graft.api.GraftOps.dedupExact(docs, "doc_id", "text")
         .select(col("doc_id")).withColumn("kept", lit(true))
       docs
@@ -2379,8 +2323,8 @@ object TextOps {
     // cumulative re-scans: the curve costs one corpus pass + a 10-row
     // rollup at any scale.
     "txt_vocab_growth" -> ((s, d) => {
-      val nd = docsOf(s, d).agg(max("doc_id").as("mx"))
-      val termDec = docsOf(s, d)
+      val nd = Tables.documents(s, d).agg(max("doc_id").as("mx"))
+      val termDec = Tables.documents(s, d)
         .crossJoin(broadcast(nd))
         .select(explode(tokens(col("text"))).as("term"),
           least(expr("(doc_id * 10) DIV (mx + 1)"), lit(9L)).as("dec"))
@@ -2407,7 +2351,7 @@ object TextOps {
     // with doc and token mass per bucket. One partial-aggregated pass;
     // the histogram is bucket-count rows at any corpus size.
     "tok_len_histogram" -> ((s, d) => {
-      val docs = docsOf(s, d)
+      val docs = Tables.documents(s, d)
         .select(size(tokens(col("text"))).cast("long").as("n_tok"))
         .withColumn("bucket",
           when(col("n_tok") <= 16L, "<=16")
@@ -2433,7 +2377,7 @@ object TextOps {
     // exact global position without a single-partition sort.
     "shuf_deterministic" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val keyed = docsOf(s, d)
+      val keyed = Tables.documents(s, d)
         .select(col("doc_id"), md5(col("doc_id").cast("string")).as("k"))
         .withColumn("bkt", conv(substring(col("k"), 1, 2), 16, 10)
           .cast("int"))
@@ -2455,7 +2399,7 @@ object TextOps {
     // 100 TB must spread across its 256 hash buckets.
     "curriculum_order" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val phased = docsOf(s, d)
+      val phased = Tables.documents(s, d)
         .select(col("doc_id"),
           when(col("n_chars") < 150, 1L).when(col("n_chars") < 300, 2L)
             .when(col("n_chars") < 450, 3L).otherwise(4L).as("phase"),
@@ -2499,7 +2443,7 @@ object TextOps {
     // Cross-source near-dups remain the banded-MinHash path's job.
     "dedup_ppjoin" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val docs = docsOf(s, d).filter(col("source") === "src0")
+      val docs = Tables.documents(s, d).filter(col("source") === "src0")
       val tok = docs.select(col("doc_id"),
         explode(array_distinct(tokens(col("text")))).as("term"))
       val freq = tok.groupBy("term").agg(count(lit(1)).as("df"))
@@ -2523,11 +2467,8 @@ object TextOps {
           col("b.doc_id").as("right_id")).distinct()
       val arrs = docs.select(col("doc_id"),
         array_sort(array_distinct(tokens(col("text")))).as("ta"))
-      cands
-        .join(arrs.select(col("doc_id").as("left_id"),
-          col("ta").as("la")), Seq("left_id"))
-        .join(arrs.select(col("doc_id").as("right_id"),
-          col("ta").as("ra")), Seq("right_id"))
+      joinPairSides(cands, arrs, "doc_id",
+          Seq("ta" -> "la"), Seq("ta" -> "ra"))
         .select(col("left_id"), col("right_id"),
           size(array_intersect(col("la"), col("ra"))).cast("long")
             .as("inter"),
@@ -2549,7 +2490,7 @@ object TextOps {
     // and expand only where needed: the doc-pair expansion of a
     // 25k-doc clique is ~300M rows of pure redundancy.
     "dedup_ppjoin_g" -> ((s, d) =>
-      ppjoinGlobalPairs(docsOf(s, d), Some(d))),
+      ppjoinGlobalPairs(Tables.documents(s, d), Some(d))),
 
     // SET-LEVEL form of the global PPJoin (r15 VERDICT item 3) — the
     // shape a 100 TB consumer actually wants: one row per qualifying
@@ -2562,7 +2503,7 @@ object TextOps {
     // comparable without exposing md5 setids.
     "dedup_ppjoin_sets" -> ((s, d) => {
       val (_, setPairs, members, reps) =
-        ppjoinGlobalCore(docsOf(s, d), Some(d))
+        ppjoinGlobalCore(Tables.documents(s, d), Some(d))
       val stats = members.groupBy("setid")
         .agg(min("doc_id").cast("long").as("rk"),
           count(lit(1)).as("n"))
@@ -2616,7 +2557,7 @@ object TextOps {
     }),
 
     "dedup_incremental" -> ((s, d) => {
-      val docs = docsOf(s, d)
+      val docs = Tables.documents(s, d)
       val bands = bandIndex(s, d) // the stored index (see its Scaladoc)
       val ex = bands.filter(col("doc_id") % 5 =!= 0)
         .select("band_idx", "band_hash").distinct()
@@ -2637,7 +2578,8 @@ object TextOps {
     // from its surviving blocks. Occurrence ranking partitions by the
     // block content hash — groupBy-shaped, no global order.
     "dedup_lines" -> ((s, d) =>
-      graft.api.GraftOps.dedupBlocks(docsOf(s, d), "doc_id", "text", 16)),
+      graft.api.GraftOps.dedupBlocks(Tables.documents(s, d),
+          "doc_id", "text", 16)),
 
     // Sequence packing: 64-token chunks streamed in deterministic
     // (doc_id, chunk_id) order into 512-token training bins via the
@@ -2645,7 +2587,8 @@ object TextOps {
     // no single-partition sort). Per-bin occupancy is the payload a
     // batching loader needs; fill ratio exposes the tail waste.
     "pack_chunks" -> ((s, d) =>
-      graft.api.GraftOps.packChunks(docsOf(s, d), "doc_id", "text", 64, 512)
+      graft.api.GraftOps.packChunks(Tables.documents(s, d),
+          "doc_id", "text", 64, 512)
         .groupBy("bin_id").agg(
           count(lit(1)).as("n_chunks"),
           sum("n_tokens").as("n_tokens"))
@@ -2662,7 +2605,7 @@ object TextOps {
     // onto the bin table — at 100 TB both sides partition on the same
     // key pair.
     "pack_shards" -> ((s, d) => {
-      val docs = docsOf(s, d)
+      val docs = Tables.documents(s, d)
       val packed = graft.api.GraftOps
         .packChunks(docs, "doc_id", "text", 64, 512)
       val chunks = graft.api.GraftOps
@@ -2700,7 +2643,7 @@ object TextOps {
     // totals and unique chunks. Each count is a tiny scalar aggregate;
     // they cross-join into one row (all single-row broadcasts).
     "pipeline_dedup_report" -> ((s, d) => {
-      val docs = docsOf(s, d)
+      val docs = Tables.documents(s, d)
       val (gated, keep) = cleanGate(docs)
       val clean = gated.join(keep, Seq("doc_id"), "left_semi")
       val chunks = graft.api.GraftOps.chunkTokens(
@@ -2722,17 +2665,7 @@ object TextOps {
     // sums as exact scaled longs, so partial-aggregation order can't
     // move the mean.
     "txt_unigram_logprob" -> ((s, d) => {
-      val tok = docsOf(s, d)
-        .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
-      val cnt = tok.groupBy("term").agg(count(lit(1)).as("cnt"))
-      val tot = cnt.agg(sum("cnt").cast("long").as("total"))
-      tok.join(cnt, "term").crossJoin(broadcast(tot))
-        .withColumn("nll",
-          (round(-log(col("cnt").cast("double") /
-            col("total").cast("double")), 6) * 1000000.0 + 0.5)
-            .cast("long"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_tokens"), sum("nll").as("snll"))
+      unigramNll(s, d)
         // Mean micro-nats via EXACT integer half-up division — the
         // obvious round(S/1e6/n, 6) hits genuine half-ties (S/n ending
         // in .5 micro-nats; 19 docs at sf1) where Spark's
@@ -2753,7 +2686,7 @@ object TextOps {
     // the per-language cutoffs broadcast and the corpus side is a pure
     // filter — no shuffle, reproducible on any engine.
     "samp_weighted" -> ((s, d) => {
-      val docs = docsOf(s, d)
+      val docs = Tables.documents(s, d)
         .withColumn("lk", coalesce(col("lang"), lit("")))
       val c = docs.groupBy("lk").agg(count(lit(1)).as("n_docs"))
       val t = c.agg(sum("n_docs").cast("long").as("total"),
@@ -2782,7 +2715,7 @@ object TextOps {
     // groupBy with a sorted collect — the same bounded-fan-out shapes as
     // the detector, nothing global.
     "txt_span_removal" -> ((s, d) => {
-      val docs = docsOf(s, d)
+      val docs = Tables.documents(s, d)
       val spans = spansCore(s, d)
       val rm = spans
         .select(col("doc_b").as("doc_id"),
@@ -2814,7 +2747,7 @@ object TextOps {
     // corpus; one projection + one language²-sized groupBy.
     "txt_lang_confusion" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val cells = docsOf(s, d)
+      val cells = Tables.documents(s, d)
         .select(coalesce(col("lang"), lit("")).as("actual"),
           langId(tokens(col("text"))).as("predicted"))
         .groupBy("actual", "predicted").agg(count(lit(1)).as("n"))
@@ -2834,11 +2767,11 @@ object TextOps {
     // long; the denominator is then an exact integer sum, so the final
     // division has identical operands everywhere.
     "samp_temperature" -> ((s, d) => {
-      val c = docsOf(s, d)
+      val c = Tables.documents(s, d)
         .groupBy(coalesce(col("lang"), lit("")).as("lang"))
         .agg(count(lit(1)).as("n_docs"))
         .withColumn("sq",
-          (round(sqrt(col("n_docs")), 6) * 1000000.0 + 0.5).cast("long"))
+          micro(sqrt(col("n_docs"))))
       val den = c.agg(sum("sq").as("den"))
       // Half-up at the 6th decimal in exact integer form —
       // floor((2·sq·1e6 + den) / 2·den) — not engine round(): sq/den is
@@ -2862,7 +2795,7 @@ object TextOps {
     // negative, so the +0.5 trick gains a sign guard — same discipline
     // as emb_quantize_int8's rounding).
     "samp_importance" -> ((s, d) => {
-      val docs = docsOf(s, d)
+      val docs = Tables.documents(s, d)
       val tok = docs
         .select(col("doc_id"), col("lang"),
           explode(tokens(col("text"))).as("term"))
@@ -2912,7 +2845,7 @@ object TextOps {
     // is the bucket-local candidate set; exact Jaccard joins shingle
     // rows only for those pairs.
     "dedup_minhash_eval" -> ((s, d) => {
-      val docs = docsOf(s, d)
+      val docs = Tables.documents(s, d)
       // A pair lands in a band's bucket exactly iff that band's hashes
       // AGREE — so n_bands_agree is the pair's emission count across
       // band buckets, free at generation time. (The earlier form joined
@@ -2950,11 +2883,8 @@ object TextOps {
         .select(col("doc_id"),
           call_function("graft_distinct_shingles",
             col("text"), lit(3)).as("sh"))
-      agree
-        .join(sets.select(col("doc_id").as("left_id"),
-          col("sh").as("sh_l")), Seq("left_id"), "left")
-        .join(sets.select(col("doc_id").as("right_id"),
-          col("sh").as("sh_r")), Seq("right_id"), "left")
+      joinPairSides(agree, sets, "doc_id",
+          Seq("sh" -> "sh_l"), Seq("sh" -> "sh_r"), "left")
         .withColumn("sz_l",
           size(coalesce(col("sh_l"), array().cast("array<string>"))))
         .withColumn("sz_r",
@@ -2980,7 +2910,8 @@ object TextOps {
     // argmax quality within cluster.
     "cluster_keep_best" -> ((s, d) =>
       keepBest(nearDupClusters(s, d),
-        docsOf(s, d).select("doc_id", "n_chars"), "doc_id", "n_chars")),
+        Tables.documents(s, d).select("doc_id", "n_chars"),
+        "doc_id", "n_chars")),
 
     // BPE merge learning — the classic byte-pair-encoding training loop
     // (Sennrich et al. 2016), run over the DISTINCT-WORD frequency table,
@@ -3010,7 +2941,7 @@ object TextOps {
       val wc = bpeLearn(s, d)._1
         .select(col("word"),
           size(split(trim(col("sp")), " ")).cast("long").as("n_sym"))
-      docsOf(s, d)
+      Tables.documents(s, d)
         .select(col("doc_id"), explode(tokens(col("text"))).as("word"))
         .join(broadcast(wc), Seq("word"))
         .groupBy("doc_id").agg(sum("n_sym").as("n_bpe_tokens"))
@@ -3026,7 +2957,7 @@ object TextOps {
       val wc = bpeLearn(s, d)._1
         .select(col("word"),
           size(split(trim(col("sp")), " ")).cast("long").as("n_sym"))
-      docsOf(s, d)
+      Tables.documents(s, d)
         .select(explode(tokens(col("text"))).as("word"))
         .join(broadcast(wc), Seq("word"))
         .agg(count(lit(1)).as("n_words"),
@@ -3067,7 +2998,7 @@ object TextOps {
     // 100 TB the frontier join shuffles on node id and the edge table is
     // bucketable by `a`, so every round is a single co-located shuffle.
     "graph_bfs" -> ((s, d) => {
-      val docs = docsOf(s, d)
+      val docs = Tables.documents(s, d)
       val pr = pairTable(s, d)
       val e = pr.select(col("left_id").as("a"), col("right_id").as("b"))
         .union(pr.select(col("right_id"), col("left_id")))
@@ -3106,7 +3037,7 @@ object TextOps {
     // scaled longs; top-20 ranks by the exact long score with doc_id
     // tiebreak, so the selected set is engine-independent.
     "txt_bm25_topk" -> ((s, d) =>
-      bm25TopK(docsOf(s, d), Seq("doc_id"), "text", 20)),
+      bm25TopK(Tables.documents(s, d), Seq("doc_id"), "text", 20)),
 
     // Count-min sketch heavy hitters: the sublinear frequency sketch
     // next to the exact count (the same exact-vs-sketch pairing as
@@ -3125,7 +3056,7 @@ object TextOps {
       // The vocab-sized count table feeds BOTH the sketch cells and the
       // candidate probe — checkpoint it so the corpus word count runs
       // once, not once per branch.
-      val tc = docsOf(s, d)
+      val tc = Tables.documents(s, d)
         .select(explode(tokens(col("text"))).as("term"))
         .groupBy("term").agg(count(lit(1)).as("exact_cnt"))
         .localCheckpoint()
@@ -3153,7 +3084,7 @@ object TextOps {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("source")
         .orderBy(col("n_chars").desc, col("doc_id"))
-      docsOf(s, d)
+      Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"))
         .withColumn("rnk", row_number().over(w).cast("long"))
         .filter(col("rnk") <= 10)
@@ -3166,7 +3097,7 @@ object TextOps {
     // corpus scan disappears entirely — only the two posting lists are
     // read; the join key (doc_id, pos) co-partitions both sides.
     "idx_phrase" -> ((s, d) => {
-      val tok = docsOf(s, d)
+      val tok = Tables.documents(s, d)
         .select(col("doc_id"),
           posexplode(tokens(col("text"))).as(Seq("pos", "term")))
         .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"),
@@ -3196,13 +3127,13 @@ object TextOps {
     "txt_bigram_logprob" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("doc_id").orderBy("pos")
-      val bg = docsOf(s, d)
+      val bg = Tables.documents(s, d)
         .select(col("doc_id"),
           posexplode(tokens(col("text"))).as(Seq("pos", "w1")))
         .withColumn("w2", lead(col("w1"), 1).over(w))
         .filter(col("w2").isNotNull)
         .select("doc_id", "w1", "w2")
-      val uni = docsOf(s, d)
+      val uni = Tables.documents(s, d)
         .select(explode(tokens(col("text"))).as("w"))
         .groupBy("w").agg(count(lit(1)).as("c"))
       val tot = uni.agg(sum("c").cast("long").as("t"))
@@ -3211,11 +3142,10 @@ object TextOps {
         .join(uni.select(col("w").as("w1"), col("c").as("c1")), Seq("w1"))
         .join(uni.select(col("w").as("w2"), col("c").as("c2")), Seq("w2"))
         .crossJoin(broadcast(tot))
-        .withColumn("nll", (round(-log(
+        .withColumn("nll", micro(-log(
             (lit(3L) * col("c12") * col("t") + col("c2") * col("c1"))
               .cast("double")
-              / (lit(4L) * col("c1") * col("t")).cast("double")),
-          6) * 1000000.0 + 0.5).cast("long"))
+              / (lit(4L) * col("c1") * col("t")).cast("double"))))
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_bigrams"), sum("nll").as("snll"))
         // snll/n can land EXACTLY on a half at the 6th decimal (it did:
@@ -3279,11 +3209,10 @@ object TextOps {
           .as("avgdl"))
     tf.join(broadcast(idf), "term")
       .withColumn("contrib",
-        (round(col("idf") * (col("tf").cast("double") * 2.2
+        micro(col("idf") * (col("tf").cast("double") * 2.2
           / (col("tf").cast("double") + lit(1.2)
             * (lit(0.25) + lit(0.75)
-              * (col("len").cast("double") / col("avgdl"))))),
-          6) * 1000000.0 + 0.5).cast("long"))
+              * (col("len").cast("double") / col("avgdl")))))))
       .groupBy(keys: _*)
       .agg(sum("contrib").as("s"),
         count(lit(1)).cast("long").as("n_terms"))
@@ -3314,7 +3243,7 @@ object TextOps {
   private def cleanChunksDeduped(s: SparkSession, d: String): DataFrame =
     graft.operators.SharedStage(s, s"cleanChunks:$d") {
       import org.apache.spark.sql.expressions.Window
-      val (gated, keep) = cleanGate(docsOf(s, d))
+      val (gated, keep) = cleanGate(Tables.documents(s, d))
       val clean = gated.join(keep, Seq("doc_id"), "left_semi")
         .select("doc_id", "text")
       val wOcc = Window.partitionBy(md5(col("chunk_text")))
@@ -3333,7 +3262,7 @@ object TextOps {
   private def bpeLearn(s: SparkSession, d: String)
       : (DataFrame, Seq[(Long, String, Long)]) = {
     val chars = filter(split(col("word"), ""), c => c =!= "")
-    var cur = docsOf(s, d)
+    var cur = Tables.documents(s, d)
       .select(explode(tokens(col("text"))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
       .select(col("word"), col("cnt"),

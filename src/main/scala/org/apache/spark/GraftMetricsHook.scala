@@ -1,7 +1,7 @@
 package org.apache.spark
 
-/** Accessor for the private[spark] listener bus, for diagnostics and
-  * specs only (never any query or operator): listener events are
+/** Accessors for private[spark] state, for diagnostics and specs only
+  * (never any query or operator). Listener events are
   * delivered asynchronously, so code that reads what a listener saw —
   * `graft.Probe`'s per-query task metrics, RegistryPlanSpec's
   * checkpoint audit — drains the bus first, or a slow delivery bleeds
@@ -11,4 +11,10 @@ package org.apache.spark
 object GraftMetricsHook {
   def drainListenerBus(sc: SparkContext, timeoutMillis: Long): Unit =
     sc.listenerBus.waitUntilEmpty(timeoutMillis)
+
+  /** The operation scope names of a stage's RDDs in RDD id order, such
+    * as `Scan parquet`, `WholeStageCodegen (2)` or `Exchange` (the scope
+    * type is private to Spark). */
+  def scopeNames(info: scheduler.StageInfo): Seq[String] =
+    info.rddInfos.sortBy(_.id).flatMap(_.scope.map(_.name.trim)).distinct
 }

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.GraftMetricsHook
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.functions.col
 
 /** The session factory and the Probe listener, pinned: the test session
   * runs under the confs the mains run under, and Probe's per-query cost
@@ -57,6 +58,16 @@ class GraftSessionSpec extends SparkSpec {
       assert(cost.shuffleRead ==
         events.map(_.shuffleReadMetrics.totalBytesRead).sum)
       assert(cost.taskMs == events.map(_.executorRunTime).sum)
+      // An AQE DataFrame aggregation: AQE submits its stages from a
+      // future, so they are named from their operator scopes, not from
+      // that future's call site.
+      val (_, _, aqe) = Probe.measure(spark, metrics) {
+        spark.range(0, 1000, 1, 3).groupBy((col("id") % 5).as("k"))
+          .count().collect()
+      }
+      val names = aqe.values.map(_.name).toSeq
+      assert(names.nonEmpty && names.forall(!_.contains(" at ")), names)
+      assert(names.exists(_.contains("Exchange")), names)
     } finally {
       sc.removeSparkListener(rawListener)
       sc.removeSparkListener(metrics)

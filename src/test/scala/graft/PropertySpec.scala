@@ -420,6 +420,15 @@ class PropertySpec extends SparkSpec {
         .as[Seq[Double]].collect().head
       assert(grouped(k) == single, s"key $k: ${grouped(k)} vs $single")
     }
+    // Empty and all-NULL inputs: a key whose values are all NULL gets
+    // no row, and an empty frame gets no row at all.
+    val withNullKey = df.union(
+      Seq[(Long, Option[Double])]((11L, None), (11L, None)).toDF("k", "v"))
+    assert(graft.api.GraftOps
+      .exactPercentilesDistBy(withNullKey, "k", "v", ps)
+      .as[(Long, Seq[Double])].collect().toMap == grouped)
+    assert(graft.api.GraftOps
+      .exactPercentilesDistBy(df.limit(0), "k", "v", ps).isEmpty)
   }
 
   test("exactPercentilesFromCounts matches exactPercentilesDist on rows") {
@@ -450,6 +459,19 @@ class PropertySpec extends SparkSpec {
         org.apache.spark.sql.functions.lit(1)).as("c")), "v", "c", ps)
       .as[Seq[Double]].collect().head
     assert(a == b && a == Seq(5.5, 5.5, 5.5))
+    // Empty and all-NULL inputs: both single-group forms return one
+    // row of NULLs, like percentile(v, array(ps)).
+    val nulls = Seq(Seq.fill(ps.size)(Option.empty[Double]))
+    Seq(df.limit(0), Seq(Option.empty[Double], None).toDF("v")).foreach {
+      in =>
+        val r = graft.api.GraftOps.exactPercentilesDist(in, "v", ps)
+          .as[Seq[Option[Double]]].collect().toSeq
+        val c = graft.api.GraftOps.exactPercentilesFromCounts(
+          in.groupBy($"v").agg(org.apache.spark.sql.functions.count(
+            org.apache.spark.sql.functions.lit(1)).as("c")), "v", "c", ps)
+          .as[Seq[Option[Double]]].collect().toSeq
+        assert(r == nulls && c == nulls, s"$r / $c")
+    }
   }
 
   test("disorderReport empty input keeps the degenerate row surface") {

@@ -129,6 +129,20 @@ class ScaleOpsSpec extends SparkSpec {
       Seq(39L, 0L, 1L, 2L, 65535L))
   }
 
+  test("SharedStage: two sessions of one context never share an entry") {
+    // Entries are per session: a second session using the same key gets
+    // its own frame and its own build, even while the first's is alive.
+    val key = "sessionScope:probe"
+    val other = spark.newSession()
+    val a = graft.operators.SharedStage(spark, key)(spark.range(3).toDF())
+    val b = graft.operators.SharedStage(other, key)(other.range(5).toDF())
+    assert(a.count() == 3 && b.count() == 5)
+    assert(graft.operators.SharedStage.buildsFor(spark, key) == 1)
+    assert(graft.operators.SharedStage.buildsFor(other, key) == 1)
+    assert(graft.operators.SharedStage(spark, key)(spark.range(7).toDF())
+      .count() == 3, "a live entry must be served, not rebuilt")
+  }
+
   test("SharedStage: two consumers of the video keep-best core share " +
       "ONE materialization in a live session, with identical results") {
     // r13 VERDICT item 8: pipeline_video_retention re-derives
