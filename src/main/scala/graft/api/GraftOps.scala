@@ -390,17 +390,19 @@ object GraftOps {
     * whitespace token, (idCol, pos, gram), where gram is `f` of the
     * space-joined `n` tokens starting at that token, NULL where fewer
     * than `n` tokens remain. `f` runs inside that null guard, so a hash
-    * passed as `f` never sees the missing tail. */
+    * passed as `f` never sees the missing tail. Each lead is projected
+    * once, so the guard and the gram share one window function. */
   private[graft] def wordGrams(docs: DataFrame, idCol: String,
       textCol: String, n: Int, f: Column => Column = c => c): DataFrame = {
     val w = Window.partitionBy(idCol).orderBy("pos")
+    val toks = col("tok") +: (1 until n).map(k => col(s"__l$k"))
     docs.select(col(idCol),
         posexplode(split(trim(col(textCol)), "\\s+")).as(Seq("pos", "tok")))
       .filter(col("tok") =!= "")
+      .select(col(idCol) +: col("pos") +: col("tok") +: (1 until n).map(k =>
+        lead(col("tok"), k).over(w).as(s"__l$k")): _*)
       .select(col(idCol), col("pos"),
-        when(lead(col("tok"), n - 1).over(w).isNotNull,
-          f(concat_ws(" ", col("tok") +: (1 until n).map(k =>
-            lead(col("tok"), k).over(w)): _*))).as("gram"))
+        when(toks.last.isNotNull, f(concat_ws(" ", toks: _*))).as("gram"))
   }
 
   /** Cross-document duplicated-substring detection — the declarative

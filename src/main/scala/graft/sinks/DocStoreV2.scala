@@ -11,9 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -22,14 +20,16 @@ import org.apache.spark.unsafe.types.UTF8String
 /** DataSource V2 document-collection sink — `format("graft-docs")`
   * (r17 VERDICT item 3).
   *
-  * The reference's MongoDB collection sink (utils.py:123-146), behind
+  * The reference's MongoDB collection insert (utils.py:123-146), behind
   * Spark's native connector surface — the shape a real Mongo/ES
-  * connector ports into: the engine plans an `AppendData` /
-  * streaming-write node, tasks stream documents through
-  * [[DataWriter]]s, and the DRIVER adjudicates commit — so task
-  * retries, speculative duplicates, and micro-batch replays are all
-  * resolved by the connector's commit protocol instead of by each
-  * caller re-implementing the idempotence recipe.
+  * connector ports into: the engine plans an `AppendData` node, tasks
+  * stream documents through [[DataWriter]]s, and the DRIVER
+  * adjudicates commit — so task retries, speculative duplicates and
+  * replayed batch jobs are resolved by the connector's commit protocol
+  * instead of by each caller re-implementing the idempotence recipe.
+  * The connector is batch-only: a batch write (`ImportJob`,
+  * `ImportService`) and a batch read. The one exactly-once STREAM
+  * writer is [[Sinks.writeBatchIdempotent]].
   *
   * Store layout (filesystem-backed; a keyed store swaps the commit
   * body, not the API):
@@ -43,32 +43,24 @@ import org.apache.spark.unsafe.types.UTF8String
   * key. The connector's contract is BATCH-REPLACE: the same `_id`
   * written under two different batch ids is stored once per batch
   * (store-wide uniqueness is what [[Sinks.insertDocCollectionJdbc]]'s
-  * primary key enforces). Callers needing store-wide `_id` uniqueness
-  * here anti-join the strictly-earlier batches before writing. A
-  * leading-underscore staging dir is invisible to Spark's file index,
-  * so readers (`spark.read.schema(..).json(path)`) only ever see
-  * committed batches, and the `batch_id=` layout surfaces as a
-  * partition column for free.
+  * primary key enforces). A leading-underscore staging dir is
+  * invisible to Spark's file index, so readers
+  * (`spark.read.schema(..).json(path)`) only ever see committed
+  * batches, and the `batch_id=` layout surfaces as a partition column
+  * for free.
   *
-  * Exactly-once: [[Sinks.writeBatchIdempotent]]'s recipe moved behind
-  * the V2 API. Tasks write to staging and return the staged file in
+  * Exactly-once: tasks write to staging and return the staged file in
   * their commit message; only `commit()` on the driver publishes — it
   * REPLACES the batch's own directory with exactly the committed
   * attempts' files, assembling the full directory (files + `_SUCCESS`
   * marker) in staging and swapping it in with ONE rename, so
-  * concurrent readers observe a batch whole or not at all. A replayed
-  * micro-batch (restart between sink write and checkpoint commit)
-  * re-runs the same epochId over the same source offsets (Structured
-  * Streaming's contract) and overwrites its own `batch_id=` directory
-  * byte-for-byte; a failed/speculative task's staged file is never
-  * referenced by any commit message and is swept with the staging
-  * dir. Batch writes take their id from the `batchId` write option
-  * (default 0) with the same replace-own-partition semantics, so a
-  * retried batch JOB is idempotent too. Batch ids must be
-  * monotonically increasing per store (enforced at commit): a tail's
-  * checkpoint is a plain high-water batch id, so an id committed
-  * BELOW an already-committed one would be invisible to every tail
-  * that has passed it.
+  * concurrent readers observe a batch whole or not at all; a
+  * failed/speculative task's staged file is never referenced by any
+  * commit message and is swept with the staging dir. Writes take their
+  * id from the `batchId` write option (default 0): a replayed id
+  * replaces its own partition, so a retried batch JOB is idempotent.
+  * Batch ids must be monotonically increasing per store (enforced at
+  * commit), so a `batch_id > horizon` read never misses a later batch.
   *
   * Scale: writers stream rows straight to the store (no task-side
   * buffering beyond the FS client's), the driver touches only METADATA
@@ -79,8 +71,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Reads (`spark.read.format("graft-docs")`): committed files are
   * BIN-PACKED into input partitions up to `maxPartitionBytes`
-  * (default 128 MiB — a store of millions of tiny micro-batch files
-  * plans thousands of tasks, not millions; a file never splits), with
+  * (default 128 MiB — a store of millions of tiny batch files plans
+  * thousands of tasks, not millions; a file never splits), with
   * COLUMN PRUNING and `batch_id` PARTITION PRUNING pushed into the
   * scan — a batch_id predicate is resolved against directory names on
   * the driver, so "read since horizon" never lists or opens the
@@ -88,19 +80,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * re-evaluated by Spark post-scan. Only batches whose `_SUCCESS`
   * marker exists are visible — a crashed or in-flight publish is
   * indistinguishable from an uncommitted batch.
-  *
-  * Streaming reads (`spark.readStream.format("graft-docs")`): the
-  * commit layout doubles as a changelog — each committed batch is one
-  * offset unit, so a stream TAILS the store exactly-once across
-  * restarts (offsets checkpoint as plain batch ids). Where the tail
-  * STARTS is the `startingOffsets` option, resolved once at stream
-  * start (checkpoints take over after): `earliest` (default — the
-  * smallest committed id, so low/negative ids are never skipped),
-  * `latest` (only batches committed after the stream starts), or an
-  * explicit numeric batch id. `maxBatchesPerTrigger` bounds how many
-  * committed batches one micro-batch admits (admission control), so
-  * a fresh `earliest` tail of a deep store catches up in bounded
-  * steps instead of planning all history as one trigger.
   *
   * The scan also reports its post-pruning byte size from the commit
   * metadata (`SupportsReportStatistics`), so joining a small store
@@ -157,77 +136,42 @@ private[graft] object GraftDocs {
     * A batch is committed IFF its `_SUCCESS` marker exists (r18
     * ADVICE, high): publish assembles the complete directory in
     * staging — marker included — and swaps it in with one rename, so
-    * gating on the marker means a concurrent tail or batch scan can
-    * never plan (and then checkpoint past) a half-populated batch; an
-    * in-flight or crashed publish is simply invisible until its
-    * replay lands whole. */
+    * gating on the marker means a concurrent scan can never plan a
+    * half-populated batch; an in-flight or crashed publish is simply
+    * invisible until its replay lands whole. */
   def committedBatches(conf: Configuration, path: String,
       pruners: Seq[Long => Boolean]): Seq[(Long, Seq[(String, Long)])] = {
-    val raw = listBatchesRaw(conf, path, pruners)
-    // Compaction suppression (r19 VERDICT item 2): a pack's covered
-    // range [lo, hi) hides any still-on-disk source directory it
-    // absorbed — compactBelow deletes them synchronously, so this only
-    // matters in the crash window between a pack's commit rename and
-    // its covered-dir sweep (compactBelow self-heals the window on its
-    // next run).
-    val covered = raw.collect { case (hi, Some(lo), _) => (lo, hi) }
-    raw.filterNot { case (id, _, _) =>
-        covered.exists { case (lo, hi) => id >= lo && id < hi } }
-      .map { case (id, _, files) => (id, files) }
-  }
-
-  /** Committed batches with their compaction marker, if any: a pack
-    * written by [[compactBelow]] carries an empty
-    * `_compacted_from=<lo>` marker file meaning "this directory holds
-    * every row of batch ids [lo, thisId]" — detected in the same
-    * per-directory listing the _SUCCESS gate already pays. */
-  private def listBatchesRaw(conf: Configuration, path: String,
-      pruners: Seq[Long => Boolean])
-      : Seq[(Long, Option[Long], Seq[(String, Long)])] = {
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
-    if (!fs.exists(root)) return Seq.empty
-    fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("batch_id="))
-      .flatMap { dir =>
-        scala.util.Try(
-            dir.getPath.getName.stripPrefix("batch_id=").toLong)
-          .toOption
-          .filter(id => pruners.forall(p => p(id)))
-          .flatMap { id =>
-            val entries = fs.listStatus(dir.getPath).toSeq
-            if (!entries.exists(e => e.isFile &&
-                e.getPath.getName == "_SUCCESS")) None
-            else {
-              val lo = entries.iterator.map(_.getPath.getName)
-                .collectFirst { case CompactMarker(l) => l.toLong }
-              Some((id, lo, entries
-                .filter(f =>
-                  f.isFile && f.getPath.getName.endsWith(".jsonl"))
-                .map(f => (f.getPath.toString, f.getLen))))
-            }
-          }
+    batchDirs(fs, root)
+      .filter { case (id, _) => pruners.forall(p => p(id)) }
+      .flatMap { case (id, dir) =>
+        val entries = fs.listStatus(dir).toSeq
+        if (!entries.exists(e => e.isFile &&
+            e.getPath.getName == "_SUCCESS")) None
+        else Some((id, entries
+          .filter(f => f.isFile && f.getPath.getName.endsWith(".jsonl"))
+          .map(f => (f.getPath.toString, f.getLen))))
       }
       .sortBy(_._1)
   }
 
-  private val CompactMarker = "_compacted_from=(-?\\d+)".r
-
-  /** Whether `id`'s rows already live inside a committed pack — the
-    * evidence [[publish]] needs on its rare path to turn a replayed
-    * commit of a compacted-away epoch into an idempotent no-op. */
-  def coveredBy(conf: Configuration, path: String, id: Long): Boolean =
-    listBatchesRaw(conf, path, Seq.empty).exists {
-      case (hi, Some(lo), _) => id >= lo && id < hi
-      case _ => false
+  /** The `batch_id=<id>` directories under `root` by NAME alone — one
+    * listStatus, no marker check. */
+  private def batchDirs(fs: FileSystem, root: Path): Seq[(Long, Path)] =
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq.flatMap { st =>
+      val name = st.getPath.getName
+      if (!st.isDirectory || !name.startsWith("batch_id=")) None
+      else scala.util.Try(name.stripPrefix("batch_id=").toLong).toOption
+        .map(id => (id, st.getPath))
     }
 
   /** Bin-pack committed files into input partitions (r18 VERDICT
     * item 4): greedy first-fit in (batch, file-name) order up to
     * `targetBytes` per partition, one file in exactly one partition,
-    * never split. A store of millions of tiny micro-batch files —
-    * the natural shape after years of small epochs — plans
+    * never split. A store of millions of tiny batch files — the
+    * natural shape after years of small batches — plans
     * total-bytes/target tasks instead of one task per file; a single
     * file larger than the target gets its own partition (the
     * no-split contract keeps the reader trivially correct). */
@@ -279,39 +223,31 @@ private[graft] object GraftDocs {
     * one rename, so the batch becomes visible atomically with its
     * marker (r18 ADVICE, high: per-file renames into the live
     * directory let a mid-publish lister plan a partial batch). A
-    * replayed commit of the same id replaces its own output: during
-    * its brief delete→rename swap the id is merely INVISIBLE (no
-    * marker), never partial. Metadata-only on the driver: one rename
-    * per committed task file plus the swap — O(#tasks), the same cost
-    * every FileFormatWriter commit pays.
+    * replayed commit of the same id replaces its own output: the old
+    * directory is moved aside inside `_staging` first, so during the
+    * swap the id is merely INVISIBLE (no marker), never partial, and a
+    * swap that fails moves the old directory back before throwing —
+    * a failed replay leaves the committed batch whole. Metadata-only
+    * on the driver: one rename per committed task file plus the swap —
+    * O(#tasks), the same cost every FileFormatWriter commit pays.
     *
     * Monotonic-id guard: a NEW id below the store's max KNOWN id is
-    * rejected (replays pass) — tails checkpoint a high-water batch id,
-    * so a lower fresh id would be permanently invisible to any tail
-    * already past it. The max bound comes from `batch_id=` directory
-    * NAMES alone — ONE root listStatus, no per-directory marker or
-    * file listing (r19 ADVICE, medium: the old `committedBatches`
-    * call made every commit O(total batches × files) in driver FS
-    * metadata RPCs; a name-only bound is strictly safer — an
-    * uncommitted dir's id only tightens the guard, never loosens it).
-    * "Replay" is likewise evidence-based and checked BEFORE the guard
-    * (r19 ADVICE, low): an existing `batch_id=<id>` dir OR an orphaned
-    * `.publish-<id>-` staging dir proves a prior commit/replay of this
-    * id — without the staging-dir arm, a replay that crashed between
-    * delete(dest) and swap would trip the guard forever (id gone from
-    * the committed set but still below max). */
+    * rejected (replays pass). The max bound comes from `batch_id=`
+    * directory NAMES alone — ONE root listStatus, no per-directory
+    * marker or file listing (r19 ADVICE, medium: a name-only bound is
+    * strictly safer — an uncommitted dir's id only tightens the guard,
+    * never loosens it). "Replay" is likewise evidence-based and checked
+    * BEFORE the guard (r19 ADVICE, low): an existing `batch_id=<id>`
+    * dir OR an orphaned `.publish-<id>-` staging dir proves a prior
+    * commit/replay of this id — without the staging-dir arm, a replay
+    * that crashed between moving the old directory aside and the swap
+    * would trip the guard forever (id gone from the committed set but
+    * still below max). */
   def publish(conf: Configuration, path: String, id: Long,
       messages: Array[WriterCommitMessage]): Unit = {
     val dest = new Path(s"$path/batch_id=$id")
     val fs = dest.getFileSystem(conf)
-    val root = new Path(path)
-    val knownIds: Seq[Long] =
-      if (!fs.exists(root)) Seq.empty
-      else fs.listStatus(root).toSeq
-        .filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith("batch_id="))
-        .flatMap(st => scala.util.Try(
-          st.getPath.getName.stripPrefix("batch_id=").toLong).toOption)
+    val knownIds = batchDirs(fs, new Path(path)).map(_._1)
     val stagingRoot = new Path(s"$path/_staging")
     // This id's orphaned swap dirs: replay evidence first, then swept
     // below (a driver that crashed between staging and swap leaves one
@@ -324,22 +260,15 @@ private[graft] object GraftDocs {
           st.getPath.getName.startsWith(s".publish-$id-"))
         .map(_.getPath)
     val isReplay = knownIds.contains(id) || orphans.nonEmpty
-    if (!isReplay && knownIds.nonEmpty && id < knownIds.max) {
-      // Rare path only (a would-be guard failure): a replayed epoch
-      // whose directory was absorbed by a pack is ALREADY committed —
-      // byte-identically, per the single-writer replay contract — so
-      // the exactly-once answer is a no-op, not a rejection. The full
-      // marker listing is paid only here, never on the hot path.
-      if (coveredBy(conf, path, id)) return
+    if (!isReplay && knownIds.nonEmpty && id < knownIds.max)
       throw new IllegalArgumentException(
         s"graft-docs commit: batch id $id is below the store's max " +
-          s"known id ${knownIds.max} and is not a replay; tails " +
-          s"checkpointed past ${knownIds.max} would never read it — " +
+          s"known id ${knownIds.max} and is not a replay; a read " +
+          s"past ${knownIds.max} would never see it — " +
           s"batch ids must be monotonically increasing per store")
-    }
     orphans.foreach(p => fs.delete(p, true))
-    val tmp = new Path(
-      s"$path/_staging/.publish-$id-${UUID.randomUUID().toString.take(8)}")
+    val tmp = new Path(stagingRoot,
+      s".publish-$id-${UUID.randomUUID().toString.take(8)}")
     fs.mkdirs(tmp)
     messages.foreach {
       case DocCommitMessage(staged) =>
@@ -352,10 +281,21 @@ private[graft] object GraftDocs {
           s"graft-docs commit: unexpected message $other")
     }
     fs.create(new Path(tmp, "_SUCCESS"), true).close()
-    if (fs.exists(dest)) fs.delete(dest, true)
-    if (!fs.rename(tmp, dest))
+    // The moved-aside copy carries this publish's `.publish-<id>-`
+    // prefix, so a crash before its delete leaves replay evidence.
+    val old = new Path(s"$tmp.old")
+    val replacing = fs.exists(dest)
+    if (replacing && !fs.rename(dest, old))
       throw new java.io.IOException(
-        s"graft-docs commit: swap $tmp -> $dest failed")
+        s"graft-docs commit: move $dest -> $old failed")
+    val swapped = scala.util.Try(fs.rename(tmp, dest))
+    if (!swapped.getOrElse(false)) {
+      if (replacing) fs.rename(old, dest)
+      throw new java.io.IOException(
+        s"graft-docs commit: swap $tmp -> $dest failed",
+        swapped.failed.toOption.orNull)
+    }
+    if (replacing) fs.delete(old, true)
   }
 
   def dropStaging(conf: Configuration, path: String, queryId: String)
@@ -363,170 +303,6 @@ private[graft] object GraftDocs {
     val staging = new Path(s"$path/_staging/$queryId")
     val fs = staging.getFileSystem(conf)
     if (fs.exists(staging)) fs.delete(staging, true)
-  }
-
-  /** RETENTION — drop every committed batch with id < `keepFrom`
-    * (returns the dropped ids). The operational twin of
-    * `startingOffsets`: a store tailed for a year accumulates history
-    * no reader wants; this is the Kafka-retention shape for the
-    * commit layout. Driver metadata-only (one recursive delete per
-    * expired directory). Contract, exactly like log retention vs
-    * consumer lag: vacuum only below every active tail's checkpointed
-    * offset — a tail planning a range whose directories vanish
-    * mid-plan reads fewer rows, the same race every file source has
-    * with external deletes. The monotonic-id guard keys off the MAX
-    * committed id, so vacuuming history never re-opens low ids for
-    * reuse by accident (fresh ids must still exceed the surviving
-    * max), and an `earliest` tail started after a vacuum begins at
-    * the new smallest id. */
-  def vacuumBelow(conf: Configuration, path: String, keepFrom: Long)
-      : Seq[Long] =
-    committedBatches(conf, path, Seq(_ < keepFrom)).map { case (id, _) =>
-      val dir = new Path(s"$path/batch_id=$id")
-      dir.getFileSystem(conf).delete(dir, true)
-      id
-    }
-
-  /** WRITE-SIDE COMPACTION (r19 VERDICT item 2) — rewrite runs of
-    * small committed batches below `keepFrom` into packed ones, the
-    * operational twin of the read-side bin-packing: a year of
-    * micro-batches leaves millions of tiny directories/files, and this
-    * is the OPTIMIZE-shaped maintenance pass that collapses them.
-    *
-    * Protocol — same `_SUCCESS`-gated atomic-rename discipline as
-    * [[publish]]:
-    *  1. Greedily group CONSECUTIVE committed batches `[lo..hi]`
-    *     (ids < `keepFrom`, >= 2 members, packed bytes <= `targetBytes`).
-    *  2. Stage one concatenated `part-00000-compact.jsonl` (pure byte
-    *     concatenation — every writer line is newline-terminated, and
-    *     a defensive separator is inserted if a source file is not —
-    *     so committed bytes are never re-serialized; golden byte pins
-    *     hold) plus an empty `_compacted_from=<lo>` marker and the
-    *     `_SUCCESS` gate, assembled COMPLETE under `_staging`.
-    *  3. Swap into `batch_id=<hi>` with one delete+rename — the same
-    *     brief id-invisible window a replayed publish has; the rename
-    *     is the commit point, and from that instant the marker makes
-    *     readers suppress the absorbed directories.
-    *  4. Delete the absorbed `batch_id=<lo>..<hi-1>` directories
-    *     synchronously (idempotent; [[committedBatches]]' marker
-    *     suppression covers the crash window, and the next
-    *     `compactBelow` call self-heals via [[recoverCompactions]]).
-    *
-    * Semantics after compaction: rows keep their bytes but carry the
-    * PACK's `batch_id` (the column is directory-derived) — so, exactly
-    * like [[vacuumBelow]], run this only below every active tail's
-    * checkpointed offset and below any `batch_id`-horizon predicates
-    * still in use; a tail checkpointed at or past `hi` never re-reads,
-    * a fresh `earliest` tail reads the pack exactly once, and a
-    * replayed WRITE of an absorbed epoch is an idempotent no-op (see
-    * [[publish]]'s covered-id arm). Compacting a pack again composes:
-    * the new marker carries the min covered lo.
-    *
-    * Runs on the driver (streamed copy, O(packed bytes) IO) — the
-    * maintenance-window shape; a deployment compacting TBs would lift
-    * step 2 onto executors with one task per pack, leaving the
-    * commit protocol unchanged.
-    *
-    * Returns the (lo, hi) ranges packed. */
-  def compactBelow(conf: Configuration, path: String, keepFrom: Long,
-      targetBytes: Long = 128L << 20): Seq[(Long, Long)] = {
-    recoverCompactions(conf, path)
-    val fs = new Path(path).getFileSystem(conf)
-    val batches = listBatchesRaw(conf, path, Seq(_ < keepFrom))
-    // effective lo: a member that is itself a pack extends coverage
-    // back to ITS lo
-    val sized = batches.map { case (id, lo, files) =>
-      (id, lo.getOrElse(id), files, files.map(_._2).sum) }
-    val groups = Seq.newBuilder[Seq[(Long, Long, Seq[(String, Long)], Long)]]
-    var cur = Vector.empty[(Long, Long, Seq[(String, Long)], Long)]
-    var curBytes = 0L
-    def flush(): Unit = {
-      if (cur.size >= 2) groups += cur
-      cur = Vector.empty; curBytes = 0L
-    }
-    sized.foreach { b =>
-      if (cur.nonEmpty && curBytes + b._4 > targetBytes) flush()
-      if (b._4 > targetBytes) { flush() } // oversized batch stays alone
-      else { cur = cur :+ b; curBytes += b._4 }
-    }
-    flush()
-    groups.result().map { group =>
-      val lo = group.head._2
-      val hi = group.last._1
-      val tmp = new Path(
-        s"$path/_staging/.compact-$hi-${UUID.randomUUID().toString.take(8)}")
-      fs.mkdirs(tmp)
-      val out = fs.create(new Path(tmp, "part-00000-compact.jsonl"), true)
-      try {
-        val buf = new Array[Byte](64 * 1024)
-        for ((_, _, files, _) <- group; (f, _) <- files.sortBy(_._1)) {
-          val in = fs.open(new Path(f))
-          var lastByte: Int = '\n'
-          try {
-            var n = in.read(buf)
-            while (n > 0) {
-              out.write(buf, 0, n)
-              lastByte = buf(n - 1)
-              n = in.read(buf)
-            }
-          } finally in.close()
-          if (lastByte != '\n') out.write('\n')
-        }
-      } finally out.close()
-      fs.create(new Path(tmp, s"_compacted_from=$lo"), true).close()
-      fs.create(new Path(tmp, "_SUCCESS"), true).close()
-      val dest = new Path(s"$path/batch_id=$hi")
-      if (fs.exists(dest)) fs.delete(dest, true)
-      if (!fs.rename(tmp, dest))
-        throw new java.io.IOException(
-          s"graft-docs compact: swap $tmp -> $dest failed")
-      group.init.foreach { case (id, _, _, _) =>
-        fs.delete(new Path(s"$path/batch_id=$id"), true)
-      }
-      (lo, hi)
-    }
-  }
-
-  /** Crash recovery for [[compactBelow]] — called at the start of
-    * every compaction pass:
-    *  - a COMPLETE orphaned `.compact-<hi>-` staging dir (has
-    *    `_SUCCESS`) whose swap never landed is finished now: its
-    *    content equals the committed rows it absorbed, so completing
-    *    the delete+rename loses nothing, whichever side of the crash
-    *    the store is on;
-    *  - an INCOMPLETE one is garbage, deleted;
-    *  - directories a committed pack covers (the pack landed, the
-    *    sweep crashed) are deleted. */
-  def recoverCompactions(conf: Configuration, path: String): Unit = {
-    val fs = new Path(path).getFileSystem(conf)
-    val stagingRoot = new Path(s"$path/_staging")
-    val Orphan = "\\.compact-(-?\\d+)-.*".r
-    if (fs.exists(stagingRoot))
-      fs.listStatus(stagingRoot).toSeq
-        .filter(_.isDirectory)
-        .foreach { st =>
-          st.getPath.getName match {
-            case Orphan(hiStr) =>
-              val complete = fs.listStatus(st.getPath).exists(e =>
-                e.isFile && e.getPath.getName == "_SUCCESS")
-              if (!complete) fs.delete(st.getPath, true)
-              else {
-                val dest = new Path(s"$path/batch_id=$hiStr")
-                if (fs.exists(dest)) fs.delete(dest, true)
-                if (!fs.rename(st.getPath, dest))
-                  throw new java.io.IOException(
-                    s"graft-docs compact recovery: swap " +
-                      s"${st.getPath} -> $dest failed")
-              }
-            case _ => ()
-          }
-        }
-    val raw = listBatchesRaw(conf, path, Seq.empty)
-    val covered = raw.collect { case (hi, Some(lo), _) => (lo, hi) }
-    raw.foreach { case (id, _, _) =>
-      if (covered.exists { case (lo, hi) => id >= lo && id < hi })
-        fs.delete(new Path(s"$path/batch_id=$id"), true)
-    }
   }
 }
 
@@ -551,16 +327,13 @@ private[sinks] class GraftDocsTable(path: String,
   override def name(): String = s"graft-docs(`$path`)"
   override def schema(): StructType = tableSchema
   override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE).asJava
+    Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE).asJava
 
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder =
     new GraftDocsScanBuilder(path, tableSchema,
-      Option(options.get("startingOffsets")).getOrElse("earliest"),
       Option(options.get("maxPartitionBytes")).map(_.toLong)
-        .getOrElse(128L << 20),
-      Option(options.get("maxBatchesPerTrigger")).map(_.toInt))
+        .getOrElse(128L << 20))
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(info.schema().fields.map(f => (f.name, f.dataType)).toSeq ==
@@ -573,8 +346,6 @@ private[sinks] class GraftDocsTable(path: String,
       override def build(): Write = new Write {
         override def toBatch: BatchWrite =
           new GraftDocsBatchWrite(path, info.queryId(), batchId)
-        override def toStreaming: StreamingWrite =
-          new GraftDocsStreamingWrite(path, info.queryId())
       }
     }
   }
@@ -584,19 +355,10 @@ private[sinks] case class DocCommitMessage(stagedPath: String)
     extends WriterCommitMessage
 
 private[sinks] class GraftDocsWriterFactory(conf: SerializableHadoopConf,
-    stagingBase: String) extends DataWriterFactory
-    with StreamingDataWriterFactory {
-  // Batch: the staging base IS the batch's staging dir.
+    stagingBase: String) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : DataWriter[InternalRow] =
     new GraftDocsWriter(conf.value, stagingBase, partitionId, taskId)
-  // Streaming: one factory serves the whole query; each epoch stages
-  // under its own subdirectory so a replayed epoch's files never mix
-  // with a later epoch's.
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : DataWriter[InternalRow] =
-    new GraftDocsWriter(conf.value, s"$stagingBase/$epochId",
-      partitionId, taskId)
 }
 
 private[sinks] class GraftDocsBatchWrite(path: String, queryId: String,
@@ -616,36 +378,6 @@ private[sinks] class GraftDocsBatchWrite(path: String, queryId: String,
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     GraftDocs.dropStaging(conf.value, path, queryId)
-}
-
-private[sinks] class GraftDocsStreamingWrite(path: String, queryId: String)
-    extends StreamingWrite {
-  private val conf = new SerializableHadoopConf(
-    org.apache.spark.sql.SparkSession.active
-      .sparkContext.hadoopConfiguration)
-
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo)
-      : StreamingDataWriterFactory =
-    new GraftDocsWriterFactory(conf, s"$path/_staging/$queryId")
-
-  override def commit(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = {
-    // Publish replaces `batch_id=<epochId>` wholesale — the replayed-
-    // epoch idempotence the foreachBatch recipe provided, now enforced
-    // by the sink itself. Staging is swept per-epoch (not per-query):
-    // the stream keeps running.
-    GraftDocs.publish(conf.value, path, epochId, messages)
-    val staging = new Path(s"$path/_staging/$queryId/$epochId")
-    val fs = staging.getFileSystem(conf.value)
-    if (fs.exists(staging)) fs.delete(staging, true)
-  }
-
-  override def abort(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = {
-    val staging = new Path(s"$path/_staging/$queryId/$epochId")
-    val fs = staging.getFileSystem(conf.value)
-    if (fs.exists(staging)) fs.delete(staging, true)
-  }
 }
 
 /** Task-side writer: streams rows to ONE staged JSONL file; the staged
@@ -695,8 +427,7 @@ private[sinks] class GraftDocsWriter(conf: Configuration, stagingDir: String,
   * and stay post-scan. At 100 TB the batch axis is the store's time
   * axis, so "read since horizon" scans only the matching directories. */
 private[sinks] class GraftDocsScanBuilder(path: String,
-    tableSchema: StructType, startingOffsets: String,
-    maxPartitionBytes: Long, maxBatchesPerTrigger: Option[Int])
+    tableSchema: StructType, maxPartitionBytes: Long)
     extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
   private var required: StructType = tableSchema
@@ -729,8 +460,7 @@ private[sinks] class GraftDocsScanBuilder(path: String,
 
   override def build(): Scan =
     new GraftDocsScan(path, required,
-      pushed.flatMap(batchIdPruner).toSeq, startingOffsets,
-      maxPartitionBytes, maxBatchesPerTrigger)
+      pushed.flatMap(batchIdPruner).toSeq, maxPartitionBytes)
 }
 
 /** One scan task: a bin-packed run of committed files, each tagged
@@ -740,8 +470,7 @@ private[graft] case class GraftDocsInputPartition(
     files: Seq[(String, Long)]) extends InputPartition
 
 private[sinks] class GraftDocsScan(path: String, required: StructType,
-    pruners: Seq[Long => Boolean], startingOffsets: String,
-    maxPartitionBytes: Long, maxBatchesPerTrigger: Option[Int])
+    pruners: Seq[Long => Boolean], maxPartitionBytes: Long)
     extends Scan with Batch with SupportsReportStatistics {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -767,19 +496,6 @@ private[sinks] class GraftDocsScan(path: String, required: StructType,
     }
   }
 
-  /** Streaming read — TAIL the store: each committed `batch_id=`
-    * directory is one source offset unit, so the store's write-side
-    * commit log IS the read-side changelog (the CDC shape a doc-store
-    * connector serves). Offsets are exclusive upper batch ids;
-    * `latestOffset` lists directory NAMES only. Committed batches are
-    * immutable under the single-writer contract (a replayed writer
-    * epoch reproduces its partition byte-for-byte), which is what
-    * makes re-reading a planned range after a crash deterministic. */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : MicroBatchStream =
-    new GraftDocsMicroBatchStream(path, required, pruners,
-      startingOffsets, maxPartitionBytes, maxBatchesPerTrigger)
-
   override def planInputPartitions(): Array[InputPartition] = {
     val conf = org.apache.spark.sql.SparkSession.active
       .sparkContext.hadoopConfiguration
@@ -792,100 +508,6 @@ private[sinks] class GraftDocsScan(path: String, required: StructType,
       new SerializableHadoopConf(org.apache.spark.sql.SparkSession.active
         .sparkContext.hadoopConfiguration),
       required.fields.map(_.name))
-}
-
-private[sinks] case class GraftDocsOffset(nextBatchId: Long)
-    extends Offset {
-  override def json(): String = nextBatchId.toString
-}
-
-private[sinks] class GraftDocsMicroBatchStream(path: String,
-    required: StructType, pruners: Seq[Long => Boolean],
-    startingOffsets: String, maxPartitionBytes: Long,
-    maxBatchesPerTrigger: Option[Int])
-    extends MicroBatchStream with SupportsAdmissionControl {
-  private val conf = org.apache.spark.sql.SparkSession.active
-    .sparkContext.hadoopConfiguration
-
-  /** Admission control (`maxBatchesPerTrigger`): a fresh `earliest`
-    * tail of a year-deep store must catch up in BOUNDED micro-batches
-    * — without a limit the first trigger plans the entire history as
-    * one batch, which at 100 TB is an executor-memory and
-    * checkpoint-granularity disaster. The unit is committed store
-    * batches (each an immutable directory), surfaced through Spark's
-    * maxFiles-shaped ReadLimit; ids may be gapped, so the limit takes
-    * the next N COMMITTED ids past the start, not start+N. */
-  override def getDefaultReadLimit: ReadLimit =
-    maxBatchesPerTrigger.map(n => ReadLimit.maxFiles(n))
-      .getOrElse(ReadLimit.allAvailable())
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val ids = GraftDocs.committedBatches(conf, path, Seq.empty)
-      .map(_._1)
-    val lo = start.asInstanceOf[GraftDocsOffset].nextBatchId
-    val pending = ids.filter(_ >= lo)
-    if (pending.isEmpty) start
-    else limit match {
-      case f: ReadMaxFiles =>
-        GraftDocsOffset(pending.take(f.maxFiles()).max + 1L)
-      case _ => GraftDocsOffset(pending.max + 1L)
-    }
-  }
-
-  /** The true tip, independent of any read limit — lets the engine
-    * report how far behind a rate-limited tail is running. */
-  override def reportLatestOffset(): Offset = latestOffset()
-
-  /** Where a FRESH tail starts (r18 VERDICT item 3; checkpointed
-    * offsets take over on restart, so this resolves exactly once per
-    * stream lifetime): `earliest` begins at the smallest committed id
-    * — not the literal 0 the first cut hard-coded, which silently
-    * skipped negative ids; `latest` begins past everything already
-    * committed, so tailing a year-old 100 TB store doesn't replay all
-    * history; a numeric value is an explicit start id (inclusive). */
-  override def initialOffset(): Offset = {
-    val ids = GraftDocs.committedBatches(conf, path, Seq.empty).map(_._1)
-    startingOffsets.trim.toLowerCase match {
-      case "earliest" =>
-        GraftDocsOffset(if (ids.isEmpty) 0L else ids.min)
-      case "latest" =>
-        GraftDocsOffset(if (ids.isEmpty) 0L else ids.max + 1L)
-      case s =>
-        GraftDocsOffset(scala.util.Try(s.toLong).getOrElse(
-          throw new IllegalArgumentException(
-            s"graft-docs: startingOffsets must be earliest|latest|" +
-              s"<batch id>; got '$startingOffsets'")))
-    }
-  }
-
-  override def latestOffset(): Offset = {
-    val ids = GraftDocs.committedBatches(conf, path, Seq.empty)
-      .map(_._1)
-    GraftDocsOffset(if (ids.isEmpty) 0L else ids.max + 1L)
-  }
-
-  override def planInputPartitions(start: Offset, end: Offset)
-      : Array[InputPartition] = {
-    val lo = start.asInstanceOf[GraftDocsOffset].nextBatchId
-    val hi = end.asInstanceOf[GraftDocsOffset].nextBatchId
-    // Any pushed batch_id predicates compose with the offset range —
-    // a filtered tail reads even fewer directories.
-    val rangePruners = pruners ++
-      Seq[Long => Boolean](id => id >= lo && id < hi)
-    GraftDocs.packPartitions(
-      GraftDocs.committedBatches(conf, path, rangePruners),
-      maxPartitionBytes)
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftDocsReaderFactory(new SerializableHadoopConf(conf),
-      required.fields.map(_.name))
-
-  override def deserializeOffset(json: String): Offset =
-    GraftDocsOffset(json.trim.toLong)
-
-  override def commit(end: Offset): Unit = () // nothing store-side
-  override def stop(): Unit = ()
 }
 
 private[sinks] class GraftDocsReaderFactory(conf: SerializableHadoopConf,

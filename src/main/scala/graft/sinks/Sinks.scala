@@ -8,9 +8,10 @@ import graft.jobs.ImportJob
   *
   * The reference writes one JSON file and one MongoDB document per import
   * (etl_import.py:59-64, utils.py:123-146). The JSON files and the
-  * `graft-docs` store batch are written by [[ImportJob]]; this object
-  * holds the document id, the JDBC insert with the reference's
-  * unique-id contract, and the idempotent micro-batch writer. The
+  * `graft-docs` store batch are written by [[ImportJob]] (the store is
+  * batch-only: batch write, batch read); this object holds the
+  * document id, the JDBC insert with the reference's unique-id
+  * contract, and the one exactly-once stream writer. The
   * app-generated unique id becomes a content hash (deterministic,
   * collision-safe by construction — the reference's retry loop is
   * unnecessary).
@@ -116,7 +117,8 @@ object Sinks {
     * checkpoint commit — the failure window foreachBatch exposes)
     * overwrites its own partition instead of appending duplicates.
     * This is the standard exactly-once recipe when the sink itself has
-    * no transactions. Use with
+    * no transactions, and the only stream writer here: `graft-docs`
+    * takes batch writes only. Use with
     * `stream.writeStream.foreachBatch(writeBatchIdempotent(path) _)`. */
   def writeBatchIdempotent(path: String)(df: DataFrame, batchId: Long)
       : Unit =

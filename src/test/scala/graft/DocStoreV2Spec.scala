@@ -4,20 +4,20 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.jobs.ImportJob
-import graft.sinks.{GraftDocs, Sinks}
+import graft.sinks.Sinks
 
-/** The DataSource V2 document sink (`format("graft-docs")`): commit
-  * protocol semantics — idempotent replayed batches, schema
-  * enforcement, streaming restart parity — plus the ImportJob leg that
-  * writes through it (r17 VERDICT item 3). */
+/** The DataSource V2 document store (`format("graft-docs")`), batch
+  * write and batch read: commit protocol semantics — idempotent
+  * replayed batches, the `_SUCCESS` gate, monotonic ids, a failed
+  * replay that keeps the committed batch whole — schema enforcement,
+  * the scan's pruning, bin-packing and statistics, plus the ImportJob
+  * leg that writes through it (r17 VERDICT item 3). */
 class DocStoreV2Spec extends SparkSpec {
   import spark.implicits._
 
   private val DocSchema = StructType(Seq(
     StructField("_id", StringType, nullable = false),
     StructField("doc", StringType, nullable = true)))
-
-  private def hconf = spark.sparkContext.hadoopConfiguration
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString + "/store"
@@ -98,34 +98,18 @@ class DocStoreV2Spec extends SparkSpec {
     }
     assert(e2.getMessage.toLowerCase.contains("path"),
       s"wrong error: ${e2.getMessage}")
-  }
-
-  test("streaming write: restart from checkpoint cannot duplicate a " +
-      "committed epoch; each epoch owns one batch_id partition") {
+    // the connector is batch-only: a stream cannot start against it
     implicit val sqlCtx = spark.sqlContext
-    val store = tmp("graft-docs-stream")
     val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-docs-ckpt").toString
-    val stream = MemoryStream[(String, String)]
-    def start() = stream.toDF().toDF("_id", "doc")
-      .writeStream.format("graft-docs")
-      .option("path", store).option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-
-    stream.addData(Seq(("s1", "d1"), ("s2", "d2")))
-    val q1 = start()
-    try q1.processAllAvailable() finally q1.stop()
-    // restart from the SAME checkpoint — committed epoch 0 must not
-    // re-emit; the new data lands in the next epoch's partition
-    stream.addData(Seq(("s3", "d3")))
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-
-    val rows = readStore(store).as[(String, String, Long)]
-      .collect().toSet
-    assert(rows == Set(("s1", "d1", 0L), ("s2", "d2", 0L),
-      ("s3", "d3", 1L)),
-      s"restarted stream state wrong: $rows")
+      .createTempDirectory("graft-docs-schema-ckpt").toString
+    val e3 = intercept[Exception] {
+      MemoryStream[(String, String)].toDF().toDF("_id", "doc")
+        .writeStream.format("graft-docs")
+        .option("path", store).option("checkpointLocation", ckpt)
+        .start()
+    }
+    assert(e3.getMessage.contains("streamed writing"),
+      s"wrong error: ${e3.getMessage}")
   }
 
   test("native read path: equals the raw-JSON read, prunes batch_id " +
@@ -181,42 +165,6 @@ class DocStoreV2Spec extends SparkSpec {
       .select("doc").as[String].collect().toSeq == Seq("x\n\"y\\z"))
   }
 
-  test("streaming read tails committed batches exactly once across a " +
-      "restart from checkpoint") {
-    val store = tmp("graft-docs-tail")
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-docs-tail-ckpt").toString
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-docs-tail-out").toString
-    def writeBatch(ids: Seq[String], b: Long): Unit =
-      ids.map(i => (i, s"d-$i")).toDF("_id", "doc")
-        .write.format("graft-docs")
-        .option("path", store).option("batchId", b)
-        .mode("append").save()
-    def start() = spark.readStream.format("graft-docs").load(store)
-      .writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", ckpt)
-      .start()
-
-    // phase 1: two committed batches exist before the stream starts
-    writeBatch(Seq("t0"), 0L)
-    writeBatch(Seq("t1"), 1L)
-    val q1 = start()
-    try q1.processAllAvailable() finally q1.stop()
-    assert(spark.read.parquet(out).select("_id").as[String]
-      .collect().toSet == Set("t0", "t1"))
-
-    // phase 2: a batch lands while the stream is DOWN; the restart
-    // must emit exactly it — never re-emit the checkpointed range
-    writeBatch(Seq("t2"), 2L)
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-    val rows = spark.read.parquet(out)
-      .select("_id", "batch_id").as[(String, Long)].collect().toSeq
-    assert(rows.sorted == Seq(("t0", 0L), ("t1", 1L), ("t2", 2L)),
-      s"restarted tail emitted $rows")
-  }
-
   test("bin-packing: many tiny committed files collapse into few " +
       "partitions at a byte target; per-file parity holds " +
       "(r18 VERDICT item 4)") {
@@ -249,147 +197,7 @@ class DocStoreV2Spec extends SparkSpec {
     assert(mid > 1 && mid < 12, s"mid target packed to $mid")
   }
 
-  test("write-side compaction packs small committed batches " +
-      "atomically: same rows, fewer dirs/files, tail continuity, " +
-      "absorbed-epoch replays idempotent (r19 VERDICT item 2)") {
-    val store = tmp("graft-docs-compact")
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-docs-compact-ckpt").toString
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-docs-compact-out").toString
-    def writeBatch(ids: Seq[String], b: Long): Unit =
-      ids.map(i => (i, s"d-$i")).toDF("_id", "doc")
-        .write.format("graft-docs")
-        .option("path", store).option("batchId", b)
-        .mode("append").save()
-    def tailOnce(): Unit = {
-      val q = spark.readStream.format("graft-docs").load(store)
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    for (b <- 0L until 6L) writeBatch(Seq(s"c$b"), b)
-    tailOnce() // tail checkpoints past the compaction horizon (id 6)
-    assert(spark.read.parquet(out).count() == 6)
-
-    val packed = GraftDocs.compactBelow(hconf, store,
-      keepFrom = 6L)
-    assert(packed == Seq((0L, 5L)), s"packed $packed")
-    // one pack dir remains; absorbed dirs deleted
-    val dirs = new java.io.File(store).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
-      .map(_.getName).toSet
-    assert(dirs == Set("batch_id=5"), s"dirs after compaction: $dirs")
-    assert(new java.io.File(store, "batch_id=5").listFiles()
-      .count(_.getName.endsWith(".jsonl")) == 1,
-      "pack should hold ONE concatenated jsonl")
-    // batch read: same rows, absorbed rows now carry the pack's id
-    val got = spark.read.format("graft-docs").load(store)
-      .as[(String, String, Long)].collect().toSet
-    assert(got == (0L until 6L).map(b => (s"c$b", s"d-c$b", 5L)).toSet,
-      s"post-compaction read: $got")
-    // raw-JSON parity survives (marker/_SUCCESS are _-prefixed)
-    assert(readStore(store).select("_id").as[String].collect().toSet
-      == (0L until 6L).map(b => s"c$b").toSet)
-
-    // CONCURRENT TAIL, NO GAP: the checkpointed tail re-reads nothing
-    tailOnce()
-    assert(spark.read.parquet(out).count() == 6,
-      "tail past the horizon re-read compacted data")
-    // and keeps consuming new batches seamlessly
-    writeBatch(Seq("c6"), 6L)
-    tailOnce()
-    assert(spark.read.parquet(out).select("_id").as[String]
-      .collect().toSet == (0L until 7L).map(b => s"c$b").toSet)
-    // a FRESH earliest tail reads everything exactly once
-    val out2 = java.nio.file.Files
-      .createTempDirectory("graft-docs-compact-out2").toString
-    val ckpt2 = java.nio.file.Files
-      .createTempDirectory("graft-docs-compact-ckpt2").toString
-    val q2 = spark.readStream.format("graft-docs").load(store)
-      .writeStream.format("parquet")
-      .option("path", out2).option("checkpointLocation", ckpt2)
-      .start()
-    try q2.processAllAvailable() finally q2.stop()
-    val fresh = spark.read.parquet(out2).select("_id").as[String]
-      .collect().toSeq
-    assert(fresh.sorted == (0L until 7L).map(b => s"c$b").sorted,
-      s"fresh tail read $fresh")
-
-    // REPLAY EXACTLY-ONCE: re-publishing an absorbed epoch is a no-op,
-    // not a monotonic-guard failure and not a duplicate
-    writeBatch(Seq("c2"), 2L)
-    assert(spark.read.format("graft-docs").load(store).count() == 7,
-      "replay of an absorbed epoch changed the store")
-    assert(!new java.io.File(store, "batch_id=2").exists(),
-      "replay of an absorbed epoch re-created its directory")
-  }
-
-  test("compaction crash recovery: a complete orphaned pack is " +
-      "finished, an incomplete one is dropped, a crashed covered-dir " +
-      "sweep is completed — and re-compaction composes markers") {
-    val store = tmp("graft-docs-compact-crash")
-    def writeBatch(ids: Seq[String], b: Long): Unit =
-      ids.map(i => (i, s"d-$i")).toDF("_id", "doc")
-        .write.format("graft-docs")
-        .option("path", store).option("batchId", b)
-        .mode("append").save()
-    for (b <- 0L until 4L) writeBatch(Seq(s"x$b"), b)
-    assert(GraftDocs.compactBelow(hconf, store, 4L)
-      == Seq((0L, 3L)))
-    // simulate a crashed covered-dir sweep: resurrect an absorbed dir
-    // (as if the sweep died before deleting it) — readers must still
-    // suppress it via the pack's marker, and recovery must delete it
-    val zombie = java.nio.file.Paths.get(store, "batch_id=1")
-    java.nio.file.Files.createDirectories(zombie)
-    java.nio.file.Files.writeString(zombie.resolve("part-z.jsonl"),
-      "{\"_id\":\"zombie\",\"doc\":\"stale\"}\n")
-    java.nio.file.Files.createFile(zombie.resolve("_SUCCESS"))
-    assert(!spark.read.format("graft-docs").load(store)
-      .as[(String, String, Long)].collect()
-      .exists(_._1 == "zombie"),
-      "a covered zombie dir leaked into a read")
-    // an INCOMPLETE orphaned pack staging dir is dropped by recovery
-    val badStage = java.nio.file.Paths.get(store, "_staging",
-      ".compact-9-deadbeef")
-    java.nio.file.Files.createDirectories(badStage)
-    java.nio.file.Files.writeString(
-      badStage.resolve("part-00000-compact.jsonl"), "junk")
-    // second compaction round: two more tiny batches + recovery
-    for (b <- 4L until 6L) writeBatch(Seq(s"x$b"), b)
-    val packed2 = GraftDocs.compactBelow(hconf, store, 6L)
-    assert(packed2 == Seq((0L, 5L)), s"re-compaction packed $packed2")
-    assert(!java.nio.file.Files.exists(zombie),
-      "recovery did not sweep the zombie covered dir")
-    assert(!java.nio.file.Files.exists(badStage),
-      "recovery did not drop the incomplete staged pack")
-    val got = spark.read.format("graft-docs").load(store)
-      .as[(String, String, Long)].collect().toSet
-    assert(got == (0L until 6L).map(b => (s"x$b", s"d-x$b", 5L)).toSet,
-      s"post-re-compaction read: $got")
-    // a COMPLETE orphaned pack (crash between rename steps) finishes:
-    // fake one claiming id 5 with distinguishable content
-    val stage = java.nio.file.Paths.get(store, "_staging",
-      ".compact-5-cafecafe")
-    java.nio.file.Files.createDirectories(stage)
-    val packFile = java.nio.file.Paths.get(store, "batch_id=5",
-      "part-00000-compact.jsonl")
-    java.nio.file.Files.copy(packFile,
-      stage.resolve("part-00000-compact.jsonl"))
-    java.nio.file.Files.createFile(stage.resolve("_compacted_from=0"))
-    java.nio.file.Files.createFile(stage.resolve("_SUCCESS"))
-    graft.sinks.GraftDocs.recoverCompactions(
-      spark.sparkContext.hadoopConfiguration, store)
-    assert(!java.nio.file.Files.exists(stage),
-      "recovery left the complete orphaned pack staged")
-    assert(spark.read.format("graft-docs").load(store).count() == 6,
-      "recovered pack lost rows")
-  }
-
-  test("a batch directory without its _SUCCESS marker is invisible to " +
-      "batch and streaming reads — no half-published batch can be " +
-      "planned or checkpointed past (r18 ADVICE, high)") {
+  test("a batch without its _SUCCESS marker is invisible to reads") {
     val store = tmp("graft-docs-marker")
     Seq(("m0", "d0")).toDF("_id", "doc")
       .write.format("graft-docs")
@@ -404,77 +212,6 @@ class DocStoreV2Spec extends SparkSpec {
     val seen = spark.read.format("graft-docs").load(store)
       .select("_id").as[String].collect().toSet
     assert(seen == Set("m0"), s"un-markered batch leaked into $seen")
-
-    // a tail across the partial batch: must not plan it, and must not
-    // checkpoint past it — when the marker lands later (the replayed
-    // publish), a restart picks the batch up
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-docs-marker-ckpt").toString
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-docs-marker-out").toString
-    def tail() = spark.readStream.format("graft-docs").load(store)
-      .writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", ckpt).start()
-    val q1 = tail()
-    try q1.processAllAvailable() finally q1.stop()
-    assert(spark.read.parquet(out).select("_id").as[String]
-      .collect().toSet == Set("m0"))
-    java.nio.file.Files.writeString(partial.resolve("_SUCCESS"), "")
-    val q2 = tail()
-    try q2.processAllAvailable() finally q2.stop()
-    assert(spark.read.parquet(out).select("_id").as[String]
-      .collect().toSet == Set("m0", "ghost"),
-      "the late-completed batch was skipped — offset moved past it")
-  }
-
-  test("startingOffsets: latest skips pre-start history, a numeric id " +
-      "starts mid-store, and checkpoints take over on restart " +
-      "(r18 VERDICT item 3)") {
-    val store = tmp("graft-docs-offsets")
-    def writeBatch(id: String, b: Long): Unit =
-      Seq((id, s"d-$id")).toDF("_id", "doc")
-        .write.format("graft-docs")
-        .option("path", store).option("batchId", b)
-        .mode("append").save()
-    writeBatch("h0", 0L); writeBatch("h1", 1L); writeBatch("h2", 2L)
-
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-docs-off-ckpt").toString
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-docs-off-out").toString
-    def tail() = spark.readStream.format("graft-docs")
-      .option("startingOffsets", "latest").load(store)
-      .writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", ckpt).start()
-    // latest: the three-batch history must NOT replay
-    val q1 = tail()
-    try q1.processAllAvailable() finally q1.stop()
-    assert(spark.read.schema("_id STRING, doc STRING, batch_id BIGINT")
-      .parquet(out).isEmpty, "latest replayed history")
-    // batches landing after the start are tailed — across a restart
-    // (the checkpoint, not startingOffsets, governs from here on)
-    writeBatch("n3", 3L)
-    val q2 = tail()
-    try q2.processAllAvailable() finally q2.stop()
-    writeBatch("n4", 4L)
-    val q3 = tail()
-    try q3.processAllAvailable() finally q3.stop()
-    assert(spark.read.parquet(out).select("_id").as[String]
-      .collect().toSet == Set("n3", "n4"),
-      "post-start batches must arrive exactly once")
-
-    // an explicit numeric start id is honored (inclusive)
-    val out2 = java.nio.file.Files
-      .createTempDirectory("graft-docs-off-out2").toString
-    val ckpt2 = java.nio.file.Files
-      .createTempDirectory("graft-docs-off-ckpt2").toString
-    val q4 = spark.readStream.format("graft-docs")
-      .option("startingOffsets", "2").load(store)
-      .writeStream.format("parquet")
-      .option("path", out2).option("checkpointLocation", ckpt2).start()
-    try q4.processAllAvailable() finally q4.stop()
-    assert(spark.read.parquet(out2).select("_id").as[String]
-      .collect().toSet == Set("h2", "n3", "n4"))
   }
 
   test("batch ids must be monotonic per store: a fresh id below the " +
@@ -511,9 +248,9 @@ class DocStoreV2Spec extends SparkSpec {
         .option("path", store).option("batchId", b)
         .mode("append").save()
     write("a", 1L); write("b", 2L); write("c", 3L)
-    // Simulate a replayed publish of id=2 that crashed AFTER
-    // delete(dest) but BEFORE rename(tmp, dest): the id is gone from
-    // the committed set (and below max=3), only its staged swap dir
+    // Simulate a replayed publish of id=2 that crashed AFTER moving
+    // dest aside but BEFORE rename(tmp, dest): the id is gone from the
+    // committed set (and below max=3), only its staged swap dir
     // remains.
     val dest = java.nio.file.Paths.get(store, "batch_id=2")
     def rmTree(p: java.nio.file.Path): Unit = {
@@ -537,33 +274,39 @@ class DocStoreV2Spec extends SparkSpec {
       "crashed replay's batch is permanently unpublishable")
   }
 
-  test("maxBatchesPerTrigger: a deep-history catch-up runs in bounded " +
-      "micro-batches, never one giant trigger") {
-    val store = tmp("graft-docs-admission")
-    for (b <- 0L until 5L)
-      Seq((s"r$b", s"d$b")).toDF("_id", "doc")
-        .write.format("graft-docs")
-        .option("path", store).option("batchId", b)
-        .mode("append").save()
-    val dst = tmp("graft-docs-admission-dst")
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-docs-adm-ckpt").toString
-    // sink is the connector too: each trigger's epoch owns one dst
-    // batch_id partition, so the dst partition count IS the number of
-    // micro-batches the catch-up took
-    val q = spark.readStream.format("graft-docs")
-      .option("maxBatchesPerTrigger", "2").load(store)
-      .select("_id", "doc")
-      .writeStream.format("graft-docs")
-      .option("path", dst).option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val out = readStore(dst)
-    assert(out.select("_id").as[String].collect().toSet ==
-      (0L until 5L).map(b => s"r$b").toSet, "catch-up lost rows")
-    val epochs = out.select("batch_id").distinct.count()
-    assert(epochs == 3,
-      s"5 batches at 2/trigger should take 3 micro-batches, took $epochs")
+  test("a replayed publish that fails at any filesystem step keeps " +
+      "the committed batch whole") {
+    // Each step of the replay publish fails once, in order: the task
+    // file's rename into the swap dir, the _SUCCESS create, moving the
+    // old batch aside, and the swap rename.
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.failpublish.impl", classOf[FailingPublishFs].getName)
+    conf.setBoolean("fs.failpublish.impl.disable.cache", true)
+    try for (step <- FailingPublishFs.Steps) {
+      val store = tmp(s"graft-docs-fail-$step")
+      def write(ids: Seq[String]): Unit =
+        ids.map(i => (i, s"d-$i")).toDF("_id", "doc")
+          .write.format("graft-docs")
+          .option("path", s"failpublish://$store").option("batchId", 0L)
+          .mode("append").save()
+      def read(): Set[(String, String, Long)] =
+        spark.read.format("graft-docs").load(store)
+          .as[(String, String, Long)].collect().toSet
+      write(Seq("old1", "old2"))
+      val before = read()
+      assert(before.size == 2)
+      FailingPublishFs.failing = step
+      intercept[Exception](write(Seq("new1")))
+      assert(FailingPublishFs.failing == "", s"$step: step not reached")
+      assert(read() == before, s"$step: the committed batch changed")
+      write(Seq("new1"))
+      assert(read() == Set(("new1", "d-new1", 0L)),
+        s"$step: a later replay did not publish")
+    } finally {
+      FailingPublishFs.failing = ""
+      conf.unset("fs.failpublish.impl")
+      conf.unset("fs.failpublish.impl.disable.cache")
+    }
   }
 
   test("the scan reports its post-pruning size from commit metadata, " +
@@ -587,88 +330,6 @@ class DocStoreV2Spec extends SparkSpec {
       .filter(col("batch_id") === 0L))
     assert(pruned < full,
       s"batch_id pruning must shrink the estimate ($pruned vs $full)")
-  }
-
-  test("vacuum drops history below the horizon: reads shrink, an " +
-      "earliest tail starts at the new floor, and the monotonic guard " +
-      "still keys off the surviving max") {
-    val store = tmp("graft-docs-vacuum")
-    def write(id: String, b: Long): Unit =
-      Seq((id, "d")).toDF("_id", "doc")
-        .write.format("graft-docs")
-        .option("path", store).option("batchId", b)
-        .mode("append").save()
-    for (b <- 0L to 3L) write(s"v$b", b)
-    val dropped = GraftDocs.vacuumBelow(hconf, store, keepFrom = 2L)
-    assert(dropped == Seq(0L, 1L), s"dropped $dropped")
-    assert(spark.read.format("graft-docs").load(store)
-      .select("batch_id").distinct.as[Long].collect().toSet ==
-      Set(2L, 3L), "vacuum left the wrong batches")
-    // an earliest tail begins at the surviving floor — no phantom
-    // wait on the vacuumed range
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-docs-vac-ckpt").toString
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-docs-vac-out").toString
-    val q = spark.readStream.format("graft-docs").load(store)
-      .writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", ckpt).start()
-    try q.processAllAvailable() finally q.stop()
-    assert(spark.read.parquet(out).select("_id").as[String]
-      .collect().toSet == Set("v2", "v3"))
-    // vacuuming history must NOT re-open the low id range: the guard
-    // keys off the surviving max, so a fresh id 1 is still rejected
-    val e = intercept[Exception] { write("stale", 1L) }
-    def msgs(t: Throwable): String = Iterator.iterate(t)(_.getCause)
-      .takeWhile(_ != null).map(c => "" + c.getMessage).mkString(" | ")
-    assert(msgs(e).contains("monotonically increasing"))
-    write("v4", 4L) // forward progress unaffected
-    assert(spark.read.format("graft-docs").load(store)
-      .select("_id").as[String].collect().toSet ==
-      Set("v2", "v3", "v4"))
-  }
-
-  test("CDC composition: tail one store through importClassifyStream " +
-      "into a second store — exactly-once across a restart of BOTH " +
-      "sides (r18 VERDICT item 8)") {
-    val src = tmp("graft-cdc-src")
-    val dst = tmp("graft-cdc-dst")
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-cdc-ckpt").toString
-    def writeSrc(rows: Seq[(String, String)], b: Long): Unit =
-      rows.toDF("_id", "doc").write.format("graft-docs")
-        .option("path", src).option("batchId", b)
-        .mode("append").save()
-    // the stored snapshot's (id, content-hash) table — the
-    // importDelta discipline's static side
-    val snapshot = Seq(("a", "h1"), ("b", "h2")).toDF("id", "h")
-    // store → changelog → classification → store: the composition the
-    // connector exists for; BOTH ends are the native connector, so
-    // the read side's offsets and the write side's epoch-replace
-    // jointly carry exactly-once through restarts of either
-    def start() = graft.streaming.EventStream.importClassifyStream(
-        spark.readStream.format("graft-docs").load(src)
-          .select(col("_id").as("id"), col("doc").as("h")),
-        snapshot)
-      .select(concat_ws(":", col("id"), col("status")).as("_id"),
-        col("h").as("doc"))
-      .writeStream.format("graft-docs")
-      .option("path", dst).option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-
-    writeSrc(Seq(("a", "h1"), ("b", "hX")), 0L) // unchanged + changed
-    val q1 = start()
-    try q1.processAllAvailable() finally q1.stop()
-    // both sides down; a batch lands in the source meanwhile
-    writeSrc(Seq(("c", "h3")), 1L) // absent from snapshot → inserted
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-
-    val out = readStore(dst).select("_id", "doc")
-      .as[(String, String)].collect().toSeq
-    assert(out.size == 3, s"exactly-once violated: $out")
-    assert(out.toSet == Set(("a:unchanged", "h1"), ("b:changed", "hX"),
-      ("c:inserted", "h3")), s"classification wrong: $out")
   }
 
   test("ImportJob writes through the connector: same ids and payload " +
@@ -695,4 +356,38 @@ class DocStoreV2Spec extends SparkSpec {
     assert(after.count() == expect.size * 2L)
     assert(after.filter(col("batch_id") === 0L).count() == expect.size)
   }
+}
+
+/** The local file system under the `failpublish` scheme. The first
+  * operation of the `graft-docs` publish step named by `failing` fails
+  * (a rename returns false, the `_SUCCESS` create throws), then
+  * `failing` clears, so every later operation works. */
+class FailingPublishFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.Path
+  override def getUri(): java.net.URI = java.net.URI.create("failpublish:///")
+  override def getScheme(): String = "failpublish"
+  private def fails(step: String, hit: Boolean): Boolean =
+    FailingPublishFs.synchronized {
+      val now = hit && FailingPublishFs.failing == step
+      if (now) FailingPublishFs.failing = ""
+      now
+    }
+  override def rename(src: Path, dst: Path): Boolean =
+    !(fails("task-file", dst.getParent.getName.startsWith(".publish-")) ||
+      fails("move-aside", src.getName.startsWith("batch_id=")) ||
+      fails("swap", dst.getName.startsWith("batch_id="))) &&
+      super.rename(src, dst)
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable)
+      : org.apache.hadoop.fs.FSDataOutputStream =
+    if (fails("marker", f.getName == "_SUCCESS"))
+      throw new java.io.IOException(s"create $f failed")
+    else super.create(f, overwrite, bufferSize, replication, blockSize,
+      progress)
+}
+
+object FailingPublishFs {
+  val Steps = Seq("task-file", "marker", "move-aside", "swap")
+  @volatile var failing: String = ""
 }
