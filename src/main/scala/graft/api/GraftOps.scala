@@ -3,8 +3,9 @@ package graft.api
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.expressions.TextExpressions.minhashSig
+import graft.expressions.VectorExpressions.vecDot
 import graft.functions.TextFunctions._
-import graft.functions.VectorFunctions._
 
 /** User-facing DataFrame API — the "switch from the reference" surface.
   * Every operator is a pure `DataFrame → DataFrame` function over caller
@@ -31,10 +32,8 @@ object GraftOps {
     * empty-shingle seed signature, exactly as before. */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String)
       : DataFrame = {
-    graft.expressions.TextExpressions.register(docs.sparkSession)
     docs.select(col(idCol),
-        call_function("graft_minhash_sig",
-          coalesce(col(textCol), lit(""))).as("__sig"))
+        minhashSig(coalesce(col(textCol), lit(""))).as("__sig"))
       .select(col(idCol) +: (0 until 8).map(j =>
         element_at(col("__sig"), j + 1).as(s"h$j")): _*)
   }
@@ -74,14 +73,12 @@ object GraftOps {
     * and parity pins hold unchanged. */
   def rowLocalBands(docs: DataFrame, idCol: String, textCol: String,
       carryCols: Seq[String] = Nil): DataFrame = {
-    graft.expressions.TextExpressions.register(docs.sparkSession)
     val keep = (idCol +: carryCols).map(col)
     // coalesce: the composed chain sent null text down its
     // otherwise(array()) branch — i.e. the empty-shingle seed
     // signature — so null must keep meaning "empty doc" here too.
     val sig = docs.select(keep :+
-      call_function("graft_minhash_sig",
-        coalesce(col(textCol), lit(""))).as("__sig"): _*)
+      minhashSig(coalesce(col(textCol), lit(""))).as("__sig"): _*)
     sig.select(keep :+ explode(lshBands(col("__sig"), 8)).as("band"): _*)
       .select(keep :+ col("band.band_idx").as("band_idx")
         :+ col("band.band_hash").as("band_hash"): _*)
@@ -285,11 +282,10 @@ object GraftOps {
   def languageOf(textCol: Column): Column = langId(tokens(textCol))
 
   /** Brute-force cosine top-k: queries broadcast against the corpus;
-    * scores via the native graft_vec_dot expression, ranked with a full
+    * scores via the native vecDot expression, ranked with a full
     * deterministic tiebreak. Inputs must be unit-normalized. */
   def cosineTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int): DataFrame = {
-    graft.expressions.VectorExpressions.register(corpus.sparkSession)
     val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_u"))
     val w = Window.partitionBy("q_id")
       .orderBy(col("score").desc, col("cand_id"))
@@ -297,7 +293,7 @@ object GraftOps {
       .crossJoin(broadcast(q))
       .filter(col("cand_id") =!= col("q_id"))
       .select(col("q_id"), col("cand_id"),
-        round(expr("graft_vec_dot(u, q_u)"), 6).as("score"))
+        round(vecDot(col("u"), col("q_u")), 6).as("score"))
       .withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= k)
   }
@@ -960,7 +956,7 @@ object GraftOps {
     * decomposition distributes it evenly (replication factor B on the
     * hot cell only) instead of silently dropping work. For every cell
     * ≤ cellCap, B = 1 and the plan is the old single-key join
-    * unchanged. Expects unit vectors and a registered `graft_vec_dot`.
+    * unchanged. Expects unit vectors.
     * Cell sizes come from a broadcast k-row count table, so the only
     * full-data shuffle is the pair join itself. The broadcast hint
     * assumes k (cluster count) stays in SemDeDup's published regime
@@ -992,67 +988,11 @@ object GraftOps {
         col("__lo") === col("__lo_b") && col("__hi") === col("__hi_b") &&
         (col("__lo") =!= col("__hi") ||
           col("left_id") < col("right_id")))
-      .filter(round(call_function("graft_vec_dot", col("ua"), col("ub")), 6)
-        >= tau)
+      .filter(round(vecDot(col("ua"), col("ub")), 6) >= tau)
       // cross-block orientation is block-ordered, not id-ordered — the
       // dropped member is always the HIGHER id of the pair
       .select(greatest(col("left_id"), col("right_id")).as("right_id"))
       .distinct()
-  }
-
-  /** Bounded-round PageRank over an UNDIRECTED graph (edges are
-    * symmetrized, so no node dangles as long as it has any edge;
-    * isolated nodes keep teleport-only mass). Same iterative discipline
-    * as connectedComponents: edge table and per-round rank table are
-    * localCheckpoint'ed, so the plan stays flat and the edge derivation
-    * runs once. Per-round contributions are summed as 1e15-scaled longs
-    * (a contribution is ≤ 1, so it fits a double's exact-integer range
-    * and any realistic in-degree stays far below 2^63) — exact,
-    * order-independent, and on the primitive codegen aggregate path
-    * instead of boxed wide decimals. Output is bit-identical across
-    * cluster layouts (the property the oracle compare needs). Ranks are
-    * the damping-0.85 standard: pr' = (1-d)/N + d·Σ pr/deg.
-    * Precondition: every edge endpoint is present in `nodes` (all
-    * callers derive `nodes` from the edge table) — endpoints outside
-    * `nodes` would surface in the output rather than being dropped. */
-  def pageRank(nodes: DataFrame, idCol: String,
-      edges: DataFrame, srcCol: String, dstCol: String,
-      rounds: Int, damping: Double = 0.85): DataFrame = {
-    val e = symEdgesWithDeg(edges, srcCol, dstCol)
-    val n = nodes.select(col(idCol).cast("long").as("__id")).distinct()
-      .localCheckpoint()
-    // Isolated nodes never appear in the symmetrized edge table, so
-    // their rank is the closed-form teleport share from round 1 on;
-    // they're split off ONCE and union'ed back (no shuffle) instead of
-    // a per-round left join against the full node set. Built lazily —
-    // only a rounds > 0 loop reads it.
-    def iso: DataFrame = {
-      val tot = n.agg(count(lit(1)).cast("double").as("__n"))
-      n.join(e.select(col("__src").as("__id")), Seq("__id"), "left_anti")
-        .crossJoin(broadcast(tot))
-        .select(col("__id"),
-          (lit(1.0 - damping) / col("__n")).as("rank"))
-        .localCheckpoint()
-    }
-    pageRankLoop(e, n, rounds, damping, Some(() => iso), idCol)
-  }
-
-  /** [[pageRank]] with the node set derived from the edge endpoints —
-    * the common case (graph_pagerank's caller previously pre-distincted
-    * and checkpointed the pair table just to derive nodes as a
-    * union-of-two-selects, paying a second full exchange and
-    * materialization before the one pageRank itself builds; r22, guide
-    * §2.4). The symmetrized distinct edge table IS the endpoint
-    * universe: nodes = its distinct sources (cheap — read from the
-    * checkpoint), and the isolated-node arm vanishes by construction
-    * (every endpoint has an edge). Identical ranks to calling
-    * [[pageRank]] with the union-derived node set. */
-  def pageRankFromEdges(edges: DataFrame, srcCol: String, dstCol: String,
-      rounds: Int, damping: Double = 0.85,
-      outCol: String = "node_id"): DataFrame = {
-    val e = symEdgesWithDeg(edges, srcCol, dstCol)
-    val n = e.select(col("__src").as("__id")).distinct().localCheckpoint()
-    pageRankLoop(e, n, rounds, damping, None, outCol)
   }
 
   /** Both directions of every edge as long (__src, __dst) rows, in ONE
@@ -1080,16 +1020,31 @@ object GraftOps {
         count(lit(1)).over(Window.partitionBy("__src")))
       .localCheckpoint()
 
-  private def pageRankLoop(e: DataFrame, n: DataFrame, rounds: Int,
-      damping: Double, mkIso: Option[() => DataFrame],
-      outCol: String): DataFrame = {
+  /** Bounded-round PageRank over an UNDIRECTED graph given as an edge
+    * list. Edges are symmetrized and the node set is their endpoints —
+    * the symmetrized distinct edge table's sources, read from its
+    * checkpoint — so every node has an edge and none dangles. Same
+    * iterative discipline as connectedComponents: edge table and
+    * per-round rank table are localCheckpoint'ed, so the plan stays flat
+    * and the edge derivation runs once. Per-round contributions are
+    * summed as 1e15-scaled longs (a contribution is ≤ 1, so it fits a
+    * double's exact-integer range and any realistic in-degree stays far
+    * below 2^63) — exact, order-independent, and on the primitive
+    * codegen aggregate path instead of boxed wide decimals. Output is
+    * bit-identical across cluster layouts (the property the oracle
+    * compare needs). Ranks are the damping-0.85 standard:
+    * pr' = (1-d)/N + d·Σ pr/deg. */
+  def pageRankFromEdges(edges: DataFrame, srcCol: String, dstCol: String,
+      rounds: Int, damping: Double = 0.85,
+      outCol: String = "node_id"): DataFrame = {
+    val e = symEdgesWithDeg(edges, srcCol, dstCol)
+    val n = e.select(col("__src").as("__id")).distinct().localCheckpoint()
     // N enters the plan as a broadcast 1-row aggregate — no driver-side
     // count(), the whole computation stays declarative.
     val tot = n.agg(count(lit(1)).cast("double").as("__n"))
     var pr = n.crossJoin(broadcast(tot))
       .select(col("__id"), (lit(1.0) / col("__n")).as("rank"))
     if (rounds > 0) {
-      val iso = mkIso.map(f => f())
       // Round-state cuts go through RoundCut (r13 VERDICT item 2):
       // serialized disk-spillable blocks + eager release of older round
       // states, so a memory-squeezed run degrades by percent, not 3-7×.
@@ -1105,45 +1060,24 @@ object GraftOps {
       // optimizer's choice; at 100 TB the rank table is cluster-sized
       // and the co-partitioned shuffle join is the right plan anyway.
       //
-      // The gate is CONF-driven (r18 VERDICT item 7):
-      // `graft.pagerank.broadcast` = false pins shuffle-hash, true
-      // trusts the optimizer unconditionally; unset defers to the
-      // session's own broadcast posture — a disabled
-      // spark.sql.autoBroadcastJoinThreshold (-1) means the operator
-      // pins the co-partitioned join it knows it needs, and the
-      // Runtime.maxMemory probe applies ONLY in local mode, where the
-      // plan-building JVM IS the executor JVM. On a cluster a small
-      // driver with big executors keeps the optimizer's choice
-      // (probing the driver heap there would needlessly pessimize —
-      // the r18 VERDICT's portability flaw).
+      // The gate follows the session's own broadcast posture: a
+      // disabled spark.sql.autoBroadcastJoinThreshold — any parsed
+      // threshold <= 0, "-1" AND "0", as Spark's own planner reads it —
+      // means the operator pins the co-partitioned join it knows it
+      // needs, and the Runtime.maxMemory probe applies ONLY in local
+      // mode, where the plan-building JVM IS the executor JVM. On a
+      // cluster a small driver with big executors keeps the optimizer's
+      // choice (probing the driver heap there would needlessly
+      // pessimize).
       val sess = e.sparkSession
-      // Conf is validated to exactly true/false (r19 ADVICE): a typo
-      // like "yes" silently pinning the degraded shuffle-hash plan is
-      // worse than failing fast. Unset defers to the session's own
-      // broadcast posture, where a parsed threshold <= 0 ("-1" AND
-      // "0") means broadcast-off — Spark's own planner treats any
-      // non-positive threshold as disabled.
-      val tightHeap = sess.conf.getOption("graft.pagerank.broadcast")
-        .map { v =>
-          v.trim.toLowerCase match {
-            case "true"  => false
-            case "false" => true
-            case other => throw new IllegalArgumentException(
-              s"graft.pagerank.broadcast must be 'true' or 'false', " +
-                s"got '$other'")
-          }
-        }
-        .getOrElse {
-          val raw = sess.conf
-            .get("spark.sql.autoBroadcastJoinThreshold", "10MB").trim
-          val bcastOff =
-            try org.apache.spark.network.util.JavaUtils
-              .byteStringAsBytes(raw) <= 0L
-            catch { case _: NumberFormatException =>
-              raw.startsWith("-") }
-          bcastOff || (sess.sparkContext.isLocal &&
-            Runtime.getRuntime.maxMemory < (3L << 29)) // <1.5GiB
-        }
+      val raw = sess.conf
+        .get("spark.sql.autoBroadcastJoinThreshold", "10MB").trim
+      val bcastOff =
+        try org.apache.spark.network.util.JavaUtils
+          .byteStringAsBytes(raw) <= 0L
+        catch { case _: NumberFormatException => raw.startsWith("-") }
+      val tightHeap = bcastOff || (sess.sparkContext.isLocal &&
+        Runtime.getRuntime.maxMemory < (3L << 29)) // <1.5GiB
       (1 to rounds).foreach { i =>
         val contrib = e
           .join(if (tightHeap) pr.hint("shuffle_hash") else pr,
@@ -1152,12 +1086,11 @@ object GraftOps {
             (col("rank") / col("__deg") * 1e15).cast("long").as("__c"))
           .groupBy("__dst")
           .agg((sum(col("__c")).cast("double") / 1e15).as("__in"))
-        val next = contrib
+        pr = contrib
           .crossJoin(broadcast(tot))
           .select(col("__dst").as("__id"),
             (lit(1.0 - damping) / col("__n") +
               lit(damping) * col("__in")).as("rank"))
-        pr = iso.map(next.union(_)).getOrElse(next)
         // Lineage truncation every THIRD round only (never the last —
         // the caller consumes it once). A/B at sf0.1 graph_pagerank
         // (rounds=2): per-round localCheckpoint 3.68-5.36 s vs chained

@@ -1,11 +1,10 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.{Column, GraftColumns}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
-import org.apache.spark.sql.SparkSession
 
 /** Native Catalyst expression for the one hot path where composed
   * built-ins measurably fall short: per-pair vector dot products.
@@ -18,11 +17,12 @@ import org.apache.spark.sql.SparkSession
   * same left-to-right fold order as both the HOF version and DuckDB's
   * list_dot_product, so oracle parity is bit-exact.
   *
-  * One of exactly TWO custom Catalyst pieces in the engine (the other
-  * is [[MinhashSig]], r19): everything else is expressible as
-  * codegen-friendly built-ins (SURVEY §4/§7.4 stance); here
-  * composition works but is profiling-proven slow, which is the
-  * stated bar for dropping down a level.
+  * One of exactly THREE custom Catalyst pieces in the engine (the
+  * others are [[MinhashSig]] and [[DistinctShingles]]): everything
+  * else is expressible as codegen-friendly built-ins (SURVEY §4/§7.4
+  * stance); here composition works but is profiling-proven slow,
+  * which is the stated bar for dropping down a level. Callers build
+  * it as a typed column with [[VectorExpressions.vecDot]].
   */
 case class VecDot(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -69,40 +69,9 @@ case class VecDot(left: Expression, right: Expression)
       newRight: Expression): VecDot = copy(left = newLeft, right = newRight)
 }
 
-/** SparkSessionExtensions entry point: start a session with
-  * `--conf spark.sql.extensions=graft.expressions.GraftExtensions` and
-  * `graft_vec_dot` / `graft_minhash_sig` are available in SQL and
-  * `expr()` everywhere. */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier(VectorExpressions.FuncName),
-      new ExpressionInfo(classOf[VecDot].getName,
-        VectorExpressions.FuncName),
-      (children: Seq[Expression]) => VecDot(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier(TextExpressions.SigFuncName),
-      new ExpressionInfo(classOf[MinhashSig].getName,
-        TextExpressions.SigFuncName),
-      (children: Seq[Expression]) => MinhashSig(children.head)))
-  }
-}
-
 object VectorExpressions {
-  val FuncName = "graft_vec_dot"
-
-  /** Idempotently register `graft_vec_dot` in the session's function
-    * registry so plans can call it via expr("graft_vec_dot(a, b)").
-    * (In a packaged deployment this lives in a SparkSessionExtensions
-    * `injectFunction` so `--conf spark.sql.extensions` wires it up.) */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = FunctionIdentifier(FuncName)
-    if (!registry.functionExists(ident)) {
-      registry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[VecDot].getName, FuncName),
-        (children: Seq[Expression]) => VecDot(children(0), children(1)))
-    }
-  }
+  /** `VecDot(a, b)` as a typed column: the native per-pair dot product
+    * (its optimized plan prints `vecdot(a, b)`). */
+  def vecDot(a: Column, b: Column): Column = GraftColumns.column(
+    VecDot(GraftColumns.expression(a), GraftColumns.expression(b)))
 }

@@ -2,12 +2,13 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.expressions.VectorExpressions.vecDot
 
 /** Embedding/vector layer for similarity search over `embeddings.parquet`
-  * (ArrayType(FloatType) columns). Pure higher-order-function expressions:
-  * `zip_with` + `aggregate` compile into codegen'd loops — no UDF, no
-  * serialization — and the left-to-right fold order matches DuckDB's, so
-  * dot products are bit-identical for the oracle.
+  * (ArrayType(FloatType) columns): the double cast, the composed dot
+  * fold and the random-hyperplane LSH bits. Every fold runs left to
+  * right, as DuckDB's does, so dot products are bit-identical for the
+  * oracle.
   */
 object VectorFunctions {
 
@@ -15,19 +16,11 @@ object VectorFunctions {
     * (matches the oracle's ::DOUBLE[] cast). */
   def asDouble(v: Column): Column = transform(v, _.cast("double"))
 
-  /** Dot product via zip_with + aggregate (sequential double fold). */
+  /** Dot product via zip_with + aggregate (sequential double fold) —
+    * the bit-for-bit reference of the native
+    * [[graft.expressions.VectorExpressions.vecDot]] (VecDotSpec). */
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
-  def l2Norm(v: Column): Column = sqrt(dot(v, v))
-
-  /** Cosine similarity; 0.0 when either vector has zero norm. */
-  def cosine(a: Column, b: Column): Column = {
-    val d  = dot(a, b)
-    val na = l2Norm(a)
-    val nb = l2Norm(b)
-    when(na === 0.0 || nb === 0.0, 0.0).otherwise(d / (na * nb))
-  }
 
   /** Deterministic random-hyperplane LSH bit: sign of the dot product with
     * a ±1 pseudo-plane derived from md5(planeIdx:dim) parity. Gives a
@@ -58,12 +51,12 @@ object VectorFunctions {
     }
   }
 
-  /** Codegen hyperplane bit: one native `graft_vec_dot` against the
-    * precomputed literal plane (requires `VectorExpressions.register`).
-    * Fold order over the vector is identical to `hyperplaneBit`'s, so the
-    * sign — and thus the bucket — matches exactly. Floating-point note:
-    * (+x) + (-y) sums in the same sequence either way. */
+  /** Codegen hyperplane bit: one native `vecDot` against the
+    * precomputed literal plane. Fold order over the vector is identical
+    * to `hyperplaneBit`'s, so the sign — and thus the bucket — matches
+    * exactly. Floating-point note: (+x) + (-y) sums in the same sequence
+    * either way. */
   def hyperplaneBitFast(v: Column, planeIdx: Int, dim: Int): Column =
-    when(call_function("graft_vec_dot", v,
-      lit(hyperplaneSigns(planeIdx, dim))) >= 0, 1).otherwise(0)
+    when(vecDot(v, lit(hyperplaneSigns(planeIdx, dim))) >= 0, 1)
+      .otherwise(0)
 }

@@ -1,11 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables
-import graft.functions.VectorFunctions._
+import graft.expressions.VectorExpressions.vecDot
+import graft.functions.VectorFunctions.{asDouble, hyperplaneBitFast}
 
 /** Approximate-nearest-neighbor / similarity search over
   * `embeddings.parquet` (ArrayType(FloatType), dim 64).
@@ -53,25 +54,37 @@ object Similarity {
     * ~17 consumers inherit the parallel layout. Row set unchanged —
     * ranking ties break on ids and centroid sums are exact DECIMAL,
     * so partition order cannot flip any result. */
-  private def unitVecs(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
+  private def unitVecs(s: SparkSession, d: String): DataFrame =
     graft.operators.SharedStage(s, s"unitVecs:$d") {
-      Tables.tableSpread(s, d, "embeddings")
-        .select(col("vec_id"), col("label"),
-          asDouble(col("embedding")).as("v"))
-        .withColumn("nrm",
-          sqrt(call_function("graft_vec_dot", col("v"), col("v"))))
-        .filter(col("nrm") > 0)
-        .select(col("vec_id"), col("label"),
-          transform(col("v"), x => x / col("nrm")).as("u"))
+      unitNormalize(Tables.tableSpread(s, d, "embeddings")
+          .select(col("vec_id"), col("label"),
+            asDouble(col("embedding")).as("v")),
+        "v", "nrm", "u", "vec_id", "label")
     }
-  }
 
-  /** Native cosine score of two unit vectors (graft_vec_dot); shadows
-    * VectorFunctions' composed `dot` for every query in this file and
-    * in `TextOps.clipGate`. */
-  private[graft] def dot(a: Column, b: Column): Column =
-    call_function("graft_vec_dot", a, b)
+  /** (`keep`…, `to`): the vector column `v` divided by its L2 norm;
+    * rows whose norm is zero drop out. The norm rides as column `nrm`,
+    * whose name shows in the plan. */
+  private def unitNormalize(df: DataFrame, v: String, nrm: String,
+      to: String, keep: String*): DataFrame =
+    df.withColumn(nrm, sqrt(vecDot(col(v), col(v))))
+      .filter(col(nrm) > 0)
+      .select(keep.map(col) :+
+        transform(col(v), x => x / col(nrm)).as(to): _*)
+
+  /** (`keys`…, raw): per key, the component-wise sum of the vector
+    * column `v`, summed through DECIMAL(20,15) so partial-aggregation
+    * order can never wiggle an ulp, as a dense array in index order — a
+    * mean direction before normalization. */
+  private def exactVectorSum(df: DataFrame, v: String,
+      keys: String*): DataFrame =
+    df.select(keys.map(col) :+ posexplode(col(v)).as(Seq("idx", "val")): _*)
+      .groupBy((keys :+ "idx").map(col): _*)
+      .agg(sum(col("val").cast(DecimalType(20, 15))).cast("double")
+        .as("sv"))
+      .groupBy(keys.map(col): _*)
+      .agg(transform(array_sort(collect_list(struct(col("idx"),
+        col("sv")))), x => x.getField("sv")).as("raw"))
 
   /** The IVF probe's cell ranking: every query (q_id, q_u) against
     * every broadcast centroid (cid, cu), ranked per query by rounded
@@ -80,19 +93,20 @@ object Similarity {
   private def rankedCells(q0: DataFrame, cents: DataFrame): DataFrame =
     q0.crossJoin(broadcast(cents))
       .select(col("q_id"), col("q_u"), col("cid"),
-        round(dot(col("q_u"), col("cu")), 6).as("csc"))
+        round(vecDot(col("q_u"), col("cu")), 6).as("csc"))
       .withColumn("crn", row_number().over(Window.partitionBy("q_id")
         .orderBy(col("csc").desc, col("cid"))))
       .select("q_id", "q_u", "cid", "crn")
 
   /** The Matryoshka truncation of (vec_id, u): the first 16 dims,
-    * re-normalized, as (vec_id, ut); zero-norm prefixes drop out. */
-  private def truncUnit16(e: DataFrame): DataFrame =
-    e.select(col("vec_id"), slice(col("u"), 1, 16).as("t16"))
-      .withColumn("tn", sqrt(dot(col("t16"), col("t16"))))
-      .filter(col("tn") > 0)
-      .select(col("vec_id"),
-        transform(col("t16"), x => x / col("tn")).as("ut"))
+    * re-normalized, as (vec_id, `carry`…, ut); zero-norm prefixes drop
+    * out. */
+  private def truncUnit16(e: DataFrame, carry: String*): DataFrame = {
+    val keep = "vec_id" +: carry
+    unitNormalize(
+      e.select(keep.map(col) :+ slice(col("u"), 1, 16).as("t16"): _*),
+      "t16", "tn", "ut", keep: _*)
+  }
 
   /** Within-cell search over (vec_id, u, `cellCol`): each of the first
     * five vectors (vec_id < 5) scored against every other vector of its
@@ -107,7 +121,7 @@ object Similarity {
     cells.join(broadcast(q), col(cellCol) === col("q_cell") &&
         col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("cand_id"),
-        round(dot(col("u"), col("q_u")), 6).as("score"))
+        round(vecDot(col("u"), col("q_u")), 6).as("score"))
       .withColumn("rnk", row_number().over(w).cast("long"))
   }
 
@@ -267,7 +281,7 @@ object Similarity {
         .filter(col("cand_label") =!= col("q_label"))
         .select(col("q_id"), col("q_label"), col("cand_id"),
           col("cand_label"),
-          round(expr("graft_vec_dot(u, q_u)"), 6).as("score"))
+          round(vecDot(col("u"), col("q_u")), 6).as("score"))
         .withColumn("rnk", row_number().over(w).cast("long"))
         .filter(col("rnk") <= 3)
     }),
@@ -300,10 +314,9 @@ object Similarity {
     // map-side partial sums, a 64-row shuffle. Determinism recipe:
     // the per-row term quantizes to micro-units and sums as DECIMAL
     // (order-free); the in-row dot and the 64-term norm both run as
-    // SEQUENTIAL array folds (graft_vec_dot == list_dot_product),
+    // SEQUENTIAL array folds (vecDot == list_dot_product),
     // never as a row-order-dependent double aggregate.
     "emb_power_iter" -> ((s, d) => {
-      graft.expressions.VectorExpressions.register(s)
       val m = dimStats(s, d).agg(transform(
         array_sort(collect_list(struct(col("dim"), col("mean")))),
         x => x.getField("mean")).as("means"))
@@ -312,8 +325,8 @@ object Similarity {
         .select(col("vec_id"),
           zip_with(asDouble(col("embedding")), col("means"),
             (a, b) => a - b).as("xp"))
-        .withColumn("sx", round(call_function("graft_vec_dot",
-          col("xp"), array_repeat(lit(0.125), 64)), 6))
+        .withColumn("sx",
+          round(vecDot(col("xp"), array_repeat(lit(0.125), 64)), 6))
       val v1 = xp
         .select(col("sx"), posexplode(col("xp")).as(Seq("dim0", "xpd")))
         .select((col("dim0") + 1).cast("long").as("dim"),
@@ -326,8 +339,7 @@ object Similarity {
           array_sort(collect_list(struct(col("dim"),
             (col("v1m").cast("double") / 1000000.0).as("v")))),
           x => x.getField("v")).as("vs"))
-        .select(sqrt(call_function("graft_vec_dot",
-          col("vs"), col("vs"))).as("nrm"))
+        .select(sqrt(vecDot(col("vs"), col("vs"))).as("nrm"))
       v1.crossJoin(broadcast(nr))
         .select(col("dim"),
           round(col("v1m").cast("double") / 1000000.0, 6).as("v1"),
@@ -354,7 +366,7 @@ object Similarity {
         .filter(col("cand_id") =!= col("q_id"))
         .select(col("q_id"), col("q_label"), col("cand_id"),
           col("cand_label"),
-          round(expr("graft_vec_dot(u, q_u)"), 6).as("score"))
+          round(vecDot(col("u"), col("q_u")), 6).as("score"))
         .localCheckpoint()
       val w = Window.partitionBy("q_id")
         .orderBy(col("score").desc, col("cand_id"))
@@ -399,7 +411,7 @@ object Similarity {
       a.join(b, col("label") === col("label_b") &&
           col("left_id") < col("right_id"))
         .select(col("left_id"), col("right_id"),
-          round(expr("graft_vec_dot(ua, ub)"), 6).as("score"))
+          round(vecDot(col("ua"), col("ub")), 6).as("score"))
         .filter(col("score") >= 0.3)
     }),
 
@@ -409,10 +421,9 @@ object Similarity {
     // driver's comparator hashes a pandas frame, which cannot sort
     // array-typed cells (CORRECTNESS_r02 err) — scalar columns only.
     "emb_normalize" -> ((s, d) => {
-      graft.expressions.VectorExpressions.register(s)
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), asDouble(col("embedding")).as("vec"))
-      val nrm = sqrt(call_function("graft_vec_dot", col("vec"), col("vec")))
+      val nrm = sqrt(vecDot(col("vec"), col("vec")))
       val unit = when(nrm === 0.0, col("vec"))
         .otherwise(transform(col("vec"), x => round(x / nrm, 6)))
       e.select(col("vec_id"), round(nrm, 6).as("norm"),
@@ -425,7 +436,6 @@ object Similarity {
     // each — replaces the interpreted HOF that hashed md5("plane:dim")
     // per element per ROW (bit-identical; see hyperplaneBitFast).
     "emb_lsh_bucket" -> ((s, d) => {
-      graft.expressions.VectorExpressions.register(s)
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), asDouble(col("embedding")).as("vec"))
       val bits = (0 until 8).map(p =>
@@ -509,7 +519,6 @@ object Similarity {
     // (cosineTopK's shape); swap in the IVF probe for the 100 TB
     // variant — the voting/eval layer is identical.
     "emb_knn_label" -> ((s, d) => {
-      graft.expressions.VectorExpressions.register(s)
       val e = unitVecs(s, d)
       val q = e.filter(col("vec_id") < 50)
         .select(col("vec_id").as("q_id"), col("label").as("q_label"),
@@ -523,8 +532,7 @@ object Similarity {
         .crossJoin(broadcast(q))
         .filter(col("cand_id") =!= col("q_id"))
         .select(col("q_id"), col("q_label"), col("cand_id"), col("c_label"),
-          round(call_function("graft_vec_dot", col("u"), col("q_u")), 6)
-            .as("score"))
+          round(vecDot(col("u"), col("q_u")), 6).as("score"))
         .withColumn("rnk", row_number().over(wK)).filter(col("rnk") <= 10)
         .groupBy("q_id", "q_label", "c_label")
         .agg(count(lit(1)).as("votes"))
@@ -626,7 +634,7 @@ object Similarity {
           col("cluster") === col("q_cluster") &&
           col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id").as("cand_id"),
-          round(dot(col("u"), col("q_u")), 6).as("score"))
+          round(vecDot(col("u"), col("q_u")), 6).as("score"))
         .withColumn("rnk", row_number().over(w).cast("long"))
         .filter(col("rnk") <= 5)
     }),
@@ -656,7 +664,7 @@ object Similarity {
           col("cluster") === col("q_cluster") &&
             col("vec_id") =!= col("q_id"))
         .select(col("np"), col("q_id"), col("vec_id").as("cand_id"),
-          round(dot(col("u"), col("q_u")), 6).as("score"))
+          round(vecDot(col("u"), col("q_u")), 6).as("score"))
         .withColumn("rnk", row_number().over(wTop))
         .filter(col("rnk") <= 10)
         .select("np", "q_id", "cand_id")
@@ -699,12 +707,7 @@ object Similarity {
       val cells = storedCells(s, d).select("vec_id", "u", "cluster")
         .localCheckpoint()
       val cents = storedCentroids(s, d)
-      val t = cells
-        .select(col("vec_id"), col("cluster"), slice(col("u"), 1, 16).as("t16"))
-        .withColumn("tn", sqrt(dot(col("t16"), col("t16"))))
-        .filter(col("tn") > 0)
-        .select(col("vec_id"), col("cluster"),
-          transform(col("t16"), x => x / col("tn")).as("ut"))
+      val t = truncUnit16(cells, "cluster")
       val q0 = cells.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("u").as("q_u"))
       val probes = rankedCells(q0, cents)
@@ -719,7 +722,7 @@ object Similarity {
           col("cluster") === col("q_cluster") &&
           col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id").as("cand_id"),
-          round(dot(col("ut"), col("q_t")), 6).as("c_score"))
+          round(vecDot(col("ut"), col("q_t")), 6).as("c_score"))
         .withColumn("c_rnk", row_number().over(wCoarse).cast("long"))
         .filter(col("c_rnk") <= 50)
       val wFine = Window.partitionBy("q_id")
@@ -729,7 +732,7 @@ object Similarity {
           Seq("cand_id"))
         .join(broadcast(q0), Seq("q_id"))
         .select(col("q_id"), col("cand_id"), col("c_rnk"),
-          round(dot(col("u"), col("q_u")), 6).as("score"))
+          round(vecDot(col("u"), col("q_u")), 6).as("score"))
         .withColumn("rnk", row_number().over(wFine).cast("long"))
         .filter(col("rnk") <= 5)
       val bf = graft.api.GraftOps.cosineTopK(cells,
@@ -842,8 +845,7 @@ object Similarity {
       e.filter(col("vec_id") % 20 =!= 0)
         .crossJoin(broadcast(bench))
         .select(col("vec_id"),
-          round(call_function("graft_vec_dot", col("u"), col("b_u")), 6)
-            .as("cos"))
+          round(vecDot(col("u"), col("b_u")), 6).as("cos"))
         .filter(col("cos") >= 0.35)
         .groupBy("vec_id")
         .agg(max("cos").as("max_cos"),
@@ -877,8 +879,7 @@ object Similarity {
           Seq("cand_id"))
         .join(broadcast(qf), Seq("q_id"))
         .select(col("q_id"), col("cand_id"), col("c_rnk"),
-          round(call_function("graft_vec_dot", col("u"), col("q_u")), 6)
-            .as("score"))
+          round(vecDot(col("u"), col("q_u")), 6).as("score"))
         .withColumn("rnk", row_number().over(wFine).cast("long"))
         .filter(col("rnk") <= 5)
         .select("q_id", "cand_id", "score", "rnk", "c_rnk")
@@ -894,7 +895,6 @@ object Similarity {
     // per-key window argmin); the reconstruction error sums the chosen
     // d² as exact scaled longs so partition order can't wiggle an ulp.
     "emb_pq" -> ((s, d) => {
-      graft.expressions.VectorExpressions.register(s)
       val e = unitVecs(s, d).select("vec_id", "u")
       def subSplit(src: DataFrame, idAs: String, vecAs: String) =
         src.select(col("vec_id").as(idAs), posexplode(
@@ -906,8 +906,9 @@ object Similarity {
         .orderBy(col("d2"), col("cid"))
       subs.join(broadcast(cents), "sub")
         .select(col("vec_id"), col("sub"), col("cid"),
-          round(dot(col("x"), col("x")) - dot(col("x"), col("c")) * 2.0
-            + dot(col("c"), col("c")), 6).as("d2"))
+          round(vecDot(col("x"), col("x"))
+            - vecDot(col("x"), col("c")) * 2.0
+            + vecDot(col("c"), col("c")), 6).as("d2"))
         .withColumn("rn", row_number().over(wBest)).filter(col("rn") === 1)
         .groupBy("vec_id").agg(
           array_join(transform(
@@ -978,23 +979,12 @@ object Similarity {
     // −0.21..0.30; a cos threshold would flag everything). In
     // production, with real clusters, the cosine term joins the gate.
     "dq_embedding_drift" -> ((s, d) => {
-      graft.expressions.VectorExpressions.register(s)
       val e = Tables.embeddings(s, d).select(
         col("label").cast("long").as("label"),
         asDouble(col("embedding")).as("v"),
         (col("vec_id") % 2).as("half"))
-      val sums = e.select(col("label"), col("half"),
-          posexplode(col("v")).as(Seq("idx", "val")))
-        .groupBy("label", "half", "idx")
-        .agg(sum(col("val").cast(DecimalType(20, 15))).cast("double")
-          .as("sv"))
-        .groupBy("label", "half")
-        .agg(transform(array_sort(collect_list(struct(col("idx"),
-          col("sv")))), x => x.getField("sv")).as("raw"))
-        .withColumn("nrm", sqrt(dot(col("raw"), col("raw"))))
-        .filter(col("nrm") > 0)
-        .select(col("label"), col("half"),
-          transform(col("raw"), x => x / col("nrm")).as("cu"))
+      val sums = unitNormalize(exactVectorSum(e, "v", "label", "half"),
+        "raw", "nrm", "cu", "label", "half")
       val cnts = e.groupBy("label", "half").agg(count(lit(1)).as("n"))
       val c0 = sums.filter(col("half") === 0)
         .select(col("label"), col("cu").as("u0"))
@@ -1009,7 +999,7 @@ object Similarity {
           (round((col("n_new") * 1000000L).cast("double")
               / (col("n_old") + col("n_new")), 0)
             .cast("long").cast("double") / 1000000.0).as("share_new"),
-          round(dot(col("u0"), col("u1")), 6).as("centroid_cos"))
+          round(vecDot(col("u0"), col("u1")), 6).as("centroid_cos"))
         .withColumn("drift",
           col("share_new") < 0.4 || col("share_new") > 0.6)
     }))
@@ -1018,7 +1008,6 @@ object Similarity {
     * coarse probe (nprobe=2) → ADC lookup-sum over PQ codes → exact
     * re-rank of the ADC top-20 to top-5. */
   private def ivfPqTopK(s: SparkSession, d: String): DataFrame = {
-      graft.expressions.VectorExpressions.register(s)
       val cells = storedCells(s, d).select("vec_id", "u", "cluster")
         .localCheckpoint() // three consumers: codes, candidates, rerank
       val cents = storedCentroids(s, d)
@@ -1034,8 +1023,9 @@ object Similarity {
         .orderBy(col("d2"), col("cid"))
       val codes = subs.join(broadcast(csubs), "sub")
         .select(col("vec_id"), col("sub"), col("cid"),
-          round(dot(col("x"), col("x")) - dot(col("x"), col("c")) * 2.0
-            + dot(col("c"), col("c")), 6).as("d2"))
+          round(vecDot(col("x"), col("x"))
+            - vecDot(col("x"), col("c")) * 2.0
+            + vecDot(col("c"), col("c")), 6).as("d2"))
         .withColumn("rn", row_number().over(wCode)).filter(col("rn") === 1)
         .select(col("vec_id"), col("sub"), col("cid"))
       val q0 = cells.filter(col("vec_id") < 5)
@@ -1047,8 +1037,9 @@ object Similarity {
         "q_id", "qx")
       val adc = qsubs.join(broadcast(csubs), "sub")
         .select(col("q_id"), col("sub"), col("cid"),
-          round(dot(col("qx"), col("qx")) - dot(col("qx"), col("c")) * 2.0
-            + dot(col("c"), col("c")), 6).as("qd2"))
+          round(vecDot(col("qx"), col("qx"))
+            - vecDot(col("qx"), col("c")) * 2.0
+            + vecDot(col("c"), col("c")), 6).as("qd2"))
       val cand = cells.select(col("vec_id").as("cand_id"), col("cluster"))
         .join(broadcast(probes), col("cluster") === col("q_cluster") &&
           col("cand_id") =!= col("q_id"))
@@ -1071,7 +1062,7 @@ object Similarity {
           Seq("cand_id"))
         .join(broadcast(q0), Seq("q_id"))
         .select(col("q_id"), col("cand_id"), col("adc_d2"),
-          round(dot(col("u"), col("q_u")), 6).as("score"))
+          round(vecDot(col("u"), col("q_u")), 6).as("score"))
         .withColumn("rnk", row_number().over(wFine).cast("long"))
         .filter(col("rnk") <= 5)
   }
@@ -1091,20 +1082,13 @@ object Similarity {
     * way a real IVF index does. */
   private def kmeansCentroids(s: SparkSession, d: String,
       k: Int = 4): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
     val e = unitVecs(s, d).select("vec_id", "u")
     val c0 = e.filter(col("vec_id") < k)
       .select(col("vec_id").as("cid"), col("u").as("cu"))
     val a0 = nearestCentroid(e, c0)
       .select(col("vec_id"), col("b.u").as("u"), col("b.cid").as("cl"))
-    a0.select(col("cl"), posexplode(col("u")).as(Seq("idx", "val")))
-      .groupBy("cl", "idx")
-      .agg(sum(col("val").cast(DecimalType(20, 15))).cast("double")
-        .as("sv"))
-      .groupBy("cl")
-      .agg(transform(array_sort(collect_list(struct(col("idx"),
-        col("sv")))), x => x.getField("sv")).as("raw"))
-      .withColumn("nrm", sqrt(dot(col("raw"), col("raw"))))
+    exactVectorSum(a0, "u", "cl")
+      .withColumn("nrm", sqrt(vecDot(col("raw"), col("raw"))))
       .select(col("cl").as("cid"),
         transform(col("raw"), x => x / col("nrm")).as("cu"))
   }
@@ -1124,7 +1108,7 @@ object Similarity {
   private def nearestCentroid(e: DataFrame, c: DataFrame): DataFrame =
     e.crossJoin(broadcast(c))
       .select(col("vec_id"), col("u"), col("cid"),
-        round(dot(col("u"), col("cu")), 6).as("sc"))
+        round(vecDot(col("u"), col("cu")), 6).as("sc"))
       .groupBy("vec_id")
       .agg(max(struct(col("sc"), (-col("cid")).as("nc"),
         col("cid"), col("u"))).as("b"))
@@ -1164,7 +1148,6 @@ object Similarity {
 
   private def kmeansAssign(s: SparkSession, d: String,
       k: Int = 4): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
     val e = unitVecs(s, d).select("vec_id", "u")
     val c1 =
       if (k == ServedK) storedCentroids(s, d)

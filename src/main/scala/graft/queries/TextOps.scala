@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.expressions.TextExpressions.distinctShingles
+import graft.expressions.VectorExpressions.vecDot
 import graft.functions.TextFunctions._
 
 /** Text-analysis + deduplication operators over `documents.parquet` — the
@@ -386,8 +388,6 @@ object TextOps {
     * entry and pipeline_pair_curation both consume it. */
   private def clipGate(s: SparkSession, d: String): DataFrame =
     graft.operators.SharedStage(s, s"clipGate:$d") {
-      graft.expressions.VectorExpressions.register(s)
-      import Similarity.dot
       val img = graft.multimodal.Multimodal.extractBandSums(
         synthDocs(s, d)(graft.multimodal.Multimodal.synthPngPattern))
       val ic = img
@@ -401,9 +401,9 @@ object TextOps {
         transform(slice(col("embedding"), 1, 8), x => x.cast("double"))
           .as("t"))
       ic.join(tv, col("doc_id") === col("vec_id"))
-        .select(col("doc_id"), dot(col("c"), col("t")).as("dp"),
-          sqrt(dot(col("c"), col("c"))).as("ni"),
-          sqrt(dot(col("t"), col("t"))).as("nt"))
+        .select(col("doc_id"), vecDot(col("c"), col("t")).as("dp"),
+          sqrt(vecDot(col("c"), col("c"))).as("ni"),
+          sqrt(vecDot(col("t"), col("t"))).as("nt"))
         .select(col("doc_id"),
           round(when(col("ni") > 0 && col("nt") > 0,
             col("dp") / (col("ni") * col("nt"))).otherwise(0.0), 6)
@@ -1409,14 +1409,10 @@ object TextOps {
       // was the cost — one composed array_distinct(shingles(tokens))
       // scan measured 2.60 s at sf0.1 vs 0.17 s for tokenize alone, so
       // ~75% of the query was shingle-array allocation, not shuffle.
-      // The native graft_distinct_shingles expression (same bytes out,
+      // The native distinctShingles expression (same bytes out,
       // parity-pinned) cuts the scan to the hash-set pass.
-      def grams = {
-        graft.expressions.TextExpressions.register(s)
-        Tables.documents(s, d).select(col("doc_id"),
-          explode(call_function("graft_distinct_shingles",
-            col("text"), lit(3))).as("g"))
-      }
+      def grams = Tables.documents(s, d).select(col("doc_id"),
+        explode(distinctShingles(col("text"), 3)).as("g"))
       val perDoc = grams.groupBy("doc_id")
         .agg(count(lit(1)).as("n_grams"))
       val novel = grams
@@ -2878,11 +2874,8 @@ object TextOps {
       // broadcasts when small).
       val pairIds = pairs.select(col("left_id").as("doc_id"))
         .union(pairs.select(col("right_id").as("doc_id"))).distinct()
-      graft.expressions.TextExpressions.register(s)
       val sets = docs.join(broadcast(pairIds), Seq("doc_id"), "left_semi")
-        .select(col("doc_id"),
-          call_function("graft_distinct_shingles",
-            col("text"), lit(3)).as("sh"))
+        .select(col("doc_id"), distinctShingles(col("text"), 3).as("sh"))
       joinPairSides(agree, sets, "doc_id",
           Seq("sh" -> "sh_l"), Seq("sh" -> "sh_r"), "left")
         .withColumn("sz_l",

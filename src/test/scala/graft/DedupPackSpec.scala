@@ -162,7 +162,6 @@ class DedupPackSpec extends SparkSpec {
 
   test("semanticDupIds: under-cap cells bit-identical to unbounded " +
       "all-pairs; over-cap cells block-pair decomposed, still exact") {
-    graft.expressions.VectorExpressions.register(spark)
     // One hot cell of 30 near-identical unit vectors (all dup against
     // the min id) + one small cell of 3 orthogonal-ish vectors.
     def unit(xs: Seq[Double]): Seq[Double] = {

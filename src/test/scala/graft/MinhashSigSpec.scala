@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.expressions.TextExpressions
 import graft.functions.TextFunctions._
 
 /** The native [[graft.expressions.MinhashSig]] expression must be
@@ -32,10 +33,9 @@ class MinhashSigSpec extends SparkSpec {
 
   test("graft_minhash_sig equals the composed minhashSig column on " +
       "adversarial inputs, and null means empty in the band path") {
-    graft.expressions.TextExpressions.register(spark)
     val df = adversarial.zipWithIndex.map(_.swap).toDF("i", "t")
     val got = df.select($"i",
-        call_function("graft_minhash_sig", $"t").as("sig"))
+        TextExpressions.minhashSig($"t").as("sig"))
       .as[(Int, Seq[String])].collect().toMap
     val want = df.select($"i",
         minhashSig(shingles(tokens($"t"), 3), 8).as("sig"))
@@ -61,9 +61,8 @@ class MinhashSigSpec extends SparkSpec {
 
   test("the expression survives both evaluation modes: whole-stage " +
       "codegen (write path) and interpreted eval") {
-    graft.expressions.TextExpressions.register(spark)
     val df = adversarial.zipWithIndex.map(_.swap).toDF("i", "t")
-      .select($"i", call_function("graft_minhash_sig", $"t").as("sig"))
+      .select($"i", TextExpressions.minhashSig($"t").as("sig"))
     // codegen path: a full materialization through the noop sink
     df.write.mode("overwrite").format("noop").save()
     // interpreted path: evaluate the expression directly
@@ -82,11 +81,10 @@ class MinhashSigSpec extends SparkSpec {
   test("graft_distinct_shingles equals the composed " +
       "array_distinct(shingles(tokens(...), n)) on adversarial inputs, " +
       "order included, for n in 1..4 (r19 VERDICT item 4)") {
-    graft.expressions.TextExpressions.register(spark)
     val df = adversarial.zipWithIndex.map(_.swap).toDF("i", "t")
     for (n <- 1 to 4) {
       val got = df.select($"i",
-          call_function("graft_distinct_shingles", $"t", lit(n)).as("sh"))
+          TextExpressions.distinctShingles($"t", n).as("sh"))
         .as[(Int, Seq[String])].collect().toMap
       val want = df.select($"i",
           array_distinct(shingles(tokens($"t"), n)).as("sh"))
@@ -99,10 +97,10 @@ class MinhashSigSpec extends SparkSpec {
     }
     // the one-arg form defaults to n=3, and both evaluation modes agree
     val one = df.select(
-        call_function("graft_distinct_shingles", $"t").as("sh"))
+        TextExpressions.distinctShingles($"t").as("sh"))
       .as[Seq[String]].collect().toSeq
     val three = df.select(
-        call_function("graft_distinct_shingles", $"t", lit(3)).as("sh"))
+        TextExpressions.distinctShingles($"t", 3).as("sh"))
       .as[Seq[String]].collect().toSeq
     assert(one == three, "one-arg default is not n=3")
     val expr = graft.expressions.DistinctShingles(

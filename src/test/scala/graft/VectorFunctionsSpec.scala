@@ -6,25 +6,7 @@ import graft.functions.VectorFunctions._
 class VectorFunctionsSpec extends SparkSpec {
   import spark.implicits._
 
-  test("dot and l2Norm on known vectors") {
-    val df = Seq((Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0))).toDF("a", "b")
-    val (d, n) = df.select(dot($"a", $"b"), l2Norm($"a"))
-      .as[(Double, Double)].collect().head
-    assert(d == 32.0)
-    assert(math.abs(n - math.sqrt(14.0)) < 1e-12)
-  }
-
-  test("cosine: parallel → 1, orthogonal → 0, zero-norm guarded → 0") {
-    val df = Seq(
-      (Seq(1.0, 0.0), Seq(2.0, 0.0)),
-      (Seq(1.0, 0.0), Seq(0.0, 3.0)),
-      (Seq(0.0, 0.0), Seq(1.0, 1.0))).toDF("a", "b")
-    val out = df.select(cosine($"a", $"b")).as[Double].collect()
-    assert(out(0) == 1.0 && out(1) == 0.0 && out(2) == 0.0)
-  }
-
   test("hyperplaneBitFast matches hyperplaneBit bit-for-bit") {
-    graft.expressions.VectorExpressions.register(spark)
     val rng = new scala.util.Random(42)
     val dim = 64
     val vecs = Seq.fill(50)(Seq.fill(dim)(rng.nextGaussian() * 3))
