@@ -29,8 +29,11 @@ object SparkEntry {
     * txt_bigram_logprob 1.12×, dedup_minhash_eval 1.12×,
     * emb_bitext_mine 1.07×.) This is registry-scoped, not a harness
     * change: every query build pins the session floor to its declared
-    * value, so ordering cannot leak one query's floor into another,
-    * and Verify executes under the exact config Bench times. */
+    * value. A query run right after it is built, as Verify and Bench
+    * do, therefore runs under its own floor, and Verify executes under
+    * the exact config Bench times. A query built before another one
+    * and run after it runs under the other query's floor (ROADMAP
+    * item 4). */
   private val aqeFloorExempt: Set[String] = Set(
     "graph_pagerank", "sql_recursive_cte", "emb_ivf_pq_recall",
     "txt_ngram_novelty", "mm_scene_keyframes", "mm_image_dedup")

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -896,20 +896,10 @@ object Similarity {
     // d² as exact scaled longs so partition order can't wiggle an ulp.
     "emb_pq" -> ((s, d) => {
       val e = unitVecs(s, d).select("vec_id", "u")
-      def subSplit(src: DataFrame, idAs: String, vecAs: String) =
-        src.select(col("vec_id").as(idAs), posexplode(
-          transform(sequence(lit(0), lit(EmbDim / 8 - 1)),
-            j => slice(col("u"), j * 8 + 1, lit(8)))).as(Seq("sub", vecAs)))
-      val subs = subSplit(e, "vec_id", "x")
-      val cents = subSplit(e.filter(col("vec_id") < 4), "cid", "c")
-      val wBest = Window.partitionBy("vec_id", "sub")
-        .orderBy(col("d2"), col("cid"))
-      subs.join(broadcast(cents), "sub")
-        .select(col("vec_id"), col("sub"), col("cid"),
-          round(vecDot(col("x"), col("x"))
-            - vecDot(col("x"), col("c")) * 2.0
-            + vecDot(col("c"), col("c")), 6).as("d2"))
-        .withColumn("rn", row_number().over(wBest)).filter(col("rn") === 1)
+      val subs = pqSubvectors(e, col("vec_id"), "x")
+      val cents = pqSubvectors(e.filter(col("vec_id") < 4),
+        col("vec_id").as("cid"), "c")
+      pqCodes(subs, cents)
         .groupBy("vec_id").agg(
           array_join(transform(
             array_sort(collect_list(struct(col("sub"), col("cid")))),
@@ -1004,6 +994,29 @@ object Similarity {
           col("share_new") < 0.4 || col("share_new") > 0.6)
     }))
 
+  /** The 8 PQ subvectors of `src`'s unit vector `u`, one row each:
+    * (`id`, sub, `vecAs`). */
+  private def pqSubvectors(src: DataFrame, id: Column,
+      vecAs: String): DataFrame =
+    src.select(id, posexplode(
+      transform(sequence(lit(0), lit(EmbDim / 8 - 1)),
+        j => slice(col("u"), j * 8 + 1, lit(8)))).as(Seq("sub", vecAs)))
+
+  /** ‖x−c‖² from the expanded x·x − 2x·c + c·c dots, rounded to 6. */
+  private def pqDist(x: Column, c: Column): Column =
+    round(vecDot(x, x) - vecDot(x, c) * 2.0 + vecDot(c, c), 6)
+
+  /** Each (vec_id, sub)'s PQ code: the subvector `x` against every
+    * broadcast codebook entry (cid, sub, c), the L2-nearest kept with
+    * the code id as tiebreak — (vec_id, sub, cid, d2, rn). */
+  private def pqCodes(subs: DataFrame, book: DataFrame): DataFrame =
+    subs.join(broadcast(book), "sub")
+      .select(col("vec_id"), col("sub"), col("cid"),
+        pqDist(col("x"), col("c")).as("d2"))
+      .withColumn("rn", row_number().over(Window.partitionBy("vec_id", "sub")
+        .orderBy(col("d2"), col("cid"))))
+      .filter(col("rn") === 1)
+
   /** The composed IVFPQ pipeline behind emb_ivf_pq / emb_ivf_pq_recall:
     * coarse probe (nprobe=2) → ADC lookup-sum over PQ codes → exact
     * re-rank of the ADC top-20 to top-5. */
@@ -1011,35 +1024,22 @@ object Similarity {
       val cells = storedCells(s, d).select("vec_id", "u", "cluster")
         .localCheckpoint() // three consumers: codes, candidates, rerank
       val cents = storedCentroids(s, d)
-      def subSplit(src: DataFrame, idAs: String, vecAs: String) =
-        src.select(col(idAs), posexplode(
-          transform(sequence(lit(0), lit(EmbDim / 8 - 1)),
-            j => slice(col("u"), j * 8 + 1, lit(8)))).as(Seq("sub", vecAs)))
-      val subs = subSplit(cells.select(col("vec_id"), col("u")),
-        "vec_id", "x")
-      val csubs = subSplit(cells.filter(col("vec_id") < 4)
-        .select(col("vec_id").as("cid"), col("u")), "cid", "c")
-      val wCode = Window.partitionBy("vec_id", "sub")
-        .orderBy(col("d2"), col("cid"))
-      val codes = subs.join(broadcast(csubs), "sub")
-        .select(col("vec_id"), col("sub"), col("cid"),
-          round(vecDot(col("x"), col("x"))
-            - vecDot(col("x"), col("c")) * 2.0
-            + vecDot(col("c"), col("c")), 6).as("d2"))
-        .withColumn("rn", row_number().over(wCode)).filter(col("rn") === 1)
+      val subs = pqSubvectors(cells.select(col("vec_id"), col("u")),
+        col("vec_id"), "x")
+      val csubs = pqSubvectors(cells.filter(col("vec_id") < 4)
+        .select(col("vec_id").as("cid"), col("u")), col("cid"), "c")
+      val codes = pqCodes(subs, csubs)
         .select(col("vec_id"), col("sub"), col("cid"))
       val q0 = cells.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("u").as("q_u"))
       val probes = rankedCells(q0, cents)
         .filter(col("crn") <= 2)
         .select(col("q_id"), col("cid").as("q_cluster"))
-      val qsubs = subSplit(q0.select(col("q_id"), col("q_u").as("u")),
-        "q_id", "qx")
+      val qsubs = pqSubvectors(
+        q0.select(col("q_id"), col("q_u").as("u")), col("q_id"), "qx")
       val adc = qsubs.join(broadcast(csubs), "sub")
         .select(col("q_id"), col("sub"), col("cid"),
-          round(vecDot(col("qx"), col("qx"))
-            - vecDot(col("qx"), col("c")) * 2.0
-            + vecDot(col("c"), col("c")), 6).as("qd2"))
+          pqDist(col("qx"), col("c")).as("qd2"))
       val cand = cells.select(col("vec_id").as("cand_id"), col("cluster"))
         .join(broadcast(probes), col("cluster") === col("q_cluster") &&
           col("cand_id") =!= col("q_id"))

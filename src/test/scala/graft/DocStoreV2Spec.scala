@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.jobs.ImportJob
 import graft.sinks.Sinks
 
@@ -10,8 +10,9 @@ import graft.sinks.Sinks
   * write and batch read: commit protocol semantics — idempotent
   * replayed batches, the `_SUCCESS` gate, monotonic ids, a failed
   * replay that keeps the committed batch whole — schema enforcement,
-  * the scan's pruning, bin-packing and statistics, plus the ImportJob
-  * leg that writes through it (r17 VERDICT item 3). */
+  * the scan's batch_id pruning over Spark's JSON source (file packing,
+  * splitting and statistics included), plus the ImportJob leg that
+  * writes through it (r17 VERDICT item 3). */
 class DocStoreV2Spec extends SparkSpec {
   import spark.implicits._
 
@@ -24,6 +25,19 @@ class DocStoreV2Spec extends SparkSpec {
 
   private def readStore(path: String) =
     spark.read.schema(DocSchema).json(path)
+
+  /** Runs `body` with the JSON source's file split target at `bytes`. */
+  private def withSplitBytes[A](bytes: String)(body: => A): A = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    spark.conf.set(key, bytes)
+    try body finally spark.conf.unset(key)
+  }
+
+  private def scanPartitions(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2
+        .BatchScanExec => b.inputPartitions.size
+    }.head
 
   test("batch write lands under its batch_id partition and reads back " +
       "value-exactly, including JSON-hostile characters") {
@@ -131,29 +145,29 @@ class DocStoreV2Spec extends SparkSpec {
       readStore(store).as[(String, String, Long)].collect().toSet)
 
     // batch_id >= 1 must plan only the two matching directories'
-    // files — pruning happens in planInputPartitions, not post-scan.
-    // maxPartitionBytes=1 forces one file per partition so the
-    // partition count is a direct proxy for files planned (the
-    // default bin-packs everything here into one partition).
-    val perFile = spark.read.format("graft-docs")
-      .option("maxPartitionBytes", "1").load(store)
-    val pruned = perFile.filter(col("batch_id") >= 1L)
-    val scans = pruned.queryExecution.executedPlan.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2
-        .BatchScanExec => b
+    // files — pruning happens when the scan is built, not post-scan.
+    // A 1-byte split target gives every stored byte its own partition,
+    // so the partition count is a direct proxy for bytes planned.
+    withSplitBytes("1") {
+      val perFile = spark.read.format("graft-docs").load(store)
+      val pruned = perFile.filter(col("batch_id") >= 1L)
+      val scans = pruned.queryExecution.executedPlan.collect {
+        case b: org.apache.spark.sql.execution.datasources.v2
+          .BatchScanExec => b
+      }
+      assert(scans.nonEmpty, "no BatchScanExec in the native read plan")
+      val all = perFile.queryExecution.executedPlan.collect {
+        case b: org.apache.spark.sql.execution.datasources.v2
+          .BatchScanExec => b
+      }
+      assert(scans.head.inputPartitions.size <
+        all.head.inputPartitions.size,
+        s"batch_id predicate did not prune partitions " +
+          s"(${scans.head.inputPartitions.size} of " +
+          s"${all.head.inputPartitions.size})")
+      assert(pruned.select("batch_id").distinct.as[Long].collect()
+        .toSet == Set(1L, 2L))
     }
-    assert(scans.nonEmpty, "no BatchScanExec in the native read plan")
-    val all = perFile.queryExecution.executedPlan.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2
-        .BatchScanExec => b
-    }
-    assert(scans.head.inputPartitions.size <
-      all.head.inputPartitions.size,
-      s"batch_id predicate did not prune partitions " +
-        s"(${scans.head.inputPartitions.size} of " +
-        s"${all.head.inputPartitions.size})")
-    assert(pruned.select("batch_id").distinct.as[Long].collect()
-      .toSet == Set(1L, 2L))
 
     // column pruning: a projection narrower than the store schema
     assert(spark.read.format("graft-docs").load(store)
@@ -175,26 +189,22 @@ class DocStoreV2Spec extends SparkSpec {
         .write.format("graft-docs")
         .option("path", store).option("batchId", b)
         .mode("append").save()
-    def partsAt(target: String): Int =
-      spark.read.format("graft-docs")
-        .option("maxPartitionBytes", target).load(store)
-        .queryExecution.executedPlan.collect {
-          case b: org.apache.spark.sql.execution.datasources.v2
-            .BatchScanExec => b.inputPartitions.size
-        }.head
-    assert(partsAt("1") == 12, "no-pack floor should be one per file")
-    assert(partsAt(s"${128L << 20}") == 1,
-      "12 tiny files should pack into ONE default-target partition")
-    // a mid target packs into >1 and <12 — and every shape reads the
-    // same rows (a pack spanning batches keeps per-file batch_id)
-    val expect = (0L until 12L).map(b => (s"p$b", s"v$b", b)).toSet
-    for (t <- Seq("1", "60", s"${128L << 20}"))
-      assert(spark.read.format("graft-docs")
-        .option("maxPartitionBytes", t).load(store)
-        .as[(String, String, Long)].collect().toSet == expect,
+    def read() = spark.read.format("graft-docs").load(store)
+    val packed = scanPartitions(read())
+    assert(packed < 12,
+      s"12 tiny files should pack into fewer partitions, got $packed")
+    // at 1 byte the JSON source splits files; every target reads each
+    // row once (a pack spanning batches keeps per-file batch_id)
+    val split = withSplitBytes("1")(scanPartitions(read()))
+    assert(split > 12, s"a 1-byte target should split files, got $split")
+    val expect = (0L until 12L).map(b => (s"p$b", s"v$b", b)).sorted
+    def rowsAt(t: Option[String]) = {
+      def rows = read().as[(String, String, Long)].collect().toSeq
+      t.fold(rows)(withSplitBytes(_)(rows))
+    }
+    for (t <- Seq(Some("1"), Some("60"), None))
+      assert(rowsAt(t).sorted == expect,
         s"target $t changed the rows")
-    val mid = partsAt("60")
-    assert(mid > 1 && mid < 12, s"mid target packed to $mid")
   }
 
   test("a batch without its _SUCCESS marker is invisible to reads") {
@@ -212,6 +222,27 @@ class DocStoreV2Spec extends SparkSpec {
     val seen = spark.read.format("graft-docs").load(store)
       .select("_id").as[String].collect().toSet
     assert(seen == Set("m0"), s"un-markered batch leaked into $seen")
+  }
+
+  test("a store with no committed batch reads as zero rows of the " +
+      "store schema, whether its path is missing or its only batch " +
+      "lacks the _SUCCESS marker") {
+    val missing = tmp("graft-docs-missing")
+    val unmarked = tmp("graft-docs-unmarked")
+    val partial = java.nio.file.Paths.get(unmarked, "batch_id=0")
+    java.nio.file.Files.createDirectories(partial)
+    java.nio.file.Files.writeString(partial.resolve("part-x.jsonl"),
+      """{"_id":"ghost","doc":"half"}""" + "\n")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(missing)))
+    for (store <- Seq(missing, unmarked)) {
+      val df = spark.read.format("graft-docs").load(store)
+      assert(df.schema.map(f => (f.name, f.dataType)) == Seq(
+        "_id" -> StringType, "doc" -> StringType, "batch_id" -> LongType),
+        s"$store: ${df.schema}")
+      assert(df.collect().isEmpty, s"$store read rows")
+      assert(df.filter(col("batch_id") >= 0L).select("batch_id")
+        .as[Long].collect().isEmpty, s"$store read batch ids")
+    }
   }
 
   test("batch ids must be monotonic per store: a fresh id below the " +

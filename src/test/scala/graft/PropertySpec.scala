@@ -338,63 +338,27 @@ class PropertySpec extends SparkSpec {
   test("graft-docs wire format round-trips arbitrary unicode strings " +
       "through the writer's escaping and the reader's Jackson parse") {
     // The connector's writer emits hand-escaped JSONL and the scan
-    // parses it with Jackson — the two must agree on EVERY string, not
-    // just the ones the suite happens to write. Exercise the exact
-    // wire line the writer builds (DocStoreV2's write()) against the
-    // exact parse the reader does (readTree + asText).
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    // parses it with Spark's JSON source (Jackson underneath) — the two
+    // must agree on EVERY string, not just the ones the suite happens
+    // to write. Exercise the exact wire line the writer builds
+    // (DocStoreV2's write()) against the store's own read schema, all
+    // generated lines in one read.
     val hostile = Gen.listOfN(12, Gen.oneOf(
       Gen.alphaNumStr.map(_.take(8)),
       Gen.oneOf("\"", "\\", "\n", "\r", "\t", " ", "",
         "{\"k\":1}", "\\u0041", "∑unicode≠", "a\"b\\c\nd")))
       .map(_.mkString)
-    cases(hostile, 150).foreach { s =>
-      val line =
-        s"""{"_id":"${graft.sinks.GraftDocs.jsonEscape("id")}","doc":"${graft.sinks.GraftDocs.jsonEscape(s)}"}"""
-      val node = mapper.readTree(line)
-      assert(node.get("doc").asText() == s,
-        s"round-trip mismatch for ${s.map(_.toInt).mkString(",")}")
+    val docs = cases(hostile, 150).zipWithIndex
+      .map { case (s, i) => (s"id-$i", s) }
+    val lines = docs.map { case (id, s) =>
+      s"""{"_id":"${graft.sinks.GraftDocs.jsonEscape(id)}","doc":"${graft.sinks.GraftDocs.jsonEscape(s)}"}"""
     }
-  }
-
-  test("graft-docs bin-packing invariants hold for arbitrary stores: " +
-      "every file exactly once, order preserved, no pack exceeds the " +
-      "target unless it is a single oversized file") {
-    // (batch id, file sizes) stores: gapped/negative ids, empty
-    // batches, zero-byte and oversized files all generated (sizes
-    // derived deterministically per case so the property stays a
-    // one-job batch).
-    val storeGen = for {
-      nBatches <- Gen.chooseNum(0, 8)
-      ids <- Gen.listOfN(nBatches, Gen.chooseNum(-3L, 40L)).map(_.distinct)
-      counts <- Gen.listOfN(ids.size.max(1), Gen.chooseNum(0, 5))
-      szSeed <- Gen.chooseNum(0L, 997L)
-      target <- Gen.chooseNum(1L, 600L)
-    } yield (ids.zip(counts), szSeed, target)
-    cases(storeGen, 120).foreach { case (batches, szSeed, target) =>
-      val named = batches.sortBy(_._1).map { case (id, k) =>
-        id -> (0 until k).map(i =>
-          (f"b$id%03d-f$i%02d", (id * 31 + i * 17 + szSeed) % 401 match {
-            case s if s < 0 => -s
-            case s => s
-          }))
-      }
-      val packs = graft.sinks.GraftDocs.packPartitions(named, target)
-        .map(_.asInstanceOf[graft.sinks.GraftDocsInputPartition])
-      val flat = packs.flatMap(_.files).toSeq
-      // every (file, batch) exactly once, global order preserved
-      val want = named.flatMap { case (id, fs) =>
-        fs.sortBy(_._1).map { case (f, _) => (f, id) } }
-      assert(flat == want, s"pack lost/reordered files: $flat vs $want")
-      // byte bound: a pack over target must be a single oversized file
-      val size = named.flatMap(_._2).toMap
-      packs.foreach { p =>
-        val bytes = p.files.map(f => size(f._1)).sum
-        assert(bytes <= target || p.files.size == 1,
-          s"pack of ${p.files.size} files at $bytes bytes exceeds $target")
-      }
-      // no empty packs
-      assert(packs.forall(_.files.nonEmpty))
+    val back = spark.read.schema(graft.sinks.GraftDocs.Schema)
+      .json(lines.toDS()).as[(String, String)].collect().toMap
+    assert(back.size == docs.size, s"${back.size} of ${docs.size} read")
+    docs.foreach { case (id, s) =>
+      assert(back(id) == s,
+        s"round-trip mismatch for ${s.map(_.toInt).mkString(",")}")
     }
   }
 
